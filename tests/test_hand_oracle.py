@@ -82,13 +82,7 @@ def _documents(rows):
 def _run_both(spark, name, sf_dir):
     """(spark rows, duckdb rows) as lists of plain tuples, column order
     normalized to the SPARK result's column order for both engines."""
-    spec = QUERY_SPECS.get(name)
-    if spec is None:  # staged (not yet declared) lane specs
-        from transactional_datalake_using_amazon_datafirehose_iceberg_spark.queries.extended import (
-            SPECS_NEXT,
-        )
-
-        spec = next(s for s in SPECS_NEXT if s.name == name)
+    spec = QUERY_SPECS[name]
     sdf = spec.run_spark(spark, sf_dir)
     cols = sdf.columns
     spark_rows = [tuple(r[c] for c in cols) for r in sdf.collect()]
@@ -1884,11 +1878,6 @@ def test_hand_payload_dedup(spark, tmp_path):
     assert got_ora == hand, "ORACLE diverges from the hand derivation"
 
 
-# ---------------------------------------------------------------------------
-# Round-16 staging lane (built round 14)
-# ---------------------------------------------------------------------------
-
-
 def test_hand_semantic_cluster_audit(spark, tmp_path):
     """8-dim vectors; sign bucket = 8 leading signs (0 counts as '1').
 
@@ -2061,1004 +2050,5 @@ def test_hand_novelty_first_seen(spark, tmp_path):
         (1, 2, 2, 10000), (2, 1, 0, 0), (3, 1, 1, 10000), (5, 2, 1, 5000),
     ]
     got_spark, got_ora = _run_both(spark, "text_novelty_first_seen_ratio", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-# ---------------------------------------------------------------------------
-# Round-17 staging lane (built round 14)
-# ---------------------------------------------------------------------------
-
-
-def test_hand_minhash_estimate_error(spark, tmp_path):
-    """Expected output derived by a pure-Python third implementation of
-    the one-permutation minhash (hashlib.md5, stride-2 12-shingles,
-    slot = min hash per hex-digit class, densify global-min || '#j',
-    4 bands of 2) and exact stride-1 shingle Jaccard — independent of
-    both the Spark build and the DuckDB oracle."""
-    import hashlib
-
-    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.operators.dedup import (
-        slot_hex_digits,
-    )
-
-    texts = {
-        1: "the quick brown fox jumps over the lazy dog",
-        2: "the quick brown fox jumps over the lazy fog",
-        3: "completely different content with no overlap here",
-    }
-    docs = _documents([(i, t, "s") for i, t in sorted(texts.items())])
-    d = _mk_sf(tmp_path, documents=docs)
-
-    def sig(text):
-        t = text.lower()
-        hs = [
-            hashlib.md5(t[i:i + 12].encode()).hexdigest()
-            for i in range(0, max(len(t) - 11, 1), 2)
-        ]
-        out = []
-        for j in range(8):
-            digs = set(slot_hex_digits(j))
-            cand = [h for h in hs if h[0] in digs]
-            out.append(min(cand) if cand else min(hs) + f"#{j}")
-        return out
-
-    def shset(text):
-        t = text.lower()
-        return {t[i:i + 12] for i in range(0, max(len(t) - 11, 1))}
-
-    sigs = {i: sig(t) for i, t in texts.items()}
-    hand = []
-    ids = sorted(texts)
-    for x in ids:
-        for y in ids:
-            if x >= y:
-                continue
-            bands_x = ["".join(sigs[x][2 * b:2 * b + 2]) for b in range(4)]
-            bands_y = ["".join(sigs[y][2 * b:2 * b + 2]) for b in range(4)]
-            if not any(a == b for a, b in zip(bands_x, bands_y)):
-                continue
-            m = sum(a == b for a, b in zip(sigs[x], sigs[y]))
-            sx, sy = shset(texts[x]), shset(texts[y])
-            i = len(sx & sy)
-            exact = i * 10000 // (len(sx) + len(sy) - i)
-            est = m * 10000 // 8
-            hand.append((x, y, m, est, exact, abs(est - exact)))
-    assert hand, "fixture must produce at least one candidate pair"
-    got_spark, got_ora = _run_both(spark, "dedup_minhash_estimate_error", d)
-    assert got_spark == hand, "SPARK diverges from the python reference"
-    assert got_ora == hand, "ORACLE diverges from the python reference"
-
-
-def test_hand_path_prefix_topk(spark, tmp_path):
-    """u1: a,b,c; u2: a,b,c; u3: b,a,c (ts order); u4: two events only
-    (excluded). Top paths: 'a>b>c' x2 rank 1, 'b>a>c' x1 rank 2."""
-    rows = [
-        (1, _ts("2024-01-01T00:00:01"), 1, "a", 1.0),
-        (2, _ts("2024-01-01T00:00:02"), 1, "b", 1.0),
-        (3, _ts("2024-01-01T00:00:03"), 1, "c", 1.0),
-        (4, _ts("2024-01-01T00:00:01"), 2, "a", 1.0),
-        (5, _ts("2024-01-01T00:00:02"), 2, "b", 1.0),
-        (6, _ts("2024-01-01T00:00:03"), 2, "c", 1.0),
-        (7, _ts("2024-01-01T00:00:01"), 3, "b", 1.0),
-        (8, _ts("2024-01-01T00:00:02"), 3, "a", 1.0),
-        (9, _ts("2024-01-01T00:00:03"), 3, "c", 1.0),
-        (10, _ts("2024-01-01T00:00:01"), 4, "a", 1.0),
-        (11, _ts("2024-01-01T00:00:02"), 4, "b", 1.0),
-    ]
-    d = _mk_sf(tmp_path, events=_events(rows))
-    hand = [(1, "a>b>c", 2), (2, "b>a>c", 1)]
-    got_spark, got_ora = _run_both(spark, "events_path_prefix_topk", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_quality_gate_reasons(spark, tmp_path):
-    """doc1: 25 distinct words, ~170 chars -> clean (0).
-    doc2: 'aa aa aa aa' (11 chars < 100 -> 1; 1 distinct of 4 tokens,
-    100 < 120 -> 4) -> 5.
-    doc3: '1234567890' (10 < 100 -> 1; 10 digits of 10 chars > 20% ->
-    8; 1 distinct of 1 token, 100 < 30 false) -> 9.
-    doc4: 1000 distinct 7-char words (~8000 chars > 5000 -> 2) -> 2."""
-    import itertools as it
-
-    letters = "abcdefghij"
-    # letter-only words: a digit in the filler words trips the
-    # digit-share bit (the first fixture draft used word01-style names)
-    clean = " ".join(
-        f"{a}{b}x" for a, b in it.islice(it.product(letters, letters), 40)
-    )
-    assert 100 <= len(clean) <= 5000 and not any(c.isdigit() for c in clean)
-    long = " ".join(
-        f"{a}{b}{c}wxyz"
-        for a, b, c in it.islice(it.product(letters, letters, letters), 1000)
-    )
-    assert len(long) > 5000 and not any(c.isdigit() for c in long)
-    docs = _documents([
-        (1, clean, "s"),
-        (2, "aa aa aa aa", "s"),
-        (3, "1234567890", "s"),
-        (4, long, "s"),
-    ])
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [(0, 1, 1), (2, 1, 4), (5, 1, 2), (9, 1, 3)]
-    got_spark, got_ora = _run_both(spark, "documents_quality_gate_reasons", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_int8_distortion(spark, tmp_path):
-    """v1=[1.0,-0.5]: scale 1; dim1 code 127 -> recon 1.0 -> err 0;
-    dim2 code floor(-63.5+0.5)=-63 -> recon -63/127=-0.4960629921...
-    -> floor(0.0039370078...*1e6)=3937. v2=[2,2]: codes 127 -> recon
-    exact -> 0. v3=[0,0]: scale 0 -> filtered. v4=[0.3]: x/scale=1
-    exactly (same double) -> code 127 -> recon == x -> 0."""
-    emb = _embeddings([
-        (1, [1.0, -0.5], 0),
-        (2, [2.0, 2.0], 0),
-        (3, [0.0, 0.0], 0),
-        (4, [0.3], 0),
-    ])
-    d = _mk_sf(tmp_path, embeddings=emb)
-    hand = [(1, 2, 3937, 3937), (2, 2, 0, 0), (4, 1, 0, 0)]
-    got_spark, got_ora = _run_both(spark, "embedding_int8_distortion_audit", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_dwell_percentiles(spark, tmp_path):
-    """u1: a@0s, a@1s, b@3s -> gaps keyed by the EARLIER event's type:
-    a->1000ms, a->2000ms (b has no next). u2: a@0s, b@5s -> a->5000ms.
-    Type a gaps [1000, 2000, 5000]: median 2000.0; p90 interpolated at
-    pos 0.9*(3-1)=1.8 -> 2000 + 0.8*3000 = 4400.0. No b row."""
-    rows = [
-        (1, _ts("2024-01-01T00:00:00"), 1, "a", 1.0),
-        (2, _ts("2024-01-01T00:00:01"), 1, "a", 1.0),
-        (3, _ts("2024-01-01T00:00:03"), 1, "b", 1.0),
-        (4, _ts("2024-01-02T00:00:00"), 2, "a", 1.0),
-        (5, _ts("2024-01-02T00:00:05"), 2, "b", 1.0),
-    ]
-    d = _mk_sf(tmp_path, events=_events(rows))
-    hand = [("a", 3, 2000.0, 4400.0)]
-    got_spark, got_ora = _run_both(spark, "events_dwell_time_percentiles", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_charclass_profile(spark, tmp_path):
-    """doc1 'ab 12!': 6 chars -> letters 2 (3333 bp), digits 2 (3333),
-    space 1 (1666), other 1 (1666). doc2 'aaaa': all letters."""
-    docs = _documents([(1, "ab 12!", "s"), (2, "aaaa", "s")])
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [(1, 6, 3333, 3333, 1666, 1666), (2, 4, 10000, 0, 0, 0)]
-    got_spark, got_ora = _run_both(spark, "text_charclass_profile", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-# ---------------------------------------------------------------------------
-# Round-18 staging lane (built round 14)
-# ---------------------------------------------------------------------------
-
-
-def test_hand_priority_mix_drift(spark, tmp_path):
-    """Two months, two priorities. M1: A x3, B x1; M2: A x1, B x3.
-    Overall: A 4/8 = 5000 bp, B 5000 bp.
-    M1: A 3*10000//4 = 7500 (|diff| 2500), B 2500 (2500) -> drift 5000.
-    M2 symmetric -> 5000."""
-    rows = [
-        (1, 1, "O", 1.0, _ts("2024-01-05T00:00:00"), "A"),
-        (2, 1, "O", 1.0, _ts("2024-01-06T00:00:00"), "A"),
-        (3, 1, "O", 1.0, _ts("2024-01-07T00:00:00"), "A"),
-        (4, 1, "O", 1.0, _ts("2024-01-08T00:00:00"), "B"),
-        (5, 1, "O", 1.0, _ts("2024-02-05T00:00:00"), "A"),
-        (6, 1, "O", 1.0, _ts("2024-02-06T00:00:00"), "B"),
-        (7, 1, "O", 1.0, _ts("2024-02-07T00:00:00"), "B"),
-        (8, 1, "O", 1.0, _ts("2024-02-08T00:00:00"), "B"),
-    ]
-    d = _mk_sf(tmp_path, orders=_orders_full(rows))
-    hand = [
-        (dt.date(2024, 1, 1), 4, 5000),
-        (dt.date(2024, 2, 1), 4, 5000),
-    ]
-    got_spark, got_ora = _run_both(spark, "orders_priority_mix_drift", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_vocab_growth(spark, tmp_path):
-    """doc1 'a b' -> a,b first seen (2 new); doc2 'b c' -> c (1);
-    doc3 'a' -> 0. Cumulative: 2, 3, 3."""
-    docs = _documents([(1, "a b", "s"), (2, "b c", "s"), (3, "a", "s")])
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [(1, 2, 2), (2, 1, 3), (3, 0, 3)]
-    got_spark, got_ora = _run_both(spark, "text_vocab_growth_curve", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_source_quality_matrix(spark, tmp_path):
-    """Global dup groups: 'x' appears in docs 1, 2 (s1) and 4 (s2) ->
-    gs 3, all dup; 'y' unique. s1: 3 docs / 3 chars / 2 dup -> 6666 bp.
-    s2: 1 doc, dup -> 10000 bp."""
-    import pyarrow as pa
-
-    docs = pa.table({
-        "doc_id": pa.array([1, 2, 3, 4], pa.int64()),
-        "text": pa.array(["x", "x", "y", "x"], pa.string()),
-        "lang": pa.array(["en"] * 4, pa.string()),
-        "source": pa.array(["s1", "s1", "s1", "s2"], pa.string()),
-        "n_chars": pa.array([1, 1, 1, 1], pa.int64()),
-    })
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [("s1", "en", 3, 3, 2, 6666), ("s2", "en", 1, 1, 1, 10000)]
-    got_spark, got_ora = _run_both(spark, "documents_source_quality_matrix", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_basket_size_histogram(spark, tmp_path):
-    """Orders 1 and 2 have 2 items, order 3 has 1: size 1 -> 1 order
-    (3333 bp of 3), size 2 -> 2 orders (6666 bp)."""
-    import pyarrow as pa
-
-    li = pa.table({
-        "l_orderkey": pa.array([1, 1, 2, 2, 3], pa.int64()),
-    })
-    d = _mk_sf(tmp_path, lineitem=li)
-    hand = [(1, 1, 3333), (2, 2, 6666)]
-    got_spark, got_ora = _run_both(spark, "orders_basket_size_histogram", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_shingle_df_profile(spark, tmp_path):
-    """doc1/doc2: identical 12-char text -> one shingle at df 2... plus
-    doc3 (13 chars, same lowered prefix) -> 'abcdefghijkl' df 3,
-    'bcdefghijklm' df 1. Buckets: floor(log2(1))=0 (1 shingle, max 1),
-    floor(log2(3))=1 (1 shingle, max 3)."""
-    docs = _documents([
-        (1, "abcdefghijkl", "s"),
-        (2, "abcdefghijkl", "s"),
-        (3, "ABCDEFGHIJKLm", "s"),
-    ])
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [(0, 1, 1), (1, 1, 3)]
-    got_spark, got_ora = _run_both(spark, "dedup_shingle_df_profile", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_dup_group_size_histogram(spark, tmp_path):
-    """'x' x2 + 'y' x1: one group of size 1 (1 doc), one of size 2
-    (2 docs)."""
-    docs = _documents([(1, "x", "s"), (2, "x", "s"), (3, "y", "s")])
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [(1, 1, 1), (2, 1, 2)]
-    got_spark, got_ora = _run_both(spark, "dedup_group_size_histogram", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-# ---------------------------------------------------------------------------
-# Round-19 staged lane (built round 15)
-# ---------------------------------------------------------------------------
-
-
-def test_hand_normalized_text_groups(spark, tmp_path):
-    """doc1 'ab 12cd' and its digit-rotated re-ingestion variant
-    (1000001, 'ab 23cd') both normalize to 'ab cd'; doc2 'AB!cd' and
-    variant 1000002 both -> 'abcd'; doc60 'zz' is >= 50 so gets NO
-    variant and stays a singleton (dropped). md5('ab cd')=04a7... <
-    md5('abcd')=e2fc..., so the 'ab cd' group sorts first."""
-    import hashlib
-
-    docs = _documents([(1, "ab 12cd", "s"), (2, "AB!cd", "s"), (60, "zz", "s")])
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [
-        (hashlib.md5(b"ab cd").hexdigest(), 2, 1, 1000001),
-        (hashlib.md5(b"abcd").hexdigest(), 2, 2, 1000002),
-    ]
-    got_spark, got_ora = _run_both(spark, "dedup_normalized_text_groups", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_quality_calibration(spark, tmp_path):
-    """doc1 (s1): 'abc def' len 7 -> bin 0, 2 tokens -> fail.
-    doc2 (s1): 12 x 10-char tokens = 131 chars -> bin 1, pass.
-    doc3 (NULL source): 11 x 4-char tokens = 54 chars -> bin 0, pass.
-    NULL source group leads (NULLS FIRST)."""
-    import pyarrow as pa
-
-    t2 = " ".join(["aaaaaaaaaa"] * 12)   # 131 chars, 12 tokens
-    t3 = " ".join(["aaaa"] * 11)          # 54 chars, 11 tokens
-    assert len(t2) == 131 and len(t3) == 54
-    docs = pa.table({
-        "doc_id": pa.array([1, 2, 3], pa.int64()),
-        "text": pa.array(["abc def", t2, t3], pa.string()),
-        "lang": pa.array(["en"] * 3, pa.string()),
-        "source": pa.array(["s1", "s1", None], pa.string()),
-        "n_chars": pa.array([7, 131, 54], pa.int64()),
-    })
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [
-        (None, 0, 1, 1, 10000),
-        ("s1", 0, 1, 0, 0),
-        ("s1", 1, 1, 1, 10000),
-    ]
-    got_spark, got_ora = _run_both(
-        spark, "documents_quality_calibration_by_source", d
-    )
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_embedding_drift(spark, tmp_path):
-    """Label 1: even side vecs 0,2 -> q-sums pos0 64+32=96, pos1 -32+64
-    =32; odd side vec 1 -> pos0 32, pos1 16. na=2, nb=1.
-    pos0 |96*1 - 32*2| = 32; pos1 |32*1 - 16*2| = 0 -> drift 32.
-    Label 2: only odd vec 3 -> na=0 -> every term x*0 -> drift 0."""
-    d = _mk_sf(tmp_path, embeddings=_embeddings([
-        (0, [1.0, -0.5], 1),
-        (1, [0.5, 0.25], 1),
-        (2, [0.5, 1.0], 1),
-        (3, [0.25], 2),
-    ]))
-    hand = [(1, 2, 1, 32), (2, 0, 1, 0)]
-    got_spark, got_ora = _run_both(spark, "embedding_drift_split_halves", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_pack_efficiency(spark, tmp_path):
-    """s1: 60 + 10 = 70 tokens -> ceil(70/64) = 2 packs, waste 128-70
-    = 58, util 700000 // 128 = 5468. s2: one NULL-text doc -> 0 tokens,
-    0 packs, NULL utilization."""
-    import pyarrow as pa
-
-    docs = pa.table({
-        "doc_id": pa.array([1, 2, 3], pa.int64()),
-        "text": pa.array(
-            [" ".join(["a"] * 60), " ".join(["b"] * 10), None], pa.string()
-        ),
-        "lang": pa.array(["en"] * 3, pa.string()),
-        "source": pa.array(["s1", "s1", "s2"], pa.string()),
-        "n_chars": pa.array([119, 19, 0], pa.int64()),
-    })
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [("s1", 2, 70, 2, 58, 5468), ("s2", 1, 0, 0, 0, None)]
-    got_spark, got_ora = _run_both(spark, "pack_efficiency_census", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_transition_matrix(spark, tmp_path):
-    """User 1: view -> click -> click -> purchase; user 2: view -> view.
-    Pairs: (click,click) 1, (click,purchase) 1, (view,click) 1,
-    (view,view) 1; marginals click=2, view=2 -> every share 5000 bp."""
-    d = _mk_sf(tmp_path, events=_events([
-        (1, _ts("2024-01-01T00:00:00"), 1, "view", 1.0),
-        (2, _ts("2024-01-01T00:01:00"), 1, "click", 1.0),
-        (3, _ts("2024-01-01T00:02:00"), 1, "click", 1.0),
-        (4, _ts("2024-01-01T00:03:00"), 1, "purchase", 1.0),
-        (5, _ts("2024-01-01T00:00:00"), 2, "view", 1.0),
-        (6, _ts("2024-01-01T00:05:00"), 2, "view", 1.0),
-    ]))
-    hand = [
-        ("click", "click", 1, 5000),
-        ("click", "purchase", 1, 5000),
-        ("view", "click", 1, 5000),
-        ("view", "view", 1, 5000),
-    ]
-    got_spark, got_ora = _run_both(spark, "events_type_transition_matrix", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_cents_profile(spark, tmp_path):
-    """Totals 10.00 / 10.99 / 3.99 (negative -5.00 and NULL excluded):
-    cents 0 x1, 99 x2 over total 3 -> 3333 / 6666 bp."""
-    rows = [
-        (1, 1, "O", 10.00, _ts("2024-01-05T00:00:00"), "A"),
-        (2, 1, "O", 10.99, _ts("2024-01-06T00:00:00"), "A"),
-        (3, 1, "O", 3.99, _ts("2024-01-07T00:00:00"), "A"),
-        (4, 1, "O", -5.00, _ts("2024-01-08T00:00:00"), "A"),
-        (5, 1, "O", None, _ts("2024-01-09T00:00:00"), "A"),
-    ]
-    d = _mk_sf(tmp_path, orders=_orders_full(rows))
-    hand = [(0, 1, 3333), (99, 2, 6666)]
-    got_spark, got_ora = _run_both(spark, "orders_cents_profile", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-# ---------------------------------------------------------------------------
-# Round-20 staged lane (built round 15)
-# ---------------------------------------------------------------------------
-
-
-def test_hand_cross_source_matrix(spark, tmp_path):
-    """'x' lives in s1 (doc1) and s2 (doc2); both docs < 30 so mirror
-    sources s1-m/s2-m join the group -> C(4,2) = 6 source pairs, one
-    shared group each. 'y' (doc 40, not mirrored) stays single-source.
-    String order: s1 < s1-m < s2 < s2-m."""
-    docs = _documents([(1, "x", "s1"), (2, "x", "s2"), (40, "y", "s1")])
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [
-        ("s1", "s1-m", 1), ("s1", "s2", 1), ("s1", "s2-m", 1),
-        ("s1-m", "s2", 1), ("s1-m", "s2-m", 1), ("s2", "s2-m", 1),
-    ]
-    got_spark, got_ora = _run_both(spark, "dedup_cross_source_matrix", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_lang_confusion(spark, tmp_path):
-    """doc1 (declared en) 'the cat' -> c_en=1 wins -> en (correct).
-    doc2 (declared en) 'el la' -> c_es=2 -> es (confused).
-    doc3 (declared de) NULL text -> NULL prediction.
-    Shares: en row-conditional 5000/5000 bp; de's NULL cell 10000."""
-    import pyarrow as pa
-
-    docs = pa.table({
-        "doc_id": pa.array([1, 2, 3], pa.int64()),
-        "text": pa.array(["the cat", "el la", None], pa.string()),
-        "lang": pa.array(["en", "en", "de"], pa.string()),
-        "source": pa.array(["s"] * 3, pa.string()),
-        "n_chars": pa.array([7, 5, 0], pa.int64()),
-    })
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [
-        ("de", None, 1, 10000),
-        ("en", "en", 1, 5000),
-        ("en", "es", 1, 5000),
-    ]
-    got_spark, got_ora = _run_both(spark, "text_lang_confusion_matrix", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_load_factor(spark, tmp_path):
-    """Type A: 3 events in hour 10, 1 in hour 11 -> peak 3 of 4 over 2
-    hours -> 3*2*10000//4 = 15000 bp. Type B: 2 in one hour -> 10000."""
-    d = _mk_sf(tmp_path, events=_events([
-        (1, _ts("2024-01-01T10:00:00"), 1, "A", 1.0),
-        (2, _ts("2024-01-01T10:10:00"), 1, "A", 1.0),
-        (3, _ts("2024-01-01T10:20:00"), 1, "A", 1.0),
-        (4, _ts("2024-01-01T11:00:00"), 1, "A", 1.0),
-        (5, _ts("2024-01-01T10:00:00"), 2, "B", 1.0),
-        (6, _ts("2024-01-01T10:30:00"), 2, "B", 1.0),
-    ]))
-    hand = [("A", 2, 4, 3, 15000), ("B", 1, 2, 2, 10000)]
-    got_spark, got_ora = _run_both(spark, "events_load_factor_hourly", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_lorenz_deciles(spark, tmp_path):
-    """Three customers spend 100/200/300 cents; fewer rows than deciles
-    so each is its own tile (both engines). Cumulative shares of 600:
-    1666 / 5000 / 10000 bp."""
-    rows = [
-        (1, 1, "O", 1.00, _ts("2024-01-05T00:00:00"), "A"),
-        (2, 2, "O", 2.00, _ts("2024-01-06T00:00:00"), "A"),
-        (3, 3, "O", 3.00, _ts("2024-01-07T00:00:00"), "A"),
-    ]
-    d = _mk_sf(tmp_path, orders=_orders_full(rows))
-    hand = [(1, 1, 100, 1666), (2, 1, 200, 5000), (3, 1, 300, 10000)]
-    got_spark, got_ora = _run_both(spark, "orders_lorenz_deciles", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_props_key_census(spark, tmp_path):
-    """Valid payloads: {'a','b'} and {'a'} -> a in 2/2 (10000 bp), b in
-    1/2 (5000). NULL and malformed payloads drop on both engines."""
-    import pyarrow as pa
-
-    events = pa.table({
-        "event_id": pa.array([1, 2, 3, 4], pa.int64()),
-        "ts": pa.array([dt.datetime(2024, 1, 1, 10)] * 4, pa.timestamp("us")),
-        "user_id": pa.array([1, 1, 1, 1], pa.int64()),
-        "event_type": pa.array(["view"] * 4, pa.string()),
-        "value": pa.array([1.0] * 4, pa.float64()),
-        "props": pa.array(
-            ['{"a": 1, "b": 2}', '{"a": 3}', None, "not json"], pa.string()
-        ),
-    })
-    d = _mk_sf(tmp_path, events=events)
-    hand = [("a", 2, 10000), ("b", 1, 5000)]
-    got_spark, got_ora = _run_both(spark, "events_props_key_census", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_dim_variance(spark, tmp_path):
-    """q at pos0: 0,0,0 -> var 0. pos1: 64,32,16 -> n=3, s=112,
-    ss=5376 -> var_num = 3*5376 - 112^2 = 3584. Rank 1 = pos1."""
-    d = _mk_sf(tmp_path, embeddings=_embeddings([
-        (0, [0.0, 1.0], 1),
-        (1, [0.0, 0.5], 1),
-        (2, [0.0, 0.25], 1),
-    ]))
-    hand = [(1, 1, 3, 3584), (2, 0, 3, 0)]
-    got_spark, got_ora = _run_both(spark, "embedding_dim_variance_profile", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-# ---------------------------------------------------------------------------
-# Overflow staging lane (built r16)
-# ---------------------------------------------------------------------------
-
-
-def test_hand_chunk_dup_rate(spark, tmp_path):
-    """Short docs are single chunks (= full text). s1: docs 1,2 share
-    'AAAA' (2 distinct docs -> both occurrences dup), doc 3 unique, doc
-    10 is 160 chars -> TWO chunks (1..200 window takes all 160; second
-    window 151..160), both unique -> s1 = 5 chunks, 2 dup, 4000 bp.
-    s2: doc 4 repeats 'AAAA' (dup via docs 1,2 cross-source), doc 5
-    unique -> 2 chunks, 1 dup, 5000 bp. Empty and NULL text excluded."""
-    docs = _documents([
-        (1, "AAAA", "s1"),
-        (2, "AAAA", "s1"),
-        (3, "BBBB", "s1"),
-        (10, "X" * 160, "s1"),
-        (4, "AAAA", "s2"),
-        (5, "CCCC", "s2"),
-        (6, "", "s2"),
-        (7, None, "s1"),
-    ])
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [("s1", 5, 2, 4000), ("s2", 2, 1, 5000)]
-    got_spark, got_ora = _run_both(spark, "text_chunk_dup_rate", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_token_survival_curve(spark, tmp_path):
-    """d1 'a b c' (5 chars, 3 tokens), d2 60 chars / 2 tokens, d3 120
-    chars / 1 token. Ladder: t=0 -> 3 docs / 6 tokens (total), t=50 ->
-    {d2,d3} 3 tokens (5000 bp), t=100 -> {d3} 1 token (1666 bp),
-    t>=200 -> zeros."""
-    docs = _documents([
-        (1, "a b c", "s"),
-        (2, "x" * 30 + " " + "y" * 29, "s"),
-        (3, "z" * 120, "s"),
-    ])
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [
-        (0, 3, 6, 10000), (50, 2, 3, 5000), (100, 1, 1, 1666),
-        (200, 0, 0, 0), (400, 0, 0, 0), (800, 0, 0, 0), (1600, 0, 0, 0),
-    ]
-    got_spark, got_ora = _run_both(spark, "documents_token_survival_curve", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_bounce_rate(spark, tmp_path):
-    """user 1: view@00:00 + click@00:10 (one session, entry view, not a
-    bounce); view@02:00 alone (bounce, entry view). user 2: click alone
-    (bounce, entry click). user 3: view@00:00 + purchase@exactly 00:30
-    -> gap == 1800s is NOT > 30 min, same session (entry view, no
-    bounce). view: 3 sessions / 1 bounce -> 3333 bp; click: 1/1 ->
-    10000 bp."""
-    rows = [
-        (1, _ts("2024-01-01T00:00:00"), 1, "view", 1.0),
-        (2, _ts("2024-01-01T00:10:00"), 1, "click", 1.0),
-        (3, _ts("2024-01-01T02:00:00"), 1, "view", 1.0),
-        (4, _ts("2024-01-01T00:00:00"), 2, "click", 1.0),
-        (5, _ts("2024-01-01T00:00:00"), 3, "view", 1.0),
-        (6, _ts("2024-01-01T00:30:00"), 3, "purchase", 1.0),
-    ]
-    d = _mk_sf(tmp_path, events=_events(rows))
-    hand = [("click", 1, 1, 10000), ("view", 3, 1, 3333)]
-    got_spark, got_ora = _run_both(spark, "events_bounce_rate_by_entry_type", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_degree_profile(spark, tmp_path):
-    """v1=v2=[1]*8, v3 has one 0 (sign bucket treats 0 as '1', cos with
-    v1/v2 = sqrt(7/8) = 0.935414 >= 0.4): all three mutually neighbors
-    -> degree 2 each. v4 leads with -1 -> its own bucket, degree 0.
-    v5 = zero vector: same bucket as v1-v3 but zero norm -> sim NULL
-    with everyone (never a neighbor, degree 0) and does not perturb
-    v1-v3's degrees. Histogram: degree 0 x2, degree 2 x3."""
-    d = _mk_sf(tmp_path, embeddings=_embeddings([
-        (1, [1.0] * 8, 1),
-        (2, [1.0] * 8, 1),
-        (3, [1.0, 0.0] + [1.0] * 6, 1),
-        (4, [-1.0] + [1.0] * 7, 1),
-        (5, [0.0] * 8, 1),
-    ]))
-    hand = [(0, 2), (2, 3)]
-    got_spark, got_ora = _run_both(spark, "similarity_graph_degree_profile", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_pii_density(spark, tmp_path):
-    """doc 7 (doc_id % 7 == 0) gets the synthetic email appended:
-    'call 555 1234 user7@example.com' -> 31 chars, digit runs {555,
-    1234, 7} = 3, emails 1. doc 1: 14 chars, no digits. s1 totals:
-    2 docs, 45 chars, 3 runs (666 per 10k), 1 email (222 per 10k).
-    s2: 'a1b2' -> 4 chars, runs {1, 2} = 2 -> 5000 per 10k."""
-    docs = _documents([
-        (7, "call 555 1234", "s1"),
-        (1, "no digits here", "s1"),
-        (2, "a1b2", "s2"),
-    ])
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [
-        ("s1", 2, 45, 3, 1, 666, 222),
-        ("s2", 1, 4, 2, 0, 5000, 0),
-    ]
-    got_spark, got_ora = _run_both(spark, "text_pii_density_census", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_ks_drift(spark, tmp_path):
-    """Dates span 01-01..01-11 -> pivot = 01-06 (integer-us midpoint);
-    the 01-06 order lands in the SECOND half (t >= pivot). half1 =
-    {100, 200} (n1=2), half2 = {200, 300, 400} (n2=3).
-    ECDF bp: cents 100 -> (5000, 0) diff 5000; 200 -> (10000, 3333)
-    diff 6667; 300 -> (10000, 6666) diff 3334; 400 -> (10000, 10000)
-    diff 0. Rank by diff desc, cents asc."""
-    orders = _orders_full([
-        (1, 1, "O", 1.00, _ts("2024-01-01T00:00:00"), "P"),
-        (2, 1, "O", 2.00, _ts("2024-01-02T00:00:00"), "P"),
-        (3, 2, "O", 2.00, _ts("2024-01-11T00:00:00"), "P"),
-        (4, 2, "O", 3.00, _ts("2024-01-11T00:00:00"), "P"),
-        (5, 3, "O", 4.00, _ts("2024-01-06T00:00:00"), "P"),
-    ])
-    d = _mk_sf(tmp_path, orders=orders)
-    hand = [
-        (1, 200, 10000, 3333, 6667),
-        (2, 100, 5000, 0, 5000),
-        (3, 300, 10000, 6666, 3334),
-        (4, 400, 10000, 10000, 0),
-    ]
-    got_spark, got_ora = _run_both(spark, "orders_ks_drift_date_halves", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_minhash_band_census(spark, tmp_path):
-    """docs 1,2 share identical text -> identical signatures -> share
-    their bucket in EVERY band; doc 3 is shingle-disjoint -> its own
-    bucket (band equality would need an md5 collision). Every band:
-    2 buckets, 3 docs, hottest 2, pairs C(2,2)=1."""
-    docs = _documents([
-        (1, "abcdefghijklmnop", "s"),
-        (2, "abcdefghijklmnop", "s"),
-        (3, "zyxwvutsrqponmlk", "s"),
-    ])
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [(i, 2, 3, 2, 1) for i in range(4)]
-    got_spark, got_ora = _run_both(spark, "dedup_minhash_band_census", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_prefix_template_census(spark, tmp_path):
-    """docs 5,10 (doc_id % 5 == 0) get the 45-char synthetic header ->
-    both share its first 40 chars as prefix regardless of their text
-    (2 docs, 2 sources, first 5). docs 1,2 share 'C'*40 (2 docs, 1
-    source). doc 3 is a singleton prefix (filtered); doc 4 shorter
-    than 40 (excluded). '=' < 'C' breaks the n_docs tie."""
-    docs = _documents([
-        (5, "A" * 40, "s1"),
-        (10, "B" * 40, "s2"),
-        (1, "C" * 40, "s1"),
-        (2, "C" * 40, "s1"),
-        (3, "D" * 50, "s1"),
-        (4, "short", "s1"),
-    ])
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [
-        ("=== COMMON CRAWL BOILERPLATE HEADER 0001", 2, 2, 5),
-        ("C" * 40, 2, 1, 1),
-    ]
-    got_spark, got_ora = _run_both(spark, "documents_prefix_template_census", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_session_duration_hist(spark, tmp_path):
-    """user 1: 00:00 + 00:10 -> 600 s -> floor(log2 600) = 9. user 2:
-    single event -> 0 s -> bucket -1. user 3: 1 s gap -> log2(1) = 0.
-    user 4: 3 s -> floor(log2 3) = 1."""
-    rows = [
-        (1, _ts("2024-01-01T00:00:00"), 1, "view", 1.0),
-        (2, _ts("2024-01-01T00:10:00"), 1, "view", 1.0),
-        (3, _ts("2024-01-01T00:00:00"), 2, "view", 1.0),
-        (4, _ts("2024-01-01T00:00:00"), 3, "view", 1.0),
-        (5, _ts("2024-01-01T00:00:01"), 3, "view", 1.0),
-        (6, _ts("2024-01-01T00:00:00"), 4, "view", 1.0),
-        (7, _ts("2024-01-01T00:00:03"), 4, "view", 1.0),
-    ]
-    d = _mk_sf(tmp_path, events=_events(rows))
-    hand = [(-1, 1, 0), (0, 1, 1), (1, 1, 3), (9, 1, 600)]
-    got_spark, got_ora = _run_both(
-        spark, "events_session_duration_histogram_log2", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_winsorized_stats(spark, tmp_path):
-    """type a: cents {100,200,300,400}; p01 = 100 + 0.03*100 = 103,
-    p99 = 300 + 0.97*100 = 397; clamped {103,200,300,397} -> mean 250.
-    type b: single 500 -> p01 = p99 = mean = 500. NULL value and NULL
-    type rows excluded."""
-    rows = [
-        (1, _ts("2024-01-01T00:00:00"), 1, "a", 1.0),
-        (2, _ts("2024-01-01T00:00:01"), 1, "a", 2.0),
-        (3, _ts("2024-01-01T00:00:02"), 1, "a", 3.0),
-        (4, _ts("2024-01-01T00:00:03"), 1, "a", 4.0),
-        (5, _ts("2024-01-01T00:00:04"), 1, "b", 5.0),
-        (6, _ts("2024-01-01T00:00:05"), 1, "a", None),
-        (7, _ts("2024-01-01T00:00:06"), 1, None, 9.0),
-    ]
-    d = _mk_sf(tmp_path, events=_events(rows))
-    hand = [("a", 4, 103.0, 397.0, 250.0), ("b", 1, 500.0, 500.0, 500.0)]
-    got_spark, got_ora = _run_both(spark, "events_value_winsorized_stats", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_month_seasonality(spark, tmp_path):
-    """Jan: 1.00 + 2.00 = 300 cents, Feb: 1.00 = 100; total 400.
-    Jan share 7500 bp, index 300*120000//400 = 90000; Feb 2500 /
-    30000. Unpriced and undated orders excluded."""
-    orders = _orders_full([
-        (1, 1, "O", 1.00, _ts("2024-01-05T00:00:00"), "P"),
-        (2, 1, "O", 2.00, _ts("2024-01-20T00:00:00"), "P"),
-        (3, 2, "O", 1.00, _ts("2024-02-10T00:00:00"), "P"),
-        (4, 2, "O", None, _ts("2024-03-01T00:00:00"), "P"),
-    ])
-    d = _mk_sf(tmp_path, orders=orders)
-    hand = [(1, 2, 300, 7500, 90000), (2, 1, 100, 2500, 30000)]
-    got_spark, got_ora = _run_both(spark, "orders_month_seasonality_index", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_hourly_p95(spark, tmp_path):
-    """view: hour-00 has 3 events, hour-01 has 1 -> n_hours 2, max 3,
-    p95 = 1 + 0.95*(3-1) = 2.9. click: one hour of 2 -> p95 = 2.0."""
-    rows = [
-        (1, _ts("2024-01-01T00:00:00"), 1, "view", 1.0),
-        (2, _ts("2024-01-01T00:10:00"), 1, "view", 1.0),
-        (3, _ts("2024-01-01T00:20:00"), 2, "view", 1.0),
-        (4, _ts("2024-01-01T01:00:00"), 1, "view", 1.0),
-        (5, _ts("2024-01-01T00:00:00"), 2, "click", 1.0),
-        (6, _ts("2024-01-01T00:30:00"), 2, "click", 1.0),
-    ]
-    d = _mk_sf(tmp_path, events=_events(rows))
-    hand = [("click", 1, 2, 2.0), ("view", 2, 3, 2.9)]
-    got_spark, got_ora = _run_both(spark, "events_hourly_load_p95_per_type", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_token_impact(spark, tmp_path):
-    """'a b' appears as docs 1,2 (s1) and 4 (s2); global keeper is doc
-    1, so docs 2 and 4 are removed in their OWN sources. s1: 3 docs /
-    5 tokens / 1 removed carrying 2 tokens (4000 bp). s2: doc 4 (2
-    tokens removed) + unique 'd e f' -> 2 docs / 5 tokens / 4000 bp.
-    NULL text excluded."""
-    docs = _documents([
-        (1, "a b", "s1"),
-        (2, "a b", "s1"),
-        (3, "c", "s1"),
-        (4, "a b", "s2"),
-        (5, None, "s2"),
-        (6, "d e f", "s2"),
-    ])
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [("s1", 3, 5, 1, 2, 4000), ("s2", 2, 5, 1, 2, 4000)]
-    got_spark, got_ora = _run_both(spark, "dedup_token_impact_by_source", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_bucket_balance(spark, tmp_path):
-    """4-bit: v1,v2 -> '1111'; v3,v4 -> '0111' (sign of dim0 differs
-    inside the first 4 dims for both) -> two buckets of 2 -> one
-    log2(2)=1 row. 8-bit: v1,v2 share '11111111'; v3 ('01110111') and
-    v4 ('01111111') split -> sizes {2,1,1} -> rows at log2 0 (two
-    singletons) and 1 (one pair bucket)."""
-    d = _mk_sf(tmp_path, embeddings=_embeddings([
-        (1, [1.0] * 8, 1),
-        (2, [1.0] * 8, 1),
-        (3, [-1.0, 1.0, 1.0, 1.0, -1.0, 1.0, 1.0, 1.0], 1),
-        (4, [-1.0] + [1.0] * 7, 1),
-    ]))
-    hand = [(4, 1, 2, 4, 2), (8, 0, 2, 2, 1), (8, 1, 1, 2, 2)]
-    got_spark, got_ora = _run_both(spark, "embedding_bucket_balance_audit", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_pack_budget_sweep(spark, tmp_path):
-    """Shard s1 = 3+2 = 5 tokens, s2 = 1 token (its NULL-text doc
-    contributes 0). Every budget B >= 128 needs one pack per shard ->
-    2 packs, pad 2B-6, utilization 6*10000 // (2B)."""
-    docs = _documents([
-        (1, "a b c", "s1"),
-        (2, "d e", "s1"),
-        (3, "x", "s2"),
-        (4, None, "s2"),
-    ])
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [
-        (128, 2, 250, 234), (256, 2, 506, 117),
-        (512, 2, 1018, 58), (1024, 2, 2042, 29),
-    ]
-    got_spark, got_ora = _run_both(spark, "pack_budget_waste_sweep", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_lsh_param_sweep(spark, tmp_path):
-    """docs 1,2 identical -> identical signatures -> share a bucket in
-    EVERY band of EVERY layout; doc 3 shingle-disjoint -> singletons.
-    Per band: buckets {2,1}, pairs 1. 4x2: 8 buckets / 4 pairs; 2x4:
-    4 / 2; 8x1: 16 / 8. Config order is lexicographic."""
-    docs = _documents([
-        (1, "abcdefghijklmnop", "s"),
-        (2, "abcdefghijklmnop", "s"),
-        (3, "zyxwvutsrqponmlk", "s"),
-    ])
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [
-        ("2x4", 2, 4, 2, 2), ("4x2", 4, 8, 2, 4), ("8x1", 8, 16, 2, 8),
-    ]
-    got_spark, got_ora = _run_both(spark, "dedup_lsh_param_sweep", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_lang_length_matrix(spark, tmp_path):
-    """en: 'ab' (len 2 -> bucket 1, 1 token) + 'abcd e' (len 6 ->
-    bucket 2, 2 tokens) -> lang total 3 tokens, shares 3333/6666.
-    de: 'x y z' (len 5 -> bucket 2, 3 tokens) -> 10000."""
-    docs = pa.table({
-        "doc_id": pa.array([1, 2, 3], pa.int64()),
-        "text": pa.array(["ab", "abcd e", "x y z"], pa.string()),
-        "lang": pa.array(["en", "en", "de"], pa.string()),
-        "source": pa.array(["s"] * 3, pa.string()),
-        "n_chars": pa.array([2, 6, 5], pa.int64()),
-    })
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [
-        ("de", 2, 1, 3, 10000), ("en", 1, 1, 1, 3333), ("en", 2, 1, 2, 6666),
-    ]
-    got_spark, got_ora = _run_both(spark, "documents_lang_length_matrix", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_containment_threshold_sweep(spark, tmp_path):
-    """doc 1 = alphabet (15 distinct 12-shingles), doc 2 = its first
-    20 chars (9 shingles, all contained in doc 1's). Containment:
-    2-in-1 = 9/9 = 100 pct; 1-in-2 = floor(9*100/15) = 60 pct.
-    Sweep: t=50,60 -> 2 pairs / 2 contained docs; t=70,80,90 -> only
-    the 100-pct pair."""
-    docs = _documents([
-        (1, "abcdefghijklmnopqrstuvwxyz", "s"),
-        (2, "abcdefghijklmnopqrst", "s"),
-    ])
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [(50, 2, 2), (60, 2, 2), (70, 1, 1), (80, 1, 1), (90, 1, 1)]
-    got_spark, got_ora = _run_both(
-        spark, "dedup_containment_threshold_sweep", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_label_cohesion(spark, tmp_path):
-    """Label 0: [1,0],[0,1],[1,1] -> sims {0, 0.707107, 0.707107}
-    (round 6) -> mean 0.4714 over 3 pairs. Label 1: singleton -> 0
-    pairs, NULL mean. Label 2: zero vector + [1,0] -> the pair's sim
-    is NULL (zero norm) -> 0 counted pairs, NULL mean."""
-    d = _mk_sf(tmp_path, embeddings=_embeddings([
-        (1, [1.0, 0.0], 0),
-        (2, [0.0, 1.0], 0),
-        (3, [1.0, 1.0], 0),
-        (4, [1.0, 0.0], 1),
-        (5, [0.0, 0.0], 2),
-        (6, [1.0, 0.0], 2),
-    ]))
-    hand = [(0, 3, 3, 0.4714), (1, 1, 0, None), (2, 2, 0, None)]
-    got_spark, got_ora = _run_both(spark, "embedding_label_cohesion_audit", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_intersession_gaps(spark, tmp_path):
-    """user 1 has sessions starting 00:00, 02:00, 05:00 -> gaps 120
-    and 180 min; user 2 has one session (no gap). median = 150,
-    p90 = 120 + 0.9*60 = 174."""
-    rows = [
-        (1, _ts("2024-01-01T00:00:00"), 1, "view", 1.0),
-        (2, _ts("2024-01-01T00:10:00"), 1, "view", 1.0),
-        (3, _ts("2024-01-01T02:00:00"), 1, "view", 1.0),
-        (4, _ts("2024-01-01T05:00:00"), 1, "view", 1.0),
-        (5, _ts("2024-01-01T00:00:00"), 2, "view", 1.0),
-    ]
-    d = _mk_sf(tmp_path, events=_events(rows))
-    hand = [(2, 150.0, 174.0)]
-    got_spark, got_ora = _run_both(spark, "events_intersession_gap_stats", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_ttr_profile(spark, tmp_path):
-    """'a b a' -> 2/3 = 6666 bp (bucket 6); 'x y' -> 10000 (bucket
-    10); 'z z z z' -> 2500 (bucket 2)."""
-    docs = _documents([
-        (1, "a b a", "s"),
-        (2, "x y", "s"),
-        (3, "z z z z", "s"),
-    ])
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [
-        (2, 1, 4, 2500, 2500), (6, 1, 3, 6666, 6666),
-        (10, 1, 2, 10000, 10000),
-    ]
-    got_spark, got_ora = _run_both(spark, "text_type_token_ratio_profile", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_embedding_dup_census(spark, tmp_path):
-    """[1,2] x3 + [3,4] x1 (NULL embedding excluded): 4 vectors, 2
-    distinct, 1 dup group holding 3 vectors, max group 3."""
-    d = _mk_sf(tmp_path, embeddings=_embeddings([
-        (1, [1.0, 2.0], 1),
-        (2, [1.0, 2.0], 1),
-        (3, [1.0, 2.0], 2),
-        (4, [3.0, 4.0], 1),
-        (5, None, 1),
-    ]))
-    hand = [(4, 2, 1, 3, 3)]
-    got_spark, got_ora = _run_both(spark, "embedding_exact_dup_census", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_source_vocab_jaccard(spark, tmp_path):
-    """s1 vocab {a,b,c} (from 'a b' + 'b c'), s2 vocab {b,c,d} ->
-    intersection 2, union 4 -> 5000 bp."""
-    docs = _documents([
-        (1, "a b", "s1"),
-        (2, "b c", "s1"),
-        (3, "b c d", "s2"),
-    ])
-    d = _mk_sf(tmp_path, documents=docs)
-    hand = [("s1", "s2", 3, 3, 5000)]
-    got_spark, got_ora = _run_both(spark, "documents_source_vocab_jaccard", d)
-    assert got_spark == hand, "SPARK diverges from the hand derivation"
-    assert got_ora == hand, "ORACLE diverges from the hand derivation"
-
-
-def test_hand_dau_trend(spark, tmp_path):
-    """DAU series over day index: (0,2), (1,1), (2,3) -> slope
-    cov/var = 1/2 = 0.5, intercept 2 - 0.5*1 = 1.5."""
-    rows = [
-        (1, _ts("2024-01-01T08:00:00"), 1, "view", 1.0),
-        (2, _ts("2024-01-01T09:00:00"), 2, "view", 1.0),
-        (3, _ts("2024-01-02T08:00:00"), 1, "view", 1.0),
-        (4, _ts("2024-01-03T08:00:00"), 1, "view", 1.0),
-        (5, _ts("2024-01-03T09:00:00"), 2, "view", 1.0),
-        (6, _ts("2024-01-03T10:00:00"), 3, "view", 1.0),
-    ]
-    d = _mk_sf(tmp_path, events=_events(rows))
-    hand = [(3, 0.5, 1.5)]
-    got_spark, got_ora = _run_both(spark, "events_dau_trend_slope", d)
     assert got_spark == hand, "SPARK diverges from the hand derivation"
     assert got_ora == hand, "ORACLE diverges from the hand derivation"

@@ -39,9 +39,6 @@ pytestmark = pytest.mark.slow
 from transactional_datalake_using_amazon_datafirehose_iceberg_spark.queries import (
     QUERY_SPECS,
 )
-from transactional_datalake_using_amazon_datafirehose_iceberg_spark.queries.extended import (
-    SPECS_NEXT,
-)
 
 _SRC_SF = "/root/testdata/sf0.001"
 _TABLES = [
@@ -67,11 +64,6 @@ _EXCLUDE = {
 }
 
 
-def _all_specs():
-    out = dict(QUERY_SPECS)
-    for s in SPECS_NEXT:
-        out[s.name] = s
-    return out
 
 
 def _mk_dir(tmp_path, **tables) -> str:
@@ -113,10 +105,9 @@ def _assert_parity(spark, sf_dir, names):
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{os.path.join(sf_dir, t + '.parquet')}')"
         )
-    specs = _all_specs()
     bad = []
     for name in sorted(names):
-        spec = specs[name]
+        spec = QUERY_SPECS[name]
         sdf = spec.run_spark(spark, sf_dir)
         scols = sorted(sdf.columns)
         srows = sorted(
@@ -154,7 +145,7 @@ def test_null_text_documents_parity(spark, tmp_path):
     })
     d = _mk_dir(tmp_path, documents=docs)
     names = [
-        n for n, s in _all_specs().items()
+        n for n, s in QUERY_SPECS.items()
         if any(t in s.tags for t in ("llm", "text", "dedup"))
         and "streaming" not in s.tags
         and not s.no_oracle
@@ -213,7 +204,7 @@ def test_null_orders_lineitem_parity(spark, tmp_path):
     })
     d = _mk_dir(tmp_path, orders=orders, lineitem=lineitem)
     names = [
-        n for n, s in _all_specs().items()
+        n for n, s in QUERY_SPECS.items()
         if any(
             t in s.tags
             for t in ("agg", "join", "sort", "window", "pivot", "setops",
@@ -260,7 +251,7 @@ def test_nonfinite_value_parity(spark, tmp_path):
     })
     d = _mk_dir(tmp_path, events=events)
     names = [
-        n for n, s in _all_specs().items()
+        n for n, s in QUERY_SPECS.items()
         if any(
             t in s.tags
             for t in ("events", "window", "asof", "timeseries", "analytics")
@@ -297,7 +288,7 @@ def test_multibyte_text_parity(spark, tmp_path):
     })
     d = _mk_dir(tmp_path, documents=docs)
     names = [
-        n for n, s in _all_specs().items()
+        n for n, s in QUERY_SPECS.items()
         if any(t in s.tags for t in ("llm", "text", "dedup"))
         and "streaming" not in s.tags
         and not s.no_oracle
@@ -331,7 +322,7 @@ def test_null_events_parity(spark, tmp_path):
     })
     d = _mk_dir(tmp_path, events=events)
     names = [
-        n for n, s in _all_specs().items()
+        n for n, s in QUERY_SPECS.items()
         if any(
             t in s.tags
             for t in ("events", "window", "asof", "timeseries", "analytics")
@@ -370,7 +361,7 @@ _LIFECYCLE_TAGS = {"lake", "cdc", "maintenance", "timetravel", "source",
 
 def _sweep_names(skip_tags=frozenset()):
     return [
-        n for n, s in _all_specs().items()
+        n for n, s in QUERY_SPECS.items()
         if not s.no_oracle
         and s.oracle_text() is not None
         and "streaming" not in s.tags
@@ -507,7 +498,7 @@ def test_dpp_no_hot_rows_yields_null_cents(spark, tmp_path):
         "props": pa.array(['{"k": 1}', '{"k": 2}'], pa.string()),
     })
     d = _mk_dir(tmp_path, events=events)
-    spec = _all_specs()["dpp_partitioned_scan_proof"]
+    spec = QUERY_SPECS["dpp_partitioned_scan_proof"]
     rows = {r["fact"]: r["n"] for r in spec.run_spark(spark, d).collect()}
     assert rows["1_hot_rows"] == 0
     assert rows["2_hot_cents"] is None

@@ -1,4 +1,4 @@
-"""Registry sampling-hygiene invariants.
+"""Registry sampling-hygiene invariants and the green-ledger derivation.
 
 The external correctness harness samples a 50-spec least-recently-
 verified-first PREFIX of the registry per round.  The invariants that
@@ -9,118 +9,72 @@ used to be import-time asserts; per round-13 advice they now live in
 instead of bricking every registry import (and survives ``python -O``).
 """
 
+import hashlib
+import json
+import re
+from pathlib import Path
+
+import pytest
+
 from transactional_datalake_using_amazon_datafirehose_iceberg_spark.queries import registry
+
+_ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_no_staleness_violations():
     assert registry.staleness_violations() == []
 
 
-def test_window_composition_r14():
-    """The exact 50-spec prefix the driver will sample in round 14:
-    12 never-green r14 declarations, then the 7 r8-displaced greens,
-    then the r9-stale cohort fills the rest.
-
-    Pinned to the r13 ledger state: once round-14 greens fold into
-    _GREEN_BY_ROUND the window legitimately changes, so the pin skips
-    (the generic invariants above keep holding) until the per-round
-    workflow re-pins it for the new window."""
-    import pytest
-
-    if max(registry._GREEN_BY_ROUND) != 13:
-        pytest.skip("window pin describes the r13-ledger state")
-    specs = list(registry.QUERY_SPECS.values())
-    window = specs[: registry.SAMPLING_WINDOW]
-    never = [s.name for s in window if registry._last_green_round(s.name) == 0]
-    assert len(never) == 12, never
-    r8 = {s.name for s in window if registry._last_green_round(s.name) == 8}
-    assert r8 == {
-        "q9_shape_product_profit", "q11_shape_important_stock",
-        "q16_shape_supplier_counts", "q20_shape_excess_availability",
-        "recursive_cte_ancestors", "sql_udf_create_function",
-        "variant_json_extract",
-    }, r8
-    r9 = [s.name for s in window if registry._last_green_round(s.name) == 9]
-    assert len(never) + len(r8) + len(r9) == registry.SAMPLING_WINDOW
-
-
-def test_window_composition_r15():
-    """The exact 50-spec prefix the driver will sample in round 15:
-    6 never-green r15 declarations, then the 19-spec r9-stale cohort
-    and 25 r10-stale greens fill the rest (6 + 19 + 25 = 50).
-
-    Same pin-then-skip convention as the r14 pin below: once round-15
-    greens fold into _GREEN_BY_ROUND the window legitimately changes
-    and this pin skips."""
-    import pytest
-
-    if max(registry._GREEN_BY_ROUND) != 14:
-        pytest.skip("window pin describes the r14-ledger state")
-    specs = list(registry.QUERY_SPECS.values())
-    window = specs[: registry.SAMPLING_WINDOW]
-    never = [s.name for s in window if registry._last_green_round(s.name) == 0]
-    assert never == [
-        "dedup_boundary_overlap_pairs", "events_survival_curve",
-        "embedding_norm_outliers", "documents_length_histogram_log2",
-        "orders_benford_first_digit", "multimodal_payload_dedup",
-    ], never
-    r9 = [s.name for s in window if registry._last_green_round(s.name) == 9]
-    r10 = [s.name for s in window if registry._last_green_round(s.name) == 10]
-    assert len(r9) == 19 and len(r10) == 25, (len(r9), len(r10))
-    assert len(never) + len(r9) + len(r10) == registry.SAMPLING_WINDOW
-
-
-def test_window_composition_r16():
-    """The exact 50-spec prefix the driver will sample in round 16:
-    6 never-green r16 declarations, then the 25 remaining r10-stale
-    greens and the 19-spec r11-stale cohort (6 + 25 + 19 = 50).
-
-    Same pin-then-skip convention as the prior pins: once round-16
-    greens fold into _GREEN_BY_ROUND the window legitimately changes
-    and this pin skips."""
-    import pytest
-
-    if max(registry._GREEN_BY_ROUND) != 15:
-        pytest.skip("window pin describes the r15-ledger state")
-    specs = list(registry.QUERY_SPECS.values())
-    window = specs[: registry.SAMPLING_WINDOW]
-    never = [s.name for s in window if registry._last_green_round(s.name) == 0]
-    assert never == [
-        "dedup_semantic_cluster_audit", "sample_stratified_proportional",
-        "pack_greedy_firstfit_bins", "events_bot_rate_flags",
-        "similarity_ivf_recall_audit", "text_novelty_first_seen_ratio",
-    ], never
-    r10 = [s.name for s in window if registry._last_green_round(s.name) == 10]
-    r11 = [s.name for s in window if registry._last_green_round(s.name) == 11]
-    assert len(r10) == 25 and len(r11) == 19, (len(r10), len(r11))
-    assert len(never) + len(r10) + len(r11) == registry.SAMPLING_WINDOW
-
-
 def test_ledger_names_all_declared():
     """Import already enforces this with RuntimeError; assert the happy
     path explicitly so a rename shows up here with a readable diff."""
     declared = set(registry.QUERY_SPECS)
-    for rnd, green in registry._GREEN_BY_ROUND.items():
+    for rnd, green in registry.GREEN_LEDGER.items():
         assert green <= declared, (rnd, sorted(green - declared))
 
 
-def test_window_composition_r17():
-    """The exact 50-spec prefix the driver will sample in round 17:
-    zero never-green specs remain (281/281 have a green ledger row), so
-    the window is pure rotation — the 31 remaining r11-stale greens and
-    the 19-spec r12-stale cohort (31 + 19 = 50).
+def test_order_pinned_at_r16_ledger(monkeypatch):
+    """Ordered names plus oracle SQL under the CORRECTNESS_r01..r16
+    ledger, hashed.  The digest is the one the hand-maintained ledger
+    produced before the ledger was derived from those files, so a drift
+    in the derivation, the sort or any oracle string fails here.
 
-    Same pin-then-skip convention as the prior pins: once round-17
-    greens fold into _GREEN_BY_ROUND the window legitimately changes
-    and this pin skips."""
-    import pytest
+    Computed oracles read their fixture from SPARK_GRAFT_ORACLE_SF_DIR,
+    which conftest points at the test fixture; the digest was taken with
+    each spec's own default, so the override is dropped here."""
+    monkeypatch.delenv("SPARK_GRAFT_ORACLE_SF_DIR", raising=False)
+    paths = [_ROOT / f"CORRECTNESS_r{n:02d}.json" for n in range(1, 17)]
+    specs = registry.ordered_specs(registry.load_green_ledger(paths))
+    h = hashlib.sha256()
+    for s in specs:
+        h.update(s.name.encode())
+        h.update(b"\0")
+        h.update((s.oracle_text() or "").encode())
+        h.update(b"\n")
+    assert len(specs) == 281
+    assert h.hexdigest() == (
+        "5160fd94b6eaf17b10699d0dce962685ff2abc5f75e78d20e7e916d7bfcf598e"
+    )
 
-    if max(registry._GREEN_BY_ROUND) != 16:
-        pytest.skip("window pin describes the r16-ledger state")
-    specs = list(registry.QUERY_SPECS.values())
-    window = specs[: registry.SAMPLING_WINDOW]
-    never = [s.name for s in window if registry._last_green_round(s.name) == 0]
-    assert never == [], never
-    r11 = [s.name for s in window if registry._last_green_round(s.name) == 11]
-    r12 = [s.name for s in window if registry._last_green_round(s.name) == 12]
-    assert len(r11) == 31 and len(r12) == 19, (len(r11), len(r12))
+
+def test_green_ledger_derivation(tmp_path):
+    row = {"rows_match": True, "schema_match": True, "hash_match": True,
+           "spark_rows": 1, "oracle_rows": 1, "err": None}
+    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps({
+        "green": row,
+        "rows_off": {**row, "rows_match": False},
+        "schema_off": {**row, "schema_match": False},
+        "hash_off": {**row, "hash_match": False},
+        "errored": {**row, "err": "boom"},
+    }))
+    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({"later": row}))
+    # newest first: the round comes from the file name, not list order
+    ledger = registry.load_green_ledger(
+        sorted(tmp_path.glob("CORRECTNESS_r*.json"), reverse=True)
+    )
+    assert ledger == {1: frozenset({"green"}), 2: frozenset({"later"})}
+
+    bad = tmp_path / "CORRECTNESS_r03.json"
+    bad.write_text("{not json")
+    with pytest.raises(RuntimeError, match=re.escape(str(bad))):
+        registry.load_green_ledger([bad])

@@ -224,7 +224,7 @@ _HEADLINE = [
     "partition_evolution_lifecycle",
     "streaming_sink_txn_app_ids",
     "sql_udf_create_function",
-    # round-9 declarations (the full former staged lane)
+    # round-9 declarations
     "sql_scripting_control_flow",
     "agg_listagg_within_group",
     "agg_approx_top_k",
@@ -234,7 +234,7 @@ _HEADLINE = [
     "split_leakage_free_by_cluster",
     "cdc_point_in_time_asof",
     "source_xml_roundtrip",
-    # round-10 declarations (the full former staged lane)
+    # round-10 declarations
     "merge_not_matched_update_stale",
     "events_gap_fill_interpolate",
     "asof_join_tolerance_bounded",
@@ -244,7 +244,7 @@ _HEADLINE = [
     "sql_execute_immediate_variables",
     "lake_shallow_clone_divergence",
     "cdc_schema_drift_policy",
-    # round-11 declarations (the full former staged lane)
+    # round-11 declarations
     "agg_bitmap_distinct",
     "agg_mode_median",
     "window_distinct_running",
@@ -264,7 +264,7 @@ _HEADLINE = [
     "similarity_ann_ivf",
     "similarity_ann_pq",
     "dedup_embedding_cosine",
-    # round-12 declarations (the full former staged lane)
+    # round-12 declarations
     "events_streak_longest_daily",
     "events_peak_concurrency",
     "embedding_truncate_renormalize",
@@ -272,9 +272,7 @@ _HEADLINE = [
     "orders_pareto_abc_class",
     "events_rolling_distinct_users_7d",
     "dedup_containment_asymmetric",
-    # round-13 declarations (the full former staged lane — these left
-    # the SPECS_NEXT staged sweep when promoted, so they join the
-    # declared sweep here; gap noticed in round 14)
+    # round-13 declarations
     "orders_rfm_segmentation",
     "orders_market_basket_pairs",
     "events_dau_wau_stickiness",
@@ -293,7 +291,7 @@ _HEADLINE = [
     "events_wow_top_movers",
     "quality_profile_columns",
     "text_bm25_rank",
-    # round-14 declarations (the full former staged lane)
+    # round-14 declarations
     "text_char_entropy",
     "events_active_time_union",
     "orders_mad_dispersion",
@@ -449,41 +447,6 @@ def test_extras_all_executed_plans_free_of_scale_killers(spark):
                 if node in plan and node not in _DECLARED.get(name, set()):
                     bad.append(f"{name} (execution {eid}): {node}")
     assert not bad, "scale-killer plan nodes found in extras:\n" + "\n".join(bad)
-
-
-def test_staged_lane_executed_plans_free_of_scale_killers(spark):
-    """The round-10 staging lane gets the same executed-plan sweep as
-    declared specs BEFORE declaration — a scale-killer must fail the
-    round it is built, not the round it is declared. Runs every staged
-    spec to completion and sweeps every execution it triggered (side
-    effects included), exactly like the extras sweep."""
-    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.queries.extended import (
-        SPECS_NEXT as _STAGED_EXT,
-    )
-    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.queries.relational import (
-        SPECS_NEXT as _STAGED_REL,
-    )
-
-    staged = _STAGED_REL + _STAGED_EXT
-    if not staged:
-        import pytest as _pytest
-
-        _pytest.skip("staging lane empty this round")
-    sf = _os.environ.get("SPARK_GRAFT_SF_DIR_TINY", "/root/testdata/sf0.001")
-    store = spark._jsparkSession.sharedState().statusStore()
-    bad: list[str] = []
-    for spec in staged:
-        _flush_listener_bus(spark)
-        last = max((eid for eid, _ in _executions_after(store, -1)), default=-1)
-        spec.run_spark(spark, sf).count()
-        _flush_listener_bus(spark)
-        for eid, plan in _executions_after(store, last):
-            for node in _FORBIDDEN:
-                if node in plan and node not in _DECLARED.get(spec.name, set()):
-                    bad.append(f"{spec.name} (execution {eid}): {node}")
-    assert not bad, (
-        "scale-killer plan nodes found in staged lane:\n" + "\n".join(bad)
-    )
 
 
 def test_probe_skip_rewrites_diff_as_no_change_in_changelog(spark, tmp_path):

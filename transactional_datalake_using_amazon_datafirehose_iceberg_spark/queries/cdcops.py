@@ -70,19 +70,8 @@ ORDER BY trans_id
 """
 
 
-# Last _replay_build scratch dir, for bench introspection: the r14 driver
-# record regressed on cdc_retail_replay while every other headline query
-# improved, and the open question was whether the replay's lake-table
-# warehouse + CDC input actually landed on the tmpfs scratch in the
-# driver environment. bench.py reads this to emit a replay_io section
-# (filesystem + per-subdir bytes + commit count) into the record.
-LAST_REPLAY_WORKDIR: str | None = None
-
-
 def _replay_build(spark, sf):
-    global LAST_REPLAY_WORKDIR
     workdir = scratch_dir("cdc_replay_")
-    LAST_REPLAY_WORKDIR = workdir
     p1, p2 = write_golden_corpus(os.path.join(workdir, "in"))
     table = LakeTable.create(
         os.path.join(workdir, "retail"),

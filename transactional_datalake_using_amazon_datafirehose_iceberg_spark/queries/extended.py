@@ -23,18 +23,14 @@ from ..schemas import RETAIL_TRANS, RETAIL_TRANS_KEYS, RETAIL_TRANS_PARTITION
 from ..sources.cdc_jsonl import read_cdc_batch, write_golden_corpus
 from .base import QuerySpec, scratch_dir
 
-_SPECS: list[QuerySpec] = []
-
-
-def _add(s: QuerySpec) -> None:
-    _SPECS.append(s)
+SPECS: list[QuerySpec] = []
 
 
 # ---------------------------------------------------------------------------
 # UDF surface (vectorized pandas UDF + grouped applyInPandas)
 # ---------------------------------------------------------------------------
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="udf_pandas_quality_score",
     doc="Arrow-vectorized scalar pandas UDF (the engine's Lambda-"
         "extension-point equivalent); floor-normalized so the pure-SQL "
@@ -65,7 +61,7 @@ def _sql_udf_build(spark, sf):
     """)
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="udf_sql_registered",
     doc="The same vectorized pandas UDF exposed to the SQL surface via "
         "spark.udf.register and invoked from SQL text — the declared "
@@ -120,7 +116,7 @@ def _compact_binpack_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="maintenance_compact_binpack",
     doc="Binpack compaction as a content-invariance check: six tiny "
         "append commits produce six small files; compact() must shrink "
@@ -146,7 +142,7 @@ ORDER BY grp
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_group_by_all",
     doc="GROUP BY ALL / ORDER BY ALL (identical SQL text runs on both "
         "engines): per-(status, priority-class) order stats.",
@@ -164,7 +160,7 @@ ORDER BY ALL
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="udf_applyinpandas_zscore",
     doc="Grouped applyInPandas (UDTF-like grouped map): per-language "
         "z-score of doc length; oracle = window functions.",
@@ -190,7 +186,7 @@ ORDER BY doc_id
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="udf_grouped_agg_pandas",
     doc="Grouped-aggregate pandas UDF (vectorized UDAF): quantity-"
         "weighted avg price per return flag; exact-integer cents "
@@ -245,7 +241,7 @@ def _dead_letter_build(spark, sf):
     ).orderBy("raw")
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="cdc_dead_letter_split",
     doc="T4/S9 semantics as data: malformed records dead-letter with "
         "time partitions, control records vanish, good records do not "
@@ -283,7 +279,7 @@ def _runbook_dml_build(spark, sf):
     return t.read(spark).orderBy("trans_id")
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="runbook_dml_lifecycle",
     doc="The README runbook as one query: CREATE PARTITIONED TABLE, "
         "INSERT VALUES, point UPDATE, point DELETE, final state "
@@ -318,7 +314,7 @@ def _time_travel_build(spark, sf):
     return spark.createDataFrame(counts, "version int, n_rows bigint").orderBy("version")
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="time_travel_versions",
     doc="Snapshot isolation / VERSION AS OF (D5): row counts of the two "
         "CDC commits read back by version.",
@@ -355,7 +351,7 @@ def _changelog_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="changelog_incremental_read",
     doc="Incremental CDC-out read (Iceberg create_changelog_view "
         "parity): the row-level change stream between the two golden "
@@ -421,7 +417,7 @@ def _wap_build(spark, sf):
     return spark.createDataFrame(steps, "step string, n bigint").orderBy("step")
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="wap_branch_publish",
     doc="Write-audit-publish lifecycle as data: stage CDC writes + an "
         "audit fix on a branch (invisible to main readers), publish via "
@@ -470,7 +466,7 @@ def _schema_evo_build(spark, sf):
     return t.read(spark).orderBy("trans_id")
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="schema_evolution_add_drop",
     doc="Runbook Q2-adjacent DDL: ADD COLUMN then DROP COLUMN as "
         "metadata-only snapshot commits; pre-evolution rows read back "
@@ -573,7 +569,7 @@ def _merge_evolve_build(spark, sf):
     return t.read(spark).orderBy("trans_id")
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="merge_schema_evolution",
     doc="Schema-evolving MERGE: a CDC batch carrying a brand-new column "
         "auto-ADD-COLUMNs it (metadata-only) before applying, so an "
@@ -624,7 +620,7 @@ def _catalog_ddl_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="catalog_ddl_lifecycle",
     doc="Catalog DDL lifecycle as data: CREATE DATABASE / CREATE TABLE "
         "(idempotent IF NOT EXISTS) / SHOW / DESCRIBE / DROP — the "
@@ -651,7 +647,7 @@ ORDER BY item, value
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="metadata_tables_inspect",
     doc="Metadata tables as data: snapshots (all heads incl. the "
         "rolled-back one), history (current ancestry only), refs with "
@@ -716,7 +712,7 @@ def _zorder_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="maintenance_zorder_cluster",
     doc="Z-order recluster (Iceberg rewrite_data_files with "
         "sort_order => zorder): bit-interleaved multi-column layout "
@@ -773,7 +769,7 @@ def _salted_join_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="join_skew_salted",
     doc="Explicitly salted equi-join (hot-key spreading, right side "
         "replicated x salts) — result must equal the plain join; the "
@@ -828,7 +824,7 @@ def _streaming_window_build(spark, sf, slide=None):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_sliding_windows",
     doc="Structured Streaming SLIDING-window agg (1 h window / 30 min "
         "slide): each event lands in 2 overlapping windows. Oracle "
@@ -875,7 +871,7 @@ def _streaming_session_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="streaming_session_windows",
     doc="Structured Streaming SESSION-window agg (30-min gap, "
         "session_window operator), replayed to completion via a memory "
@@ -980,7 +976,7 @@ def _streaming_interval_join_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="streaming_interval_join",
     doc="Stream-stream INNER join with an event-time interval condition "
         "(attribution: clicks in the 30 min before each purchase, same "
@@ -1013,7 +1009,7 @@ def _streaming_outer_join_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="streaming_interval_join_outer",
     doc="Stream-stream LEFT OUTER interval join: matched attribution "
         "pairs stream out immediately; a purchase with no click in its "
@@ -1100,7 +1096,7 @@ def _bucketed_join_build(spark, sf):
     return out
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="join_bucketed_colocated",
     doc="Bucketed co-located join (both sides bucketBy(8) on the join "
         "key, broadcast disabled): the recurring-join pattern that "
@@ -1179,7 +1175,7 @@ def _delivery_log_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="streaming_delivery_log",
     doc="Delivery logging (S10, the CloudWatch delivery-log analogue): "
         "a StreamingQueryListener appends one JSONL record per "
@@ -1229,7 +1225,7 @@ def _stream_static_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="streaming_static_enrich",
     doc="Stream-static enrichment join: the event stream joins a "
         "broadcast customer dimension inside the stream (re-read per "
@@ -1248,7 +1244,7 @@ ORDER BY c_mktsegment, event_type
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="streaming_windowed_counts",
     doc="Structured Streaming tumbling-window agg with watermark, "
         "replayed to completion via a memory sink; must equal the batch "
@@ -1332,7 +1328,7 @@ def _late_drop_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="streaming_watermark_late_drop",
     doc="Watermark late-data DROP, observed for real: two recent "
         "micro-batches advance the watermark to max(ts) - 2 h (the "
@@ -1411,7 +1407,7 @@ def _equality_delete_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="equality_delete_lifecycle",
     doc="Iceberg v2 equality-delete files: DELETE by key as a pure "
         "metadata+keys commit (zero data-file I/O), sequence-number "
@@ -1478,7 +1474,7 @@ def _streaming_running_counts_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="streaming_running_user_counts",
     doc="Arbitrary stateful streaming operator (applyInPandasWithState): "
         "a per-user running event count held in the state store, emitted "
@@ -1593,7 +1589,7 @@ def _scd2_apply_batches(spark, t, ev, bounds):
             b.unpersist()
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="scd2_dimension_history",
     doc="Slowly-changing-dimension Type 2: the events stream applied in "
         "three time-ordered micro-batches through scd2_delta + MERGE — "
@@ -1689,7 +1685,7 @@ def _merge_conditional_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="merge_conditional_partial",
     doc="MERGE with a WHEN MATCHED AND <condition> gate and a partial "
         "UPDATE SET column list: matched orders take the lineitem-derived "
@@ -1780,7 +1776,7 @@ def _streaming_dedup_within_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="streaming_dedup_within_watermark",
     doc="dropDuplicatesWithinWatermark: dedup state expires by event "
         "time + delay instead of growing with the key space — the "
@@ -1798,7 +1794,7 @@ ORDER BY event_type
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="streaming_stateful_dedup",
     doc="Stateful streaming dedup (dropDuplicates on event_id under a "
         "watermark): the source directory holds every event twice; the "
@@ -1857,7 +1853,7 @@ def _merge_nmbs_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="merge_not_matched_by_source",
     doc="MERGE with WHEN NOT MATCHED BY SOURCE THEN DELETE (Spark 4 / "
         "Delta full-snapshot sync): target converges to exactly the "
@@ -1912,7 +1908,7 @@ def _rename_column_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="rename_column_lifecycle",
     doc="ALTER TABLE RENAME COLUMN (Iceberg metadata-only semantics, no "
         "rewrite): files written before and after the rename coexist "
@@ -1976,7 +1972,7 @@ def _widen_column_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="widen_column_lifecycle",
     doc="ALTER COLUMN type widening (int->bigint, float->double) as a "
         "metadata-only commit: narrow-physical files promote at scan "
@@ -2035,7 +2031,7 @@ def _lake_stream_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="streaming_lake_table_source",
     doc="LakeTable as a Structured Streaming source (Spark 4 Python Data "
         "Source streaming API; Iceberg streaming-read parity): appended "
@@ -2114,7 +2110,7 @@ def _expire_snapshots_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="maintenance_expire_snapshots",
     doc="expire_snapshots + orphan sweep as a lifecycle check: append/"
         "update/tag/delete/append, expire to keep_last=1; the current "
@@ -2202,7 +2198,7 @@ def _chained_stream_agg_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="streaming_chained_aggregations",
     doc="Multiple stateful operators in ONE streaming query: 15-min "
         "tumbling counts chained into hourly sum/max re-aggregation via "
@@ -2274,7 +2270,7 @@ def _scan_prune_proof_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="scan_prune_stats_proof",
     doc="File-skipping as data: 6 single-day commits; day-equality "
         "prunes to 1 file by min/max stats, a point key lookup prunes "
@@ -2327,7 +2323,7 @@ def _default_column_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="add_column_default_lifecycle",
     doc="ALTER TABLE ADD COLUMN ... DEFAULT as a metadata-only commit "
         "(Iceberg v3 initial-default): pre-ALTER files read the "
@@ -2392,7 +2388,7 @@ def _row_lineage_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="row_lineage_lifecycle",
     doc="Iceberg v3 row lineage: _row_id blocks assigned per commit, "
         "carried through COW UPDATE/DELETE/MERGE, materialized by "
@@ -2458,7 +2454,7 @@ def _lake_sink_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="streaming_lake_table_sink",
     doc="LakeTable as a Structured Streaming SINK (Spark 4 Python Data "
         "Source Arrow stream writer): per-task parquet files promoted "
@@ -2518,7 +2514,7 @@ def _udtf_analyze_build(spark, sf):
     ).orderBy("doc_id")
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="udtf_analyze_dynamic_schema",
     doc="Polymorphic Python UDTF: analyze() computes the output schema "
         "from a literal argument at plan time (3 -> tok0..tok2). "
@@ -2557,7 +2553,7 @@ def _arrow_udf_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="udf_arrow_optimized",
     doc="Arrow-optimized scalar Python UDF (useArrow=True, Spark 4): "
         "per-digit sum of the order key; oracle via list_aggregate "
@@ -2612,7 +2608,7 @@ def _csv_orc_roundtrip_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="source_csv_orc_roundtrip",
     doc="CSV and ORC as source formats: the parquet fixture slice "
         "written to both, read back (CSV under an explicit schema), "
@@ -2669,7 +2665,7 @@ def _map_in_arrow_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="udf_map_in_arrow",
     doc="mapInArrow partition transform over raw pyarrow RecordBatches "
         "(element-sum per embedding); float32 accumulation order is "
@@ -2687,7 +2683,7 @@ ORDER BY vec_id
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="sql_lateral_column_alias",
     doc="Lateral column aliases (Spark 3.4+/DuckDB both support): a "
         "SELECT-list alias referenced by later expressions in the same "
@@ -2705,7 +2701,7 @@ ORDER BY o_orderkey
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="sql_named_parameters",
     doc="Parameterized SQL (Spark 4 named parameter markers): the "
         "build binds :prio and :cutoff via spark.sql(args=...); the "
@@ -2764,7 +2760,7 @@ def _cherry_pick_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="wap_cherry_pick_publish",
     doc="Write-audit-publish when the base moved: fast_forward refuses "
         "the diverged branch, cherry_pick re-applies exactly the "
@@ -2814,7 +2810,7 @@ def _merge_widen_build(spark, sf):
     return got.orderBy("trans_id")
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="merge_evolve_widening",
     doc="MERGE with evolve_schema widens int table columns to the "
         "source's bigint (metadata-only promotion) before applying, so "
@@ -2872,7 +2868,7 @@ def _skip_change_commits_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="streaming_skip_change_commits",
     doc="LakeTable streaming source with skipChangeCommits: a DELETE "
         "commit between two appends is skipped whole instead of "
@@ -2891,12 +2887,6 @@ SELECT fact, CAST(n AS BIGINT) AS n FROM (
 """
 ))
 
-
-SPECS = list(_SPECS)
-
-
-# Round-8 staging (see relational.SPECS_NEXT for the lane contract):
-# rehearsed locally now, declared when the sampling window rotates.
 
 def _sink_txn_build(spark, sf):
     """Two INDEPENDENT availableNow streaming queries (fresh checkpoints,
@@ -3363,7 +3353,7 @@ ORDER BY split
 """
 
 
-_STAGED = [
+SPECS.extend([
     QuerySpec(
         name="cdc_dead_letter_replay",
         doc="Dead-letter replay, end to end: a delivery with "
@@ -3501,32 +3491,7 @@ GROUP BY c_custkey % 2
 ORDER BY parity
 """,
     ),
-]
-
-# Round-9 declaration: the full remaining staged lane (window math in
-# relational.py's _DECLARE_R9 note — 9 new never-green specs fit the
-# 50-spec sampling window alongside the 3 r4-stale + 38 r5-stale).
-_DECLARE_R9 = {
-    "cdc_routed_fanout",
-    "partition_evolution_lifecycle",
-    "streaming_sink_txn_app_ids",
-    "cdc_dead_letter_replay",
-    "split_leakage_free_by_cluster",
-    "cdc_point_in_time_asof",
-    "source_xml_roundtrip",
-}
-SPECS.extend(s for s in _STAGED if s.name in _DECLARE_R9)
-assert not [s for s in _STAGED if s.name not in _DECLARE_R9], (
-    "round-8 staged lane fully declared in r9"
-)
-
-
-# ---------------------------------------------------------------------------
-# Round-10 staging lane: built and oracle-rehearsed this round
-# (tests/test_oracle_parity.py staged-lane test), declared next round as
-# the sampling window rotates.
-# ---------------------------------------------------------------------------
-_STAGED_R10: list[QuerySpec] = []
+])
 
 
 def _nmbs_update_build(spark, sf):
@@ -3568,7 +3533,7 @@ def _nmbs_update_build(spark, sf):
     )
 
 
-_STAGED_R10.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="merge_not_matched_update_stale",
     doc="MERGE ... WHEN NOT MATCHED BY SOURCE THEN UPDATE SET (Spark 4 "
         "/ Delta parity, plans/merge.py): a snapshot sync that KEEPS "
@@ -3679,7 +3644,7 @@ def _gap_fill_build(spark, sf):
     ).orderBy("user_id", "h")
 
 
-_STAGED_R10.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_gap_fill_interpolate",
     doc="Time-series gap fill with linear interpolation (the metrics/"
         "sensor-pipeline staple): per-user hourly averages in integer "
@@ -3782,7 +3747,7 @@ def _asof_tolerance_build(spark, sf):
     ).orderBy("event_id")
 
 
-_STAGED_R10.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="asof_join_tolerance_bounded",
     doc="As-of join with a staleness tolerance (pandas merge_asof "
         "tolerance / kdb wj parity, operators/asof.py): each purchase "
@@ -3860,7 +3825,7 @@ def _dpp_build(spark, sf):
     ).orderBy("fact")
 
 
-_STAGED_R10.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="dpp_partitioned_scan_proof",
     doc="Dynamic partition pruning proof: a hive-partitioned fact scan "
         "whose partition filter exists only through a broadcast dim "
@@ -3885,7 +3850,7 @@ SELECT fact, CAST(n AS BIGINT) AS n FROM (
 ))
 
 
-_STAGED_R10.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="pivot_multi_agg",
     doc="Pivot with MULTIPLE aggregates per cell (sum + count): "
         "explicit pivot values keep the column set static for Catalyst "
@@ -3973,7 +3938,7 @@ def _meta_partitions_build(spark, sf):
     )
 
 
-_STAGED_R10.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="meta_partitions_inspect",
     doc="Iceberg `partitions` metadata-table parity "
         "(plans/lake_table.py meta_partitions): per-partition-value "
@@ -4019,7 +3984,7 @@ EXECUTE IMMEDIATE
 """)
 
 
-_STAGED_R10.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="sql_execute_immediate_variables",
     doc="Spark 4 session variables + dynamic SQL: DECLARE/SET VARIABLE, "
         "EXECUTE IMMEDIATE with USING parameter binding and INTO scalar "
@@ -4089,7 +4054,7 @@ def _shallow_clone_build(spark, sf):
     ).orderBy("fact")
 
 
-_STAGED_R10.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="lake_shallow_clone_divergence",
     doc="Zero-copy shallow clone (Delta SHALLOW CLONE / Iceberg "
         "register_table parity, plans/lake_table.py shallow_clone): the "
@@ -4197,7 +4162,7 @@ def _schema_drift_build(spark, sf):
     return spark.createDataFrame(facts, "fact string, n bigint").orderBy("fact")
 
 
-_STAGED_R10.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="cdc_schema_drift_policy",
     doc="Schema-drift policy gate (operators/cdc_transform.py "
         "split_schema_drift): payloads carrying columns the destination "
@@ -4228,35 +4193,7 @@ SELECT fact, CAST(n AS BIGINT) AS n FROM (
 ))
 
 
-# Round-10 declaration: the full staged lane. Window math (registry
-# `_GREEN_BY_ROUND`): 9 never-green + the r5/r6-stale cohort fill the
-# driver's 50-spec sampling prefix; r6 greens that slip stay within the
-# 5-round staleness bound.
-_DECLARE_R10 = {
-    "merge_not_matched_update_stale",
-    "events_gap_fill_interpolate",
-    "asof_join_tolerance_bounded",
-    "dpp_partitioned_scan_proof",
-    "pivot_multi_agg",
-    "meta_partitions_inspect",
-    "sql_execute_immediate_variables",
-    "lake_shallow_clone_divergence",
-    "cdc_schema_drift_policy",
-}
-SPECS.extend(s for s in _STAGED_R10 if s.name in _DECLARE_R10)
-assert not [s for s in _STAGED_R10 if s.name not in _DECLARE_R10], (
-    "round-10 staged lane fully declared in r10"
-)
-
-
-# ---------------------------------------------------------------------------
-# Round-11 staging lane: built and oracle-rehearsed this round, declared
-# next round as the sampling window rotates.
-# ---------------------------------------------------------------------------
-_STAGED_R11: list[QuerySpec] = []
-
-
-_STAGED_R11.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_bitmap_distinct",
     doc="EXACT distinct counting via bitmap aggregates (Spark 3.5 "
         "bitmap_bucket_number / bitmap_bit_position / "
@@ -4298,7 +4235,7 @@ ORDER BY o_orderstatus
 ))
 
 
-_STAGED_R11.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_mode_median",
     doc="mode() and median() aggregates (Spark 3.4 surface) per group. "
         "The mode column is a quantity band with a structurally wide "
@@ -4374,7 +4311,7 @@ def _window_distinct_running_build(spark, sf):
     )
 
 
-_STAGED_R11.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="window_distinct_running",
     doc="Cumulative DISTINCT users per event_type by day. Spark has no "
         "COUNT(DISTINCT) OVER; the naive workaround "
@@ -4401,7 +4338,7 @@ ORDER BY event_type, day
 ))
 
 
-_STAGED_R11.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_transition_matrix",
     doc="Event-to-next-event transition matrix per user journey: "
         "lead() over (user, ts, event_id) — one shuffle by user, no "
@@ -4433,7 +4370,7 @@ ORDER BY event_type, next_type
 ))
 
 
-_STAGED_R11.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="subq_not_in_null_semantics",
     doc="NOT IN vs NOT EXISTS under NULLs — the classic ANSI tri-state "
         "trap, pinned as a spec so the engine's null-aware anti-join "
@@ -4462,7 +4399,7 @@ SELECT fact, CAST(n AS BIGINT) AS n FROM (
 ))
 
 
-_STAGED_R11.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="scalar_xpath_funcs",
     doc="xpath scalar family (xpath_string / xpath_int / xpath_long / "
         "xpath_boolean / xpath list) over XML assembled from part rows "
@@ -4554,7 +4491,7 @@ def _asof_forward_nearest_build(spark, sf):
     ).orderBy("event_id")
 
 
-_STAGED_R11.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="asof_join_forward_nearest",
     doc="Directional as-of joins (operators/asof.py direction=): for "
         "every purchase, the FIRST error at-or-after it (forward) and "
@@ -4691,7 +4628,7 @@ def _expire_dry_run_audit_build(spark, sf):
     return spark.createDataFrame(facts, "fact string, n bigint").orderBy("fact")
 
 
-_STAGED_R11.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="maintenance_expire_dry_run_audit",
     doc="Snapshot-expiry DRY RUN audit (Delta VACUUM DRY RUN parity, "
         "plans/maintenance.py dry_run=True): the audit reports exactly "
@@ -4785,7 +4722,7 @@ def _dedup_url_canonicalize_build(spark, sf):
     )
 
 
-_STAGED_R11.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="dedup_url_canonicalize",
     doc="URL-canonicalization dedup (the crawl-corpus step before any "
         "content dedup): three surface variants of the same resource "
@@ -4815,7 +4752,7 @@ ORDER BY canonical_url
 ))
 
 
-_STAGED_R11.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_grouping_id_cube",
     doc="grouping() / grouping_id() over CUBE: the bitmask that tells a "
         "report row its aggregation level apart from a genuine NULL "
@@ -4899,7 +4836,7 @@ def _interval_overlap_build(spark, sf):
     )
 
 
-_STAGED_R11.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="join_interval_overlap_binned",
     doc="Interval-overlap join (purchase windows x error windows per "
         "user) via fixed-width BINNING: sequence() explodes each "
@@ -4937,7 +4874,7 @@ ORDER BY user_id
 ))
 
 
-_STAGED_R11.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_anomaly_zscore_daily",
     doc="Daily per-type event-count anomalies against a trailing 7-day "
         "window, with the z-score test |x-mean| > 2*stddev restated in "
@@ -4969,39 +4906,6 @@ FROM (
 ORDER BY event_type, day
 """,
 ))
-
-
-# Round-11 declaration: the full 12-spec staged lane. Window math
-# (registry `_GREEN_BY_ROUND` after folding CORRECTNESS_r10): 12
-# never-green + the 19-spec r6-stale cohort + the r7-stale cohort fill
-# the driver's 50-spec sampling prefix; r7 greens that slip stay within
-# the 5-round staleness bound.
-_DECLARE_R11 = {
-    "agg_bitmap_distinct",
-    "agg_mode_median",
-    "window_distinct_running",
-    "events_transition_matrix",
-    "subq_not_in_null_semantics",
-    "scalar_xpath_funcs",
-    "asof_join_forward_nearest",
-    "maintenance_expire_dry_run_audit",
-    "dedup_url_canonicalize",
-    "agg_grouping_id_cube",
-    "join_interval_overlap_binned",
-    "events_anomaly_zscore_daily",
-}
-SPECS.extend(s for s in _STAGED_R11 if s.name in _DECLARE_R11)
-assert not [s for s in _STAGED_R11 if s.name not in _DECLARE_R11], (
-    "round-11 staged lane fully declared in r11"
-)
-
-
-# ---------------------------------------------------------------------------
-# Round-12 staging lane: built and oracle-rehearsed this round, declared
-# next round as the sampling window rotates (window math in the r11
-# commit: up to 18 new specs fit alongside the 32-spec r7-stale cohort).
-# ---------------------------------------------------------------------------
-_STAGED_R12: list[QuerySpec] = []
 
 
 def _streak_build(spark, sf):
@@ -5044,7 +4948,7 @@ def _streak_build(spark, sf):
     )
 
 
-_STAGED_R12.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_streak_longest_daily",
     doc="Longest consecutive-day activity streak per user — the "
         "canonical gaps-and-islands analytic (island key = day minus "
@@ -5106,7 +5010,7 @@ def _peak_concurrency_build(spark, sf):
     )
 
 
-_STAGED_R12.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_peak_concurrency",
     doc="Peak concurrent sessions per event type (each event opens a "
         "30-minute interval): the +1/-1 boundary-sweep formulation — "
@@ -5162,7 +5066,7 @@ def _matryoshka_build(spark, sf):
     )
 
 
-_STAGED_R12.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="embedding_truncate_renormalize",
     doc="Matryoshka-style embedding truncation (Kusupati et al. 2022): "
         "keep the first 8 dims and L2-renormalize — the standard "
@@ -5225,7 +5129,7 @@ def _shot_boundaries_build(spark, sf):
     )
 
 
-_STAGED_R12.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="multimodal_shot_boundaries",
     doc="Video-style shot-boundary detection plumbing: per-frame "
         "energy (the deterministic fake decode over payload bytes, "
@@ -5298,7 +5202,7 @@ def _pareto_build(spark, sf):
     )
 
 
-_STAGED_R12.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="orders_pareto_abc_class",
     doc="Pareto / ABC revenue classification: customers ranked by "
         "revenue desc (orderkey tiebreak), running share of total, "
@@ -5358,7 +5262,7 @@ def _rolling_distinct_build(spark, sf):
     )
 
 
-_STAGED_R12.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_rolling_distinct_users_7d",
     doc="Rolling 7-day distinct active users per observed day — the "
         "DAU/WAU staple that a window frame cannot express (no "
@@ -5399,7 +5303,7 @@ def _containment_build(spark, sf):
     )
 
 
-_STAGED_R12.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="dedup_containment_asymmetric",
     doc="Asymmetric shingle containment (Broder): |sh(A) n sh(B)| / "
         "|sh(A)| >= 80% flags documents CONTAINED in another — the "
@@ -5436,33 +5340,6 @@ WHERE i * 100 >= 80 * n
 ORDER BY inner_doc, outer_doc
 """,
 ))
-
-
-# Round-12 declaration: the full 7-spec staged lane. Window math
-# (registry `_GREEN_BY_ROUND` after folding CORRECTNESS_r11): 7
-# never-green + the 32-spec r7-or-older stale cohort + 11 r8-stale fill
-# the driver's 50-spec sampling prefix; displaced r8 greens re-check in
-# r13, inside the 5-round staleness bound.
-_DECLARE_R12 = {
-    "events_streak_longest_daily",
-    "events_peak_concurrency",
-    "embedding_truncate_renormalize",
-    "multimodal_shot_boundaries",
-    "orders_pareto_abc_class",
-    "events_rolling_distinct_users_7d",
-    "dedup_containment_asymmetric",
-}
-SPECS.extend(s for s in _STAGED_R12 if s.name in _DECLARE_R12)
-assert not [s for s in _STAGED_R12 if s.name not in _DECLARE_R12], (
-    "round-12 staged lane fully declared in r12"
-)
-
-
-# ---------------------------------------------------------------------------
-# Round-13 staging lane: built and oracle-rehearsed this round, declared
-# next round as the sampling window rotates.
-# ---------------------------------------------------------------------------
-_STAGED_R13: list[QuerySpec] = []
 
 
 def _rfm_build(spark, sf):
@@ -5506,7 +5383,7 @@ def _rfm_build(spark, sf):
     )
 
 
-_STAGED_R13.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="orders_rfm_segmentation",
     doc="RFM (recency/frequency/monetary) customer segmentation — the "
         "classic CRM analytic: per-customer metrics in one orders "
@@ -5585,7 +5462,7 @@ def _basket_build(spark, sf):
     )
 
 
-_STAGED_R13.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="orders_market_basket_pairs",
     doc="Market-basket co-occurrence: part pairs appearing together in "
         ">=2 orders — the candidate-generation step of association-rule "
@@ -5641,7 +5518,7 @@ def _stickiness_build(spark, sf):
     )
 
 
-_STAGED_R13.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_dau_wau_stickiness",
     doc="DAU/WAU stickiness per ISO week — the product-analytics "
         "staple: average daily distinct actives over weekly distinct "
@@ -5701,7 +5578,7 @@ def _churn_build(spark, sf):
     )
 
 
-_STAGED_R13.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_inactivity_churn",
     doc="Inactivity churn classification: users bucketed by elapsed "
         "hours since their last event relative to the corpus "
@@ -5784,7 +5661,7 @@ def _wma_build(spark, sf):
     )
 
 
-_STAGED_R13.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_weighted_moving_avg",
     doc="Linearly-weighted moving average (weights 3,2,1 over the last "
         "three active days) of per-user daily spend — the trend-"
@@ -5854,7 +5731,7 @@ def _attribution_build(spark, sf):
     )
 
 
-_STAGED_R13.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_first_touch_attribution",
     doc="First-touch attribution: each user's acquisition channel is "
         "the event type of their earliest event ((ts, event_id) "
@@ -5913,7 +5790,7 @@ def _gap_stats_build(spark, sf):
     )
 
 
-_STAGED_R13.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="orders_interpurchase_gap_stats",
     doc="Inter-purchase gap distribution: days between a customer's "
         "consecutive orders (one customer-keyed lag window), exact "
@@ -5964,7 +5841,7 @@ def _variant_build(spark, sf):
     )
 
 
-_STAGED_R13.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="json_variant_props_agg",
     doc="Spark 4 VARIANT surface: parse_json + try_variant_get typed "
         "extraction from the events props payload (the open-schema "
@@ -6062,7 +5939,7 @@ def _phash_build(spark, sf):
     )
 
 
-_STAGED_R13.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="multimodal_phash_hamming_pairs",
     doc="Perceptual-hash near-duplicate detection for binary payloads: "
         "a 48-bit above-mean byte hash per document (the pHash shape "
@@ -6152,7 +6029,7 @@ def _stream_complete_build(spark, sf):
     )
 
 
-_STAGED_R13.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="streaming_complete_mode_lake_sink",
     doc="Complete-output-mode streaming aggregation into the lake-table "
         "Python Data Source sink: the runtime's truncate flag makes "
@@ -6191,7 +6068,7 @@ def _hash_sample_build(spark, sf):
     )
 
 
-_STAGED_R13.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="sample_hash_topk_per_group",
     doc="Deterministic per-group sampling: k=5 documents per language, "
         "chosen by md5(doc_id) order — the consistent-hash sampling "
@@ -6246,7 +6123,7 @@ def _roll_median_build(spark, sf):
     )
 
 
-_STAGED_R13.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="window_rolling_median_cents",
     doc="Rolling EXACT median (robust smoothing) of a customer's last 7 "
         "order totals: percentile(0.5) as a sliding window aggregate — "
@@ -6303,7 +6180,7 @@ def _decay_build(spark, sf):
     )
 
 
-_STAGED_R13.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_binary_decay_smoothing",
     doc="Exponentially-decayed daily event volume (EWMA shape, alpha = "
         "1/2, truncated at 31 calendar days): banded self-join over the "
@@ -6361,7 +6238,7 @@ def _cohort_build(spark, sf):
     )
 
 
-_STAGED_R13.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="orders_cohort_retention",
     doc="Cohort revenue-retention triangle: customers bucketed by "
         "first-order month (linear year*12+month index — no months_"
@@ -6435,7 +6312,7 @@ def _overlap_build(spark, sf):
     )
 
 
-_STAGED_R13.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_audience_overlap",
     doc="Pairwise audience overlap across event types: exact distinct-"
         "user Jaccard per type pair (n_both / union, integer basis "
@@ -6501,7 +6378,7 @@ def _wow_build(spark, sf):
     ).limit(50)
 
 
-_STAGED_R13.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_wow_top_movers",
     doc="Week-over-week top movers: weekly event volume per type "
         "(Monday-start date_trunc on both engines), LAG against the "
@@ -6575,7 +6452,7 @@ def _profile_build(spark, sf):
     ).orderBy("col_name")
 
 
-_STAGED_R13.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="quality_profile_columns",
     doc="Data-quality column profile of the orders table (the "
         "expectation-audit primitive of a curation pipeline): per-"
@@ -6724,7 +6601,7 @@ LIMIT 20
 """
 
 
-_STAGED_R13.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="text_bm25_rank",
     doc="BM25 relevance ranking over the documents corpus for a fixed "
         "3-term query (k1=1.2, b=0.75): tokenize -> doc lengths -> "
@@ -6738,46 +6615,6 @@ _STAGED_R13.append(QuerySpec(
     build=_bm25_build,
     oracle=_bm25_oracle,
 ))
-
-
-# Round-13 declaration: the full 18-spec staged lane. Window math
-# (registry `_GREEN_BY_ROUND` after folding CORRECTNESS_r12): 18
-# never-green + the 32-spec r8-stale cohort fill the driver's 50-spec
-# sampling prefix exactly; the 7 displaced r8 greens lead round 14's
-# window (one-time 6-round gap, asserted in the registry max-staleness
-# check).
-_DECLARE_R13 = {
-    "orders_rfm_segmentation",
-    "orders_market_basket_pairs",
-    "events_dau_wau_stickiness",
-    "events_inactivity_churn",
-    "events_weighted_moving_avg",
-    "events_first_touch_attribution",
-    "orders_interpurchase_gap_stats",
-    "json_variant_props_agg",
-    "multimodal_phash_hamming_pairs",
-    "streaming_complete_mode_lake_sink",
-    "sample_hash_topk_per_group",
-    "window_rolling_median_cents",
-    "events_binary_decay_smoothing",
-    "orders_cohort_retention",
-    "events_audience_overlap",
-    "events_wow_top_movers",
-    "quality_profile_columns",
-    "text_bm25_rank",
-}
-SPECS.extend(s for s in _STAGED_R13 if s.name in _DECLARE_R13)
-assert not [s for s in _STAGED_R13 if s.name not in _DECLARE_R13], (
-    "round-13 staged lane fully declared in r13"
-)
-
-
-# ---------------------------------------------------------------------------
-# Round-14 staging lane: built ahead in the round-12 continuation so the
-# declaration cadence never starves; declared after the r13 lane rotates
-# through.
-# ---------------------------------------------------------------------------
-_STAGED_R14: list[QuerySpec] = []
 
 
 def _entropy_build(spark, sf):
@@ -6813,7 +6650,7 @@ def _entropy_build(spark, sf):
     )
 
 
-_STAGED_R14.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="text_char_entropy",
     doc="Per-document Shannon character entropy (bits/char) — the "
         "classic gibberish/minified-content quality signal: natural "
@@ -6887,7 +6724,7 @@ def _active_union_build(spark, sf):
     )
 
 
-_STAGED_R14.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_active_time_union",
     doc="Total active time per user as the UNION of overlapping 5-minute "
         "activity intervals (one per event): merge overlapping-or-"
@@ -6957,7 +6794,7 @@ def _mad_build(spark, sf):
     )
 
 
-_STAGED_R14.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="orders_mad_dispersion",
     doc="Median absolute deviation of order totals per priority — the "
         "robust dispersion companion to the rolling median: group "
@@ -7022,7 +6859,7 @@ def _qcent_build(spark, sf):
     )
 
 
-_STAGED_R14.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="embedding_quantized_centroids",
     doc="Per-label centroid dispersion over x64-quantized embeddings: "
         "element-wise integer centroid sums per (label, dim), then each "
@@ -7084,7 +6921,7 @@ def _conv_latency_build(spark, sf):
     )
 
 
-_STAGED_R14.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_conversion_latency_quantiles",
     doc="First-view -> first-purchase conversion latency distribution: "
         "per-user min timestamps in ONE conditional aggregate (no "
@@ -7140,7 +6977,7 @@ def _hhi_build(spark, sf):
     )
 
 
-_STAGED_R14.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_hhi_concentration",
     doc="Herfindahl-Hirschman concentration of activity per event type: "
         "per-user share of the type's volume in truncated basis points, "
@@ -7224,7 +7061,7 @@ def _basket_lift_build(spark, sf):
     )
 
 
-_STAGED_R14.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="orders_basket_lift",
     doc="Association rules over the basket pairs: confidence P(B|A) and "
         "lift P(AB)/(P(A)P(B)) in truncated basis points for every pair "
@@ -7284,7 +7121,7 @@ def _dow_build(spark, sf):
     )
 
 
-_STAGED_R14.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_dow_seasonality",
     doc="Day-of-week seasonality profile per event type: volume share "
         "in truncated basis points per weekday (Sunday=1, both engines) "
@@ -7361,7 +7198,7 @@ def _gini_build(spark, sf):
     )
 
 
-_STAGED_R14.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="orders_gini_coefficient",
     doc="Gini concentration index of customer spend per order priority "
         "(the inequality complement to HHI): per-segment customer "
@@ -7440,7 +7277,7 @@ def _funnel_any_build(spark, sf):
     )
 
 
-_STAGED_R14.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_funnel_any_order",
     doc="Unordered (set-completion) funnel per day: users who performed "
         "ALL of view/click/purchase that day in any order, over active "
@@ -7505,7 +7342,7 @@ def _zipf_build(spark, sf):
     )
 
 
-_STAGED_R14.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="text_zipf_rank_frequency",
     doc="Zipf rank-frequency profile of the corpus vocabulary: top-50 "
         "tokens by frequency with their rank and the integer-bp ratio "
@@ -7580,7 +7417,7 @@ def _invoice_pairs_build(spark, sf):
     )
 
 
-_STAGED_R14.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="orders_fuzzy_invoice_pairs",
     doc="Duplicate-invoice candidate pairs (entity-resolution shape): "
         "orders of the SAME customer within 7 days, emitted with day "
@@ -7609,14 +7446,6 @@ WHERE a.o_custkey IS NOT NULL
 ORDER BY a.o_custkey, k1, k2
 """,
 ))
-
-
-
-# ---------------------------------------------------------------------------
-# Round-15 staging lane: built ahead in round 13 so the declaration
-# cadence never starves; declared after the r14 lane rotates through.
-# ---------------------------------------------------------------------------
-_STAGED_R15: list[QuerySpec] = []
 
 
 def _boundary_overlap_build(spark, sf):
@@ -7662,7 +7491,7 @@ def _boundary_overlap_build(spark, sf):
     )
     n_hot = freq.filter(F.col("__bf") > max_gram_freq).count()
     if n_hot:
-        # stderr, never stdout: bench.py's one-JSON-line driver
+        # stderr, never stdout: the benchmark's one-JSON-object
         # contract owns stdout
         print(
             f"dedup_boundary_overlap_pairs: dropped {n_hot} hot boundary "
@@ -7679,7 +7508,7 @@ def _boundary_overlap_build(spark, sf):
     )
 
 
-_STAGED_R15.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="dedup_boundary_overlap_pairs",
     doc="Suffix/prefix continuation-duplicate candidates: ordered pairs "
         "where A's last 12 chars equal B's first 12 (paginated/rolled "
@@ -7768,7 +7597,7 @@ def _survival_build(spark, sf):
     )
 
 
-_STAGED_R15.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_survival_curve",
     doc="Engagement survival curve: users still active >= d days after "
         "their first event (per-user lifespan -> histogram -> suffix "
@@ -7850,7 +7679,7 @@ def _norm_outlier_build(spark, sf):
     )
 
 
-_STAGED_R15.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="embedding_norm_outliers",
     doc="Embedding-hygiene audit (one summary row always): corpus "
         "size, e6-quantized L2-norm quartiles, and the count of "
@@ -7906,7 +7735,7 @@ def _len_hist_build(spark, sf):
     )
 
 
-_STAGED_R15.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="documents_length_histogram_log2",
     doc="Power-of-two token-length histogram of the corpus — the "
         "sequence-budget planning profile (how much of the corpus fits "
@@ -7952,7 +7781,7 @@ def _benford_build(spark, sf):
     )
 
 
-_STAGED_R15.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="orders_benford_first_digit",
     doc="Benford first-significant-digit profile of order totals (the "
         "fabricated-data / data-quality audit): digit of the integer "
@@ -8007,7 +7836,7 @@ def _payload_dedup_build(spark, sf):
     )
 
 
-_STAGED_R15.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="multimodal_payload_dedup",
     doc="Content-addressable payload dedup (the CAS primitive of a "
         "multimodal lake): md5 over raw payload bytes, duplicate "
@@ -8037,14 +7866,6 @@ HAVING COUNT(*) > 1
 ORDER BY content_md5
 """,
 ))
-
-
-
-# ---------------------------------------------------------------------------
-# Round-16 staging lane: built ahead in round 14 so the declaration
-# cadence never starves; declared after the r15 lane rotates through.
-# ---------------------------------------------------------------------------
-_STAGED_R16: list[QuerySpec] = []
 
 
 def _semantic_cluster_build(spark, sf):
@@ -8129,7 +7950,7 @@ ORDER BY cluster_id
 """
 
 
-_STAGED_R16.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="dedup_semantic_cluster_audit",
     doc="Semantic dedup audit over connected-component labels: cosine "
         "edges (sign-LSH bucketed, >= 0.4) -> CC (min-label pointer "
@@ -8176,7 +7997,7 @@ def _stratified_sample_build(spark, sf):
     )
 
 
-_STAGED_R16.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="sample_stratified_proportional",
     doc="Stratified proportional sampling: per-language quotas = "
         "floor(budget * stratum_share) from one metadata-scale count "
@@ -8259,7 +8080,7 @@ def _greedy_pack_build(spark, sf):
     )
 
 
-_STAGED_R16.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="pack_greedy_firstfit_bins",
     doc="Whole-document greedy packing under a 256-token budget: docs "
         "in doc_id order per shard, overflow opens a new bin, oversized "
@@ -8333,7 +8154,7 @@ def _bot_flags_build(spark, sf):
     )
 
 
-_STAGED_R16.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_bot_rate_flags",
     doc="Bot/automation heuristic per user: total events, distinct "
         "active minutes, peak events-in-one-minute, distinct event "
@@ -8403,7 +8224,7 @@ def _recall_audit_build(spark, sf):
     )
 
 
-_STAGED_R16.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="similarity_ivf_recall_audit",
     doc="Recall@5 audit of the IVF index vs exact brute-force top-5 per "
         "query (vec_id < 5): hits = |IVF results ∩ exact results|, "
@@ -8571,7 +8392,7 @@ def _novelty_build(spark, sf):
     )
 
 
-_STAGED_R16.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="text_novelty_first_seen_ratio",
     doc="First-seen 3-gram novelty per document: distinct word trigrams "
         "attributed to the MIN doc_id that contains them; novelty = "
@@ -8606,3613 +8427,3 @@ GROUP BY g.doc_id
 ORDER BY doc_id
 """,
 ))
-
-
-# ---------------------------------------------------------------------------
-# Round-17 staging lane: built ahead in round 14 (the cadence buffer is
-# now two lanes deep); declared after the r16 lane rotates through.
-# Window math: r17 = 6 never-green + 31 r11-displaced/stale + 13 r12.
-# ---------------------------------------------------------------------------
-_STAGED_R17: list[QuerySpec] = []
-
-
-def _minhash_err_build(spark, sf):
-    # estimator-quality audit (the LSH analogue of the IVF recall
-    # audit): per candidate pair, the 8-slot minhash Jaccard ESTIMATE
-    # (matches * 1250 bp) against the EXACT stride-1 shingle Jaccard —
-    # the measurement that calibrates bands/rows before a dedup run
-    # trusts the estimate. Exact side reads only candidate docs'
-    # shingles (semi-join), never the corpus: the jaccard-verify bytes
-    # class.
-    from ..operators import dedup as D
-    from ..operators.materialize import materialize
-
-    docs = spark.table("documents")
-    sigs = materialize(D.minhash_signature_mapside(docs, "text", "doc_id"))
-    # pair-scale, materialized once: cand feeds FOUR consumers (est,
-    # both cdocs union sides, the inter join) — lazy, each re-ran the
-    # LSH banding (r15 staged-lane scaling rehearsal: 6.8 s at sf0.1,
-    # the lane's heaviest spec)
-    cand = materialize(
-        D.lsh_candidate_pairs(sigs, "doc_id").select("doc_a", "doc_b")
-    )
-    a = sigs.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"h{j}").alias(f"a{j}") for j in range(8)],
-    )
-    b = sigs.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"h{j}").alias(f"b{j}") for j in range(8)],
-    )
-    n_match = sum(
-        F.coalesce((F.col(f"a{j}") == F.col(f"b{j}")).cast("int"), F.lit(0))
-        for j in range(8)
-    )
-    est = (
-        cand.join(a, "doc_a").join(b, "doc_b")
-        .select("doc_a", "doc_b", n_match.cast("int").alias("n_match_slots"))
-    )
-    cdocs = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .union(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    # restriction BELOW shingling (the jaccard_verify_docs pattern): only
-    # candidate docs explode into shingles — the corpus-volume explode +
-    # distinct was the spec's dominant cost (the operator file's own
-    # documented trap; same pair-bounded forced-broadcast class)
-    docs_c = docs.join(F.broadcast(cdocs), "doc_id", "left_semi")
-    # per-doc dedup via array_distinct in the projection, not a
-    # relational .distinct(): shingle dedup has no cross-row dependency
-    # beyond the row's own array, so the candidate-volume (doc_id, sh)
-    # shuffle the old distinct paid is pure waste — the exploded
-    # relation lands in the materialize already deduped (r16 shave,
-    # same move as the shingle-df profile)
-    shc = materialize(
-        # lower() hoisted out of the lambda (one lower per row, not per
-        # shingle position — the char_shingles O(len^2) trap, r16
-        # optimization pass)
-        docs_c.select("doc_id", F.lower(F.col("text")).alias("__lt")).select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.expr(
-                        "transform(sequence(1, greatest(length(__lt) - 11, 1)),"
-                        " i -> substring(__lt, i, 12))"
-                    )
-                )
-            ).alias("sh"),
-        )
-    )
-    sizes = shc.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    inter = (
-        cand.alias("c")
-        .join(shc.alias("s1"), F.col("c.doc_a") == F.col("s1.doc_id"))
-        .join(
-            shc.alias("s2"),
-            (F.col("c.doc_b") == F.col("s2.doc_id"))
-            & (F.col("s1.sh") == F.col("s2.sh")),
-        )
-        .groupBy("c.doc_a", "c.doc_b")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    return (
-        est.join(sa, "doc_a").join(sb, "doc_b")
-        .join(inter, ["doc_a", "doc_b"], "left")
-        .select(
-            "doc_a", "doc_b", "n_match_slots",
-            F.expr("n_match_slots * 10000 div 8").cast("bigint")
-            .alias("est_bp"),
-            F.expr(
-                "coalesce(i, 0) * 10000 div (na + nb - coalesce(i, 0))"
-            ).cast("bigint").alias("exact_bp"),
-            F.expr(
-                "abs(n_match_slots * 10000 div 8"
-                " - coalesce(i, 0) * 10000 div (na + nb - coalesce(i, 0)))"
-            ).cast("bigint").alias("err_bp"),
-        )
-        .orderBy("doc_a", "doc_b")
-    )
-
-
-def _minhash_err_oracle() -> str:
-    from .llmops import _SHINGLES_CTE, _SIG_CTE, _SIG_SHINGLES_CTE
-
-    slot_match = " + ".join(
-        f"CASE WHEN a.h{j} = b.h{j} THEN 1 ELSE 0 END" for j in range(8)
-    )
-    return f"""
-WITH {_SHINGLES_CTE.strip()}, {_SIG_SHINGLES_CTE.strip()}, {_SIG_CTE.strip()},
-m AS (
-  SELECT c.doc_a, c.doc_b, ({slot_match}) AS n_match_slots
-  FROM cand c
-  JOIN sig a ON a.doc_id = c.doc_a
-  JOIN sig b ON b.doc_id = c.doc_b
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS i
-  FROM cand c
-  JOIN sh s1 ON s1.doc_id = c.doc_a
-  JOIN sh s2 ON s2.doc_id = c.doc_b AND s2.sh = s1.sh
-  GROUP BY 1, 2
-)
-SELECT m.doc_a, m.doc_b,
-       CAST(m.n_match_slots AS INTEGER) AS n_match_slots,
-       CAST(m.n_match_slots * 10000 // 8 AS BIGINT) AS est_bp,
-       CAST(COALESCE(i.i, 0) * 10000
-            // (sa.n + sb.n - COALESCE(i.i, 0)) AS BIGINT) AS exact_bp,
-       CAST(ABS(m.n_match_slots * 10000 // 8
-            - COALESCE(i.i, 0) * 10000
-              // (sa.n + sb.n - COALESCE(i.i, 0))) AS BIGINT) AS err_bp
-FROM m
-JOIN sizes sa ON sa.doc_id = m.doc_a
-JOIN sizes sb ON sb.doc_id = m.doc_b
-LEFT JOIN inter i ON i.doc_a = m.doc_a AND i.doc_b = m.doc_b
-ORDER BY m.doc_a, m.doc_b
-"""
-
-
-_STAGED_R17.append(QuerySpec(
-    name="dedup_minhash_estimate_error",
-    doc="MinHash estimator calibration: per LSH candidate pair, the "
-        "8-slot signature Jaccard estimate (matches/8 in bp) vs the "
-        "exact stride-1 shingle Jaccard, with the absolute error — the "
-        "audit that justifies the bands/rows choice before a dedup run "
-        "trusts the estimate. Exact side semi-joined to candidate docs "
-        "only (verify bytes class).",
-    tags=("llm", "dedup"),
-    build=_minhash_err_build,
-    oracle=_minhash_err_oracle,
-))
-
-
-def _path_prefix_build(spark, sf):
-    # journey discovery: the 10 most common first-3-event-type paths.
-    # Per-user windows are user-partitioned (scale-safe); the top-10 is
-    # a sort-limit (TakeOrderedAndProject), with the rank window over
-    # the bounded 10-row relation — the Zipf shape.
-    ev = spark.table("events").filter(
-        F.col("ts").isNotNull()
-        & F.col("user_id").isNotNull()
-        & F.col("event_type").isNotNull()
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    first3 = (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr(
-                "concat_ws('>', transform(array_sort("
-                "collect_list(struct(rn, event_type))), s -> s.event_type))"
-            ).alias("path"),
-        )
-        .filter(F.col("n") == 3)
-    )
-    counted = first3.groupBy("path").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_users")
-    )
-    top = counted.orderBy(F.col("n_users").desc(), "path").limit(10)
-    wr = Window.orderBy(F.col("n_users").desc(), "path")
-    return (
-        top.withColumn("rank", F.row_number().over(wr).cast("int"))
-        .select("rank", "path", "n_users")
-        .orderBy("rank")
-    )
-
-
-_STAGED_R17.append(QuerySpec(
-    name="events_path_prefix_topk",
-    doc="Top-10 first-3-event journey prefixes: per-user first three "
-        "event types in (ts, event_id) order joined '>', counted, "
-        "sort-limited (TakeOrderedAndProject) with the rank window "
-        "over the bounded top-10 — the funnel-discovery analytic.",
-    tags=("events", "analytics"),
-    build=_path_prefix_build,
-    oracle="""
-WITH ev AS (
-  SELECT user_id, event_type, ts, event_id
-  FROM events
-  WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL
-),
-r AS (
-  SELECT user_id, event_type,
-         ROW_NUMBER() OVER (
-           PARTITION BY user_id ORDER BY ts, event_id
-         ) AS rn
-  FROM ev
-),
-p AS (
-  SELECT user_id, STRING_AGG(event_type, '>' ORDER BY rn) AS path
-  FROM r WHERE rn <= 3
-  GROUP BY user_id
-  HAVING COUNT(*) = 3
-),
-c AS (SELECT path, CAST(COUNT(*) AS BIGINT) AS n_users FROM p GROUP BY 1)
-SELECT CAST(ROW_NUMBER() OVER (ORDER BY n_users DESC, path) AS INTEGER)
-         AS rank,
-       path, n_users
-FROM c
-ORDER BY n_users DESC, path
-LIMIT 10
-""",
-))
-
-
-def _quality_gate_build(spark, sf):
-    # drop-reason accounting: every corpus filter needs to answer "WHY
-    # did each document fall out" — a bitmask per doc, aggregated per
-    # reason combination. One map stage + one combo-scale aggregation
-    # (at most 16 rows). Integer thresholds only.
-    d = spark.table("documents").filter(
-        F.col("text").isNotNull() & (F.length("text") >= 1)
-    )
-    sig = d.select(
-        "doc_id",
-        F.length("text").alias("nc"),
-        F.size(F.split(F.col("text"), " ")).alias("nt"),
-        F.size(F.array_distinct(F.split(F.col("text"), " "))).alias("nd"),
-        (
-            F.length("text")
-            - F.length(F.regexp_replace("text", "[0-9]", ""))
-        ).alias("ndig"),
-    )
-    reasons = (
-        F.when(F.col("nc") < 100, 1).otherwise(0)
-        + F.when(F.col("nc") > 5000, 2).otherwise(0)
-        + F.when(F.col("nd") * 100 < F.col("nt") * 30, 4).otherwise(0)
-        + F.when(F.col("ndig") * 100 > F.col("nc") * 20, 8).otherwise(0)
-    )
-    return (
-        sig.withColumn("reasons", reasons.cast("int"))
-        .groupBy("reasons")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.min("doc_id").cast("bigint").alias("example_doc_id"),
-        )
-        .orderBy("reasons")
-    )
-
-
-_STAGED_R17.append(QuerySpec(
-    name="documents_quality_gate_reasons",
-    doc="Quality-gate drop-reason census: per-document bitmask (1 too "
-        "short <100 chars, 2 too long >5000, 4 token diversity <30%, "
-        "8 digit share >20%), aggregated per reason combination with an "
-        "example doc — the 'why was my data dropped' report every "
-        "corpus filter owes its users. Map stage + a <=16-row agg.",
-    tags=("llm", "text", "quality"),
-    build=_quality_gate_build,
-    oracle="""
-WITH sig AS (
-  SELECT doc_id,
-         length(text) AS nc,
-         len(string_split(text, ' ')) AS nt,
-         len(list_distinct(string_split(text, ' '))) AS nd,
-         length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))
-           AS ndig
-  FROM documents WHERE text IS NOT NULL AND length(text) >= 1
-)
-SELECT CAST(
-         (CASE WHEN nc < 100 THEN 1 ELSE 0 END)
-         + (CASE WHEN nc > 5000 THEN 2 ELSE 0 END)
-         + (CASE WHEN nd * 100 < nt * 30 THEN 4 ELSE 0 END)
-         + (CASE WHEN ndig * 100 > nc * 20 THEN 8 ELSE 0 END)
-       AS INTEGER) AS reasons,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(MIN(doc_id) AS BIGINT) AS example_doc_id
-FROM sig
-GROUP BY 1
-ORDER BY reasons
-""",
-))
-
-
-def _int8_err_build(spark, sf):
-    # quantization-distortion audit for the int8 shipping path
-    # (embedding_quantize_int8): reconstruct each dim and measure
-    # floor(|x - x_hat| * 1e6); identical double expression trees on
-    # both engines make the floors bit-identical. Map-side explode +
-    # one vec-keyed agg.
-    e = spark.table("embeddings").filter(F.col("embedding").isNotNull())
-    s = e.select(
-        "vec_id",
-        "embedding",
-        F.array_max(
-            F.transform("embedding", lambda x: F.abs(x.cast("double")))
-        ).alias("scale"),
-    ).filter(F.col("scale") > 0)
-    dim = s.select(
-        "vec_id", "scale", F.posexplode("embedding").alias("pos", "x")
-    )
-    err = dim.select(
-        "vec_id",
-        F.floor(
-            F.abs(
-                F.col("x").cast("double")
-                - F.floor(F.col("x").cast("double") / F.col("scale") * 127.0 + 0.5)
-                * F.col("scale") / 127.0
-            ) * 1e6
-        ).cast("bigint").alias("err_e6"),
-    )
-    return (
-        err.groupBy("vec_id")
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("n_dims"),
-            F.max("err_e6").cast("bigint").alias("max_err_e6"),
-            F.sum("err_e6").cast("bigint").alias("sum_err_e6"),
-        )
-        .select(F.col("vec_id").cast("bigint").alias("vec_id"),
-                "n_dims", "max_err_e6", "sum_err_e6")
-        .orderBy("vec_id")
-    )
-
-
-_STAGED_R17.append(QuerySpec(
-    name="embedding_int8_distortion_audit",
-    doc="Int8 quantization distortion per vector: reconstruct codes = "
-        "floor(x/scale*127+.5) back to x_hat and report per-dim count, "
-        "max and sum of floor(|x-x_hat|*1e6) — the fidelity check run "
-        "before the compressed index replaces full-precision vectors. "
-        "Identical double expression trees keep the e6 floors "
-        "bit-identical across engines.",
-    tags=("llm", "similarity", "quantize"),
-    build=_int8_err_build,
-    oracle="""
-WITH s AS (
-  SELECT vec_id, embedding,
-         list_max(list_transform(embedding, x -> ABS(CAST(x AS DOUBLE))))
-           AS scale
-  FROM embeddings WHERE embedding IS NOT NULL
-),
-d AS (
-  SELECT vec_id, scale, CAST(u AS DOUBLE) AS x
-  FROM s, UNNEST(embedding) AS t(u)
-  WHERE scale > 0
-),
-er AS (
-  SELECT vec_id,
-         CAST(FLOOR(ABS(x - FLOOR(x / scale * 127.0 + 0.5)
-                        * scale / 127.0) * 1e6) AS BIGINT) AS err_e6
-  FROM d
-)
-SELECT CAST(vec_id AS BIGINT) AS vec_id,
-       CAST(COUNT(*) AS INTEGER) AS n_dims,
-       CAST(MAX(err_e6) AS BIGINT) AS max_err_e6,
-       CAST(SUM(err_e6) AS BIGINT) AS sum_err_e6
-FROM er
-GROUP BY vec_id
-ORDER BY vec_id
-""",
-))
-
-
-def _dwell_build(spark, sf):
-    # inter-event dwell time keyed by the CURRENT event's type: the
-    # per-type "how long until the user does anything else" profile.
-    # LEAD over user-partitioned windows (scale-safe); exact
-    # interpolated percentiles per type over integer milliseconds
-    # (the agg_exact_percentiles parity convention: percentile vs
-    # quantile_cont, ROUND 4).
-    ev = spark.table("events").filter(
-        F.col("ts").isNotNull()
-        & F.col("user_id").isNotNull()
-        & F.col("event_type").isNotNull()
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gaps = (
-        ev.withColumn("next_us", F.lead(F.unix_micros("ts")).over(w))
-        .filter(F.col("next_us").isNotNull())
-        .select(
-            "event_type",
-            ((F.col("next_us") - F.unix_micros("ts")) / F.lit(1000))
-            .cast("bigint").alias("gap_ms"),
-        )
-    )
-    return (
-        gaps.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_gaps"),
-            F.round(F.expr("percentile(gap_ms, 0.5)"), 4)
-            .cast("double").alias("median_ms"),
-            F.round(F.expr("percentile(gap_ms, 0.9)"), 4)
-            .cast("double").alias("p90_ms"),
-        )
-        .orderBy("event_type")
-    )
-
-
-_STAGED_R17.append(QuerySpec(
-    name="events_dwell_time_percentiles",
-    doc="Dwell-time profile per event type: gap to the user's next "
-        "event (any type) in integer milliseconds, exact interpolated "
-        "median and p90 per type — the engagement-latency complement "
-        "of the transition matrix. User-partitioned LEAD windows; "
-        "type-keyed percentile agg.",
-    tags=("events", "analytics", "agg"),
-    build=_dwell_build,
-    oracle="""
-WITH ev AS (
-  SELECT user_id, event_type, ts, event_id
-  FROM events
-  WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL
-),
-g AS (
-  SELECT event_type,
-         CAST(date_diff('microsecond', ts,
-              LEAD(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))
-              // 1000 AS BIGINT) AS gap_ms
-  FROM ev
-)
-SELECT event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_gaps,
-       CAST(ROUND(quantile_cont(gap_ms, 0.5), 4) AS DOUBLE) AS median_ms,
-       CAST(ROUND(quantile_cont(gap_ms, 0.9), 4) AS DOUBLE) AS p90_ms
-FROM g
-WHERE gap_ms IS NOT NULL
-GROUP BY event_type
-ORDER BY event_type
-""",
-))
-
-
-def _charclass_build(spark, sf):
-    # script/garbage detector: ASCII char-class composition per doc in
-    # truncated bp — minified blobs, number dumps and markup skew the
-    # letter share long before a language model sees them. One map
-    # stage; classes are explicit ASCII ranges so both engines count
-    # identically (no locale-dependent \\w).
-    d = spark.table("documents").filter(
-        F.col("text").isNotNull() & (F.length("text") >= 1)
-    )
-    counts = d.select(
-        "doc_id",
-        F.length("text").alias("nc"),
-        (F.length("text")
-         - F.length(F.regexp_replace("text", "[A-Za-z]", ""))).alias("nl"),
-        (F.length("text")
-         - F.length(F.regexp_replace("text", "[0-9]", ""))).alias("ndg"),
-        (F.length("text")
-         - F.length(F.replace(F.col("text"), F.lit(" ")))).alias("nsp"),
-    )
-    # integer `div`, never double `/` + cast: trunc of an inexact double
-    # quotient can disagree with integer floor at representability edges
-    return counts.select(
-        "doc_id",
-        F.col("nc").cast("bigint").alias("n_chars"),
-        F.expr("nl * 10000 div nc").cast("bigint").alias("letters_bp"),
-        F.expr("ndg * 10000 div nc").cast("bigint").alias("digits_bp"),
-        F.expr("nsp * 10000 div nc").cast("bigint").alias("space_bp"),
-        F.expr("(nc - nl - ndg - nsp) * 10000 div nc")
-        .cast("bigint").alias("other_bp"),
-    ).orderBy("doc_id")
-
-
-_STAGED_R17.append(QuerySpec(
-    name="text_charclass_profile",
-    doc="ASCII char-class composition per document (letters/digits/"
-        "spaces/other in truncated bp): the cheap script/garbage "
-        "detector that flags minified code, number dumps and markup "
-        "before tokenization. Map-only; explicit ASCII classes keep "
-        "both regex engines in agreement.",
-    tags=("llm", "text", "quality"),
-    build=_charclass_build,
-    oracle="""
-SELECT doc_id,
-       CAST(length(text) AS BIGINT) AS n_chars,
-       CAST((length(text)
-             - length(regexp_replace(text, '[A-Za-z]', '', 'g')))
-            * 10000 // length(text) AS BIGINT) AS letters_bp,
-       CAST((length(text)
-             - length(regexp_replace(text, '[0-9]', '', 'g')))
-            * 10000 // length(text) AS BIGINT) AS digits_bp,
-       CAST((length(text) - length(replace(text, ' ', '')))
-            * 10000 // length(text) AS BIGINT) AS space_bp,
-       CAST((length(regexp_replace(
-               regexp_replace(text, '[A-Za-z0-9]', '', 'g'), ' ', '', 'g')))
-            * 10000 // length(text) AS BIGINT) AS other_bp
-FROM documents
-WHERE text IS NOT NULL AND length(text) >= 1
-ORDER BY doc_id
-""",
-))
-
-
-# ---------------------------------------------------------------------------
-# Round-18 staging lane: built ahead in round 14 (buffer three lanes
-# deep); declared after the r17 lane rotates through. Window math:
-# r18 = 6 never-green + 37 r12-displaced/stale + 7 r13.
-# ---------------------------------------------------------------------------
-_STAGED_R18: list[QuerySpec] = []
-
-
-def _priority_drift_build(spark, sf):
-    # data-drift monitor: monthly order-priority mix vs the overall mix,
-    # L1 distance in truncated bp — the distribution-shift alarm a
-    # training pipeline runs on every ingest dimension. Two keyed aggs
-    # + a priority-keyed broadcast-scale join; overall N is a driver
-    # scalar (metadata).
-    o = spark.table("orders").filter(
-        F.col("o_orderpriority").isNotNull() & F.col("o_orderdate").isNotNull()
-    )
-    per_mp = o.groupBy(
-        F.date_trunc("month", "o_orderdate").alias("m"), "o_orderpriority"
-    ).agg(F.count(F.lit(1)).alias("c_mp"))
-    per_p = o.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("c_p"))
-    n = o.count()
-    per_m = per_mp.groupBy("m").agg(F.sum("c_mp").alias("c_m"))
-    return (
-        # both marginals are metadata scale: 5 priorities / O(months) rows
-        per_mp.join(F.broadcast(per_p), "o_orderpriority")
-        .join(F.broadcast(per_m), "m")
-        .select(
-            "m",
-            "c_m",
-            F.expr(
-                f"abs(c_mp * 10000 div c_m - c_p * 10000 div {int(n)})"
-            ).alias("__d"),
-        )
-        .groupBy("m")
-        .agg(
-            F.max("c_m").cast("bigint").alias("n_orders"),
-            F.sum("__d").cast("bigint").alias("drift_bp"),
-        )
-        .select(F.to_date("m").alias("month"), "n_orders", "drift_bp")
-        .orderBy("month")
-    )
-
-
-_STAGED_R18.append(QuerySpec(
-    name="orders_priority_mix_drift",
-    doc="Monthly priority-mix drift: L1 distance (truncated bp) between "
-        "each month's order-priority distribution and the overall mix — "
-        "the distribution-shift alarm for ingest monitoring. Integer "
-        "share arithmetic; priority-keyed metadata-scale joins.",
-    tags=("agg", "analytics", "quality"),
-    build=_priority_drift_build,
-    oracle="""
-WITH o AS (
-  SELECT date_trunc('month', o_orderdate) AS m, o_orderpriority
-  FROM orders
-  WHERE o_orderpriority IS NOT NULL AND o_orderdate IS NOT NULL
-),
-mp AS (SELECT m, o_orderpriority, COUNT(*) AS c_mp FROM o GROUP BY 1, 2),
-p AS (SELECT o_orderpriority, COUNT(*) AS c_p FROM o GROUP BY 1),
-mm AS (SELECT m, SUM(c_mp) AS c_m FROM mp GROUP BY 1)
-SELECT CAST(mp.m AS DATE) AS month,
-       CAST(MAX(mm.c_m) AS BIGINT) AS n_orders,
-       CAST(SUM(ABS(mp.c_mp * 10000 // mm.c_m
-                    - p.c_p * 10000 // (SELECT COUNT(*) FROM o)))
-            AS BIGINT) AS drift_bp
-FROM mp
-JOIN p USING (o_orderpriority)
-JOIN mm USING (m)
-GROUP BY mp.m
-ORDER BY month
-""",
-))
-
-
-def _vocab_growth_build(spark, sf):
-    # Heaps-law vocabulary growth: distinct tokens first seen per doc
-    # (MIN doc attribution, the novelty shuffle class) cumulated over
-    # doc_id order — via the DISTRIBUTED running sum (operators/ranks),
-    # never a partitionless window. The curve's flattening point is
-    # where a crawl stops buying vocabulary.
-    from ..operators.ranks import with_global_running_sum
-
-    d = spark.table("documents").filter(
-        F.col("text").isNotNull() & F.col("doc_id").isNotNull()
-    )
-    toks = d.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
-    ).filter(F.col("tok") != "")
-    first = toks.groupBy("tok").agg(F.min("doc_id").alias("first_doc"))
-    new_per_doc = first.groupBy(F.col("first_doc").alias("doc_id")).agg(
-        F.count(F.lit(1)).alias("n_new")
-    )
-    base = (
-        d.select("doc_id")
-        .join(new_per_doc, "doc_id", "left")
-        .select("doc_id", F.coalesce("n_new", F.lit(0)).alias("n_new"))
-    )
-    out, _ = with_global_running_sum(base, ["doc_id"], "n_new", "vocab_cum")
-    return out.select(
-        "doc_id", F.col("n_new").cast("bigint").alias("n_new"), "vocab_cum"
-    ).orderBy("doc_id")
-
-
-_STAGED_R18.append(QuerySpec(
-    name="text_vocab_growth_curve",
-    doc="Heaps-law vocabulary growth: tokens first seen per document "
-        "(MIN-doc attribution) and the cumulative vocabulary size over "
-        "doc_id order — computed with the distributed global running "
-        "sum (operators/ranks), no one-task window. The flattening "
-        "point is where a crawl stops adding vocabulary.",
-    tags=("llm", "text", "analytics"),
-    build=_vocab_growth_build,
-    oracle="""
-WITH d AS (
-  SELECT doc_id, text FROM documents
-  WHERE text IS NOT NULL AND doc_id IS NOT NULL
-),
-tok AS (
-  SELECT d.doc_id, t.tok
-  FROM d, UNNEST(string_split(text, ' ')) AS t(tok)
-  WHERE t.tok <> ''
-),
-fs AS (SELECT tok, MIN(doc_id) AS first_doc FROM tok GROUP BY 1),
-np AS (SELECT first_doc AS doc_id, COUNT(*) AS n_new FROM fs GROUP BY 1)
-SELECT d.doc_id,
-       CAST(COALESCE(np.n_new, 0) AS BIGINT) AS n_new,
-       CAST(SUM(COALESCE(np.n_new, 0)) OVER (
-         ORDER BY d.doc_id
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-       ) AS BIGINT) AS vocab_cum
-FROM d LEFT JOIN np USING (doc_id)
-ORDER BY d.doc_id
-""",
-))
-
-
-def _source_matrix_build(spark, sf):
-    # corpus-provenance report: per (source, lang) volume, mean length
-    # and exact-duplicate share — the first table a dataset card needs.
-    # Dup attribution by md5(text) group size (corpus-scale agg, then a
-    # hash-keyed join back); NULL source/lang stay real groups (groupBy
-    # keeps NULLs; nothing joins on them).
-    d = spark.table("documents").filter(F.col("text").isNotNull())
-    grp = d.groupBy(F.md5("text").alias("__h")).agg(
-        F.count(F.lit(1)).alias("__gs")
-    )
-    tagged = d.withColumn("__h", F.md5("text")).join(grp, "__h")
-    return (
-        tagged.groupBy("source", "lang")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum(F.length("text")).cast("bigint").alias("total_chars"),
-            F.sum((F.col("__gs") > 1).cast("int")).cast("bigint")
-            .alias("n_dup_docs"),
-        )
-        .withColumn(
-            "dup_bp",
-            F.expr("n_dup_docs * 10000 div n_docs").cast("bigint"),
-        )
-        # NULL source/lang are real groups: pin null ordering explicitly
-        # on BOTH sides (Spark defaults NULLS FIRST, DuckDB NULLS LAST —
-        # the llmops.py:873 divergence class; advice r14)
-        .orderBy(
-            F.col("source").asc_nulls_first(), F.col("lang").asc_nulls_first()
-        )
-    )
-
-
-_STAGED_R18.append(QuerySpec(
-    name="documents_source_quality_matrix",
-    doc="Provenance matrix per (source, lang): doc count, total chars, "
-        "docs participating in an exact-duplicate group (md5 text), and "
-        "the dup share in truncated bp — the dataset-card table that "
-        "decides which sources get dedup budget.",
-    tags=("llm", "text", "quality", "dedup"),
-    build=_source_matrix_build,
-    oracle="""
-WITH d AS (SELECT * FROM documents WHERE text IS NOT NULL),
-g AS (SELECT md5(text) AS h, COUNT(*) AS gs FROM d GROUP BY 1),
-t AS (SELECT d.source, d.lang, d.text, g.gs
-      FROM d JOIN g ON g.h = md5(d.text))
-SELECT source, lang,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(length(text)) AS BIGINT) AS total_chars,
-       CAST(SUM(CASE WHEN gs > 1 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_dup_docs,
-       CAST(SUM(CASE WHEN gs > 1 THEN 1 ELSE 0 END) * 10000 // COUNT(*)
-            AS BIGINT) AS dup_bp
-FROM t
-GROUP BY source, lang
-ORDER BY source NULLS FIRST, lang NULLS FIRST
-""",
-))
-
-
-def _basket_hist_build(spark, sf):
-    # order-size histogram: items per order, then orders per size with
-    # the share in truncated bp — the fan-out profile that sizes the
-    # market-basket self-join before anyone runs it. Two keyed aggs;
-    # total is a driver scalar.
-    li = spark.table("lineitem").filter(F.col("l_orderkey").isNotNull())
-    per = li.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("n_items"))
-    n_orders = per.count()
-    return (
-        per.groupBy("n_items")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"))
-        .select(
-            F.col("n_items").cast("int").alias("n_items"),
-            "n_orders",
-            F.expr(f"n_orders * 10000 div {max(int(n_orders), 1)}")
-            .cast("bigint").alias("share_bp"),
-        )
-        .orderBy("n_items")
-    )
-
-
-_STAGED_R18.append(QuerySpec(
-    name="orders_basket_size_histogram",
-    doc="Items-per-order histogram with truncated-bp shares: the "
-        "fan-out profile that bounds the market-basket pair self-join "
-        "(sum of n*(n-1)/2 over this histogram IS the pair count). Two "
-        "keyed aggregations; the total is a driver scalar.",
-    tags=("agg", "analytics"),
-    build=_basket_hist_build,
-    oracle="""
-WITH per AS (
-  SELECT l_orderkey, COUNT(*) AS n_items
-  FROM lineitem WHERE l_orderkey IS NOT NULL
-  GROUP BY 1
-)
-SELECT CAST(n_items AS INTEGER) AS n_items,
-       CAST(COUNT(*) AS BIGINT) AS n_orders,
-       CAST(COUNT(*) * 10000
-            // GREATEST((SELECT COUNT(*) FROM per), 1) AS BIGINT)
-         AS share_bp
-FROM per
-GROUP BY n_items
-ORDER BY n_items
-""",
-))
-
-
-def _shingle_df_build(spark, sf):
-    # shingle document-frequency profile in power-of-two buckets: the
-    # diagnostic that justifies (or re-tunes) the containment operator's
-    # max_doc_freq stop-shingle cap — the histogram's heavy tail IS the
-    # quadratic-pair risk. Gram-scale aggregations only.
-    d = spark.table("documents").filter(
-        F.col("text").isNotNull() & (F.length("text") >= 12)
-        & F.col("doc_id").isNotNull()
-    )
-    # per-doc shingle dedup INSIDE the projection (array_distinct), not
-    # as a relational .distinct(): the old (doc_id, sh) distinct
-    # shuffled the full exploded corpus-token relation once just to
-    # dedupe within each doc — a dedup with no cross-row dependency
-    # beyond the row's own array. array_distinct does it map-side in
-    # the same whole-stage-codegen span, so the ONLY shuffle left is
-    # the gram-keyed aggregation (map-side combinable). r16 staged-lane
-    # shave: 5.3 s -> measured in r16_scaling_staged.jsonl.
-    # lower() hoisted out of the lambda (one lower per row, not per
-    # shingle position — the char_shingles O(len^2) trap, r16
-    # optimization pass)
-    sh = d.select(F.lower(F.col("text")).alias("__lt")).select(
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    "transform(sequence(1, length(__lt) - 11),"
-                    " i -> substring(__lt, i, 12))"
-                )
-            )
-        ).alias("sh"),
-    )
-    df_per = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-    return (
-        df_per.groupBy(
-            F.floor(F.log2("df")).cast("int").alias("df_bucket_log2")
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_shingles"),
-            F.max("df").cast("bigint").alias("max_df"),
-        )
-        .orderBy("df_bucket_log2")
-    )
-
-
-_STAGED_R18.append(QuerySpec(
-    name="dedup_shingle_df_profile",
-    doc="Shingle document-frequency histogram in log2 buckets (plus the "
-        "bucket max): the heavy tail is the quadratic-pair risk the "
-        "containment stop-shingle cap exists to bound — this is the "
-        "measurement that tunes max_doc_freq. Gram-keyed aggregations "
-        "only; floor(log2) on integer df is boundary-exact in IEEE.",
-    tags=("llm", "dedup", "quality"),
-    build=_shingle_df_build,
-    oracle="""
-WITH d AS (
-  SELECT doc_id, text FROM documents
-  WHERE text IS NOT NULL AND length(text) >= 12 AND doc_id IS NOT NULL
-),
-sh AS (
-  SELECT DISTINCT doc_id, substring(lower(text), CAST(i AS INTEGER), 12) AS sh
-  FROM (SELECT doc_id, text,
-               unnest(generate_series(1, length(text) - 11)) AS i
-        FROM d) t
-),
-f AS (SELECT sh, COUNT(*) AS df FROM sh GROUP BY 1)
-SELECT CAST(FLOOR(LOG2(df)) AS INTEGER) AS df_bucket_log2,
-       CAST(COUNT(*) AS BIGINT) AS n_shingles,
-       CAST(MAX(df) AS BIGINT) AS max_df
-FROM f
-GROUP BY 1
-ORDER BY df_bucket_log2
-""",
-))
-
-
-def _dup_group_hist_build(spark, sf):
-    # exact-dup group-size histogram: how much of the corpus sits in
-    # groups of each size — the before/after measurement of any dedup
-    # run (n_docs - n_groups summed over this table = rows removed by
-    # keep-one dedup). Two hash-keyed aggregations.
-    d = spark.table("documents").filter(F.col("text").isNotNull())
-    grp = d.groupBy(F.md5("text").alias("__h")).agg(
-        F.count(F.lit(1)).alias("gs")
-    )
-    return (
-        grp.groupBy(F.col("gs").cast("int").alias("group_size"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_groups"),
-            # sum(gs) == n_groups * gs (gs is the group key): an
-            # aggregate, never first() on a would-be-constant column
-            F.sum("gs").cast("bigint").alias("n_docs"),
-        )
-        .orderBy("group_size")
-    )
-
-
-_STAGED_R18.append(QuerySpec(
-    name="dedup_group_size_histogram",
-    doc="Exact-duplicate group-size histogram over md5(text): groups "
-        "and docs per group size — the dedup-impact measurement (docs "
-        "minus groups = rows a keep-one pass removes). Hash-keyed "
-        "aggregations only.",
-    tags=("llm", "dedup", "agg"),
-    build=_dup_group_hist_build,
-    oracle="""
-WITH g AS (
-  SELECT md5(text) AS h, COUNT(*) AS gs
-  FROM documents WHERE text IS NOT NULL
-  GROUP BY 1
-)
-SELECT CAST(gs AS INTEGER) AS group_size,
-       CAST(COUNT(*) AS BIGINT) AS n_groups,
-       CAST(COUNT(*) * gs AS BIGINT) AS n_docs
-FROM g
-GROUP BY gs
-ORDER BY group_size
-""",
-))
-
-
-# ---------------------------------------------------------------------------
-# Round-19 staging lane: built in round 15 so the declaration cadence
-# stays three lanes deep (r16/r17/r18 already staged). Candidate corners
-# from the r14 verdict: normalization-collapse (cross-lingual) dedup
-# blocking, per-domain quality calibration, snapshot embedding drift,
-# packing-efficiency census, behavioral transition matrix, price-point
-# audit. All integer-exact, NULL-pinned, bounded-output.
-# ---------------------------------------------------------------------------
-_STAGED_R19: list[QuerySpec] = []
-
-
-def _norm_dedup_build(spark, sf):
-    # normalization-collapse duplicate groups: the cross-lingual/noisy
-    # blocking pass — lowercase, strip everything but letters+spaces
-    # (digits, punctuation, symbols), collapse runs of spaces — then
-    # md5-group. Catches digit-rotated / punctuation-variant copies that
-    # exact dedup misses and Jaccard only scores fractionally. The
-    # fixture corpus is variant-free, so a deterministic re-ingestion
-    # union (docs < 50 re-enter with digits rotated via translate and a
-    # +1e6 id offset) exercises the collapse non-vacuously — same move
-    # as multimodal_payload_dedup's CAS corpus.
-    d = spark.table("documents").filter(
-        F.col("text").isNotNull() & F.col("doc_id").isNotNull()
-    ).select("doc_id", "text")
-    variant = d.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.translate("text", "0123456789", "1234567890").alias("text"),
-    )
-    u = d.unionByName(variant)
-    norm = u.select(
-        "doc_id",
-        F.trim(
-            F.regexp_replace(
-                F.regexp_replace(F.lower("text"), "[^a-z ]", ""), " +", " "
-            )
-        ).alias("nt"),
-    )
-    return (
-        norm.groupBy(F.md5("nt").alias("h"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.min("doc_id").cast("bigint").alias("keeper_doc"),
-            F.max("doc_id").cast("bigint").alias("last_doc"),
-        )
-        .filter(F.col("n_docs") >= 2)
-        .orderBy("h")
-    )
-
-
-_STAGED_R19.append(QuerySpec(
-    name="dedup_normalized_text_groups",
-    doc="Normalization-collapse duplicate groups: lowercase + strip all "
-        "non-letter/space chars + collapse space runs, md5-grouped — the "
-        "blocking pass that catches digit/punctuation variants exact "
-        "dedup misses (and the shape cross-lingual dedup runs over "
-        "transliterated text). Deterministic re-ingestion union (digit-"
-        "rotated copies of docs < 50) makes the fixture non-vacuous. "
-        "One corpus-keyed agg; groups >= 2 only.",
-    tags=("dedup", "llm", "text"),
-    build=_norm_dedup_build,
-    oracle="""
-WITH d AS (
-  SELECT doc_id, text FROM documents
-  WHERE text IS NOT NULL AND doc_id IS NOT NULL
-),
-u AS (
-  SELECT doc_id, text FROM d
-  UNION ALL
-  SELECT doc_id + 1000000, translate(text, '0123456789', '1234567890')
-  FROM d WHERE doc_id < 50
-),
-n AS (
-  SELECT doc_id,
-         trim(regexp_replace(regexp_replace(lower(text), '[^a-z ]', '', 'g'),
-                             ' +', ' ', 'g')) AS nt
-  FROM u
-)
-SELECT md5(nt) AS h,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(MIN(doc_id) AS BIGINT) AS keeper_doc,
-       CAST(MAX(doc_id) AS BIGINT) AS last_doc
-FROM n
-GROUP BY md5(nt)
-HAVING COUNT(*) >= 2
-ORDER BY h
-""",
-))
-
-
-def _quality_calibration_build(spark, sf):
-    # per-source quality calibration: docs bucketed by length decile bin
-    # (100-char bins, capped at 9) with the standard quality-gate pass
-    # rate per (source, bin) in truncated bp — the table that shows
-    # whether a source's quality score is calibrated or saturated.
-    # NULL source is a real group; both engines pin NULLS FIRST (the
-    # documents_source_quality_matrix advice class). Single keyed agg.
-    d = spark.table("documents").filter(F.col("text").isNotNull())
-    n_tokens = (
-        F.length("text") - F.length(F.regexp_replace("text", " ", "")) + 1
-    )
-    binned = d.select(
-        "source",
-        F.least(F.expr("length(text) div 100"), F.lit(9))
-        .cast("int").alias("len_bin"),
-        ((F.length("text") >= 50) & (n_tokens >= 10)).cast("int").alias("ok"),
-    )
-    return (
-        binned.groupBy("source", "len_bin")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("ok").cast("bigint").alias("n_pass"),
-        )
-        .withColumn(
-            "pass_bp", F.expr("n_pass * 10000 div n_docs").cast("bigint")
-        )
-        .orderBy(F.col("source").asc_nulls_first(), "len_bin")
-    )
-
-
-_STAGED_R19.append(QuerySpec(
-    name="documents_quality_calibration_by_source",
-    doc="Per-source quality-gate calibration: docs bucketed into capped "
-        "100-char length bins, pass rate of the standard gate (len >= 50 "
-        "AND tokens >= 10) per (source, bin) in truncated bp — decides "
-        "per-domain quality thresholds. NULL source is a real group, "
-        "NULLS FIRST pinned on both engines.",
-    tags=("llm", "text", "quality"),
-    build=_quality_calibration_build,
-    oracle="""
-WITH d AS (
-  SELECT source,
-         LEAST(LENGTH(text) // 100, 9) AS len_bin,
-         CASE WHEN LENGTH(text) >= 50
-               AND LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1 >= 10
-              THEN 1 ELSE 0 END AS ok
-  FROM documents WHERE text IS NOT NULL
-)
-SELECT source, CAST(len_bin AS INTEGER) AS len_bin,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(ok) AS BIGINT) AS n_pass,
-       CAST(SUM(ok) * 10000 // COUNT(*) AS BIGINT) AS pass_bp
-FROM d
-GROUP BY source, len_bin
-ORDER BY source NULLS FIRST, len_bin
-""",
-))
-
-
-def _embedding_drift_build(spark, sf):
-    # snapshot-drift audit: the corpus split into two deterministic
-    # halves (vec_id parity — the stand-in for two ingest snapshots),
-    # per-label centroid drift as the cross-multiplied integer form
-    # sum_pos |sa*nb - sb*na| over 64-quantized components (|mean_a -
-    # mean_b| with both sides scaled by na*nb — division-free, exact).
-    # One (label, pos) shuffle + a label-enum (metadata-scale) join.
-    e = spark.table("embeddings").filter(
-        F.col("embedding").isNotNull() & F.col("label").isNotNull()
-    )
-    counts = e.groupBy("label").agg(
-        F.sum((F.col("vec_id") % 2 == 0).cast("int")).alias("na"),
-        F.sum((F.col("vec_id") % 2 == 1).cast("int")).alias("nb"),
-    )
-    q = e.select(
-        "label",
-        (F.col("vec_id") % 2).alias("side"),
-        F.posexplode("embedding").alias("pos", "v"),
-    ).select(
-        "label",
-        "side",
-        "pos",
-        F.floor(F.col("v").cast("double") * 64).cast("long").alias("q"),
-    )
-    per_pos = q.groupBy("label", "pos").agg(
-        F.coalesce(F.sum(F.when(F.col("side") == 0, F.col("q"))), F.lit(0))
-        .alias("sa"),
-        F.coalesce(F.sum(F.when(F.col("side") == 1, F.col("q"))), F.lit(0))
-        .alias("sb"),
-    )
-    return (
-        # label-cardinality join: metadata scale (bounded label enum)
-        per_pos.join(F.broadcast(counts), "label")
-        .select(
-            "label",
-            "na",
-            "nb",
-            F.abs(F.col("sa") * F.col("nb") - F.col("sb") * F.col("na"))
-            .alias("__d"),
-        )
-        .groupBy("label")
-        .agg(
-            F.max("na").cast("bigint").alias("n_a"),
-            F.max("nb").cast("bigint").alias("n_b"),
-            F.sum("__d").cast("bigint").alias("drift_q64"),
-        )
-        .orderBy("label")
-    )
-
-
-_STAGED_R19.append(QuerySpec(
-    name="embedding_drift_split_halves",
-    doc="Embedding-drift audit between two deterministic corpus "
-        "snapshots (vec_id parity halves): per-label L1 centroid drift "
-        "in the division-free cross-multiplied integer form "
-        "sum |sa*nb - sb*na| over 64-quantized components — the "
-        "distribution-shift alarm for an embedding pipeline. A label "
-        "with an empty half reports drift 0 (no centroid to compare).",
-    tags=("llm", "similarity", "quality"),
-    build=_embedding_drift_build,
-    oracle="""
-WITH e AS (
-  SELECT vec_id, label, embedding FROM embeddings
-  WHERE embedding IS NOT NULL AND label IS NOT NULL
-),
-c AS (
-  SELECT label,
-         SUM(CASE WHEN vec_id % 2 = 0 THEN 1 ELSE 0 END) AS na,
-         SUM(CASE WHEN vec_id % 2 = 1 THEN 1 ELSE 0 END) AS nb
-  FROM e GROUP BY label
-),
-q AS (
-  SELECT label, vec_id % 2 AS side,
-         generate_subscripts(embedding, 1) - 1 AS pos,
-         CAST(FLOOR(CAST(unnest(embedding) AS DOUBLE) * 64) AS BIGINT) AS q
-  FROM e
-),
-s AS (
-  SELECT label, pos,
-         SUM(CASE WHEN side = 0 THEN q ELSE 0 END) AS sa,
-         SUM(CASE WHEN side = 1 THEN q ELSE 0 END) AS sb
-  FROM q GROUP BY label, pos
-)
-SELECT s.label,
-       CAST(MAX(c.na) AS BIGINT) AS n_a,
-       CAST(MAX(c.nb) AS BIGINT) AS n_b,
-       CAST(SUM(ABS(s.sa * c.nb - s.sb * c.na)) AS BIGINT) AS drift_q64
-FROM s JOIN c USING (label)
-GROUP BY s.label
-ORDER BY s.label
-""",
-))
-
-
-def _pack_efficiency_build(spark, sf):
-    # packing-efficiency census over the concat-chunk packer: per source
-    # shard, total tokens, pack count under the 64-token budget, waste
-    # in the final (short) pack, and utilization bp — the number that
-    # decides whether whole-doc greedy packing is worth its complexity
-    # over concat-chunk. Reuses the operator's per-doc output (NULL text
-    # = 0 tokens contract rides along); one source-keyed agg.
-    from ..operators import corpus as CORPUS
-
-    p = CORPUS.pack_concat_chunks(spark.table("documents"), budget=64)
-    return (
-        p.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("n_tokens").cast("bigint").alias("total_tokens"),
-        )
-        .withColumn(
-            "n_packs", F.expr("(total_tokens + 63) div 64").cast("bigint")
-        )
-        .withColumn(
-            "waste_tokens",
-            (F.col("n_packs") * 64 - F.col("total_tokens")).cast("bigint"),
-        )
-        .withColumn(
-            # a 0-token source has no packs: utilization undefined (NULL
-            # via the nullif'd denominator on both engines)
-            "util_bp",
-            F.expr("total_tokens * 10000 div nullif(n_packs * 64, 0)")
-            .cast("bigint"),
-        )
-        .orderBy(F.col("source").asc_nulls_first())
-    )
-
-
-_STAGED_R19.append(QuerySpec(
-    name="pack_efficiency_census",
-    doc="Packing-efficiency census per source shard: total tokens, "
-        "64-token pack count, final-pack waste, utilization in "
-        "truncated bp — the measurement that justifies (or retires) "
-        "greedy first-fit packing vs concat-chunk. NULL text rides the "
-        "packer's 0-token contract; a 0-token shard reports NULL "
-        "utilization.",
-    tags=("llm", "packing", "agg"),
-    build=_pack_efficiency_build,
-    oracle="""
-WITH t AS (
-  SELECT source,
-         CASE WHEN text IS NULL THEN 0
-              ELSE CAST(len(string_split(text, ' ')) AS BIGINT)
-         END AS n_tokens
-  FROM documents
-),
-g AS (
-  SELECT source,
-         CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
-  FROM t GROUP BY source
-)
-SELECT source, n_docs, total_tokens,
-       CAST((total_tokens + 63) // 64 AS BIGINT) AS n_packs,
-       CAST((total_tokens + 63) // 64 * 64 - total_tokens AS BIGINT)
-         AS waste_tokens,
-       CAST(total_tokens * 10000 // NULLIF((total_tokens + 63) // 64 * 64, 0)
-            AS BIGINT) AS util_bp
-FROM g
-ORDER BY source NULLS FIRST
-""",
-))
-
-
-def _transition_matrix_build(spark, sf):
-    # first-order behavioral transition matrix: consecutive event-type
-    # pairs per user (LAG over the µs-truncated total order), counted
-    # per (prev, next) with the row-conditional share in truncated bp —
-    # the Markov-model input for session simulation / bot detection.
-    # One user-keyed window shuffle + one pair-keyed agg; the per-prev
-    # marginal is an event-type-enum (metadata-scale) join.
-    e = spark.table("events").filter(
-        F.col("user_id").isNotNull()
-        & F.col("ts").isNotNull()
-        & F.col("event_type").isNotNull()
-    ).select("user_id", "event_id", "event_type", F.unix_micros("ts").alias("t"))
-    w = Window.partitionBy("user_id").orderBy("t", "event_id")
-    pairs = (
-        e.withColumn("prev_type", F.lag("event_type").over(w))
-        .filter(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", "event_type")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
-    marg = pairs.groupBy("prev_type").agg(F.sum("n").alias("n_prev"))
-    return (
-        # per-prev marginal is event_type-cardinality: metadata scale
-        pairs.join(F.broadcast(marg), "prev_type")
-        .select(
-            "prev_type",
-            "event_type",
-            "n",
-            F.expr("n * 10000 div n_prev").cast("bigint").alias("share_bp"),
-        )
-        .orderBy("prev_type", "event_type")
-    )
-
-
-_STAGED_R19.append(QuerySpec(
-    name="events_type_transition_matrix",
-    doc="First-order event-type transition matrix per user stream: "
-        "consecutive (prev, next) pairs under the (ts, event_id) total "
-        "order, counted with row-conditional shares in truncated bp — "
-        "the Markov input for behavior modeling. µs-truncated ordering "
-        "on both engines (the nanos fixture class).",
-    tags=("events", "window", "analytics"),
-    build=_transition_matrix_build,
-    oracle="""
-WITH e AS (
-  SELECT user_id, event_id, event_type, epoch_ns(ts) // 1000 AS t
-  FROM events
-  WHERE user_id IS NOT NULL AND ts IS NOT NULL AND event_type IS NOT NULL
-),
-p AS (
-  SELECT user_id, event_type,
-         LAG(event_type) OVER (PARTITION BY user_id ORDER BY t, event_id)
-           AS prev_type
-  FROM e
-),
-c AS (
-  SELECT prev_type, event_type, CAST(COUNT(*) AS BIGINT) AS n
-  FROM p WHERE prev_type IS NOT NULL
-  GROUP BY prev_type, event_type
-),
-m AS (SELECT prev_type, SUM(n) AS n_prev FROM c GROUP BY prev_type)
-SELECT c.prev_type, c.event_type, c.n,
-       CAST(c.n * 10000 // m.n_prev AS BIGINT) AS share_bp
-FROM c JOIN m USING (prev_type)
-ORDER BY c.prev_type, c.event_type
-""",
-))
-
-
-def _cents_profile_build(spark, sf):
-    # price-point audit: distribution of the cents component of order
-    # totals — fabricated or re-priced data clusters on .00/.99 (the
-    # complement of the Benford first-digit audit, which this lane's
-    # sibling r15 spec covers). Integer cents via the established
-    # round-to-cents idiom; total is one inlined driver scalar.
-    o = spark.table("orders").filter(
-        F.col("o_totalprice").isNotNull() & (F.col("o_totalprice") >= 0)
-    )
-    n_total = o.count()
-    return (
-        o.select(
-            (F.round(F.col("o_totalprice") * 100).cast("long") % 100)
-            .cast("int").alias("cents")
-        )
-        .groupBy("cents")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"))
-        .withColumn(
-            "share_bp",
-            F.expr(f"n_orders * 10000 div {max(int(n_total), 1)}")
-            .cast("bigint"),
-        )
-        .orderBy("cents")
-    )
-
-
-_STAGED_R19.append(QuerySpec(
-    name="orders_cents_profile",
-    doc="Price-point (cents-component) distribution of order totals "
-        "with shares in truncated bp — the .00/.99 clustering audit "
-        "complementing the Benford first-digit test. One bounded "
-        "(<= 100 groups) agg; the total is an inlined driver scalar.",
-    tags=("agg", "quality", "analytics"),
-    build=_cents_profile_build,
-    oracle="""
-WITH o AS (
-  SELECT CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) % 100 AS cents
-  FROM orders
-  WHERE o_totalprice IS NOT NULL AND o_totalprice >= 0
-),
-n AS (SELECT GREATEST(COUNT(*), 1) AS total FROM o)
-SELECT CAST(cents AS INTEGER) AS cents,
-       CAST(COUNT(*) AS BIGINT) AS n_orders,
-       CAST(COUNT(*) * 10000 // MAX(n.total) AS BIGINT) AS share_bp
-FROM o CROSS JOIN n
-GROUP BY cents
-ORDER BY cents
-""",
-))
-
-
-# ---------------------------------------------------------------------------
-# Round-20 staging lane: built in round 15 — the final round's declaration
-# cadence is funded ahead like every lane before it. Corners covered:
-# cross-source contamination accounting, language-label auditing,
-# load-shape profiling, revenue concentration (the ranks operator's next
-# consumers), semi-structured schema census, embedding informativeness.
-# ---------------------------------------------------------------------------
-_STAGED_R20: list[QuerySpec] = []
-
-
-def _cross_source_matrix_build(spark, sf):
-    # cross-source exact-dup contamination matrix: md5-text groups that
-    # span two sources — the provenance-contamination accounting a
-    # dataset card needs (how much of source B is already in source A).
-    # The fixture corpus is dup-free, so a deterministic mirror
-    # re-ingestion (docs < 30 re-enter under a '-m' suffixed source)
-    # makes the matrix non-vacuous — the CAS-corpus move. One distinct
-    # (hash, source) relation; the self-join is hash-keyed (group-size
-    # bounded), never all-pairs.
-    d = spark.table("documents").filter(
-        F.col("text").isNotNull() & F.col("source").isNotNull()
-    ).select("doc_id", "text", "source")
-    mirror = d.filter(F.col("doc_id") < 30).select(
-        (F.col("doc_id") + 2000000).alias("doc_id"),
-        "text",
-        F.concat(F.col("source"), F.lit("-m")).alias("source"),
-    )
-    hs = (
-        d.unionByName(mirror)
-        .select(F.md5("text").alias("h"), "source")
-        .distinct()
-    )
-    a = hs.select("h", F.col("source").alias("source_a"))
-    b = hs.select("h", F.col("source").alias("source_b"))
-    return (
-        a.join(b, "h")
-        .filter(F.col("source_a") < F.col("source_b"))
-        .groupBy("source_a", "source_b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared_groups"))
-        .orderBy("source_a", "source_b")
-    )
-
-
-_STAGED_R20.append(QuerySpec(
-    name="dedup_cross_source_matrix",
-    doc="Cross-source exact-duplicate contamination matrix: md5-text "
-        "groups spanning each source pair — the provenance accounting "
-        "that tells a dataset card how much of one source already "
-        "exists in another. Deterministic mirror re-ingestion keeps the "
-        "dup-free fixture non-vacuous; hash-keyed self-join over the "
-        "distinct (hash, source) relation, never all-pairs.",
-    tags=("dedup", "llm", "quality"),
-    build=_cross_source_matrix_build,
-    oracle="""
-WITH d AS (
-  SELECT doc_id, text, source FROM documents
-  WHERE text IS NOT NULL AND source IS NOT NULL
-),
-u AS (
-  SELECT text, source FROM d
-  UNION ALL
-  SELECT text, source || '-m' FROM d WHERE doc_id < 30
-),
-hs AS (SELECT DISTINCT md5(text) AS h, source FROM u)
-SELECT a.source AS source_a, b.source AS source_b,
-       CAST(COUNT(*) AS BIGINT) AS n_shared_groups
-FROM hs a JOIN hs b ON a.h = b.h AND a.source < b.source
-GROUP BY 1, 2
-ORDER BY source_a, source_b
-""",
-))
-
-
-def _lang_confusion_build(spark, sf):
-    # declared-vs-predicted language confusion matrix over the marker
-    # language ID: per (actual, predicted) counts and the row-share in
-    # truncated bp — the label-quality audit run before trusting a
-    # corpus's lang column. NULL prediction (NULL text) is a real cell.
-    from ..operators import text as TX
-
-    scored = TX.lang_id_scores(spark.table("documents"))
-    per = scored.groupBy("actual_lang", "predicted_lang").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs")
-    )
-    marg = per.groupBy("actual_lang").agg(F.sum("n_docs").alias("n_actual"))
-    return (
-        # per-actual marginal is lang-cardinality: metadata scale
-        per.join(F.broadcast(marg), "actual_lang")
-        .select(
-            "actual_lang",
-            "predicted_lang",
-            "n_docs",
-            F.expr("n_docs * 10000 div n_actual").cast("bigint").alias(
-                "share_bp"
-            ),
-        )
-        .orderBy(
-            F.col("actual_lang").asc_nulls_first(),
-            F.col("predicted_lang").asc_nulls_first(),
-        )
-    )
-
-
-_STAGED_R20.append(QuerySpec(
-    name="text_lang_confusion_matrix",
-    doc="Declared-vs-predicted language confusion matrix over the "
-        "marker-word language ID: per (actual, predicted) doc counts "
-        "and row-conditional shares in truncated bp — the label-quality "
-        "audit before trusting a corpus lang column. NULL cells pinned "
-        "NULLS FIRST on both engines.",
-    tags=("llm", "text", "quality"),
-    build=_lang_confusion_build,
-    oracle="""
-WITH c AS (
-  SELECT lang AS actual_lang,
-         len(list_filter(toks, x -> x = 'the'))
-           + len(list_filter(toks, x -> x = 'and')) AS c_en,
-         len(list_filter(toks, x -> x = 'el'))
-           + len(list_filter(toks, x -> x = 'la')) AS c_es,
-         len(list_filter(toks, x -> x = 'der'))
-           + len(list_filter(toks, x -> x = 'und')) AS c_de,
-         len(list_filter(toks, x -> x = 'le'))
-           + len(list_filter(toks, x -> x = 'et')) AS c_fr
-  FROM (SELECT lang, string_split(lower(text), ' ') AS toks
-        FROM documents) x
-),
-p AS (
-  SELECT actual_lang,
-         CASE WHEN c_en IS NULL THEN NULL
-              WHEN c_en >= c_es AND c_en >= c_de AND c_en >= c_fr THEN 'en'
-              WHEN c_es >= c_de AND c_es >= c_fr THEN 'es'
-              WHEN c_de >= c_fr THEN 'de'
-              ELSE 'fr' END AS predicted_lang
-  FROM c
-),
-per AS (
-  SELECT actual_lang, predicted_lang, CAST(COUNT(*) AS BIGINT) AS n_docs
-  FROM p GROUP BY 1, 2
-),
-m AS (SELECT actual_lang, SUM(n_docs) AS n_actual FROM per GROUP BY 1)
-SELECT per.actual_lang AS actual_lang, per.predicted_lang, per.n_docs,
-       CAST(per.n_docs * 10000 // m.n_actual AS BIGINT) AS share_bp
-FROM per JOIN m ON per.actual_lang IS NOT DISTINCT FROM m.actual_lang
-ORDER BY per.actual_lang NULLS FIRST, per.predicted_lang NULLS FIRST
-""",
-))
-
-
-def _load_factor_build(spark, sf):
-    # peak-to-mean hourly load per event type: the capacity-planning
-    # shape statistic (a flat profile loads ~10000 bp, a spiky one far
-    # above). Two keyed aggs; cross-multiplied integer ratio — never a
-    # double mean.
-    hourly = (
-        spark.table("events")
-        .filter(F.col("ts").isNotNull())
-        .groupBy("event_type", F.date_trunc("hour", "ts").alias("h"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return (
-        hourly.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_hours"),
-            F.sum("c").cast("bigint").alias("n_events"),
-            F.max("c").cast("bigint").alias("peak_hour_events"),
-        )
-        .select(
-            "event_type",
-            "n_hours",
-            "n_events",
-            "peak_hour_events",
-            # peak/mean in bp = peak * n_hours * 10000 div total
-            F.expr("peak_hour_events * n_hours * 10000 div n_events")
-            .cast("bigint")
-            .alias("load_factor_bp"),
-        )
-        .orderBy("event_type")
-    )
-
-
-_STAGED_R20.append(QuerySpec(
-    name="events_load_factor_hourly",
-    doc="Peak-to-mean hourly load factor per event type (truncated bp, "
-        "cross-multiplied integers — no double mean): the capacity-"
-        "planning shape statistic; 10000 bp = perfectly flat. Hourly "
-        "pre-aggregate then a type rollup.",
-    tags=("events", "agg", "analytics"),
-    build=_load_factor_build,
-    oracle="""
-WITH hourly AS (
-  SELECT event_type, date_trunc('hour', ts) AS h, COUNT(*) AS c
-  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
-)
-SELECT event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_hours,
-       CAST(SUM(c) AS BIGINT) AS n_events,
-       CAST(MAX(c) AS BIGINT) AS peak_hour_events,
-       CAST(MAX(c) * COUNT(*) * 10000 // SUM(c) AS BIGINT)
-         AS load_factor_bp
-FROM hourly GROUP BY event_type ORDER BY event_type
-""",
-))
-
-
-def _lorenz_build(spark, sf):
-    # Lorenz-curve decile table: customers ranked ascending by spend via
-    # the DISTRIBUTED global ntile (operators/ranks — no one-task sort),
-    # per-decile revenue and the cumulative share in truncated bp (the
-    # table form of the Gini spec's scalar). The decile relation is 10
-    # rows; its running sum still goes through the distributed operator
-    # per the repo's no-partitionless-window convention.
-    from ..operators.materialize import materialize
-    from ..operators.ranks import with_global_ntile, with_global_running_sum
-
-    per = (
-        spark.table("orders")
-        .filter(
-            F.col("o_totalprice").isNotNull()
-            & (F.col("o_totalprice") >= 0)
-            & F.col("o_custkey").isNotNull()
-        )
-        .groupBy("o_custkey")
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias(
-                "cents"
-            )
-        )
-    )
-    per = materialize(per)
-    dec = with_global_ntile(per, 10, ["cents", "o_custkey"], "decile")
-    hist = dec.groupBy("decile").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_customers"),
-        F.sum("cents").cast("bigint").alias("decile_cents"),
-    )
-    hist, total = with_global_running_sum(
-        hist, ["decile"], "decile_cents", "cum_cents"
-    )
-    return (
-        hist.select(
-            F.col("decile").cast("int").alias("decile"),
-            "n_customers",
-            "decile_cents",
-            F.expr(f"cum_cents * 10000 div nullif({int(total)}, 0)")
-            .cast("bigint")
-            .alias("cum_share_bp"),
-        )
-        .orderBy("decile")
-    )
-
-
-_STAGED_R20.append(QuerySpec(
-    name="orders_lorenz_deciles",
-    doc="Lorenz-curve decile table of customer spend: ascending spend "
-        "deciles via the distributed global ntile, per-decile revenue "
-        "cents and cumulative share in truncated bp — the table form "
-        "of the Gini scalar (a fair corpus climbs ~1000 bp per "
-        "decile). All-integer; the grand total is the ranks operator's "
-        "returned scalar.",
-    tags=("agg", "window", "analytics"),
-    build=_lorenz_build,
-    oracle="""
-WITH per AS (
-  SELECT o_custkey,
-         SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS cents
-  FROM orders
-  WHERE o_totalprice IS NOT NULL AND o_totalprice >= 0
-    AND o_custkey IS NOT NULL
-  GROUP BY 1
-),
-dec AS (
-  SELECT cents,
-         NTILE(10) OVER (ORDER BY cents NULLS FIRST, o_custkey NULLS FIRST)
-           AS decile
-  FROM per
-),
-hist AS (
-  SELECT decile, CAST(COUNT(*) AS BIGINT) AS n_customers,
-         CAST(SUM(cents) AS BIGINT) AS decile_cents
-  FROM dec GROUP BY 1
-)
-SELECT CAST(decile AS INT) AS decile, n_customers, decile_cents,
-       CAST(SUM(decile_cents) OVER (ORDER BY decile
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) * 10000
-            // NULLIF((SELECT SUM(cents) FROM per), 0) AS BIGINT)
-         AS cum_share_bp
-FROM hist
-ORDER BY decile
-""",
-))
-
-
-def _props_census_build(spark, sf):
-    # semi-structured schema census: which keys the props payloads
-    # actually carry, at what frequency — the schema-discovery pass an
-    # open-schema ingestion runs before declaring columns. Key explode
-    # is map-side; one key-keyed agg; the total is a driver scalar.
-    ev = spark.table("events").filter(F.col("props").isNotNull())
-    keyed = ev.select(F.expr("json_object_keys(props)").alias("ks")).filter(
-        F.col("ks").isNotNull()  # malformed payloads drop on both sides
-    )
-    n_payloads = keyed.count()
-    return (
-        keyed.select(F.explode("ks").alias("key"))
-        .groupBy("key")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_payloads"))
-        .select(
-            "key",
-            "n_payloads",
-            F.expr(f"n_payloads * 10000 div {max(int(n_payloads), 1)}")
-            .cast("bigint")
-            .alias("presence_bp"),
-        )
-        .orderBy("key")
-    )
-
-
-_STAGED_R20.append(QuerySpec(
-    name="events_props_key_census",
-    doc="Semi-structured key census over the props payloads: every JSON "
-        "key's payload count and presence share in truncated bp — the "
-        "schema-discovery pass before an open-schema ingestion declares "
-        "columns. Malformed payloads drop identically on both engines "
-        "(NULL key array / json_valid gate).",
-    tags=("json", "quality", "agg"),
-    build=_props_census_build,
-    oracle="""
-WITH v AS (
-  SELECT props FROM events
-  WHERE props IS NOT NULL AND json_valid(props)
-),
-n AS (SELECT GREATEST(COUNT(*), 1) AS total FROM v),
-k AS (SELECT unnest(json_keys(props)) AS key FROM v)
-SELECT key, CAST(COUNT(*) AS BIGINT) AS n_payloads,
-       CAST(COUNT(*) * 10000 // MAX(n.total) AS BIGINT) AS presence_bp
-FROM k CROSS JOIN n
-GROUP BY key
-ORDER BY key
-""",
-))
-
-
-def _dim_variance_build(spark, sf):
-    # per-dimension variance profile over 64-quantized components: the
-    # informativeness ranking that drives dimension truncation (the
-    # Matryoshka spec's empirical justification). Variance numerator
-    # n*sumsq - sum^2 stays all-integer (exact, order-insensitive);
-    # top-10 via sort-limit (TakeOrderedAndProject), rank window over
-    # the bounded 10-row result.
-    q = (
-        spark.table("embeddings")
-        .filter(F.col("embedding").isNotNull())
-        .select(F.posexplode("embedding").alias("pos", "v"))
-        .select(
-            "pos", F.floor(F.col("v").cast("double") * 64).cast("long").alias("q")
-        )
-    )
-    per = q.groupBy("pos").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("q").alias("s"),
-        F.sum(F.col("q") * F.col("q")).alias("ss"),
-    )
-    top = (
-        per.select(
-            "pos",
-            F.col("n").cast("bigint").alias("n"),
-            (F.col("n") * F.col("ss") - F.col("s") * F.col("s"))
-            .cast("bigint")
-            .alias("var_num"),
-        )
-        .orderBy(F.col("var_num").desc(), "pos")
-        .limit(10)
-    )
-    w = Window.orderBy(F.col("var_num").desc(), "pos")
-    return (
-        top.withColumn("rank", F.row_number().over(w).cast("int"))
-        .select("rank", F.col("pos").cast("int").alias("pos"), "n", "var_num")
-        .orderBy("rank")
-    )
-
-
-_STAGED_R20.append(QuerySpec(
-    name="embedding_dim_variance_profile",
-    doc="Top-10 most-informative embedding dimensions by integer "
-        "variance numerator n*sumsq - sum^2 over 64-quantized "
-        "components (exact, order-insensitive) — the measurement that "
-        "justifies Matryoshka-style truncation. Dimension-scale agg; "
-        "sort-limit top-10 with the rank window over the bounded "
-        "result.",
-    tags=("llm", "embedding", "agg"),
-    build=_dim_variance_build,
-    oracle="""
-WITH q AS (
-  SELECT generate_subscripts(embedding, 1) - 1 AS pos,
-         CAST(FLOOR(CAST(unnest(embedding) AS DOUBLE) * 64) AS BIGINT) AS q
-  FROM embeddings WHERE embedding IS NOT NULL
-),
-per AS (
-  SELECT pos, COUNT(*) AS n, SUM(q) AS s, SUM(q * q) AS ss
-  FROM q GROUP BY pos
-),
-top AS (
-  SELECT pos, n, n * ss - s * s AS var_num
-  FROM per
-  ORDER BY var_num DESC, pos
-  LIMIT 10
-)
-SELECT CAST(ROW_NUMBER() OVER (ORDER BY var_num DESC, pos) AS INT) AS rank,
-       CAST(pos AS INT) AS pos,
-       CAST(n AS BIGINT) AS n,
-       CAST(var_num AS BIGINT) AS var_num
-FROM top
-ORDER BY rank
-""",
-))
-
-
-# ---------------------------------------------------------------------------
-# Overflow staging lane (built r16): declared opportunistically when a
-# round's window math leaves never-green budget beyond the per-round
-# lanes — the r16 simulation shows r17 can declare 12 (12 never + 31
-# r11-stale + 7 r12-stale) with staleness_violations() = [], so this
-# lane keeps the declaration cadence funded through r20 even at the
-# faster burn rate.
-# ---------------------------------------------------------------------------
-
-_STAGED_OVERFLOW: list[QuerySpec] = []
-
-
-def _chunk_dup_build(spark, sf):
-    # RAG-chunk dedup accounting: chunk every doc with the established
-    # 200-char/stride-150 windows (text_chunk_windows), md5 each chunk,
-    # and measure per source how many chunk occurrences are shared by
-    # >= 2 distinct docs — the cross-document boilerplate rate at chunk
-    # granularity (whole-doc dedup misses it; this is the measurement
-    # that motivates chunk-level dedup before indexing). Chunk relation
-    # is corpus-bytes/150 x ~40 B — materialized ONCE (disk blocks, the
-    # containment idiom) because it feeds both the multi-doc hash agg
-    # and the per-source rollup; candidates never leave hash scale.
-    d = spark.table("documents").filter(F.length("text") > 0)
-    chunks = materialize(
-        d.select(
-            "doc_id",
-            "source",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, cast(floor((length(text) - 1) / 150)"
-                    " as int)), i -> md5(substring(text, i * 150 + 1, 200)))"
-                )
-            ).alias("h"),
-        ),
-        storage="disk",
-    )
-    multi = (
-        chunks.groupBy("h")
-        .agg(F.count_distinct("doc_id").alias("__nd"))
-        .filter(F.col("__nd") >= 2)
-        .select("h", F.lit(1).alias("__dup"))
-    )
-    return (
-        chunks.join(multi, "h", "left")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_chunks"),
-            F.sum(F.coalesce(F.col("__dup"), F.lit(0))).cast("bigint")
-            .alias("n_dup_chunks"),
-        )
-        .withColumn(
-            "dup_bp",
-            F.expr("n_dup_chunks * 10000 div n_chunks").cast("bigint"),
-        )
-        .orderBy("source")
-    )
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="text_chunk_dup_rate",
-    doc="Per-source chunk-level duplication rate: 200-char/stride-150 "
-        "chunks (the text_chunk_windows grid), a chunk occurrence "
-        "counts as duplicated when its md5 appears in >= 2 distinct "
-        "docs — the cross-document boilerplate measurement that "
-        "motivates chunk-level dedup before RAG indexing. Hash-keyed "
-        "aggregations; the chunk relation is materialized once.",
-    tags=("llm", "dedup", "chunking"),
-    build=_chunk_dup_build,
-    oracle="""
-WITH d AS (
-  SELECT doc_id, source, text FROM documents WHERE LENGTH(text) > 0
-),
-c AS (
-  SELECT doc_id, source,
-         md5(substring(text, chunk_idx * 150 + 1, 200)) AS h
-  FROM (SELECT doc_id, source, text,
-               unnest(generate_series(0, CAST((LENGTH(text) - 1) // 150
-                                              AS INTEGER))) AS chunk_idx
-        FROM d) t
-),
-multi AS (SELECT h FROM c GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2)
-SELECT source,
-       CAST(COUNT(*) AS BIGINT) AS n_chunks,
-       CAST(COUNT(m.h) AS BIGINT) AS n_dup_chunks,
-       CAST(COUNT(m.h) * 10000 // COUNT(*) AS BIGINT) AS dup_bp
-FROM c LEFT JOIN multi m ON m.h = c.h
-GROUP BY source
--- NULL source is its own group; Spark ASC defaults NULLS FIRST
-ORDER BY source NULLS FIRST
-""",
-))
-
-
-def _token_survival_build(spark, sf):
-    # data-mixing decision curve: docs and whitespace tokens surviving
-    # each min-length threshold of a fixed ladder — ONE conditional
-    # aggregation over one corpus scan (never a rescan per threshold);
-    # the 7-threshold result is driver-side metadata arithmetic inlined
-    # into a literal relation, the established one-scalar idiom.
-    ladder = [0, 50, 100, 200, 400, 800, 1600]
-    d = (
-        spark.table("documents")
-        .filter(F.col("text").isNotNull())
-        .select(
-            F.length("text").alias("nc"),
-            F.size(F.split("text", " ")).alias("ntok"),
-        )
-    )
-    row = d.agg(
-        *[
-            F.count(F.when(F.col("nc") >= t, 1)).alias(f"d{t}")
-            for t in ladder
-        ],
-        *[
-            F.sum(F.when(F.col("nc") >= t, F.col("ntok"))).alias(f"t{t}")
-            for t in ladder
-        ],
-    ).collect()[0]
-    data = [
-        (t, int(row[f"d{t}"] or 0), int(row[f"t{t}"] or 0)) for t in ladder
-    ]
-    total = max(data[0][2], 1)
-    return spark.createDataFrame(
-        [(t, nd, nt, nt * 10000 // total) for t, nd, nt in data],
-        "min_chars int, n_docs bigint, n_tokens bigint, "
-        "token_survival_bp bigint",
-    ).orderBy("min_chars")
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="documents_token_survival_curve",
-    doc="Token-survival curve over a min-length threshold ladder "
-        "(0..1600 chars): docs and whitespace tokens surviving each "
-        "cut, share of the uncut token budget in bp — the 'how much "
-        "data does this quality gate cost' curve behind every "
-        "pretraining mixing decision. One conditional aggregation over "
-        "one scan; the 7-row result is driver metadata.",
-    tags=("llm", "quality", "agg"),
-    build=_token_survival_build,
-    oracle="""
-WITH d AS (
-  SELECT LENGTH(text) AS nc, len(string_split(text, ' ')) AS ntok
-  FROM documents WHERE text IS NOT NULL
-),
-l AS (SELECT unnest([0, 50, 100, 200, 400, 800, 1600]) AS min_chars),
-agg AS (
-  SELECT l.min_chars,
-         COUNT(CASE WHEN d.nc >= l.min_chars THEN 1 END) AS n_docs,
-         COALESCE(SUM(CASE WHEN d.nc >= l.min_chars THEN d.ntok END), 0)
-           AS n_tokens
-  FROM l LEFT JOIN d ON TRUE
-  GROUP BY l.min_chars
-),
-tot AS (
-  SELECT GREATEST(MAX(CASE WHEN min_chars = 0 THEN n_tokens END), 1) AS t
-  FROM agg
-)
-SELECT CAST(min_chars AS INTEGER) AS min_chars,
-       CAST(n_docs AS BIGINT) AS n_docs,
-       CAST(n_tokens AS BIGINT) AS n_tokens,
-       CAST(n_tokens * 10000 // tot.t AS BIGINT) AS token_survival_bp
-FROM agg, tot
-ORDER BY min_chars
-""",
-))
-
-
-def _bounce_sql(epoch_us_fn: str, idiv: str) -> str:
-    """Per-entry-type session bounce rate over the repo's canonical
-    30-min-gap sessionization (events_sessionize_gap's window chain) —
-    identical plan in both dialects modulo the epoch-µs function and
-    the integer-division token (Spark ``div`` / DuckDB ``//``)."""
-    return f"""
-WITH e AS (
-  SELECT user_id, event_id, event_type, {epoch_us_fn} AS t FROM events
-  WHERE ts IS NOT NULL AND user_id IS NOT NULL
-), g AS (
-  SELECT user_id, event_id, event_type, t,
-         CASE WHEN t - LAG(t) OVER (PARTITION BY user_id ORDER BY t, event_id)
-                   > 1800000000
-              OR LAG(t) OVER (PARTITION BY user_id ORDER BY t, event_id) IS NULL
-              THEN 1 ELSE 0 END AS new_s
-  FROM e
-), s AS (
-  SELECT user_id, event_id, event_type, t,
-         SUM(new_s) OVER (PARTITION BY user_id ORDER BY t, event_id
-                          ROWS UNBOUNDED PRECEDING) AS sid
-  FROM g
-), r AS (
-  SELECT event_type,
-         ROW_NUMBER() OVER (PARTITION BY user_id, sid
-                            ORDER BY t, event_id) AS rn,
-         COUNT(*) OVER (PARTITION BY user_id, sid) AS ne
-  FROM s
-)
-SELECT event_type AS entry_type,
-       CAST(COUNT(*) AS BIGINT) AS n_sessions,
-       CAST(SUM(CASE WHEN ne = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_bounces,
-       CAST(SUM(CASE WHEN ne = 1 THEN 1 ELSE 0 END) * 10000
-            {idiv} COUNT(*) AS BIGINT) AS bounce_bp
-FROM r WHERE rn = 1
-GROUP BY event_type
-ORDER BY entry_type NULLS FIRST
-"""
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="events_bounce_rate_by_entry_type",
-    doc="Session bounce rate by entry event type: sessions opened by "
-        "each type and the share that end after a single event — the "
-        "engagement-quality read on the canonical 30-min-gap "
-        "sessionization. All windows user-keyed; session-scale "
-        "aggregation after.",
-    tags=("events", "session"),
-    sql=_bounce_sql("unix_micros(ts)", "div"),
-    oracle=_bounce_sql("(epoch_ns(ts) // 1000)", "//"),
-))
-
-
-def _degree_profile_build(spark, sf):
-    # near-dup graph density audit: per-vector count of cosine>=0.4
-    # neighbors inside its sign-LSH bucket, then the degree histogram —
-    # the hub-detection measurement that justifies the LSH hot-bucket
-    # star-collapse cap. Candidates bounded by the bucket cap (256):
-    # buckets larger than the cap are excluded from the profile
-    # entirely (a hub bucket's degrees are exactly what the collapse
-    # rewrites), so the self-join is never worse than cap^2 per bucket.
-    from ..operators.similarity import dot_product, sign_bucket, with_norm
-
-    max_bucket = 256
-    base = with_norm(
-        spark.table("embeddings").filter(F.col("embedding").isNotNull())
-    ).withColumn("bk", sign_bucket("embedding", 8))
-    base = base.withColumn(
-        "__bsz", F.count("*").over(Window.partitionBy("bk"))
-    ).filter(F.col("__bsz") <= max_bucket)
-    a = base.select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"),
-        F.col("__norm").alias("na"), "bk",
-    )
-    b = base.select(
-        F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb"),
-        F.col("__norm").alias("nb"), "bk",
-    )
-    prod = F.col("na") * F.col("nb")
-    sim = F.when(
-        prod > 0, F.round(dot_product(F.col("ea"), F.col("eb")) / prod, 6)
-    )
-    deg = (
-        a.join(b, "bk")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .withColumn("sim", sim)
-        .filter(F.col("sim") >= 0.4)
-        .groupBy("id_a")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    return (
-        base.select("vec_id")
-        .join(deg, base["vec_id"] == deg["id_a"], "left")
-        .select(F.coalesce(F.col("degree"), F.lit(0)).cast("int").alias("degree"))
-        .groupBy("degree")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_vecs"))
-        .orderBy("degree")
-    )
-
-
-def _degree_profile_oracle() -> str:
-    from .llmops import _sign_bits_duck
-
-    return f"""
-WITH b0 AS (
-  SELECT vec_id, embedding, {_sign_bits_duck('embedding')} AS bk
-  FROM embeddings WHERE embedding IS NOT NULL
-),
-sz AS (SELECT bk, COUNT(*) AS n FROM b0 GROUP BY bk),
-b AS (SELECT b0.* FROM b0 JOIN sz ON sz.bk = b0.bk WHERE sz.n <= 256),
-norms AS (
-  SELECT vec_id, SQRT(SUM(CAST(u AS DOUBLE) * CAST(u AS DOUBLE))) AS nrm
-  FROM (SELECT vec_id, unnest(embedding) AS u FROM b) t
-  GROUP BY vec_id
-),
-pairs AS (
-  SELECT x.vec_id AS id_a, y.vec_id AS id_b
-  FROM b x JOIN b y ON x.bk = y.bk AND x.vec_id <> y.vec_id
-),
-dots AS (
-  SELECT id_a, id_b, SUM(CAST(u AS DOUBLE) * CAST(v AS DOUBLE)) AS dot
-  FROM (
-    SELECT p.id_a, p.id_b, unnest(ea.embedding) AS u, unnest(eb.embedding) AS v
-    FROM pairs p
-    JOIN embeddings ea ON ea.vec_id = p.id_a
-    JOIN embeddings eb ON eb.vec_id = p.id_b
-  ) z
-  GROUP BY id_a, id_b
-),
-deg AS (
-  SELECT b.vec_id,
-         COUNT(CASE WHEN na.nrm * nb.nrm > 0
-                     AND ROUND(d.dot / (na.nrm * nb.nrm), 6) >= 0.4
-                    THEN 1 END) AS degree
-  FROM b
-  LEFT JOIN dots d ON d.id_a = b.vec_id
-  LEFT JOIN norms na ON na.vec_id = d.id_a
-  LEFT JOIN norms nb ON nb.vec_id = d.id_b
-  GROUP BY b.vec_id
-)
-SELECT CAST(degree AS INTEGER) AS degree,
-       CAST(COUNT(*) AS BIGINT) AS n_vecs
-FROM deg GROUP BY degree ORDER BY degree
-"""
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="similarity_graph_degree_profile",
-    doc="Degree histogram of the cosine>=0.4 near-dup graph within "
-        "sign-LSH buckets (zero-degree vectors included; buckets above "
-        "the 256 cap excluded — a hub bucket's degrees are what the "
-        "star-collapse rewrites): the graph-density audit behind the "
-        "LSH hot-bucket cap. Bucket equi-join bounded by cap^2 per "
-        "bucket, never corpus^2.",
-    tags=("llm", "similarity", "dedup"),
-    build=_degree_profile_build,
-    oracle=_degree_profile_oracle,
-))
-
-
-def _pii_density_build(spark, sf):
-    # PII-exposure census per source: digit-run and emailish-pattern
-    # densities per 10k chars — the measurement that sizes a redaction
-    # pass (text_redact_scrub is the scrubber; this is its audit). The
-    # fixture's word-soup has no emails, so a deterministic synthetic
-    # email is appended to every doc_id % 7 == 0 document (mirrored in
-    # the oracle) to keep the email column non-vacuous — the same
-    # non-vacuity move as dedup_normalized_text_groups. Map + one
-    # source-scale aggregation.
-    d = (
-        spark.table("documents")
-        .filter(F.col("text").isNotNull())
-        .select(
-            "source",
-            F.when(
-                F.col("doc_id") % 7 == 0,
-                F.concat(
-                    F.col("text"), F.lit(" user"),
-                    F.col("doc_id").cast("string"), F.lit("@example.com"),
-                ),
-            ).otherwise(F.col("text")).alias("t"),
-        )
-        .select(
-            "source",
-            F.length("t").alias("nc"),
-            F.size(F.regexp_extract_all("t", F.lit("[0-9]+"), 0))
-            .alias("runs"),
-            F.size(
-                F.regexp_extract_all(
-                    "t", F.lit("[A-Za-z0-9]+@[A-Za-z0-9.]+"), 0
-                )
-            ).alias("emails"),
-        )
-    )
-    return (
-        d.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("nc").cast("bigint").alias("n_chars"),
-            F.sum("runs").cast("bigint").alias("n_digit_runs"),
-            F.sum("emails").cast("bigint").alias("n_emails"),
-        )
-        .withColumn(
-            "digit_per_10k",
-            F.expr("n_digit_runs * 10000 div greatest(n_chars, 1)")
-            .cast("bigint"),
-        )
-        .withColumn(
-            "email_per_10k",
-            F.expr("n_emails * 10000 div greatest(n_chars, 1)")
-            .cast("bigint"),
-        )
-        .orderBy("source")
-    )
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="text_pii_density_census",
-    doc="Per-source PII-exposure densities (digit runs and emailish "
-        "patterns per 10k chars): the audit that sizes a redaction "
-        "pass before it runs. Deterministic synthetic emails on "
-        "doc_id % 7 == 0 keep the fixture non-vacuous (mirrored in "
-        "the oracle). Map stage + source-scale aggregation.",
-    tags=("llm", "text", "quality"),
-    build=_pii_density_build,
-    oracle=r"""
-WITH d AS (
-  SELECT source,
-         CASE WHEN doc_id % 7 = 0
-              THEN text || ' user' || CAST(doc_id AS VARCHAR) || '@example.com'
-              ELSE text END AS t
-  FROM documents WHERE text IS NOT NULL
-),
-m AS (
-  SELECT source, LENGTH(t) AS nc,
-         len(regexp_extract_all(t, '[0-9]+')) AS runs,
-         len(regexp_extract_all(t, '[A-Za-z0-9]+@[A-Za-z0-9.]+')) AS emails
-  FROM d
-)
-SELECT source,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(nc) AS BIGINT) AS n_chars,
-       CAST(SUM(runs) AS BIGINT) AS n_digit_runs,
-       CAST(SUM(emails) AS BIGINT) AS n_emails,
-       CAST(SUM(runs) * 10000 // GREATEST(SUM(nc), 1) AS BIGINT)
-         AS digit_per_10k,
-       CAST(SUM(emails) * 10000 // GREATEST(SUM(nc), 1) AS BIGINT)
-         AS email_per_10k
-FROM m
-GROUP BY source
-ORDER BY source NULLS FIRST
-""",
-))
-
-
-def _ks_drift_build(spark, sf):
-    # distribution-drift alarm: the KS statistic between the order-total
-    # distributions of the date range's first and second halves (pivot =
-    # midpoint of [min, max] order date, integer-µs exact), reported as
-    # the top-5 divergence points of the two bp-scaled ECDFs. Per-half
-    # ECDFs via the DISTRIBUTED running sum (operators/ranks — the
-    # partitionless-window veto honored); value-scale relations after
-    # the first aggregation; the rank window runs over the bounded
-    # 5-row post-limit result (the dim-variance idiom).
-    from ..operators.ranks import with_global_running_sum
-
-    o = spark.table("orders").filter(
-        F.col("o_totalprice").isNotNull() & F.col("o_orderdate").isNotNull()
-    ).select(
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        # o_orderdate reads as TIMESTAMP_NTZ; cast through the pinned-UTC
-        # session TZ so unix_micros matches DuckDB's naive epoch_us
-        F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("t"),
-    )
-    mm = o.agg(
-        F.min("t").alias("mn"), F.max("t").alias("mx")
-    ).collect()[0]  # two driver scalars (metadata)
-    if mm["mn"] is None:
-        pivot = 0
-    else:
-        pivot = int(mm["mn"]) + (int(mm["mx"]) - int(mm["mn"])) // 2
-    per = materialize(
-        o.groupBy("cents").agg(
-            F.sum(F.when(F.col("t") < pivot, 1).otherwise(0)).alias("k1"),
-            F.sum(F.when(F.col("t") >= pivot, 1).otherwise(0)).alias("k2"),
-        )
-    )
-    c1df, n1 = with_global_running_sum(per, [F.col("cents").asc()], "k1", "c1")
-    cum, n2 = with_global_running_sum(c1df, [F.col("cents").asc()], "k2", "c2")
-    n1 = max(int(n1 or 0), 1)
-    n2 = max(int(n2 or 0), 1)
-    sel = cum.select(
-        "cents",
-        F.expr(f"c1 * 10000 div {n1}").cast("bigint").alias("cdf_first_bp"),
-        F.expr(f"c2 * 10000 div {n2}").cast("bigint").alias("cdf_second_bp"),
-        F.expr(f"abs(c1 * 10000 div {n1} - c2 * 10000 div {n2})")
-        .cast("bigint").alias("ks_bp"),
-    )
-    top = sel.orderBy(F.col("ks_bp").desc(), "cents").limit(5)
-    w = Window.orderBy(F.col("ks_bp").desc(), "cents")
-    return (
-        top.withColumn("rank", F.row_number().over(w).cast("int"))
-        .select("rank", "cents", "cdf_first_bp", "cdf_second_bp", "ks_bp")
-        .orderBy("rank")
-    )
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="orders_ks_drift_date_halves",
-    doc="Kolmogorov-Smirnov drift between the order-total distributions "
-        "of the date range's first and second halves (midpoint pivot, "
-        "integer-µs exact): top-5 divergence points of the bp-scaled "
-        "ECDFs — the ingest distribution-shift alarm at full-"
-        "distribution strength (priority-mix drift is its categorical "
-        "sibling). ECDFs via the distributed running sum; bp-scaled "
-        "CDFs keep every product inside bigint at any corpus size.",
-    tags=("agg", "analytics", "quality"),
-    build=_ks_drift_build,
-    oracle="""
-WITH o AS (
-  SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
-         epoch_us(o_orderdate) AS t
-  FROM orders
-  WHERE o_totalprice IS NOT NULL AND o_orderdate IS NOT NULL
-),
-piv AS (SELECT MIN(t) + (MAX(t) - MIN(t)) // 2 AS p FROM o),
-per AS (
-  SELECT cents,
-         SUM(CASE WHEN t < piv.p THEN 1 ELSE 0 END) AS k1,
-         SUM(CASE WHEN t >= piv.p THEN 1 ELSE 0 END) AS k2
-  FROM o, piv GROUP BY cents
-),
-cum AS (
-  SELECT cents,
-         SUM(k1) OVER (ORDER BY cents ROWS UNBOUNDED PRECEDING) AS c1,
-         SUM(k2) OVER (ORDER BY cents ROWS UNBOUNDED PRECEDING) AS c2
-  FROM per
-),
-tot AS (
-  SELECT GREATEST(SUM(k1), 1) AS n1, GREATEST(SUM(k2), 1) AS n2 FROM per
-),
-sel AS (
-  SELECT cents,
-         c1 * 10000 // tot.n1 AS cdf_first_bp,
-         c2 * 10000 // tot.n2 AS cdf_second_bp,
-         ABS(c1 * 10000 // tot.n1 - c2 * 10000 // tot.n2) AS ks_bp
-  FROM cum, tot
-),
-top AS (SELECT * FROM sel ORDER BY ks_bp DESC, cents LIMIT 5)
-SELECT CAST(ROW_NUMBER() OVER (ORDER BY ks_bp DESC, cents) AS INTEGER) AS rank,
-       CAST(cents AS BIGINT) AS cents,
-       CAST(cdf_first_bp AS BIGINT) AS cdf_first_bp,
-       CAST(cdf_second_bp AS BIGINT) AS cdf_second_bp,
-       CAST(ks_bp AS BIGINT) AS ks_bp
-FROM top
-ORDER BY rank
-""",
-))
-
-
-def _band_census_build(spark, sf):
-    # LSH banding diagnostics: per band, the bucket census (distinct
-    # buckets, docs, hottest bucket, candidate-pair volume sum n*(n-1)/2)
-    # — the measurement that tunes bands/rows/max_bucket BEFORE a dedup
-    # run pays the bucket join. Pair volume is computed FROM COUNTS
-    # (band-bucket-scale aggregation), never materialized as pairs —
-    # this is exactly the quantity the hot-bucket star-collapse caps,
-    # measured without paying it. NULL band values (un-signable NULL
-    # text) excluded on both sides.
-    from ..operators.dedup import minhash_signature_mapside
-
-    # materialize the doc-scale signature relation ONCE: the 4-band
-    # union has four consumers, and a lazy sig would re-run the corpus
-    # hash pass per branch (the shared-subtree re-execution trap)
-    sig = materialize(
-        minhash_signature_mapside(spark.table("documents"), "text", "doc_id")
-    )
-    bands = None
-    for i, (a, b) in enumerate([("h0", "h1"), ("h2", "h3"), ("h4", "h5"),
-                                ("h6", "h7")]):
-        part = sig.select(
-            F.lit(i).alias("band_idx"),
-            F.concat(F.col(a), F.col(b)).alias("band_val"),
-        )
-        bands = part if bands is None else bands.unionAll(part)
-    bk = (
-        bands.filter(F.col("band_val").isNotNull())
-        .groupBy("band_idx", "band_val")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return (
-        bk.groupBy("band_idx")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_buckets"),
-            F.sum("n").cast("bigint").alias("n_docs"),
-            F.max("n").cast("bigint").alias("max_bucket"),
-            F.sum(F.expr("n * (n - 1) div 2")).cast("bigint")
-            .alias("n_candidate_pairs"),
-        )
-        .orderBy("band_idx")
-    )
-
-
-def _band_census_oracle() -> str:
-    from .llmops import _SIG_SHINGLES_CTE, _sig_cte
-
-    return f"""
-WITH {_SIG_SHINGLES_CTE.strip()}, {_sig_cte().strip()}
-bands AS (
-  SELECT doc_id, 0 AS band_idx, h0 || h1 AS band_val FROM sig
-  UNION ALL SELECT doc_id, 1, h2 || h3 FROM sig
-  UNION ALL SELECT doc_id, 2, h4 || h5 FROM sig
-  UNION ALL SELECT doc_id, 3, h6 || h7 FROM sig
-),
-bk AS (
-  SELECT band_idx, band_val, COUNT(*) AS n
-  FROM bands WHERE band_val IS NOT NULL
-  GROUP BY 1, 2
-)
-SELECT CAST(band_idx AS INTEGER) AS band_idx,
-       CAST(COUNT(*) AS BIGINT) AS n_buckets,
-       CAST(SUM(n) AS BIGINT) AS n_docs,
-       CAST(MAX(n) AS BIGINT) AS max_bucket,
-       CAST(SUM(n * (n - 1) // 2) AS BIGINT) AS n_candidate_pairs
-FROM bk
-GROUP BY band_idx
-ORDER BY band_idx
-"""
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="dedup_minhash_band_census",
-    doc="Per-band LSH bucket census (buckets, docs, hottest bucket, "
-        "candidate-pair volume sum n*(n-1)/2 from counts): the "
-        "bands/rows/max_bucket tuning measurement, computed at bucket "
-        "scale without ever materializing a pair. The sibling of the "
-        "shingle-df profile, one level up the LSH stack.",
-    tags=("llm", "dedup", "agg"),
-    build=_band_census_build,
-    oracle=_band_census_oracle,
-))
-
-
-def _prefix_template_build(spark, sf):
-    # boilerplate-template mining: 40-char prefix groups shared by >= 2
-    # docs, top-20 by size — the crawl-template census that motivates
-    # the boundary-gram and chunk-level dedup passes. The word-soup
-    # fixture shares no 40-char prefixes, so a deterministic synthetic
-    # header is prepended to every doc_id % 5 == 0 document (mirrored
-    # in the oracle) to keep the census non-vacuous. Prefix-keyed
-    # aggregation; sort-limit top-20.
-    header = "=== COMMON CRAWL BOILERPLATE HEADER 0001 === "
-    d = (
-        spark.table("documents")
-        .filter(F.col("text").isNotNull())
-        .select(
-            "doc_id", "source",
-            F.when(
-                F.col("doc_id") % 5 == 0,
-                F.concat(F.lit(header), F.col("text")),
-            ).otherwise(F.col("text")).alias("t"),
-        )
-        .filter(F.length("t") >= 40)
-    )
-    return (
-        d.select("doc_id", "source", F.substring("t", 1, 40).alias("prefix"))
-        .groupBy("prefix")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.count_distinct("source").cast("bigint").alias("n_sources"),
-            F.min("doc_id").cast("bigint").alias("first_doc"),
-        )
-        .filter(F.col("n_docs") >= 2)
-        .orderBy(F.col("n_docs").desc(), "prefix")
-        .limit(20)
-    )
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="documents_prefix_template_census",
-    doc="Template mining: 40-char prefix groups shared by >= 2 docs "
-        "(top-20 by size, with source spread and first doc) — the "
-        "boilerplate-header census behind chunk/boundary dedup. "
-        "Deterministic synthetic header on doc_id % 5 == 0 keeps the "
-        "fixture non-vacuous (mirrored in the oracle).",
-    tags=("llm", "dedup", "text"),
-    build=_prefix_template_build,
-    oracle="""
-WITH d AS (
-  SELECT doc_id, source,
-         CASE WHEN doc_id % 5 = 0
-              THEN '=== COMMON CRAWL BOILERPLATE HEADER 0001 === ' || text
-              ELSE text END AS t
-  FROM documents WHERE text IS NOT NULL
-),
-p AS (
-  SELECT substring(t, 1, 40) AS prefix, doc_id, source
-  FROM d WHERE LENGTH(t) >= 40
-)
-SELECT prefix,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources,
-       CAST(MIN(doc_id) AS BIGINT) AS first_doc
-FROM p
-GROUP BY prefix
-HAVING COUNT(*) >= 2
-ORDER BY n_docs DESC, prefix
-LIMIT 20
-""",
-))
-
-
-def _session_dur_hist_sql(epoch_us_fn: str, idiv: str) -> str:
-    """Log2 histogram of session durations over the canonical
-    30-min-gap sessionization — bucket -1 holds single-instant
-    sessions (duration 0 s); floor(log2) on integer seconds is
-    boundary-exact in IEEE."""
-    return f"""
-WITH e AS (
-  SELECT user_id, event_id, {epoch_us_fn} AS t FROM events
-  WHERE ts IS NOT NULL AND user_id IS NOT NULL
-), g AS (
-  SELECT user_id, event_id, t,
-         CASE WHEN t - LAG(t) OVER (PARTITION BY user_id ORDER BY t, event_id)
-                   > 1800000000
-              OR LAG(t) OVER (PARTITION BY user_id ORDER BY t, event_id) IS NULL
-              THEN 1 ELSE 0 END AS new_s
-  FROM e
-), s AS (
-  SELECT user_id, event_id, t,
-         SUM(new_s) OVER (PARTITION BY user_id ORDER BY t, event_id
-                          ROWS UNBOUNDED PRECEDING) AS sid
-  FROM g
-), sess AS (
-  SELECT user_id, sid,
-         CAST(FLOOR((MAX(t) - MIN(t)) / 1000000.0) AS BIGINT) AS dur_s
-  FROM s GROUP BY user_id, sid
-)
-SELECT CASE WHEN dur_s = 0 THEN -1
-            ELSE CAST(FLOOR(LOG2(dur_s)) AS INTEGER) END AS dur_bucket_log2,
-       CAST(COUNT(*) AS BIGINT) AS n_sessions,
-       CAST(MAX(dur_s) AS BIGINT) AS max_dur_s
-FROM sess
-GROUP BY 1
-ORDER BY dur_bucket_log2
-"""
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="events_session_duration_histogram_log2",
-    doc="Session-duration histogram in log2-second buckets (bucket -1 "
-        "= single-instant sessions) over the canonical 30-min-gap "
-        "sessionization, with the bucket max — the session-length "
-        "distribution the bounce rate summarizes at one point. "
-        "User-keyed windows; session- then bucket-scale aggregation.",
-    tags=("events", "session", "agg"),
-    sql=_session_dur_hist_sql("unix_micros(ts)", "div"),
-    oracle=_session_dur_hist_sql("(epoch_ns(ts) // 1000)", "//"),
-))
-
-
-def _winsorized_build(spark, sf):
-    # robust per-type value stats: winsorize integer cents at the exact
-    # interpolated p01/p99 (the percentile/quantile_cont parity
-    # convention) then average — the outlier-insensitive monitoring
-    # stat for a value stream. Two type-keyed aggregations (percentile
-    # pass, then clamp + mean pass joined on the tiny type relation).
-    # finite value domain: round(value*100)::BIGINT of Infinity is a
-    # CAST_OVERFLOW under ANSI — the one-poisoned-row hazard the
-    # nonfinite sweep exists to catch (same declared domain as the
-    # milli-unit digitizing specs; isfinite on the oracle side)
-    ev = spark.table("events").filter(
-        F.col("value").isNotNull() & F.col("event_type").isNotNull()
-        & ~F.isnan("value") & (F.abs("value") != float("inf"))
-    ).select(
-        "event_type",
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-    )
-    cuts = ev.groupBy("event_type").agg(
-        F.expr("percentile(cents, 0.01)").alias("p01"),
-        F.expr("percentile(cents, 0.99)").alias("p99"),
-    )
-    return (
-        ev.join(F.broadcast(cuts), "event_type")  # type-cardinality dim
-        .select(
-            "event_type", "p01", "p99",
-            F.least(F.greatest(F.col("cents").cast("double"), F.col("p01")),
-                    F.col("p99")).alias("w"),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.round(F.min("p01"), 4).cast("double").alias("p01_cents"),
-            F.round(F.min("p99"), 4).cast("double").alias("p99_cents"),
-            F.round(F.avg("w"), 4).cast("double").alias("winsorized_mean"),
-        )
-        .orderBy("event_type")
-    )
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="events_value_winsorized_stats",
-    doc="Outlier-robust per-type value stats: integer cents winsorized "
-        "at the exact interpolated p01/p99, then averaged (ROUND 4) — "
-        "the monitoring mean a single fat-finger value cannot move. "
-        "Percentile pass + broadcast clamp join on the type-cardinality "
-        "dim.",
-    tags=("events", "analytics", "agg"),
-    build=_winsorized_build,
-    oracle="""
-WITH ev AS (
-  SELECT event_type, CAST(ROUND(value * 100) AS BIGINT) AS cents
-  FROM events
-  WHERE value IS NOT NULL AND event_type IS NOT NULL AND isfinite(value)
-),
-cuts AS (
-  SELECT event_type,
-         quantile_cont(cents, 0.01) AS p01,
-         quantile_cont(cents, 0.99) AS p99
-  FROM ev GROUP BY event_type
-)
-SELECT ev.event_type,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(ROUND(MIN(p01), 4) AS DOUBLE) AS p01_cents,
-       CAST(ROUND(MIN(p99), 4) AS DOUBLE) AS p99_cents,
-       CAST(ROUND(AVG(LEAST(GREATEST(CAST(cents AS DOUBLE), p01), p99)), 4)
-            AS DOUBLE) AS winsorized_mean
-FROM ev JOIN cuts ON cuts.event_type = ev.event_type
-GROUP BY ev.event_type
-ORDER BY ev.event_type
-""",
-))
-
-
-def _month_seasonality_build(spark, sf):
-    # temporal-mix audit: revenue share per calendar month vs the
-    # uniform 1/12 baseline (index 10000 = exactly uniform) — the
-    # order-flow analogue of the events DoW seasonality spec. One
-    # month-keyed aggregation; the total is a driver scalar. index =
-    # cents * 120000 div total stays in bigint to ~10^14 total cents.
-    o = spark.table("orders").filter(
-        F.col("o_totalprice").isNotNull() & F.col("o_orderdate").isNotNull()
-    ).select(
-        F.month("o_orderdate").alias("month"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-    )
-    tot = o.agg(F.sum("cents")).collect()[0][0]  # one driver scalar
-    tot = max(int(tot or 0), 1)
-    return (
-        o.groupBy("month")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            F.sum("cents").cast("bigint").alias("cents"),
-        )
-        .select(
-            F.col("month").cast("int").alias("month"),
-            "n_orders",
-            "cents",
-            F.expr(f"cents * 10000 div {tot}").cast("bigint")
-            .alias("share_bp"),
-            F.expr(f"cents * 120000 div {tot}").cast("bigint")
-            .alias("seasonality_index_bp"),
-        )
-        .orderBy("month")
-    )
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="orders_month_seasonality_index",
-    doc="Calendar-month revenue seasonality: per-month order count, "
-        "cents, share bp, and the index against the uniform 1/12 "
-        "baseline (10000 = uniform) — the order-flow sibling of the "
-        "events DoW seasonality audit. Month-keyed aggregation; "
-        "driver-scalar total.",
-    tags=("agg", "analytics"),
-    build=_month_seasonality_build,
-    oracle="""
-WITH o AS (
-  SELECT MONTH(o_orderdate) AS month,
-         CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
-  FROM orders
-  WHERE o_totalprice IS NOT NULL AND o_orderdate IS NOT NULL
-),
-tot AS (SELECT GREATEST(SUM(cents), 1) AS t FROM o)
-SELECT CAST(month AS INTEGER) AS month,
-       CAST(COUNT(*) AS BIGINT) AS n_orders,
-       CAST(SUM(cents) AS BIGINT) AS cents,
-       CAST(SUM(cents) * 10000 // tot.t AS BIGINT) AS share_bp,
-       CAST(SUM(cents) * 120000 // tot.t AS BIGINT) AS seasonality_index_bp
-FROM o, tot
-GROUP BY month, tot.t
-ORDER BY month
-""",
-))
-
-
-def _hourly_p95_build(spark, sf):
-    # capacity-planning percentile: hourly event counts per type, then
-    # the exact interpolated p95 and max per type — "what load do we
-    # provision for" against "what have we seen". Hour-keyed then
-    # type-keyed aggregations; the percentile runs over the bounded
-    # hours-per-type relation.
-    ev = spark.table("events").filter(
-        F.col("ts").isNotNull() & F.col("event_type").isNotNull()
-    )
-    hourly = ev.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("h")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    return (
-        hourly.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_hours"),
-            F.max("n").cast("bigint").alias("max_hourly"),
-            F.round(F.expr("percentile(n, 0.95)"), 4).cast("double")
-            .alias("p95_hourly"),
-        )
-        .orderBy("event_type")
-    )
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="events_hourly_load_p95_per_type",
-    doc="Per-type hourly load profile: active hours, max hourly count, "
-        "and the exact interpolated p95 hourly count — the capacity-"
-        "planning complement of the peak-to-mean load factor. Hour- "
-        "then type-keyed aggregations; percentile over the bounded "
-        "hours-per-type relation.",
-    tags=("events", "analytics", "agg"),
-    build=_hourly_p95_build,
-    oracle="""
-WITH hourly AS (
-  SELECT event_type, date_trunc('hour', ts) AS h, COUNT(*) AS n
-  FROM events
-  WHERE ts IS NOT NULL AND event_type IS NOT NULL
-  GROUP BY 1, 2
-)
-SELECT event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_hours,
-       CAST(MAX(n) AS BIGINT) AS max_hourly,
-       CAST(ROUND(quantile_cont(n, 0.95), 4) AS DOUBLE) AS p95_hourly
-FROM hourly
-GROUP BY event_type
-ORDER BY event_type
-""",
-))
-
-
-def _token_impact_build(spark, sf):
-    # dedup accounting at TOKEN weight: how many training tokens a
-    # keep-one exact dedup removes, per source — the group-size
-    # histogram tells you how many DOCS go; the mixing decision needs
-    # tokens. Hash-keyed keeper agg + doc-scale join + source rollup.
-    d = (
-        spark.table("documents")
-        .filter(F.col("text").isNotNull())
-        .select(
-            "doc_id", "source",
-            F.size(F.split("text", " ")).cast("bigint").alias("ntok"),
-            F.md5("text").alias("__h"),
-        )
-    )
-    keep = d.groupBy("__h").agg(F.min("doc_id").alias("__keep"))
-    return (
-        d.join(keep, "__h")
-        .select(
-            "source", "ntok",
-            (F.col("doc_id") != F.col("__keep")).cast("int").alias("rm"),
-        )
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("ntok").cast("bigint").alias("n_tokens"),
-            F.sum("rm").cast("bigint").alias("n_removed"),
-            F.sum(F.col("ntok") * F.col("rm")).cast("bigint")
-            .alias("tokens_removed"),
-        )
-        .withColumn(
-            "tokens_removed_bp",
-            F.expr("tokens_removed * 10000 div greatest(n_tokens, 1)")
-            .cast("bigint"),
-        )
-        .orderBy("source")
-    )
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="dedup_token_impact_by_source",
-    doc="Token-weighted exact-dedup impact per source: docs, tokens, "
-        "docs a keep-min-id dedup removes, and the tokens they carry "
-        "(bp of the source's budget) — the group-size histogram "
-        "measures docs, the mixing decision needs tokens. Hash-keyed "
-        "keeper aggregation, doc-scale join, source rollup.",
-    tags=("llm", "dedup", "quality"),
-    build=_token_impact_build,
-    oracle="""
-WITH d AS (
-  SELECT doc_id, source, len(string_split(text, ' ')) AS ntok,
-         md5(text) AS h
-  FROM documents WHERE text IS NOT NULL
-),
-keep AS (SELECT h, MIN(doc_id) AS k FROM d GROUP BY h)
-SELECT source,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(ntok) AS BIGINT) AS n_tokens,
-       CAST(SUM(CASE WHEN doc_id <> k THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_removed,
-       CAST(SUM(CASE WHEN doc_id <> k THEN ntok ELSE 0 END) AS BIGINT)
-         AS tokens_removed,
-       CAST(SUM(CASE WHEN doc_id <> k THEN ntok ELSE 0 END) * 10000
-            // GREATEST(SUM(ntok), 1) AS BIGINT) AS tokens_removed_bp
-FROM d JOIN keep ON keep.h = d.h
-GROUP BY source
-ORDER BY source NULLS FIRST
-""",
-))
-
-
-def _bucket_balance_build(spark, sf):
-    # sign-LSH bucket-balance audit: bucket-size log2 histograms for
-    # n_bits = 4 and 8 side by side — the measurement that tunes the
-    # bit width (too few bits -> hub buckets, too many -> singleton
-    # buckets and lost recall). Bucket-scale aggregations over the
-    # doc-scale embeddings table; both configs in one output.
-    from ..operators.similarity import sign_bucket
-
-    base = materialize(
-        spark.table("embeddings")
-        .filter(F.col("embedding").isNotNull())
-        .select(
-            sign_bucket("embedding", 4).alias("bk4"),
-            sign_bucket("embedding", 8).alias("bk8"),
-        )
-    )
-    out = None
-    for nb, col in ((4, "bk4"), (8, "bk8")):
-        sizes = base.groupBy(col).agg(F.count(F.lit(1)).alias("n"))
-        hist = (
-            sizes.groupBy(
-                F.floor(F.log2("n")).cast("int").alias("size_bucket_log2")
-            )
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_buckets"),
-                F.sum("n").cast("bigint").alias("n_vecs"),
-                F.max("n").cast("bigint").alias("max_bucket"),
-            )
-            .withColumn("n_bits", F.lit(nb))
-        )
-        out = hist if out is None else out.unionByName(hist)
-    return out.select(
-        "n_bits", "size_bucket_log2", "n_buckets", "n_vecs", "max_bucket"
-    ).orderBy("n_bits", "size_bucket_log2")
-
-
-def _bucket_balance_oracle() -> str:
-    from .llmops import _sign_bits_duck
-
-    parts = []
-    for nb in (4, 8):
-        parts.append(f"""
-SELECT {nb} AS n_bits, CAST(FLOOR(LOG2(n)) AS INTEGER) AS size_bucket_log2,
-       CAST(COUNT(*) AS BIGINT) AS n_buckets,
-       CAST(SUM(n) AS BIGINT) AS n_vecs,
-       CAST(MAX(n) AS BIGINT) AS max_bucket
-FROM (
-  SELECT {_sign_bits_duck('embedding', nb)} AS bk, COUNT(*) AS n
-  FROM embeddings WHERE embedding IS NOT NULL GROUP BY 1
-) s
-GROUP BY 2""")
-    return ("\nUNION ALL\n".join(parts)
-            + "\nORDER BY n_bits, size_bucket_log2\n")
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="embedding_bucket_balance_audit",
-    doc="Sign-LSH bucket-size log2 histograms for 4 and 8 bits side by "
-        "side: the bit-width tuning audit (hub buckets vs singleton "
-        "fragmentation) — the embedding-side sibling of the shingle-df "
-        "profile. Bucket-scale aggregations; one doc-scale scan, "
-        "materialized once for both configs.",
-    tags=("llm", "similarity", "agg"),
-    build=_bucket_balance_build,
-    oracle=_bucket_balance_oracle,
-))
-
-
-def _pack_budget_sweep_build(spark, sf):
-    # packing-budget decision curve: pad waste and utilization of the
-    # concat-and-chunk packer (operators/corpus semantics: per-shard
-    # token streams cut at budget; only each shard's last pack pads)
-    # across budgets 128/256/512/1024 — ONE pass over the corpus, the
-    # per-budget ceilings are conditional aggregates over the
-    # shard-scale totals; the 4-row result is driver metadata.
-    budgets = [128, 256, 512, 1024]
-    toks = F.when(F.col("text").isNull(), F.lit(0)).otherwise(
-        F.size(F.split("text", " "))
-    )
-    shards = (
-        spark.table("documents")
-        .select(F.col("source"), toks.cast("bigint").alias("tok"))
-        .groupBy("source")
-        .agg(F.sum("tok").alias("tok"))
-    )
-    row = shards.agg(
-        F.sum("tok").alias("total"),
-        *[
-            F.sum(F.expr(f"(tok + {b} - 1) div {b}")).alias(f"p{b}")
-            for b in budgets
-        ],
-    ).collect()[0]
-    total = int(row["total"] or 0)
-    out = []
-    for b in budgets:
-        packs = int(row[f"p{b}"] or 0)
-        out.append((
-            b, packs, packs * b - total,
-            (total * 10000 // (packs * b)) if packs > 0 else None,
-        ))
-    return spark.createDataFrame(
-        out,
-        "budget int, n_packs bigint, n_pad_tokens bigint, "
-        "utilization_bp bigint",
-    ).orderBy("budget")
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="pack_budget_waste_sweep",
-    doc="Packing-budget decision curve: packs, pad tokens, and "
-        "utilization bp of the concat-and-chunk packer at budgets "
-        "128/256/512/1024 (per-shard streams, only each shard's last "
-        "pack pads) — one corpus pass, per-budget ceilings as "
-        "conditional aggregates over shard totals, 4-row driver "
-        "metadata result.",
-    tags=("llm", "corpus", "agg"),
-    build=_pack_budget_sweep_build,
-    oracle="""
-WITH sh AS (
-  SELECT source,
-         SUM(CASE WHEN text IS NULL THEN 0
-                  ELSE len(string_split(text, ' ')) END) AS tok
-  FROM documents GROUP BY source
-),
-b AS (SELECT unnest([128, 256, 512, 1024]) AS budget),
-agg AS (
-  SELECT b.budget,
-         SUM((sh.tok + b.budget - 1) // b.budget) AS n_packs,
-         SUM(sh.tok) AS total
-  FROM b LEFT JOIN sh ON TRUE
-  GROUP BY b.budget
-)
-SELECT CAST(budget AS INTEGER) AS budget,
-       CAST(COALESCE(n_packs, 0) AS BIGINT) AS n_packs,
-       CAST(COALESCE(n_packs, 0) * budget - COALESCE(total, 0) AS BIGINT)
-         AS n_pad_tokens,
-       CAST(CASE WHEN COALESCE(n_packs, 0) > 0
-                 THEN COALESCE(total, 0) * 10000 // (n_packs * budget)
-            END AS BIGINT) AS utilization_bp
-FROM agg
-ORDER BY budget
-""",
-))
-
-
-def _lsh_param_sweep_build(spark, sf):
-    # LSH re-banding what-if: candidate volume, bucket count, and
-    # hottest bucket for three band/row layouts of the SAME 8-slot
-    # signature (4x2 — the production layout, 2x4 — higher precision,
-    # 8x1 — higher recall), all from bucket COUNTS, no pairs ever
-    # materialized. One signature pass (materialized), band-scale
-    # aggregations after.
-    from ..operators.dedup import minhash_signature_mapside
-
-    sig = materialize(
-        minhash_signature_mapside(spark.table("documents"), "text", "doc_id")
-    )
-    layouts = {
-        "4x2": [["h0", "h1"], ["h2", "h3"], ["h4", "h5"], ["h6", "h7"]],
-        "2x4": [["h0", "h1", "h2", "h3"], ["h4", "h5", "h6", "h7"]],
-        "8x1": [[f"h{j}"] for j in range(8)],
-    }
-    out = None
-    for cfg, bands in layouts.items():
-        rel = None
-        for i, cols in enumerate(bands):
-            part = sig.select(
-                F.lit(i).alias("band_idx"),
-                F.concat(*[F.col(c) for c in cols]).alias("band_val"),
-            )
-            rel = part if rel is None else rel.unionAll(part)
-        bk = (
-            rel.filter(F.col("band_val").isNotNull())
-            .groupBy("band_idx", "band_val")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        agg = bk.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_buckets"),
-            F.max("n").cast("bigint").alias("max_bucket"),
-            F.sum(F.expr("n * (n - 1) div 2")).cast("bigint")
-            .alias("candidate_pairs"),
-        ).select(
-            F.lit(cfg).alias("config"),
-            F.lit(len(bands)).alias("n_bands"),
-            "n_buckets", "max_bucket", "candidate_pairs",
-        )
-        out = agg if out is None else out.unionByName(agg)
-    return out.orderBy("config")
-
-
-def _lsh_param_sweep_oracle() -> str:
-    from .llmops import _SIG_SHINGLES_CTE, _sig_cte
-
-    layouts = {
-        "4x2": [["h0", "h1"], ["h2", "h3"], ["h4", "h5"], ["h6", "h7"]],
-        "2x4": [["h0", "h1", "h2", "h3"], ["h4", "h5", "h6", "h7"]],
-        "8x1": [[f"h{j}"] for j in range(8)],
-    }
-    parts = []
-    for cfg, bands in layouts.items():
-        sel = "\nUNION ALL ".join(
-            f"SELECT {i} AS band_idx, {' || '.join(cols)} AS band_val FROM sig"
-            for i, cols in enumerate(bands)
-        )
-        parts.append(f"""
-SELECT '{cfg}' AS config, {len(bands)} AS n_bands,
-       CAST(COUNT(*) AS BIGINT) AS n_buckets,
-       CAST(MAX(n) AS BIGINT) AS max_bucket,
-       CAST(SUM(n * (n - 1) // 2) AS BIGINT) AS candidate_pairs
-FROM (
-  SELECT band_idx, band_val, COUNT(*) AS n
-  FROM ({sel}) z
-  WHERE band_val IS NOT NULL
-  GROUP BY 1, 2
-) bk""")
-    return (
-        f"WITH {_SIG_SHINGLES_CTE.strip()}, {_sig_cte().strip()}\n"
-        + "m AS (SELECT 1)\n"
-        + "\nUNION ALL\n".join(parts)
-        + "\nORDER BY config\n"
-    )
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="dedup_lsh_param_sweep",
-    doc="LSH re-banding what-if over one 8-slot signature: candidate "
-        "volume (from counts, never materialized), bucket count, and "
-        "hottest bucket for the 4x2 / 2x4 / 8x1 band layouts — the "
-        "precision/recall/volume trade measured before a dedup run "
-        "commits to a layout. Signature materialized once; band-scale "
-        "aggregations.",
-    tags=("llm", "dedup", "agg"),
-    build=_lsh_param_sweep_build,
-    oracle=_lsh_param_sweep_oracle,
-))
-
-
-def _lang_length_build(spark, sf):
-    # 2-D mixture planning matrix: docs and tokens per (lang, log2
-    # char-length bucket), with each cell's token share within its
-    # language — where the token budget actually sits before a
-    # temperature-mixture decision. Cell-scale aggregation + a
-    # lang-scale broadcast join for the shares.
-    d = (
-        spark.table("documents")
-        .filter(F.col("text").isNotNull())
-        .select(
-            "lang",
-            F.floor(F.log2(F.greatest(F.length("text"), F.lit(1))))
-            .cast("int").alias("len_bucket_log2"),
-            F.size(F.split("text", " ")).cast("bigint").alias("ntok"),
-        )
-    )
-    cells = d.groupBy("lang", "len_bucket_log2").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("ntok").cast("bigint").alias("n_tokens"),
-    )
-    lang_tot = d.groupBy(F.col("lang").alias("__lg")).agg(
-        F.sum("ntok").alias("__lt")
-    )
-    return (
-        # eqNullSafe, not USING: a NULL lang is a legitimate group on
-        # both sides, and a null-unsafe equi-join would silently drop
-        # its cells while the oracle's IS NOT DISTINCT FROM keeps them
-        # (the r11 finding class)
-        cells.join(  # lang-cardinality dim
-            F.broadcast(lang_tot),
-            cells["lang"].eqNullSafe(lang_tot["__lg"]),
-        )
-        .select(
-            "lang", "len_bucket_log2", "n_docs", "n_tokens",
-            F.expr("n_tokens * 10000 div greatest(__lt, 1)").cast("bigint")
-            .alias("lang_share_bp"),
-        )
-        .orderBy("lang", "len_bucket_log2")
-    )
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="documents_lang_length_matrix",
-    doc="Mixture-planning matrix: docs and tokens per (lang, log2 "
-        "char-length bucket) with each cell's token share within its "
-        "language — where the token budget sits before a temperature-"
-        "mixture decision. Cell-scale aggregation; lang-cardinality "
-        "broadcast for shares.",
-    tags=("llm", "text", "agg"),
-    build=_lang_length_build,
-    oracle="""
-WITH d AS (
-  SELECT lang,
-         CAST(FLOOR(LOG2(GREATEST(LENGTH(text), 1))) AS INTEGER)
-           AS len_bucket_log2,
-         len(string_split(text, ' ')) AS ntok
-  FROM documents WHERE text IS NOT NULL
-),
-cells AS (
-  SELECT lang, len_bucket_log2, COUNT(*) AS n_docs, SUM(ntok) AS n_tokens
-  FROM d GROUP BY 1, 2
-),
-lt AS (SELECT lang, SUM(ntok) AS t FROM d GROUP BY lang)
-SELECT cells.lang, len_bucket_log2,
-       CAST(n_docs AS BIGINT) AS n_docs,
-       CAST(n_tokens AS BIGINT) AS n_tokens,
-       CAST(n_tokens * 10000 // GREATEST(lt.t, 1) AS BIGINT)
-         AS lang_share_bp
-FROM cells JOIN lt ON lt.lang IS NOT DISTINCT FROM cells.lang
-ORDER BY cells.lang NULLS FIRST, len_bucket_log2
-""",
-))
-
-
-def _containment_sweep_build(spark, sf):
-    # containment-threshold decision curve: flagged pairs and distinct
-    # contained docs at thresholds 50..90, from ONE containment run at
-    # the lowest threshold (the pair relation is candidate-bounded by
-    # the stop-shingle cap; per-threshold counts are conditional
-    # aggregates over it — never a re-run per threshold). The 5-row
-    # result is driver metadata. pct >= t is integer-exact: pct =
-    # floor(i*100/n), so pct >= t iff i*100 >= t*n for integer t.
-    from ..operators.dedup import char_shingles, containment_pairs
-
-    thresholds = [50, 60, 70, 80, 90]
-    sh = char_shingles(spark.table("documents"), "text", "doc_id", k=12)
-    pairs = containment_pairs(sh, "doc_id", threshold_pct=50)
-    row = pairs.agg(
-        *[
-            F.count(F.when(F.col("containment_pct") >= t, 1)).alias(f"p{t}")
-            for t in thresholds
-        ],
-        *[
-            F.count_distinct(
-                F.when(F.col("containment_pct") >= t, F.col("inner_doc"))
-            ).alias(f"d{t}")
-            for t in thresholds
-        ],
-    ).collect()[0]
-    return spark.createDataFrame(
-        [(t, int(row[f"p{t}"] or 0), int(row[f"d{t}"] or 0))
-         for t in thresholds],
-        "threshold_pct int, n_pairs bigint, n_inner_docs bigint",
-    ).orderBy("threshold_pct")
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="dedup_containment_threshold_sweep",
-    doc="Containment-threshold decision curve: pairs flagged and "
-        "distinct contained docs at 50/60/70/80/90 pct, from ONE "
-        "stop-shingle-capped containment run at the lowest threshold "
-        "(conditional aggregates over the candidate-bounded pair "
-        "relation; integer-exact pct comparisons). 5-row driver-"
-        "metadata result.",
-    tags=("llm", "dedup", "agg"),
-    build=_containment_sweep_build,
-    oracle="""
-WITH sh AS (
-  SELECT DISTINCT doc_id,
-         substring(lower(text), CAST(u.i AS INTEGER), 12) AS s
-  FROM documents,
-       UNNEST(range(1, greatest(length(text) - 11, 1) + 1)) AS u(i)
-),
-ok AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= 32),
-shc AS (SELECT doc_id, s FROM sh JOIN ok USING (s)),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM shc GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS inner_doc, b.doc_id AS outer_doc, COUNT(*) AS i
-  FROM shc a JOIN shc b ON a.s = b.s AND a.doc_id <> b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-cp AS (
-  SELECT inner_doc, outer_doc, CAST(FLOOR(i * 100 / n) AS INTEGER) AS pct
-  FROM inter JOIN sizes ON sizes.doc_id = inter.inner_doc
-  WHERE i * 100 >= 50 * n
-),
-th AS (SELECT unnest([50, 60, 70, 80, 90]) AS t)
-SELECT CAST(t AS INTEGER) AS threshold_pct,
-       CAST(COUNT(CASE WHEN cp.pct >= th.t THEN 1 END) AS BIGINT)
-         AS n_pairs,
-       CAST(COUNT(DISTINCT CASE WHEN cp.pct >= th.t THEN cp.inner_doc END)
-            AS BIGINT) AS n_inner_docs
-FROM th LEFT JOIN cp ON TRUE
-GROUP BY th.t
-ORDER BY threshold_pct
-""",
-))
-
-
-def _label_cohesion_build(spark, sf):
-    # embedding-quality audit: mean intra-label cosine per label over a
-    # DETERMINISTIC md5-ranked sample of <= 32 vectors per label (the
-    # sample_hash_topk idiom) — all-pairs cosine is quadratic in label
-    # size, so the cap bounds each label at C(32,2) pairs regardless of
-    # corpus scale. Zero-norm vectors contribute NULL sims (dropped by
-    # the mean, matching the repo's zero-vector contract).
-    from ..operators.similarity import dot_product, with_norm
-
-    base = with_norm(
-        spark.table("embeddings").filter(
-            F.col("embedding").isNotNull() & F.col("label").isNotNull()
-        )
-    )
-    w = Window.partitionBy("label").orderBy(
-        F.md5(F.col("vec_id").cast("string")), "vec_id"
-    )
-    samp = (
-        base.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= 32)
-        .select("label", "vec_id", "embedding", "__norm")
-    )
-    a = samp.select(
-        "label", F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("ea"), F.col("__norm").alias("na"),
-    )
-    b = samp.select(
-        "label", F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("eb"), F.col("__norm").alias("nb"),
-    )
-    prod = F.col("na") * F.col("nb")
-    sim = F.when(
-        prod > 0, F.round(dot_product(F.col("ea"), F.col("eb")) / prod, 6)
-    )
-    pairs = (
-        a.join(b, "label")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("label", sim.alias("sim"))
-    )
-    n_samp = samp.groupBy("label").agg(F.count(F.lit(1)).alias("n_sampled"))
-    stats = pairs.groupBy("label").agg(
-        F.count("sim").alias("n_pairs"),
-        F.round(F.avg("sim"), 4).cast("double").alias("mean_intra_cos"),
-    )
-    return (
-        n_samp.join(stats, "label", "left")
-        .select(
-            F.col("label").cast("int").alias("label"),
-            F.col("n_sampled").cast("bigint").alias("n_sampled"),
-            F.coalesce(F.col("n_pairs"), F.lit(0)).cast("bigint")
-            .alias("n_pairs"),
-            "mean_intra_cos",
-        )
-        .orderBy("label")
-    )
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="embedding_label_cohesion_audit",
-    doc="Per-label embedding cohesion: mean pairwise cosine inside each "
-        "label over a deterministic md5-ranked sample of <= 32 vectors "
-        "per label — all-pairs is quadratic in label size, the cap "
-        "bounds every label at C(32,2) pairs at any corpus scale. The "
-        "label-quality audit behind triplet mining.",
-    tags=("llm", "similarity", "embedding"),
-    build=_label_cohesion_build,
-    oracle="""
-WITH base AS (
-  SELECT label, vec_id, embedding
-  FROM embeddings WHERE embedding IS NOT NULL AND label IS NOT NULL
-),
-rk AS (
-  SELECT label, vec_id, embedding,
-         ROW_NUMBER() OVER (PARTITION BY label
-                            ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
-           AS r
-  FROM base
-),
-samp AS (SELECT label, vec_id, embedding FROM rk WHERE r <= 32),
-norms AS (
-  SELECT vec_id, SQRT(SUM(CAST(u AS DOUBLE) * CAST(u AS DOUBLE))) AS nrm
-  FROM (SELECT vec_id, unnest(embedding) AS u FROM samp) t
-  GROUP BY vec_id
-),
-pairs AS (
-  SELECT a.label, a.vec_id AS id_a, b.vec_id AS id_b
-  FROM samp a JOIN samp b ON a.label = b.label AND a.vec_id < b.vec_id
-),
-dots AS (
-  SELECT label, id_a, id_b, SUM(CAST(u AS DOUBLE) * CAST(v AS DOUBLE)) AS dot
-  FROM (
-    SELECT p.label, p.id_a, p.id_b,
-           unnest(ea.embedding) AS u, unnest(eb.embedding) AS v
-    FROM pairs p
-    JOIN embeddings ea ON ea.vec_id = p.id_a
-    JOIN embeddings eb ON eb.vec_id = p.id_b
-  ) z
-  GROUP BY 1, 2, 3
-),
-sims AS (
-  SELECT d.label,
-         CASE WHEN na.nrm * nb.nrm > 0
-              THEN ROUND(d.dot / (na.nrm * nb.nrm), 6) END AS sim
-  FROM dots d
-  JOIN norms na ON na.vec_id = d.id_a
-  JOIN norms nb ON nb.vec_id = d.id_b
-),
-ns AS (SELECT label, COUNT(*) AS n_sampled FROM samp GROUP BY label)
-SELECT CAST(ns.label AS INTEGER) AS label,
-       CAST(ns.n_sampled AS BIGINT) AS n_sampled,
-       CAST(COUNT(s.sim) AS BIGINT) AS n_pairs,
-       CAST(ROUND(AVG(s.sim), 4) AS DOUBLE) AS mean_intra_cos
-FROM ns LEFT JOIN sims s ON s.label = ns.label
-GROUP BY ns.label, ns.n_sampled
-ORDER BY label
-""",
-))
-
-
-def _intersession_sql(epoch_us_fn: str, idiv: str) -> str:
-    """Return-gap profile: minutes BETWEEN a user's consecutive
-    sessions (canonical 30-min-gap sessionization), global count +
-    exact interpolated median/p90 — one row."""
-    q = ("percentile" if idiv == "div" else "quantile_cont")
-    return f"""
-WITH e AS (
-  SELECT user_id, event_id, {epoch_us_fn} AS t FROM events
-  WHERE ts IS NOT NULL AND user_id IS NOT NULL
-), g AS (
-  SELECT user_id, event_id, t,
-         CASE WHEN t - LAG(t) OVER (PARTITION BY user_id ORDER BY t, event_id)
-                   > 1800000000
-              OR LAG(t) OVER (PARTITION BY user_id ORDER BY t, event_id) IS NULL
-              THEN 1 ELSE 0 END AS new_s
-  FROM e
-), s AS (
-  SELECT user_id, t,
-         SUM(new_s) OVER (PARTITION BY user_id ORDER BY t, event_id
-                          ROWS UNBOUNDED PRECEDING) AS sid
-  FROM g
-), starts AS (
-  SELECT user_id, sid, MIN(t) AS t0 FROM s GROUP BY user_id, sid
-), gaps AS (
-  SELECT (t0 - LAG(t0) OVER (PARTITION BY user_id ORDER BY t0, sid))
-           {idiv} 60000000 AS gap_min
-  FROM starts
-)
-SELECT CAST(COUNT(gap_min) AS BIGINT) AS n_gaps,
-       CAST(ROUND({q}(gap_min, 0.5), 4) AS DOUBLE) AS median_gap_min,
-       CAST(ROUND({q}(gap_min, 0.9), 4) AS DOUBLE) AS p90_gap_min
-FROM gaps
-WHERE gap_min IS NOT NULL
-"""
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="events_intersession_gap_stats",
-    doc="Return-gap profile: minutes between a user's consecutive "
-        "session STARTS over the canonical 30-min sessionization, "
-        "with exact interpolated median/p90 — the comeback-cadence "
-        "complement of inactivity churn (how long until users return, "
-        "not whether). User-keyed windows; session-scale after.",
-    tags=("events", "session", "agg"),
-    sql=_intersession_sql("unix_micros(ts)", "div"),
-    oracle=_intersession_sql("(epoch_ns(ts) // 1000)", "//"),
-))
-
-
-def _ttr_profile_build(spark, sf):
-    # lexical-diversity profile: per-doc type-token ratio (distinct
-    # whitespace tokens / tokens, bp) bucketed in 1000-bp bins — the
-    # repetitive-doc detector quality filters threshold on. Per-doc
-    # distinctness via array_distinct INSIDE the projection (the r16
-    # shave idiom — no (doc, token) shuffle); one bucket-scale agg.
-    d = (
-        spark.table("documents")
-        .filter(F.col("text").isNotNull() & (F.length("text") > 0))
-        .select(
-            F.size(F.split(F.lower("text"), " ")).cast("bigint")
-            .alias("ntok"),
-            F.size(F.array_distinct(F.split(F.lower("text"), " ")))
-            .cast("bigint").alias("ndis"),
-        )
-        .select(
-            "ntok",
-            F.expr("ndis * 10000 div greatest(ntok, 1)").alias("ttr_bp"),
-        )
-    )
-    return (
-        d.groupBy(
-            F.expr("ttr_bp div 1000").cast("int").alias("ttr_bucket")
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("ntok").cast("bigint").alias("n_tokens"),
-            F.min("ttr_bp").cast("bigint").alias("min_ttr_bp"),
-            F.max("ttr_bp").cast("bigint").alias("max_ttr_bp"),
-        )
-        .orderBy("ttr_bucket")
-    )
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="text_type_token_ratio_profile",
-    doc="Type-token-ratio histogram (distinct/total whitespace tokens "
-        "in bp, 1000-bp buckets, with bucket extremes): the lexical-"
-        "diversity profile quality filters threshold on — low TTR is "
-        "the repetition signal at vocabulary granularity. Per-doc "
-        "distinctness via array_distinct in the projection; one "
-        "bucket-scale aggregation.",
-    tags=("llm", "text", "quality"),
-    build=_ttr_profile_build,
-    oracle="""
-WITH d AS (
-  SELECT len(string_split(lower(text), ' ')) AS ntok,
-         len(list_distinct(string_split(lower(text), ' '))) AS ndis
-  FROM documents WHERE text IS NOT NULL AND LENGTH(text) > 0
-),
-t AS (
-  SELECT ntok, ndis * 10000 // GREATEST(ntok, 1) AS ttr_bp FROM d
-)
-SELECT CAST(ttr_bp // 1000 AS INTEGER) AS ttr_bucket,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(ntok) AS BIGINT) AS n_tokens,
-       CAST(MIN(ttr_bp) AS BIGINT) AS min_ttr_bp,
-       CAST(MAX(ttr_bp) AS BIGINT) AS max_ttr_bp
-FROM t
-GROUP BY 1
-ORDER BY ttr_bucket
-""",
-))
-
-
-def _emb_dup_census_build(spark, sf):
-    # exact-duplicate vector census: grouping by the raw float array
-    # (bit-exact equality) — re-embedded or re-ingested duplicates
-    # inflate ANN neighborhoods and bias centroid fits; this is the
-    # one-row accounting a vector-store load should log. Array-keyed
-    # aggregation; always exactly one row.
-    d = spark.table("embeddings").filter(F.col("embedding").isNotNull())
-    grp = d.groupBy("embedding").agg(F.count(F.lit(1)).alias("n"))
-    # SUMs coalesced to 0: on an EMPTY table the census must still read
-    # all-zeros on both engines (the oracle coalesces identically)
-    return grp.agg(
-        F.coalesce(F.sum("n"), F.lit(0)).cast("bigint").alias("n_vectors"),
-        F.count(F.lit(1)).cast("bigint").alias("n_distinct"),
-        F.count(F.when(F.col("n") >= 2, 1)).cast("bigint")
-        .alias("n_dup_groups"),
-        F.coalesce(
-            F.sum(F.when(F.col("n") >= 2, F.col("n")).otherwise(0)), F.lit(0)
-        ).cast("bigint").alias("n_vecs_in_dup_groups"),
-        F.coalesce(F.max("n"), F.lit(0)).cast("bigint")
-        .alias("max_group_size"),
-    )
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="embedding_exact_dup_census",
-    doc="Exact-duplicate vector census (bit-exact array grouping): "
-        "vectors, distinct vectors, duplicate groups, vectors inside "
-        "them, and the largest group — the vector-store load "
-        "accounting that catches re-embedded/re-ingested rows before "
-        "they bias ANN neighborhoods. Array-keyed aggregation, one "
-        "row always.",
-    tags=("llm", "embedding", "dedup"),
-    build=_emb_dup_census_build,
-    oracle="""
-WITH grp AS (
-  SELECT embedding, COUNT(*) AS n
-  FROM embeddings WHERE embedding IS NOT NULL
-  GROUP BY embedding
-)
-SELECT CAST(COALESCE(SUM(n), 0) AS BIGINT) AS n_vectors,
-       CAST(COUNT(*) AS BIGINT) AS n_distinct,
-       CAST(COUNT(CASE WHEN n >= 2 THEN 1 END) AS BIGINT) AS n_dup_groups,
-       CAST(COALESCE(SUM(CASE WHEN n >= 2 THEN n ELSE 0 END), 0) AS BIGINT)
-         AS n_vecs_in_dup_groups,
-       CAST(COALESCE(MAX(n), 0) AS BIGINT) AS max_group_size
-FROM grp
-""",
-))
-
-
-def _source_vocab_jaccard_build(spark, sf):
-    # cross-source vocabulary overlap: pairwise Jaccard of the distinct
-    # lowercase-token vocabularies of the top-16 sources by doc count
-    # (deterministic cap — source-pair fan-out is bounded at C(16,2)
-    # regardless of how many sources a crawl has; per token the join
-    # fans out to at most 16 sources a side). The mixture-dedup signal:
-    # two sources sharing most of their vocabulary are near-duplicate
-    # feeds. Integer-exact Jaccard in bp.
-    d = spark.table("documents").filter(
-        F.col("text").isNotNull() & F.col("source").isNotNull()
-    )
-    top = (
-        d.groupBy("source").agg(F.count(F.lit(1)).alias("__nd"))
-        .orderBy(F.col("__nd").desc(), "source")
-        .limit(16)
-        .select("source")
-    )
-    vocab = materialize(
-        d.join(F.broadcast(top), "source")  # 16-row metadata dim
-        .select(
-            "source",
-            F.explode(
-                F.array_distinct(F.split(F.lower("text"), " "))
-            ).alias("tok"),
-        )
-        .filter(F.col("tok") != "")
-        .distinct(),
-        storage="disk",
-    )
-    sizes = vocab.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    a = vocab.select(F.col("source").alias("source_a"), "tok")
-    b = vocab.select(F.col("source").alias("source_b"), "tok")
-    inter = (
-        a.join(b, "tok")
-        .filter(F.col("source_a") < F.col("source_b"))
-        .groupBy("source_a", "source_b")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    sa = sizes.select(F.col("source").alias("source_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("source").alias("source_b"), F.col("n").alias("nb"))
-    return (
-        inter.join(sa, "source_a").join(sb, "source_b")
-        .select(
-            "source_a", "source_b",
-            F.col("na").cast("bigint").alias("vocab_a"),
-            F.col("nb").cast("bigint").alias("vocab_b"),
-            F.expr("i * 10000 div (na + nb - i)").cast("bigint")
-            .alias("jaccard_bp"),
-        )
-        .orderBy("source_a", "source_b")
-    )
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="documents_source_vocab_jaccard",
-    doc="Pairwise vocabulary Jaccard (bp) between the top-16 sources "
-        "by doc count: near-duplicate FEEDS share vocabulary long "
-        "before they share documents — the source-level mixture-dedup "
-        "signal. Deterministic source cap bounds pair fan-out at "
-        "C(16,2); per-doc token dedup via array_distinct; vocab "
-        "relation materialized once for sizes + both join sides.",
-    tags=("llm", "dedup", "text"),
-    build=_source_vocab_jaccard_build,
-    oracle="""
-WITH d AS (
-  SELECT doc_id, source, text FROM documents
-  WHERE text IS NOT NULL AND source IS NOT NULL
-),
-top AS (
-  SELECT source FROM d GROUP BY source
-  ORDER BY COUNT(*) DESC, source LIMIT 16
-),
-vocab AS (
-  SELECT DISTINCT d.source, tok
-  FROM d JOIN top USING (source),
-       UNNEST(string_split(lower(d.text), ' ')) AS u(tok)
-  WHERE tok <> ''
-),
-sizes AS (SELECT source, COUNT(*) AS n FROM vocab GROUP BY source),
-inter AS (
-  SELECT a.source AS source_a, b.source AS source_b, COUNT(*) AS i
-  FROM vocab a JOIN vocab b ON a.tok = b.tok AND a.source < b.source
-  GROUP BY 1, 2
-)
-SELECT source_a, source_b,
-       CAST(sa.n AS BIGINT) AS vocab_a,
-       CAST(sb.n AS BIGINT) AS vocab_b,
-       CAST(i * 10000 // (sa.n + sb.n - i) AS BIGINT) AS jaccard_bp
-FROM inter
-JOIN sizes sa ON sa.source = inter.source_a
-JOIN sizes sb ON sb.source = inter.source_b
-ORDER BY source_a, source_b
-""",
-))
-
-
-def _dau_trend_build(spark, sf):
-    # trend alarm: least-squares slope of daily active users over the
-    # day index (0 = first active day) — "is engagement growing or
-    # decaying", one number with its intercept and day count. Day-scale
-    # regression aggregate (regr_slope/intercept parity convention,
-    # ROUND 4); the origin day is a driver scalar.
-    ev = spark.table("events").filter(
-        F.col("ts").isNotNull() & F.col("user_id").isNotNull()
-    )
-    daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.count_distinct("user_id").alias("dau")
-    )
-    daily = materialize(daily)
-    d0 = daily.agg(F.min("d")).collect()[0][0]  # one driver scalar
-    if d0 is None:
-        return spark.createDataFrame(
-            [], "n_days bigint, slope double, intercept double"
-        )
-    rel = daily.select(
-        F.datediff(F.col("d"), F.lit(d0)).cast("double").alias("x"),
-        F.col("dau").cast("double").alias("y"),
-    )
-    return rel.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        F.round(F.regr_slope("y", "x"), 4).cast("double").alias("slope"),
-        F.round(F.regr_intercept("y", "x"), 4).cast("double")
-        .alias("intercept"),
-    )
-
-
-_STAGED_OVERFLOW.append(QuerySpec(
-    name="events_dau_trend_slope",
-    doc="Engagement trend: least-squares slope and intercept of daily "
-        "active users over the day index (0 = first active day) — the "
-        "one-number growing-or-decaying alarm over the DAU series. "
-        "Day-scale regression aggregate; origin day is a driver "
-        "scalar.",
-    tags=("events", "analytics", "agg"),
-    build=_dau_trend_build,
-    oracle="""
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, COUNT(DISTINCT user_id) AS dau
-  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
-  GROUP BY 1
-),
-o AS (SELECT MIN(d) AS d0 FROM daily)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
-       CAST(ROUND(regr_slope(CAST(dau AS DOUBLE),
-                             CAST(date_diff('day', o.d0, d) AS DOUBLE)), 4)
-            AS DOUBLE) AS slope,
-       CAST(ROUND(regr_intercept(CAST(dau AS DOUBLE),
-                                 CAST(date_diff('day', o.d0, d) AS DOUBLE)), 4)
-            AS DOUBLE) AS intercept
-FROM daily, o
-GROUP BY o.d0
-""",
-))
-
-
-# Round-14 declaration: the full 12-spec staged lane. Window math
-# (registry `_GREEN_BY_ROUND` after folding CORRECTNESS_r13): 12
-# never-green + the 7 displaced r8 greens (q9/q11/q16/q20 shapes,
-# recursive_cte_ancestors, sql_udf_create_function, variant_json_extract)
-# + the 31-spec r9-stale cohort fill the driver's 50-spec sampling
-# prefix exactly; staging more into r14 would break the max-staleness
-# bound (checked by registry.staleness_violations / tests/test_registry.py).
-_DECLARE_R14 = {
-    "text_char_entropy",
-    "events_active_time_union",
-    "orders_mad_dispersion",
-    "embedding_quantized_centroids",
-    "events_conversion_latency_quantiles",
-    "events_hhi_concentration",
-    "orders_basket_lift",
-    "events_dow_seasonality",
-    "orders_gini_coefficient",
-    "events_funnel_any_order",
-    "text_zipf_rank_frequency",
-    "orders_fuzzy_invoice_pairs",
-}
-SPECS.extend(s for s in _STAGED_R14 if s.name in _DECLARE_R14)
-assert not [s for s in _STAGED_R14 if s.name not in _DECLARE_R14], (
-    "round-14 staged lane fully declared in r14"
-)
-
-
-# Round-15 declaration: the full 6-spec staged lane. Window math
-# (registry `_GREEN_BY_ROUND` after folding CORRECTNESS_r14): 6
-# never-green + the 44 oldest-stale greens fill the driver's 50-spec
-# sampling prefix; staging more would break the max-staleness bound
-# (checked by registry.staleness_violations / tests/test_registry.py).
-_DECLARE_R15 = {
-    "dedup_boundary_overlap_pairs",
-    "events_survival_curve",
-    "embedding_norm_outliers",
-    "documents_length_histogram_log2",
-    "orders_benford_first_digit",
-    "multimodal_payload_dedup",
-}
-SPECS.extend(s for s in _STAGED_R15 if s.name in _DECLARE_R15)
-assert not [s for s in _STAGED_R15 if s.name not in _DECLARE_R15], (
-    "round-15 staged lane fully declared in r15"
-)
-
-
-# Round-16 declaration: the full 6-spec staged lane. Window math
-# (registry `_GREEN_BY_ROUND` after folding CORRECTNESS_r15): 6
-# never-green + the 25 remaining r10-stale greens + 19 r11-stale greens
-# fill the driver's 50-spec sampling prefix; staging more would break
-# the max-staleness bound (registry.staleness_violations /
-# tests/test_registry.py).
-_DECLARE_R16 = {
-    "dedup_semantic_cluster_audit",
-    "sample_stratified_proportional",
-    "pack_greedy_firstfit_bins",
-    "events_bot_rate_flags",
-    "similarity_ivf_recall_audit",
-    "text_novelty_first_seen_ratio",
-}
-SPECS.extend(s for s in _STAGED_R16 if s.name in _DECLARE_R16)
-assert not [s for s in _STAGED_R16 if s.name not in _DECLARE_R16], (
-    "round-16 staged lane fully declared in r16"
-)
-
-
-SPECS_NEXT = (
-    [s for s in _STAGED_R12 if s.name not in _DECLARE_R12]
-    + [s for s in _STAGED_R13 if s.name not in _DECLARE_R13]
-    + [s for s in _STAGED_R14 if s.name not in _DECLARE_R14]
-    + [s for s in _STAGED_R15 if s.name not in _DECLARE_R15]
-    + [s for s in _STAGED_R16 if s.name not in _DECLARE_R16]
-    + list(_STAGED_R17)
-    + list(_STAGED_R18)
-    + list(_STAGED_R19)
-    + list(_STAGED_R20)
-    + list(_STAGED_OVERFLOW)
-)

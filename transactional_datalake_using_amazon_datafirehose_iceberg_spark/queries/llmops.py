@@ -21,11 +21,7 @@ from ..operators.multimodal import (
 )
 from .base import QuerySpec
 
-_SPECS: list[QuerySpec] = []
-
-
-def _add(s: QuerySpec) -> None:
-    _SPECS.append(s)
+SPECS: list[QuerySpec] = []
 
 
 # shared oracle CTE: distinct char-12-gram shingles per doc (stride 1,
@@ -94,7 +90,7 @@ cand AS (
 # Dedup family
 # ---------------------------------------------------------------------------
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="dedup_exact_by_text",
     doc="Exact dedup (deterministic keep-min-id) summarized per lang.",
     tags=("llm", "dedup"),
@@ -116,7 +112,7 @@ ORDER BY lang
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="dedup_minhash_lsh_pairs",
     doc="MinHash(8)+LSH(4 bands x 2 rows) candidate pairs over char-12-gram "
         "shingles. Bucket equi-join — no all-pairs at any scale.",
@@ -133,7 +129,7 @@ SELECT doc_a, doc_b, n_bands FROM cand ORDER BY doc_a, doc_b
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="dedup_neardup_jaccard",
     doc="Near-dup pipeline: LSH candidates verified by exact shingle-set "
         "Jaccard >= 0.6 (integer-ratio math, bit-identical across engines).",
@@ -198,7 +194,7 @@ def _components_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="dedup_cluster_components",
     doc="Near-dup clustering: connected components over the jaccard-"
         "verified pair graph (iterative min-label propagation with "
@@ -244,7 +240,7 @@ ORDER BY doc_id
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="split_train_holdout",
     doc="Deterministic train/val/holdout split by md5 hash bucket of the "
         "doc id (the standard leakage-free dataset split: stable under "
@@ -399,7 +395,7 @@ FROM labeled GROUP BY lang, split ORDER BY lang, split
 """
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="pipeline_curate_corpus",
     doc="End-to-end corpus curation — the flagship training-data flow: "
         "exact dedup -> MinHash-LSH near-dup clustering (connected "
@@ -438,7 +434,7 @@ FROM sh GROUP BY simhash ORDER BY simhash
 """
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="dedup_simhash_buckets",
     doc="16-bit SimHash buckets over tokens (hex-digit-parity hash family).",
     tags=("llm", "dedup"),
@@ -483,7 +479,7 @@ sims AS (
 )
 """
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="similarity_topk_cosine",
     doc="Exact brute-force top-10 cosine neighbors for query vectors "
         "(vec_id < 5); broadcast query set, JVM fold dot product, ranked "
@@ -511,7 +507,7 @@ def _sign_bits_duck(col: str, n: int = 8) -> str:
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="similarity_ann_lsh_bucket",
     doc="Approximate NN: sign-LSH bucket (8 leading dims) restricts "
         "candidates to the query's bucket before exact cosine — the IVF-"
@@ -559,7 +555,7 @@ FROM ranked WHERE rn <= 5 ORDER BY qid, rn
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="similarity_ann_pq",
     doc="Product-quantization ANN (asymmetric distance): vectors "
         "compress to m=8 codes via per-subspace argmin against a "
@@ -612,7 +608,7 @@ ORDER BY qid, rn
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="similarity_ann_ivf",
     doc="IVF-style ANN: deterministic coarse quantizer (8 centroid "
         "cells, map-side argmin-L2 assignment from an inlined centroid "
@@ -780,7 +776,7 @@ def _embedding_neardup_build(spark, sf, max_bucket=256):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="dedup_embedding_cosine",
     doc="Embedding similar-pair mining: sign-LSH bucket equi-join then "
         "exact cosine >= 0.4 (the vector analogue of LSH+Jaccard; the "
@@ -823,7 +819,7 @@ ORDER BY id_a, id_b
 # Text analysis
 # ---------------------------------------------------------------------------
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="text_stats_quality",
     doc="Per-doc char/token counts, avg token length, stopword count, "
         "quality gate — pure length/replace arithmetic, one map stage.",
@@ -874,7 +870,7 @@ ORDER BY doc_id
 """
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="text_lang_id_markers",
     doc="Marker-word language ID with deterministic tie-break order.",
     tags=("llm", "text"),
@@ -882,7 +878,7 @@ _add(QuerySpec(
     oracle=_langid_oracle,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="text_fingerprints",
     doc="Exact + bag-of-words md5 fingerprints; groups shuffled dups.",
     tags=("llm", "text"),
@@ -911,7 +907,7 @@ FROM fp GROUP BY fp_bag ORDER BY fp_bag NULLS FIRST
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="text_token_counts",
     doc="Token counting three ways (whitespace, word/punct, BPE-ish "
         "piece approximation) for LLM cost budgeting — pure regex "
@@ -933,7 +929,7 @@ ORDER BY doc_id
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="text_rolling_hash",
     doc="Rolling polynomial-hash fingerprints (full-doc fold + winnowing "
         "minimum over 8-char windows), all JVM-side higher-order "
@@ -969,7 +965,7 @@ ORDER BY doc_id
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="text_redact_scrub",
     doc="Scrubbing pass: redact digit runs and collapse whitespace (the "
         "PII/noise-removal shape of a training-data pipeline), with "
@@ -1001,7 +997,7 @@ ORDER BY doc_id
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="text_url_parse",
     doc="Crawl-corpus URL handling: synthesize a deterministic URL per "
         "doc, then extract host / path / full query / one query param "
@@ -1047,7 +1043,7 @@ ORDER BY doc_id
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="text_top_ngrams_per_lang",
     doc="Corpus vocabulary profile: top-5 word bigrams per language "
         "(explode -> hash-agg -> windowed top-k; at 100 TB the explode "
@@ -1108,7 +1104,7 @@ FROM ranked WHERE rk <= 5 ORDER BY lang, rk
 # Multimodal plumbing (mapInPandas decode — deterministic fake codec)
 # ---------------------------------------------------------------------------
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="multimodal_decode_features",
     doc="Binary payload column + Arrow-batched mapInPandas decode "
         "(deterministic fake codec; real plumbing/schema/batching).",
@@ -1131,7 +1127,7 @@ ORDER BY doc_id
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="multimodal_frame_sample",
     doc="Video-style frame sampling: the binary payload is cut into "
         "64-byte frames and every 4th frame is sliced out of the buffer "
@@ -1174,7 +1170,7 @@ ORDER BY doc_id, frame_idx
 # 1 byte) — the short-last-chunk class that bit the round-5 text ops
 _FRAME_BOUNDARY_SIZES = [1, 63, 64, 65, 128, 255, 256, 257, 300]
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="multimodal_frame_boundary_sizes",
     doc="sample_frames offset/length integrity at non-multiple payload "
         "sizes (round-5 verdict task 8): pinned payloads straddling the "
@@ -1274,7 +1270,7 @@ def _asof_build(spark, sf):
     ).orderBy("event_id")
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="asof_join_purchase_click",
     doc="As-of join: each purchase event picks up the latest click at or "
         "before it per user (union+window trick, one shuffle by key). "
@@ -1300,7 +1296,7 @@ ORDER BY p.event_id
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="text_chunk_windows",
     doc="Overlapping sliding-window chunking (200-char windows, stride "
         "150) — the context-window preparation step of an LLM training "
@@ -1350,7 +1346,7 @@ ORDER BY doc_id, chunk_idx
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="embedding_quantize_int8",
     doc="Saturating int8 quantization of the embedding column (max-abs "
         "per-vector scale, codes = floor(x/scale*127 + 0.5)): the "
@@ -1450,7 +1446,7 @@ def _tfidf_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="text_tfidf_top_terms",
     doc="TF-IDF top-3 terms per document (tf * ln(N/df) over the "
         "restricted corpus) — the classic salient-term extraction of a "
@@ -1520,7 +1516,7 @@ def _hll_sketch_build(spark, sf):
     return per_ok.unionByName(union_ok).orderBy("lang")
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="sketch_hll_union",
     doc="Mergeable HyperLogLog sketches (Apache DataSketches builtins): "
         "per-language distinct-count sketches plus their UNION re-"
@@ -1558,7 +1554,7 @@ def _balanced_sample_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="sample_balanced_per_group",
     doc="Deterministic class-balanced subsample: cap 20 documents per "
         "language, chosen by md5(doc_id) rank within the group — the "
@@ -1600,7 +1596,7 @@ toks AS (
 )
 """
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="text_repetition_filters",
     doc="Gopher-style repetition metrics per document — distinct-token "
         "count, modal token count, modal adjacent-bigram count — and an "
@@ -1657,7 +1653,7 @@ ORDER BY doc_id
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="decontaminate_ngram_overlap",
     doc="Benchmark decontamination: distinct word-3-gram overlap of every "
         "corpus document (doc_id >= 20) against the benchmark set "
@@ -1695,7 +1691,7 @@ ORDER BY doc_id
 
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="multimodal_resize_batch",
     doc="Image-resize plumbing over binary payloads: every payload's "
         "byte buffer is strided by 2 inside the Arrow batch (the "
@@ -1750,7 +1746,7 @@ ORDER BY doc_id
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="text_bigram_fluency",
     doc="Corpus-relative fluency (the KenLM-perplexity-filter analogue, "
         "integer-exact): per-doc fixed-point mean conditional bigram "
@@ -1785,7 +1781,7 @@ ORDER BY doc_id
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="text_rare_token_fraction",
     doc="Corpus-relative rarity (CCNet-style quality heuristic, "
         "integer-exact perplexity stand-in): per-doc share of token "
@@ -1816,7 +1812,7 @@ ORDER BY doc_id
 # last mile between a curated document set and a training run.
 # ---------------------------------------------------------------------------
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="pack_sequences_concat_chunk",
     doc="Concat-and-chunk sequence packing: per source shard, documents "
         "are laid end-to-end in doc_id order and cut into 64-token "
@@ -1869,7 +1865,7 @@ ORDER BY doc_id
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="dedup_exact_substring_spans",
     doc="Exact-substring duplicate spans (Lee et al. 2022): merged token "
         "spans covered by any word-8-gram occurring more than once in "
@@ -1928,7 +1924,7 @@ ORDER BY doc_id
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="sample_temperature_mixture",
     doc="Temperature (T=2) domain mixture sampling: per-domain quota "
         "proportional to sqrt(n_d), filled by each domain's smallest "
@@ -1970,7 +1966,7 @@ ORDER BY source NULLS FIRST
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="multimodal_audio_window_energy",
     doc="Audio-modality windowed feature extraction: payload bytes as "
         "unsigned 8-bit PCM, 64-sample frames, per-frame mean-square "
@@ -2009,7 +2005,7 @@ ORDER BY doc_id, win_idx
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="similarity_mine_triplets",
     doc="Hard-triplet mining for contrastive embedding training: per "
         "anchor the hardest positive (most-similar same-label) and "
@@ -2068,5 +2064,3 @@ GROUP BY anchor_id
 ORDER BY anchor_id
 """,
 ))
-
-SPECS = list(_SPECS)

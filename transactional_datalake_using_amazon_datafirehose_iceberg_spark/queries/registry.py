@@ -11,451 +11,72 @@ come first, then specs whose newest green row is oldest, so that
   unproven specs would let a regression in an old-green spec evade
   external verification indefinitely).
 
-``_GREEN_BY_ROUND`` is appended to (never rewritten) each round from the
-driver's CORRECTNESS_r{N}.json, and every recorded name is asserted to
-still exist in the registry so the ledger cannot silently rot as specs
-are renamed.
+The green ledger is read from the harness's ``CORRECTNESS_r{N}.json``
+files at the repository root: round N's green set is every spec whose
+row matched rows, schema and hash with no error.  Without those files
+the ledger is empty and the registry keeps family order.  Every name
+the ledger records must still be declared, so a rename cannot silently
+drop a spec out of rotation.
 """
 
 from __future__ import annotations
 
+import json
+import re
+from collections.abc import Iterable
+from pathlib import Path
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .base import QuerySpec
 
-# Ledger of driver-verified specs: round -> names with a green
-# rows+schema+hash row in that round's CORRECTNESS_r{N}.json.
-_GREEN_BY_ROUND: dict[int, frozenset[str]] = {
-    1: frozenset({
-        "q1_pricing_summary", "agg_global_stats", "agg_filtered", "agg_rollup",
-        "agg_cube", "agg_grouping_sets", "agg_distinct_rows",
-        "q3_shipping_priority", "q5_region_revenue", "join_left_outer_agg",
-        "join_full_outer_months", "join_semi_exists", "join_anti_not_exists",
-        "join_broadcast_dims", "join_range_bands", "join_cross_grid",
-        "q6_forecast_revenue", "q10_returned_items", "q12_shipmode_priority",
-        "q14_promo_share", "q19_disjunctive_predicates", "subq_scalar_threshold",
-        "subq_in_list", "subq_correlated_avg", "window_topk_per_group",
-        "window_running_lag_rank", "window_moving_avg", "window_percent_dense",
-        "sort_topk_global", "setops_union_intersect_except",
-        "scalar_string_funcs", "scalar_date_funcs", "scalar_math_funcs",
-        "scalar_conditional_funcs", "scalar_regex_funcs", "array_funcs_tokens",
-        "higher_order_array_funcs", "json_extract_props", "map_from_json_props",
-        "pivot_status_by_flag", "events_hourly_windows", "events_sessionize_gap",
-        "agg_min_max_by", "setops_all_variants", "unpivot_stack",
-        "join_right_outer", "window_lead_range_frame", "scalar_date_arith",
-        "array_posexplode_map_values",
-    }),
-    2: frozenset({
-        "dedup_exact_by_text", "dedup_minhash_lsh_pairs", "dedup_neardup_jaccard",
-        "dedup_simhash_buckets", "similarity_topk_cosine",
-        "similarity_ann_lsh_bucket", "similarity_ann_ivf",
-        "dedup_embedding_cosine", "text_stats_quality", "text_lang_id_markers",
-        "text_fingerprints", "text_token_counts", "text_rolling_hash",
-        "multimodal_decode_features", "asof_join_purchase_click",
-        "cdc_retail_replay", "udf_pandas_quality_score",
-        "udf_applyinpandas_zscore", "udf_grouped_agg_pandas",
-        "cdc_dead_letter_split", "runbook_dml_lifecycle", "time_travel_versions",
-        "join_skew_salted", "events_sliding_windows", "streaming_windowed_counts",
-        "agg_collect_sorted", "json_tuple_schema_of", "agg_correlation",
-        "scalar_string_extras", "array_set_ops", "window_nth_cume_dist",
-        "agg_bitwise", "agg_exact_percentiles", "agg_string_concat",
-        "scalar_sequence_slice_funcs", "q1_pricing_summary", "agg_global_stats",
-        "agg_filtered", "agg_rollup", "agg_cube", "agg_grouping_sets",
-        "agg_distinct_rows", "q3_shipping_priority", "q5_region_revenue",
-        "join_left_outer_agg", "join_full_outer_months", "join_semi_exists",
-        "join_anti_not_exists", "join_broadcast_dims",
-    }),
-    # Round 3: 48/50 sampled green. The two misses
-    # (streaming_session_windows, streaming_interval_join) failed on the
-    # TIMESTAMP_NTZ watermark regression (fixed in sources/catalog.py +
-    # streaming/pipeline.py) and stay never-green so they lead round 4's
-    # sampling window.
-    3: frozenset({
-        "agg_regression", "agg_stats_moments", "approx_distinct_percentile",
-        "catalog_ddl_lifecycle", "changelog_incremental_read",
-        "dedup_cluster_components", "join_cross_grid", "join_range_bands",
-        "maintenance_zorder_cluster", "map_transform_funcs",
-        "merge_schema_evolution", "metadata_tables_inspect",
-        "pipeline_curate_corpus", "q10_returned_items", "q12_shipmode_priority",
-        "q13_customer_distribution", "q14_promo_share",
-        "q15_top_supplier_revenue", "q17_small_quantity_revenue",
-        "q18_large_volume_orders", "q19_disjunctive_predicates",
-        "q22_dormant_customers", "q4_priority_exists", "q6_forecast_revenue",
-        "q7_nation_pair_revenue", "q8_market_share", "scalar_fuzzy_levenshtein",
-        "scalar_string_funcs", "scalar_try_funcs", "schema_evolution_add_drop",
-        "setops_union_intersect_except", "similarity_ann_pq",
-        "sort_topk_global", "split_train_holdout", "streaming_static_enrich",
-        "subq_correlated_avg", "subq_in_list", "subq_scalar_threshold",
-        "text_redact_scrub", "text_top_ngrams_per_lang", "text_url_parse",
-        "wap_branch_publish", "window_fill_forward", "window_moving_avg",
-        "window_percent_dense", "window_running_lag_rank",
-        "window_time_range_frame", "window_topk_per_group",
-    }),
-    # Round 4: 49/50 sampled green. The one miss (merge_conditional_partial,
-    # hash-only, float summation-order boundary) stays never-green so it
-    # leads round 5's sampling window; its arithmetic is now stabilized
-    # (integer 1e-4-dollar units) in queries/extended.py.
-    4: frozenset({
-        "agg_group_by_all", "agg_histogram_width_bucket", "agg_min_max_by",
-        "approx_freq_items", "array_funcs_tokens", "embedding_quantize_int8",
-        "equality_delete_lifecycle", "events_hourly_windows",
-        "events_session_window_batch", "events_sessionize_gap",
-        "higher_order_array_funcs", "incremental_mv_maintenance",
-        "join_bucketed_colocated", "json_extract_props",
-        "maintenance_compact_binpack", "map_from_json_props",
-        "multimodal_frame_sample", "observe_metrics_inline",
-        "pivot_status_by_flag", "pydatasource_cdc_ingest",
-        "q11_shape_important_stock", "q16_shape_supplier_counts",
-        "q20_shape_excess_availability", "q21_shape_sole_failing_supplier",
-        "q2_shape_min_cost_supplier", "q9_shape_product_profit",
-        "recursive_cte_ancestors", "sample_balanced_per_group",
-        "scalar_conditional_funcs", "scalar_date_funcs", "scalar_math_funcs",
-        "scalar_regex_funcs", "scd2_dimension_history",
-        "setops_all_variants", "sketch_hll_union", "streaming_cdc_pipeline",
-        "streaming_dedup_within_watermark", "streaming_delivery_log",
-        "streaming_interval_join", "streaming_interval_join_outer",
-        "streaming_running_user_counts", "streaming_session_windows",
-        "streaming_stateful_dedup", "streaming_watermark_late_drop",
-        "text_chunk_windows", "text_tfidf_top_terms", "udf_sql_registered",
-        "udtf_first_tokens", "variant_json_extract",
-    }),
-    # Round 5: 50/50 sampled green (CORRECTNESS_r05.json), including
-    # merge_conditional_partial — the last never-green spec.
-    5: frozenset({
-        "agg_collect_sorted", "agg_cube", "agg_distinct_rows", "agg_filtered",
-        "agg_global_stats", "agg_grouping_sets", "agg_rollup",
-        "array_posexplode_map_values", "asof_join_purchase_click",
-        "cdc_dead_letter_split", "cdc_retail_replay",
-        "decontaminate_ngram_overlap", "dedup_embedding_cosine",
-        "dedup_exact_by_text", "dedup_minhash_lsh_pairs",
-        "dedup_neardup_jaccard", "dedup_simhash_buckets",
-        "events_sliding_windows", "join_anti_not_exists",
-        "join_broadcast_dims", "join_full_outer_months", "join_left_outer_agg",
-        "join_right_outer", "join_semi_exists", "join_skew_salted",
-        "json_tuple_schema_of", "merge_conditional_partial",
-        "multimodal_decode_features", "multimodal_resize_batch",
-        "q1_pricing_summary", "q3_shipping_priority", "q5_region_revenue",
-        "runbook_dml_lifecycle", "scalar_date_arith", "similarity_ann_ivf",
-        "similarity_ann_lsh_bucket", "similarity_topk_cosine",
-        "streaming_windowed_counts", "text_fingerprints",
-        "text_lang_id_markers", "text_repetition_filters",
-        "text_rolling_hash", "text_stats_quality", "text_token_counts",
-        "time_travel_versions", "udf_applyinpandas_zscore",
-        "udf_grouped_agg_pandas", "udf_pandas_quality_score", "unpivot_stack",
-        "window_lead_range_frame",
-    }),
-    # CORRECTNESS_r06: 49/50 green; the one red (agg_count_if_filtered,
-    # hash-only HUGEINT-vs-BIGINT) is deliberately NOT recorded so it
-    # stays in the next sampling window after the CAST fix.
-    6: frozenset({
-        "add_column_default_lifecycle", "agg_bitwise", "agg_boolean_every_any",
-        "agg_correlation", "agg_exact_percentiles", "agg_string_concat",
-        "array_posexplode_outer", "array_set_ops",
-        "dedup_cluster_components", "dedup_exact_substring_spans",
-        "events_funnel_stages", "events_retention_cohorts",
-        "join_lateral_topn", "join_null_safe_eq",
-        "maintenance_expire_snapshots", "map_zip_with_rollup",
-        "merge_not_matched_by_source", "multimodal_audio_window_energy",
-        "multimodal_frame_boundary_sizes", "pack_sequences_concat_chunk",
-        "rename_column_lifecycle", "row_lineage_lifecycle",
-        "sample_temperature_mixture", "scalar_bit_funcs",
-        "scalar_collation_ci", "scalar_csv_funcs",
-        "scalar_mask_format_funcs", "scalar_pad_overlay_funcs",
-        "scalar_sequence_slice_funcs", "scalar_string_extras",
-        "scan_prune_stats_proof", "similarity_mine_triplets",
-        "sort_limit_offset", "source_csv_orc_roundtrip", "split_train_holdout",
-        "sql_lateral_column_alias", "sql_named_parameters", "sql_pipe_syntax",
-        "streaming_chained_aggregations", "streaming_lake_table_sink",
-        "streaming_lake_table_source", "text_rare_token_fraction",
-        "udf_arrow_optimized", "udf_map_in_arrow",
-        "udtf_analyze_dynamic_schema", "wap_cherry_pick_publish",
-        "widen_column_lifecycle", "window_nth_cume_dist",
-        "window_ntile_buckets",
-    }),
-    # CORRECTNESS_r07: 50/50 sampled green — the 4 never-green specs
-    # (agg_count_if_filtered CAST fix + 3 new r7 specs) plus the full
-    # 46-spec r3-stale cohort.
-    7: frozenset({
-        "agg_count_if_filtered", "agg_regression", "agg_stats_moments",
-        "approx_distinct_percentile", "catalog_ddl_lifecycle",
-        "changelog_incremental_read", "join_cross_grid", "join_range_bands",
-        "maintenance_zorder_cluster", "map_transform_funcs",
-        "merge_evolve_widening", "merge_schema_evolution",
-        "metadata_tables_inspect", "pipeline_curate_corpus",
-        "q10_returned_items", "q12_shipmode_priority",
-        "q13_customer_distribution", "q14_promo_share",
-        "q15_top_supplier_revenue", "q17_small_quantity_revenue",
-        "q18_large_volume_orders", "q19_disjunctive_predicates",
-        "q22_dormant_customers", "q4_priority_exists", "q6_forecast_revenue",
-        "q7_nation_pair_revenue", "q8_market_share",
-        "scalar_fuzzy_levenshtein", "scalar_string_funcs",
-        "scalar_try_funcs", "schema_evolution_add_drop",
-        "setops_union_intersect_except", "similarity_ann_pq",
-        "sort_topk_global", "streaming_skip_change_commits",
-        "streaming_static_enrich", "subq_correlated_avg", "subq_in_list",
-        "subq_scalar_threshold", "text_bigram_fluency", "text_redact_scrub",
-        "text_top_ngrams_per_lang", "text_url_parse", "wap_branch_publish",
-        "window_fill_forward", "window_moving_avg", "window_percent_dense",
-        "window_running_lag_rank", "window_time_range_frame",
-        "window_topk_per_group",
-    }),
-    # CORRECTNESS_r08: 50/50 sampled green — the 4 round-8 declarations
-    # plus the 46-spec r4-stale cohort that fit the window.
-    8: frozenset({
-        "agg_group_by_all", "agg_min_max_by", "approx_freq_items",
-        "array_funcs_tokens", "cdc_routed_fanout", "embedding_quantize_int8",
-        "equality_delete_lifecycle", "events_hourly_windows",
-        "events_sessionize_gap", "higher_order_array_funcs",
-        "incremental_mv_maintenance", "join_bucketed_colocated",
-        "json_extract_props", "maintenance_compact_binpack",
-        "map_from_json_props", "multimodal_frame_sample",
-        "observe_metrics_inline", "partition_evolution_lifecycle",
-        "pivot_status_by_flag", "pydatasource_cdc_ingest",
-        "q11_shape_important_stock", "q16_shape_supplier_counts",
-        "q20_shape_excess_availability", "q21_shape_sole_failing_supplier",
-        "q2_shape_min_cost_supplier", "q9_shape_product_profit",
-        "recursive_cte_ancestors", "sample_balanced_per_group",
-        "scalar_conditional_funcs", "scalar_date_funcs", "scalar_math_funcs",
-        "scalar_regex_funcs", "scd2_dimension_history", "setops_all_variants",
-        "sketch_hll_union", "sql_udf_create_function",
-        "streaming_cdc_pipeline", "streaming_dedup_within_watermark",
-        "streaming_delivery_log", "streaming_interval_join",
-        "streaming_interval_join_outer", "streaming_running_user_counts",
-        "streaming_session_windows", "streaming_sink_txn_app_ids",
-        "streaming_stateful_dedup", "streaming_watermark_late_drop",
-        "text_chunk_windows", "text_tfidf_top_terms", "udf_sql_registered",
-        "variant_json_extract",
-    }),
-    # CORRECTNESS_r09: 50/50 sampled green — the 7 round-9 declarations
-    # plus the r5-stale cohort that fit the window.
-    9: frozenset({
-        "agg_approx_top_k", "agg_cube", "agg_distinct_rows", "agg_filtered",
-        "agg_global_stats", "agg_grouping_sets", "agg_histogram_width_bucket",
-        "agg_listagg_within_group", "agg_rollup", "asof_join_purchase_click",
-        "cdc_dead_letter_replay", "cdc_dead_letter_split",
-        "cdc_point_in_time_asof", "cdc_retail_replay",
-        "decontaminate_ngram_overlap", "dedup_embedding_cosine",
-        "dedup_exact_by_text", "dedup_minhash_lsh_pairs",
-        "dedup_neardup_jaccard", "dedup_simhash_buckets",
-        "events_session_window_batch", "events_sliding_windows",
-        "join_runtime_bloom_filter", "join_skew_salted",
-        "merge_conditional_partial", "multimodal_decode_features",
-        "multimodal_resize_batch", "q1_pricing_summary",
-        "q3_shipping_priority", "q5_region_revenue", "runbook_dml_lifecycle",
-        "similarity_ann_ivf", "similarity_ann_lsh_bucket",
-        "similarity_topk_cosine", "source_xml_roundtrip",
-        "split_leakage_free_by_cluster", "sql_scripting_control_flow",
-        "streaming_windowed_counts", "text_compression_ratio",
-        "text_fingerprints", "text_lang_id_markers", "text_repetition_filters",
-        "text_rolling_hash", "text_stats_quality", "text_token_counts",
-        "time_travel_versions", "udf_applyinpandas_zscore",
-        "udf_grouped_agg_pandas", "udf_pandas_quality_score",
-        "udtf_first_tokens",
-    }),
-    # CORRECTNESS_r10: 50/50 sampled green — the 9 round-10 declarations
-    # plus the r5/r6-stale cohort that fit the window.
-    10: frozenset({
-        "add_column_default_lifecycle", "agg_collect_sorted",
-        "agg_correlation", "array_posexplode_map_values", "array_set_ops",
-        "asof_join_tolerance_bounded", "cdc_schema_drift_policy",
-        "dedup_cluster_components", "dedup_exact_substring_spans",
-        "dpp_partitioned_scan_proof", "events_gap_fill_interpolate",
-        "join_anti_not_exists", "join_broadcast_dims",
-        "join_full_outer_months", "join_left_outer_agg", "join_right_outer",
-        "join_semi_exists", "json_tuple_schema_of",
-        "lake_shallow_clone_divergence", "maintenance_expire_snapshots",
-        "merge_not_matched_by_source", "merge_not_matched_update_stale",
-        "meta_partitions_inspect", "multimodal_audio_window_energy",
-        "multimodal_frame_boundary_sizes", "pack_sequences_concat_chunk",
-        "pivot_multi_agg", "rename_column_lifecycle", "row_lineage_lifecycle",
-        "sample_temperature_mixture", "scalar_date_arith",
-        "scalar_string_extras", "scan_prune_stats_proof",
-        "similarity_mine_triplets", "source_csv_orc_roundtrip",
-        "split_train_holdout", "sql_execute_immediate_variables",
-        "sql_lateral_column_alias", "sql_named_parameters",
-        "streaming_chained_aggregations", "streaming_lake_table_sink",
-        "streaming_lake_table_source", "text_rare_token_fraction",
-        "udf_arrow_optimized", "udf_map_in_arrow",
-        "udtf_analyze_dynamic_schema", "unpivot_stack",
-        "wap_cherry_pick_publish", "widen_column_lifecycle",
-        "window_lead_range_frame",
-    }),
-    # CORRECTNESS_r11: 50/50 sampled green — the 12 round-11 declarations
-    # plus the r6/r7-stale cohort that fit the window.
-    11: frozenset({
-        "agg_bitmap_distinct", "agg_bitwise", "agg_boolean_every_any",
-        "agg_exact_percentiles", "agg_grouping_id_cube", "agg_mode_median",
-        "agg_string_concat", "array_posexplode_outer",
-        "asof_join_forward_nearest", "catalog_ddl_lifecycle",
-        "changelog_incremental_read", "dedup_url_canonicalize",
-        "events_anomaly_zscore_daily", "events_funnel_stages",
-        "events_retention_cohorts", "events_transition_matrix",
-        "join_cross_grid", "join_interval_overlap_binned",
-        "join_lateral_topn", "join_null_safe_eq", "join_range_bands",
-        "maintenance_expire_dry_run_audit", "maintenance_zorder_cluster",
-        "map_zip_with_rollup", "merge_evolve_widening",
-        "merge_schema_evolution", "metadata_tables_inspect",
-        "pipeline_curate_corpus", "scalar_bit_funcs", "scalar_collation_ci",
-        "scalar_csv_funcs", "scalar_mask_format_funcs",
-        "scalar_pad_overlay_funcs", "scalar_sequence_slice_funcs",
-        "scalar_xpath_funcs", "schema_evolution_add_drop",
-        "similarity_ann_pq", "sort_limit_offset", "sql_pipe_syntax",
-        "streaming_skip_change_commits", "streaming_static_enrich",
-        "subq_not_in_null_semantics", "text_bigram_fluency",
-        "text_redact_scrub", "text_top_ngrams_per_lang", "text_url_parse",
-        "wap_branch_publish", "window_distinct_running",
-        "window_nth_cume_dist", "window_ntile_buckets",
-    }),
-    # CORRECTNESS_r12: 50/50 sampled green — the 7 round-12 declarations
-    # plus the r7-stale cohort (32) and an 11-spec r8-stale fill.
-    12: frozenset({
-        "agg_count_if_filtered", "agg_regression", "agg_stats_moments",
-        "approx_distinct_percentile", "dedup_containment_asymmetric",
-        "embedding_quantize_int8", "embedding_truncate_renormalize",
-        "events_peak_concurrency", "events_rolling_distinct_users_7d",
-        "events_streak_longest_daily", "incremental_mv_maintenance",
-        "maintenance_compact_binpack", "map_transform_funcs",
-        "multimodal_frame_sample", "multimodal_shot_boundaries",
-        "orders_pareto_abc_class", "pydatasource_cdc_ingest",
-        "q10_returned_items", "q12_shipmode_priority",
-        "q13_customer_distribution", "q14_promo_share",
-        "q15_top_supplier_revenue", "q17_small_quantity_revenue",
-        "q18_large_volume_orders", "q19_disjunctive_predicates",
-        "q22_dormant_customers", "q4_priority_exists",
-        "q6_forecast_revenue", "q7_nation_pair_revenue", "q8_market_share",
-        "sample_balanced_per_group", "scalar_fuzzy_levenshtein",
-        "scalar_string_funcs", "scalar_try_funcs",
-        "setops_union_intersect_except", "sketch_hll_union",
-        "sort_topk_global", "streaming_cdc_pipeline", "subq_correlated_avg",
-        "subq_in_list", "subq_scalar_threshold", "text_chunk_windows",
-        "text_tfidf_top_terms", "udf_sql_registered", "window_fill_forward",
-        "window_moving_avg", "window_percent_dense",
-        "window_running_lag_rank", "window_time_range_frame",
-        "window_topk_per_group",
-    }),
-    # CORRECTNESS_r13: 50/50 sampled green — all 18 round-13 declarations
-    # plus the 32-spec r8-stale cohort.
-    13: frozenset({
-        "orders_rfm_segmentation", "orders_market_basket_pairs",
-        "events_dau_wau_stickiness", "events_inactivity_churn",
-        "events_weighted_moving_avg", "events_first_touch_attribution",
-        "orders_interpurchase_gap_stats", "json_variant_props_agg",
-        "multimodal_phash_hamming_pairs", "streaming_complete_mode_lake_sink",
-        "sample_hash_topk_per_group", "window_rolling_median_cents",
-        "events_binary_decay_smoothing", "orders_cohort_retention",
-        "events_audience_overlap", "events_wow_top_movers",
-        "quality_profile_columns", "text_bm25_rank", "agg_group_by_all",
-        "streaming_session_windows", "streaming_interval_join",
-        "streaming_interval_join_outer", "join_bucketed_colocated",
-        "streaming_delivery_log", "streaming_watermark_late_drop",
-        "equality_delete_lifecycle", "streaming_running_user_counts",
-        "scd2_dimension_history", "streaming_dedup_within_watermark",
-        "streaming_stateful_dedup", "cdc_routed_fanout",
-        "partition_evolution_lifecycle", "streaming_sink_txn_app_ids",
-        "scalar_date_funcs", "scalar_math_funcs",
-        "scalar_conditional_funcs", "scalar_regex_funcs",
-        "array_funcs_tokens", "higher_order_array_funcs",
-        "json_extract_props", "map_from_json_props",
-        "pivot_status_by_flag", "events_hourly_windows",
-        "events_sessionize_gap", "agg_min_max_by", "setops_all_variants",
-        "approx_freq_items", "observe_metrics_inline",
-        "q2_shape_min_cost_supplier", "q21_shape_sole_failing_supplier",
-    }),
-    # CORRECTNESS_r14: 50/50 sampled green — all 12 round-14 declarations,
-    # the 7 r8-displaced specs, and the 31-spec r9-stale cohort.
-    14: frozenset({
-        "asof_join_purchase_click", "cdc_dead_letter_replay",
-        "cdc_dead_letter_split", "cdc_retail_replay",
-        "decontaminate_ngram_overlap", "dedup_embedding_cosine",
-        "dedup_exact_by_text", "dedup_minhash_lsh_pairs",
-        "dedup_neardup_jaccard", "dedup_simhash_buckets",
-        "embedding_quantized_centroids", "events_active_time_union",
-        "events_conversion_latency_quantiles", "events_dow_seasonality",
-        "events_funnel_any_order", "events_hhi_concentration",
-        "events_sliding_windows", "join_skew_salted",
-        "merge_conditional_partial", "multimodal_decode_features",
-        "multimodal_resize_batch", "orders_basket_lift",
-        "orders_fuzzy_invoice_pairs", "orders_gini_coefficient",
-        "orders_mad_dispersion", "q11_shape_important_stock",
-        "q16_shape_supplier_counts", "q20_shape_excess_availability",
-        "q9_shape_product_profit", "recursive_cte_ancestors",
-        "runbook_dml_lifecycle", "similarity_ann_ivf",
-        "similarity_ann_lsh_bucket", "similarity_topk_cosine",
-        "split_leakage_free_by_cluster", "sql_udf_create_function",
-        "streaming_windowed_counts", "text_char_entropy", "text_fingerprints",
-        "text_lang_id_markers", "text_repetition_filters", "text_rolling_hash",
-        "text_stats_quality", "text_token_counts", "text_zipf_rank_frequency",
-        "time_travel_versions", "udf_applyinpandas_zscore",
-        "udf_grouped_agg_pandas", "udf_pandas_quality_score",
-        "variant_json_extract",
-    }),
-    # CORRECTNESS_r15: 50/50 sampled green — all 6 round-15 declarations,
-    # the 19-spec r9-stale cohort, and the 25-spec r10-stale cohort.
-    15: frozenset({
-        "add_column_default_lifecycle", "agg_approx_top_k", "agg_cube",
-        "agg_distinct_rows", "agg_filtered", "agg_global_stats",
-        "agg_grouping_sets", "agg_histogram_width_bucket",
-        "agg_listagg_within_group", "agg_rollup", "cdc_point_in_time_asof",
-        "dedup_boundary_overlap_pairs", "dedup_cluster_components",
-        "dedup_exact_substring_spans", "documents_length_histogram_log2",
-        "embedding_norm_outliers", "events_session_window_batch",
-        "events_survival_curve", "join_runtime_bloom_filter",
-        "maintenance_expire_snapshots", "merge_not_matched_by_source",
-        "multimodal_audio_window_energy", "multimodal_frame_boundary_sizes",
-        "multimodal_payload_dedup", "orders_benford_first_digit",
-        "pack_sequences_concat_chunk", "q1_pricing_summary",
-        "q3_shipping_priority", "q5_region_revenue",
-        "rename_column_lifecycle", "row_lineage_lifecycle",
-        "sample_temperature_mixture", "scan_prune_stats_proof",
-        "similarity_mine_triplets", "source_csv_orc_roundtrip",
-        "source_xml_roundtrip", "split_train_holdout",
-        "sql_lateral_column_alias", "sql_named_parameters",
-        "sql_scripting_control_flow", "streaming_chained_aggregations",
-        "streaming_lake_table_sink", "streaming_lake_table_source",
-        "text_compression_ratio", "text_rare_token_fraction",
-        "udf_arrow_optimized", "udf_map_in_arrow",
-        "udtf_analyze_dynamic_schema", "udtf_first_tokens",
-        "widen_column_lifecycle",
-    }),
-    16: frozenset({
-        "agg_bitmap_distinct", "agg_collect_sorted", "agg_correlation",
-        "agg_mode_median", "array_posexplode_map_values", "array_set_ops",
-        "asof_join_tolerance_bounded", "catalog_ddl_lifecycle",
-        "cdc_schema_drift_policy", "changelog_incremental_read",
-        "dedup_semantic_cluster_audit", "dpp_partitioned_scan_proof",
-        "events_bot_rate_flags", "events_gap_fill_interpolate",
-        "join_anti_not_exists", "join_broadcast_dims",
-        "join_full_outer_months", "join_left_outer_agg", "join_right_outer",
-        "join_semi_exists", "json_tuple_schema_of",
-        "lake_shallow_clone_divergence", "maintenance_zorder_cluster",
-        "merge_evolve_widening", "merge_not_matched_update_stale",
-        "merge_schema_evolution", "meta_partitions_inspect",
-        "metadata_tables_inspect", "pack_greedy_firstfit_bins",
-        "pipeline_curate_corpus", "pivot_multi_agg",
-        "sample_stratified_proportional", "scalar_date_arith",
-        "scalar_string_extras", "schema_evolution_add_drop",
-        "similarity_ann_pq", "similarity_ivf_recall_audit",
-        "sql_execute_immediate_variables", "streaming_skip_change_commits",
-        "streaming_static_enrich", "text_bigram_fluency",
-        "text_novelty_first_seen_ratio", "text_redact_scrub",
-        "text_top_ngrams_per_lang", "text_url_parse", "unpivot_stack",
-        "wap_branch_publish", "wap_cherry_pick_publish",
-        "window_distinct_running", "window_lead_range_frame",
-    }),
-}
+_REPO_ROOT = Path(__file__).resolve().parents[2]
+_LEDGER_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
 
-def _last_green_round(name: str) -> int:
+def load_green_ledger(paths: Iterable[Path]) -> dict[int, frozenset[str]]:
+    """Round -> names with a green rows+schema+hash row and no error.
+
+    The round number comes from each file's name.  A file that is not
+    valid JSON raises RuntimeError naming the file: a corrupt ledger
+    must not silently reorder the registry.
+    """
+    ledger: dict[int, frozenset[str]] = {}
+    for path in paths:
+        try:
+            rows = json.loads(path.read_text())
+        except (OSError, ValueError) as e:
+            raise RuntimeError(f"unreadable correctness ledger {path}: {e}") from e
+        if not isinstance(rows, dict):
+            raise RuntimeError(f"correctness ledger {path} is not a JSON object")
+        rnd = int(_LEDGER_FILE.fullmatch(path.name).group(1))
+        ledger[rnd] = frozenset(
+            name for name, row in rows.items()
+            if isinstance(row, dict)
+            and all(row.get(k) is True
+                    for k in ("rows_match", "schema_match", "hash_match"))
+            and row.get("err") is None
+        )
+    return ledger
+
+
+GREEN_LEDGER = load_green_ledger(
+    p for p in sorted(_REPO_ROOT.glob("CORRECTNESS_r*.json"))
+    if _LEDGER_FILE.fullmatch(p.name)
+)
+
+
+def _last_green_round(name: str, ledger: dict[int, frozenset[str]]) -> int:
     """Newest round with a green driver row for this spec (0 = never)."""
     return max(
-        (rnd for rnd, names in _GREEN_BY_ROUND.items() if name in names),
+        (rnd for rnd, names in ledger.items() if name in names),
         default=0,
     )
 
 
-def _all_specs() -> list[QuerySpec]:
+def ordered_specs(ledger: dict[int, frozenset[str]]) -> list[QuerySpec]:
+    """Every declared spec, least-recently-verified-first under ``ledger``."""
     # Import without try/except: a broken module must fail loudly, not
     # silently shrink the declared surface (round-1 advice).
     from . import cdcops, extended, llmops, relational
@@ -478,17 +99,17 @@ def _all_specs() -> list[QuerySpec]:
     # The green ledger must track renames/removals, or rotation silently
     # rots (round-2 advice): every recorded name must still be declared.
     name_set = set(names)
-    for rnd, green in _GREEN_BY_ROUND.items():
+    for rnd, green in ledger.items():
         missing = green - name_set
         if missing:
             raise RuntimeError(
                 f"green ledger round {rnd} references unknown specs "
-                f"{sorted(missing)} — update _GREEN_BY_ROUND after renaming"
+                f"{sorted(missing)} — a spec was renamed or removed"
             )
 
     # Stable least-recently-verified-first: never-green specs lead, then
     # oldest-green; ties keep family order.
-    specs.sort(key=lambda s: _last_green_round(s.name))
+    specs.sort(key=lambda s: _last_green_round(s.name, ledger))
     return specs
 
 
@@ -516,15 +137,17 @@ def staleness_violations() -> list[str]:
     """
     specs = list(QUERY_SPECS.values())
     out: list[str] = []
-    n_never = sum(1 for s in specs if _last_green_round(s.name) == 0)
+    n_never = sum(
+        1 for s in specs if _last_green_round(s.name, GREEN_LEDGER) == 0
+    )
     if n_never > SAMPLING_WINDOW:
         out.append(
             f"{n_never} never-green specs exceed the {SAMPLING_WINDOW}-spec "
-            "sampling window — stage the overflow instead of declaring it"
+            "sampling window — declare fewer new specs at once"
         )
-    latest = max(_GREEN_BY_ROUND)
+    latest = max(GREEN_LEDGER, default=0)
     for s in specs[SAMPLING_WINDOW:]:
-        gap = latest - _last_green_round(s.name)
+        gap = latest - _last_green_round(s.name, GREEN_LEDGER)
         if gap > 5:
             out.append(
                 f"spec {s.name} displaced past the sampling window at "
@@ -533,7 +156,9 @@ def staleness_violations() -> list[str]:
     return out
 
 
-QUERY_SPECS: dict[str, QuerySpec] = {s.name: s for s in _all_specs()}
+QUERY_SPECS: dict[str, QuerySpec] = {
+    s.name: s for s in ordered_specs(GREEN_LEDGER)
+}
 
 
 def get_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

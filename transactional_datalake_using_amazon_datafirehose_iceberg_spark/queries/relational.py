@@ -16,18 +16,14 @@ from pyspark.sql import functions as F
 
 from .base import QuerySpec
 
-_SPECS: list[QuerySpec] = []
-
-
-def _add(spec: QuerySpec) -> None:
-    _SPECS.append(spec)
+SPECS: list[QuerySpec] = []
 
 
 # ---------------------------------------------------------------------------
 # Aggregations
 # ---------------------------------------------------------------------------
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q1_pricing_summary",
     doc="TPC-H Q1 shape: scan+filter+groupBy with 8 aggregates. Catalyst "
         "plans partial+final HashAggregate; the shipdate filter pushes to "
@@ -51,7 +47,7 @@ ORDER BY l_returnflag NULLS LAST, l_linestatus NULLS LAST
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_global_stats",
     doc="Ungrouped aggregate (runbook Q3 generalized, README.md:456-460): "
         "count/count-distinct/sum/avg/stddev/var/min/max in one pass.",
@@ -70,7 +66,7 @@ FROM lineitem
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_filtered",
     doc="FILTER (WHERE ...) and CASE-guarded aggregates.",
     tags=("agg",),
@@ -85,7 +81,7 @@ ORDER BY l_returnflag NULLS LAST
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_rollup",
     doc="GROUP BY ROLLUP with GROUPING() disambiguation of the NULL rows.",
     tags=("agg",),
@@ -105,7 +101,7 @@ ORDER BY g_flag, g_status, l_returnflag NULLS LAST, l_linestatus NULLS LAST
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_cube",
     doc="GROUP BY CUBE over two dimensions.",
     tags=("agg",),
@@ -122,7 +118,7 @@ ORDER BY g_status, g_prio, o_orderstatus NULLS LAST, o_orderpriority NULLS LAST
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_grouping_sets",
     doc="Explicit GROUPING SETS incl. grand total.",
     tags=("agg",),
@@ -137,7 +133,7 @@ ORDER BY g_flag, g_status, l_returnflag NULLS LAST, l_linestatus NULLS LAST
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_distinct_rows",
     doc="DISTINCT projection feeding a count.",
     tags=("agg",),
@@ -151,7 +147,7 @@ FROM (SELECT DISTINCT l_returnflag, l_linestatus, l_linenumber FROM lineitem) t
 # Joins
 # ---------------------------------------------------------------------------
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q3_shipping_priority",
     doc="TPC-H Q3 shape: 3-way join + group + top-k. customer filter "
         "pushes below the join; top-k collapses to TakeOrderedAndProject.",
@@ -173,7 +169,7 @@ LIMIT 10
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q5_region_revenue",
     doc="Flagship: 5-way star join lineitem⋈orders⋈customer⋈nation⋈region. "
         "nation(25)/region(5) broadcast; at 100 TB only the fact-side "
@@ -195,7 +191,7 @@ ORDER BY revenue DESC NULLS LAST, n_name
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="join_left_outer_agg",
     doc="LEFT OUTER join preserving customers without orders; NULL-safe "
         "aggregation over the outer side.",
@@ -212,7 +208,7 @@ LIMIT 25
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="join_full_outer_months",
     doc="FULL OUTER join of two monthly aggregates (order vs ship months).",
     tags=("join",),
@@ -232,7 +228,7 @@ ORDER BY month NULLS LAST
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="join_semi_exists",
     doc="Left-semi join (EXISTS). Spark side uses the DataFrame "
         "left_semi operator explicitly.",
@@ -261,7 +257,7 @@ WHERE EXISTS (SELECT 1 FROM orders o
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="join_anti_not_exists",
     doc="Left-anti join (NOT EXISTS) via the DataFrame API.",
     tags=("join",),
@@ -289,7 +285,7 @@ WHERE NOT EXISTS (SELECT 1 FROM orders o
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="join_broadcast_dims",
     doc="Explicit broadcast() of the two dimension tables — the plan must "
         "show BroadcastHashJoin (asserted in tests). The fact side never "
@@ -317,7 +313,7 @@ ORDER BY s_name NULLS LAST, p_brand NULLS LAST
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="join_range_bands",
     doc="Non-equi (theta/range) join against a tiny literal band table -> "
         "BroadcastNestedLoopJoin; the band side is always broadcast.",
@@ -334,7 +330,7 @@ ORDER BY b.band
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="join_cross_grid",
     doc="CROSS JOIN of two tiny relations (explicit cartesian).",
     tags=("join",),
@@ -346,7 +342,7 @@ ORDER BY r_name, s.seg
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q6_forecast_revenue",
     doc="TPC-H Q6 shape: pure scan + conjunctive predicate + single agg "
         "— everything pushes to the parquet scan.",
@@ -362,7 +358,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q10_returned_items",
     doc="TPC-H Q10 shape: 4-way join + group + top-k revenue of "
         "returned items.",
@@ -382,7 +378,7 @@ LIMIT 20
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q12_shipmode_priority",
     doc="TPC-H Q12 shape: join + CASE-bucketed counts per group.",
     tags=("join", "agg"),
@@ -400,7 +396,7 @@ ORDER BY l_linestatus
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q14_promo_share",
     doc="TPC-H Q14 shape: conditional-aggregate ratio (promo revenue %).",
     tags=("join", "agg"),
@@ -415,7 +411,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q19_disjunctive_predicates",
     doc="TPC-H Q19 shape: OR-of-ANDs join predicates (tests predicate "
         "normalization + partial pushdown).",
@@ -430,7 +426,7 @@ WHERE (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 15 AND l_quantity >= 5 AND 
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q4_priority_exists",
     doc="TPC-H Q4 shape: date-windowed count per priority gated by a "
         "correlated EXISTS — planned as a left-semi join that never "
@@ -448,7 +444,7 @@ ORDER BY o_orderpriority
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q13_customer_distribution",
     doc="TPC-H Q13 shape: outer-join fan-out histogram — LEFT JOIN with "
         "an extra join-side predicate, COUNT over the nullable side, "
@@ -467,7 +463,7 @@ ORDER BY custdist DESC, c_count DESC
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q7_nation_pair_revenue",
     doc="TPC-H Q7 shape: cross-border revenue — the nation dimension "
         "joins TWICE (supplier side and customer side) with an "
@@ -492,7 +488,7 @@ ORDER BY supp_nation, cust_nation, l_year
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q8_market_share",
     doc="TPC-H Q8 shape: market share — a conditional-aggregate ratio "
         "(share = revenue from one nation / total) over a 6-way star "
@@ -522,7 +518,7 @@ ORDER BY o_year
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q15_top_supplier_revenue",
     doc="TPC-H Q15 shape: quarterly revenue per supplier (the view), "
         "top suppliers joined back for names — rank on rounded revenue "
@@ -549,7 +545,7 @@ ORDER BY rn
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q17_small_quantity_revenue",
     doc="TPC-H Q17 shape: per-part correlated average threshold "
         "(brand/size-filtered parts whose line quantity is under 50% of "
@@ -569,7 +565,7 @@ WHERE p_size <= 5
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q18_large_volume_orders",
     doc="TPC-H Q18 shape: IN over a grouped-HAVING subquery (big-order "
         "keys), then a 3-way join re-aggregated per order and top-k by "
@@ -592,7 +588,7 @@ LIMIT 20
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q22_dormant_customers",
     doc="TPC-H Q22 shape: scalar-subquery threshold + NOT EXISTS "
         "anti-join (above-average balances with no recent orders), "
@@ -615,7 +611,7 @@ ORDER BY n_name
 # Subqueries
 # ---------------------------------------------------------------------------
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="subq_scalar_threshold",
     doc="Scalar subquery threshold (1.5x average order price).",
     tags=("subquery",),
@@ -628,7 +624,7 @@ LIMIT 20
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="subq_in_list",
     doc="IN-subquery semi join.",
     tags=("subquery",),
@@ -640,7 +636,7 @@ WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_type = 'PROMO')
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="subq_correlated_avg",
     doc="Correlated scalar subquery: lineitems above their part's average "
         "price (Catalyst decorrelates to a join).",
@@ -658,7 +654,7 @@ WHERE l_extendedprice > (SELECT AVG(l_extendedprice) * 1.2
 # Window functions
 # ---------------------------------------------------------------------------
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="window_topk_per_group",
     doc="Top-3 parts by revenue per brand via ROW_NUMBER. Ranking is on "
         "the ROUNDED value + key tiebreak so FP noise cannot reorder "
@@ -679,7 +675,7 @@ ORDER BY p_brand, rn
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="window_running_lag_rank",
     doc="Running sum, LAG, RANK, NTILE over per-customer order history.",
     tags=("window",),
@@ -700,7 +696,7 @@ LIMIT 200
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="window_moving_avg",
     doc="Moving average over a 7-row frame + FIRST/LAST_VALUE.",
     tags=("window",),
@@ -724,7 +720,7 @@ LIMIT 300
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="window_percent_dense",
     doc="PERCENT_RANK + DENSE_RANK on rounded values.",
     tags=("window",),
@@ -742,7 +738,7 @@ LIMIT 100
 # Sort / limit / set ops
 # ---------------------------------------------------------------------------
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="sort_topk_global",
     doc="Global ORDER BY ... LIMIT — Catalyst collapses to "
         "TakeOrderedAndProject (no full sort at scale).",
@@ -755,7 +751,7 @@ LIMIT 50
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="setops_union_intersect_except",
     doc="UNION ALL / UNION / INTERSECT / EXCEPT cardinalities.",
     tags=("setop",),
@@ -777,7 +773,7 @@ ORDER BY op
 # Scalar function families
 # ---------------------------------------------------------------------------
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="scalar_string_funcs",
     doc="String function family over part (all whole-stage-codegen'd).",
     tags=("scalar",),
@@ -799,7 +795,7 @@ LIMIT 100
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="scalar_date_funcs",
     doc="Date/time extraction and truncation over orders.",
     tags=("scalar",),
@@ -815,7 +811,7 @@ ORDER BY yr, mo
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="scalar_math_funcs",
     doc="Math function family with pinned integer/double semantics.",
     tags=("scalar",),
@@ -836,7 +832,7 @@ ORDER BY l_linenumber
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="scalar_conditional_funcs",
     doc="CASE/COALESCE/NULLIF/GREATEST/LEAST family.",
     tags=("scalar",),
@@ -853,7 +849,7 @@ ORDER BY c_mktsegment
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="scalar_regex_funcs",
     doc="regexp_extract / regexp_replace / rlike with patterns identical "
         "under Java and RE2 regex semantics.",
@@ -884,7 +880,7 @@ LIMIT 100
 # Array / map / JSON
 # ---------------------------------------------------------------------------
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="array_funcs_tokens",
     doc="Array construction + size/sort/element access via tokenized text.",
     tags=("array",),
@@ -921,7 +917,7 @@ LIMIT 200
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="higher_order_array_funcs",
     doc="Higher-order transform/filter/aggregate over embedding vectors — "
         "all JVM-side, no UDF.",
@@ -962,7 +958,7 @@ ORDER BY vec_id
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="json_extract_props",
     doc="JSON extraction from the events.props string column "
         "(get_json_object ≡ json_extract_string).",
@@ -993,7 +989,7 @@ ORDER BY event_type
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="map_from_json_props",
     doc="from_json -> MapType -> map_keys/element_at (declared map surface).",
     tags=("json", "map"),
@@ -1025,7 +1021,7 @@ LIMIT 200
 # Pivot / sessionize / time-bucketed
 # ---------------------------------------------------------------------------
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="pivot_status_by_flag",
     doc="DataFrame pivot (quantity by linestatus per returnflag).",
     tags=("pivot",),
@@ -1046,7 +1042,7 @@ ORDER BY l_returnflag
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_hourly_windows",
     doc="Tumbling 1-hour windows over the event stream (batch shape of "
         "the streaming windowed agg) using Spark's window() operator.",
@@ -1113,7 +1109,7 @@ ORDER BY user_id, session_id
 """
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_sessionize_gap",
     doc="Sessionization via lag + cumulative-sum windows (30-min gap) — "
         "the batch shape of streaming session_window.",
@@ -1129,7 +1125,7 @@ _add(QuerySpec(
 # Ordered-collection aggregates / arg-extremes / set-op ALL variants
 # ---------------------------------------------------------------------------
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_collect_sorted",
     doc="collect_list canonicalized by sort_array (deterministic form of "
         "the orderless collect). Arrays are serialized with array_join so "
@@ -1162,7 +1158,7 @@ LIMIT 100
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_min_max_by",
     doc="max_by/min_by (arg-extremes) with struct tiebreak for full "
         "determinism.",
@@ -1200,7 +1196,7 @@ ORDER BY o_orderpriority
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="setops_all_variants",
     doc="INTERSECT ALL / EXCEPT ALL (multiset semantics).",
     tags=("setop",),
@@ -1231,7 +1227,7 @@ SELECT
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="unpivot_stack",
     doc="Unpivot via stack() — long-form attribute/value pairs.",
     tags=("pivot",),
@@ -1256,7 +1252,7 @@ LIMIT 200
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="join_right_outer",
     doc="RIGHT OUTER join (all orders kept, even without a matching "
         "filtered customer).",
@@ -1271,7 +1267,7 @@ LIMIT 100
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="window_lead_range_frame",
     doc="LEAD + RANGE BETWEEN frame (value-based window) + MIN/MAX OVER.",
     tags=("window",),
@@ -1290,7 +1286,7 @@ LIMIT 300
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="scalar_date_arith",
     doc="Date arithmetic: datediff, date_add, epoch seconds, "
         "from-epoch reconstruction (per-engine function names).",
@@ -1322,7 +1318,7 @@ LIMIT 200
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="array_posexplode_map_values",
     doc="posexplode + map_values/map_keys over parsed JSON props.",
     tags=("array", "map"),
@@ -1352,7 +1348,7 @@ GROUP BY pos ORDER BY pos
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="json_tuple_schema_of",
     doc="json_tuple extraction + schema_of_json introspection (the rest "
         "of the declared JSON family).",
@@ -1378,7 +1374,7 @@ LIMIT 200
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_correlation",
     doc="Bivariate aggregates: Pearson correlation / covar_samp / "
         "covar_pop per group. Correlation is the explicit "
@@ -1404,7 +1400,7 @@ ORDER BY l_returnflag
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="scalar_string_extras",
     doc="levenshtein / split_part / repeat / reverse — edit distance is "
         "a text-analysis primitive (fuzzy dedup).",
@@ -1433,7 +1429,7 @@ LIMIT 100
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="array_set_ops",
     doc="array_union / array_intersect / array_except over token arrays "
         "(canonicalized by sort for cross-engine order independence).",
@@ -1481,7 +1477,7 @@ LIMIT 100
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="window_nth_cume_dist",
     doc="NTH_VALUE + CUME_DIST window functions (completing the window "
         "family).",
@@ -1499,7 +1495,7 @@ LIMIT 200
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_bitwise",
     doc="Bitwise aggregate functions (bit_and/bit_or/bit_xor).",
     tags=("agg",),
@@ -1514,7 +1510,7 @@ ORDER BY l_returnflag
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_exact_percentiles",
     doc="EXACT continuous percentiles (median/quartiles) — deterministic "
         "interpolation, unlike the approx variant.",
@@ -1543,7 +1539,7 @@ ORDER BY l_returnflag
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_string_concat",
     doc="Ordered string aggregation (listagg shape): sorted token join.",
     tags=("agg",),
@@ -1567,7 +1563,7 @@ LIMIT 100
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="scalar_sequence_slice_funcs",
     doc="Array-constructor scalar breadth: sequence, slice, "
         "array_repeat, array_position, element_at (flattened to "
@@ -1611,7 +1607,7 @@ LIMIT 100
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="approx_distinct_percentile",
     doc="Approximate aggregates (approx_count_distinct, percentile_approx) "
         "made deterministically oracle-checkable: the spec emits TOLERANCE "
@@ -1673,7 +1669,7 @@ SELECT TRUE AS distinct_within_15pct,
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="map_transform_funcs",
     doc="Map construction/transformation family: str_to_map, map_concat, "
         "transform_values, transform_keys, map_filter — serialized to a "
@@ -1731,7 +1727,7 @@ LIMIT 200
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="window_time_range_frame",
     doc="Time-INTERVAL RANGE frame (rolling 1-hour window per user) — "
         "the value-based frame over timestamps, complementing the "
@@ -1766,7 +1762,7 @@ LIMIT 2000
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="scalar_try_funcs",
     doc="ANSI-safe try_* family (Spark 4 runs ANSI mode ON): try_divide "
         "by zero, try_cast of non-numeric text and of a valid numeral, "
@@ -1816,7 +1812,7 @@ LIMIT 300
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_stats_moments",
     doc="Higher statistical moments: population skewness and excess "
         "kurtosis per group (Spark built-ins; oracle recomputes from raw "
@@ -1856,7 +1852,7 @@ ORDER BY l.l_returnflag
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_regression",
     doc="Linear-regression aggregates (regr_slope/intercept/r2/count of "
         "price on quantity per group) — both engines implement the "
@@ -1889,7 +1885,7 @@ ORDER BY l_returnflag
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="window_fill_forward",
     doc="Forward-fill (gap-fill) via last_value IGNORE NULLS over a "
         "running frame — the standard time-series repair for sparse "
@@ -1935,7 +1931,7 @@ ORDER BY event_id
 """,
 ))
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="scalar_fuzzy_levenshtein",
     doc="Fuzzy string matching: Levenshtein edit distance and a length-"
         "normalized similarity — the cheap pre-filter of entity "
@@ -2000,7 +1996,7 @@ def _freq_items_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="approx_freq_items",
     doc="Heavy hitters via freqItems (single-pass Karp-style counting): "
         "the returned set must contain the exact mode and respect the "
@@ -2051,7 +2047,7 @@ def _observe_metrics_build(spark, sf):
     return spark.createDataFrame(rows, schema)
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="observe_metrics_inline",
     doc="Dataset.observe + Observation: accumulator-style metrics "
         "collected DURING the query action (no second scan) — the "
@@ -2071,7 +2067,7 @@ ORDER BY o_orderstatus
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q2_shape_min_cost_supplier",
     doc="TPC-H Q2's structure — correlated scalar-MIN subquery selecting "
         "the cheapest supplier per part within a region — with the "
@@ -2108,7 +2104,7 @@ ORDER BY p_partkey, s_name
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q21_shape_sole_failing_supplier",
     doc="TPC-H Q21's structure — the double-correlated EXISTS / "
         "NOT EXISTS pattern finding suppliers who were the ONLY "
@@ -2137,7 +2133,7 @@ ORDER BY numwait DESC, s_name
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q9_shape_product_profit",
     doc="TPC-H Q9's structure — 5-way star with a LIKE part filter, "
         "profit netting a per-(part,supplier) supply cost, grouped by "
@@ -2165,7 +2161,7 @@ ORDER BY nation, o_year DESC
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q11_shape_important_stock",
     doc="TPC-H Q11's structure — per-part value within one nation "
         "gated by a HAVING-style threshold against a scalar subquery "
@@ -2191,7 +2187,7 @@ ORDER BY value_cents DESC, partkey
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q16_shape_supplier_counts",
     doc="TPC-H Q16's structure — distinct supplier counts per part "
         "attribute combination with a NOT-IN supplier exclusion "
@@ -2214,7 +2210,7 @@ ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="q20_shape_excess_availability",
     doc="TPC-H Q20's structure — the nested IN chain: suppliers whose "
         "availability for some red part exceeds 10% of that part's "
@@ -2248,7 +2244,7 @@ ORDER BY s_name
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="recursive_cte_ancestors",
     doc="Recursive CTE (Spark 4 WITH RECURSIVE): every order key walks "
         "its halving chain k -> k div 2 to the root — an acyclic "
@@ -2281,7 +2277,7 @@ FROM anc GROUP BY start_key ORDER BY start_key
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="variant_json_extract",
     doc="VARIANT ingestion (Spark 4 semi-structured type): events.props "
         "parsed once to VARIANT, typed variant_get extraction, "
@@ -2317,7 +2313,7 @@ ORDER BY event_type
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_session_window_batch",
     doc="The NATIVE batch session_window operator (30-min gap) via "
         "Spark's built-in SessionWindow expression; oracle re-derives "
@@ -2393,7 +2389,7 @@ def _udtf_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="udtf_first_tokens",
     doc="Python user-defined TABLE function (UDTF, the Lambda-style "
         "extension point generalized to one-to-many): LATERAL-joined "
@@ -2414,7 +2410,7 @@ ORDER BY doc_id, pos
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_histogram_width_bucket",
     doc="Equi-width histogram via width_bucket (Spark-side JVM builtin; "
         "DuckDB oracle emulates the same floor arithmetic): order "
@@ -2450,7 +2446,7 @@ ORDER BY bucket
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="join_lateral_topn",
     doc="LATERAL correlated subquery join (ANSI LATERAL; Spark DomainJoin "
         "rewrite): each customer joined to its top-2 orders by price via "
@@ -2527,7 +2523,7 @@ def _funnel_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_funnel_stages",
     doc="Ordered conversion-funnel analysis (view -> first click after "
         "it -> first purchase after that): per-stage reached-user "
@@ -2563,7 +2559,7 @@ FROM s2
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="events_retention_cohorts",
     doc="Weekly retention-cohort matrix: users cohorted by the Monday "
         "week of their first event; each (cohort, week-offset) cell "
@@ -2635,7 +2631,7 @@ def _null_safe_join_build(spark, sf):
     )
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="join_null_safe_eq",
     doc="Null-safe equi-join: first-half vs second-half-of-month event "
         "counts per (nullable) event class, the NULL class ('error' "
@@ -2662,7 +2658,7 @@ ORDER BY a.et NULLS FIRST
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="window_ntile_buckets",
     doc="NTILE(4) quartile bucketing of customers by account balance "
         "within market segment (identical SQL both engines; "
@@ -2685,7 +2681,7 @@ ORDER BY c_mktsegment, bucket
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="scalar_bit_funcs",
     doc="Bit-manipulation scalars: bit_count, shifts, AND/OR/XOR, "
         "two's-complement NOT — JVM-side expressions; the oracle "
@@ -2722,7 +2718,7 @@ ORDER BY o_orderkey
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="scalar_csv_funcs",
     doc="CSV scalar round-trip: from_csv parses a typed struct out of "
         "an embedded CSV line, to_csv re-serializes it; the oracle "
@@ -2770,7 +2766,7 @@ ORDER BY o_orderkey
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="scalar_mask_format_funcs",
     doc="Data-masking and formatting scalars: mask() (upper->X, "
         "lower->x, digit->n), regexp_count, format_string('%s#%07d'); "
@@ -2802,7 +2798,7 @@ ORDER BY c_custkey
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="array_posexplode_outer",
     doc="posexplode_outer: rows whose filtered token array is EMPTY "
         "survive with (NULL, NULL) — the outer-join form of the "
@@ -2846,7 +2842,7 @@ ORDER BY p_partkey, pos
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="map_zip_with_rollup",
     doc="map_from_entries + map_zip_with + explode round-trip: "
         "per-segment nation->count and nation->balance maps zipped "
@@ -2905,7 +2901,7 @@ ORDER BY c_mktsegment, nation
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="scalar_collation_ci",
     doc="Collated string semantics (Spark 4 COLLATE UNICODE_CI): case-"
         "insensitive distinct counts and grouping over mixed-case "
@@ -2945,7 +2941,7 @@ ORDER BY p_brand
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_boolean_every_any",
     doc="Boolean aggregates bool_and/bool_or per order-priority "
         "shipping predicates, plus a deterministic representative key "
@@ -2964,7 +2960,7 @@ ORDER BY o_orderpriority
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="scalar_pad_overlay_funcs",
     doc="String padding/splicing scalars: lpad, rpad, overlay, "
         "substring_index-equivalent (split_part); identical results "
@@ -2996,7 +2992,7 @@ ORDER BY c_custkey
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="sort_limit_offset",
     doc="Keyset-free pagination: ORDER BY ... LIMIT 20 OFFSET 40 "
         "(Spark 3.4+ OFFSET; identical SQL both engines; fully "
@@ -3011,7 +3007,7 @@ LIMIT 20 OFFSET 40
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_count_if_filtered",
     doc="count_if conditional counting (identical SQL both engines) "
         "alongside the FILTER clause form it sugars. DuckDB types "
@@ -3031,7 +3027,7 @@ ORDER BY o_orderstatus
 ))
 
 
-_add(QuerySpec(
+SPECS.append(QuerySpec(
     name="sql_pipe_syntax",
     doc="SQL pipe syntax (Spark 4.0 |> operators): FROM |> WHERE |> "
         "JOIN |> AGGREGATE ... GROUP BY |> WHERE (post-agg HAVING) |> "
@@ -3062,19 +3058,7 @@ ORDER BY o_orderpriority
 ))
 
 
-SPECS = list(_SPECS)
-
-
-# ---------------------------------------------------------------------------
-# Round-8 staging: built and locally oracle-rehearsed THIS round, declared
-# (moved into _SPECS) next round when the driver's 50-spec sampling window
-# has rotated the stale cohort through — adding them now would push
-# round-3-stale specs out of the window (r6 verdict task 3).
-# ---------------------------------------------------------------------------
-
-_NEXT: list[QuerySpec] = []
-
-_NEXT.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="sql_scripting_control_flow",
     doc="SQL scripting (Spark 4.1 BEGIN...END): DECLARE'd variables, a "
         "WHILE loop, and IF/ELSE branching compute a deterministic "
@@ -3102,7 +3086,7 @@ SELECT CAST(55 AS BIGINT) AS total, CAST(25 AS BIGINT) AS odd_sum
 """,
 ))
 
-_NEXT.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_listagg_within_group",
     doc="listagg(...) WITHIN GROUP (ORDER BY ...) (Spark 4.1 / ANSI): "
         "deterministic ordered string aggregation per group; DuckDB "
@@ -3129,7 +3113,7 @@ ORDER BY o_orderstatus
 ))
 
 
-_NEXT.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="agg_approx_top_k",
     doc="approx_top_k heavy-hitters sketch (Spark 3.5+): with capacity "
         "far above the domain the counts are exact, so the exploded "
@@ -3190,7 +3174,7 @@ ORDER BY doc_id
 """
 
 
-_NEXT.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="text_compression_ratio",
     doc="zlib compression ratio per document (CCNet/RefinedWeb-style "
         "redundancy signal): repetitive boilerplate compresses far "
@@ -3234,7 +3218,7 @@ ORDER BY band
 """)
 
 
-_NEXT.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="sql_udf_create_function",
     doc="SQL-defined scalar + table-valued functions (Spark 4.1 CREATE "
         "FUNCTION ... RETURN), composed in one query; both inline into "
@@ -3303,7 +3287,7 @@ WHERE o.o_orderpriority = '1-URGENT'
     ).orderBy("fact")
 
 
-_NEXT.append(QuerySpec(
+SPECS.append(QuerySpec(
     name="join_runtime_bloom_filter",
     doc="Runtime bloom-filter join pruning (InjectRuntimeFilter): a "
         "selective dimension filter builds a runtime bloom pushed into "
@@ -3327,19 +3311,3 @@ SELECT fact, CAST(n AS BIGINT) AS n FROM (
 ) ORDER BY fact
 """,
 ))
-
-
-# Round-9 declaration: the full remaining staged lane.  Window math
-# after folding CORRECTNESS_r08 into the ledger: 9 never-green (5 here +
-# 4 in extended.py) + 3 r4-stale + 38 of the 50 r5-stale = 50; the 12
-# evicted r5 specs lead round 10's window, so max staleness stays
-# bounded at 5 rounds either way — declaring all 9 now completes the
-# staged surface a round early.
-_DECLARE_R9 = {
-    "sql_scripting_control_flow", "agg_listagg_within_group",
-    "agg_approx_top_k", "text_compression_ratio",
-    "join_runtime_bloom_filter", "sql_udf_create_function",
-}
-SPECS.extend(s for s in _NEXT if s.name in _DECLARE_R9)
-SPECS_NEXT = [s for s in _NEXT if s.name not in _DECLARE_R9]
-assert not SPECS_NEXT, "relational staged lane fully declared in r9"
