@@ -27,6 +27,9 @@ import pytest
 from transactional_datalake_using_amazon_datafirehose_iceberg_spark.queries import (
     QUERY_SPECS,
 )
+from transactional_datalake_using_amazon_datafirehose_iceberg_spark.queries.extended import (
+    UNREGISTERED_SPECS,
+)
 
 _SRC_SF = "/root/testdata/sf0.001"
 _TABLES = [
@@ -82,7 +85,9 @@ def _documents(rows):
 def _run_both(spark, name, sf_dir):
     """(spark rows, duckdb rows) as lists of plain tuples, column order
     normalized to the SPARK result's column order for both engines."""
-    spec = QUERY_SPECS[name]
+    spec = QUERY_SPECS.get(name) or next(
+        s for s in UNREGISTERED_SPECS if s.name == name
+    )
     sdf = spec.run_spark(spark, sf_dir)
     cols = sdf.columns
     spark_rows = [tuple(r[c] for c in cols) for r in sdf.collect()]
@@ -2050,5 +2055,187 @@ def test_hand_novelty_first_seen(spark, tmp_path):
         (1, 2, 2, 10000), (2, 1, 0, 0), (3, 1, 1, 10000), (5, 2, 1, 5000),
     ]
     got_spark, got_ora = _run_both(spark, "text_novelty_first_seen_ratio", d)
+    assert got_spark == hand, "SPARK diverges from the hand derivation"
+    assert got_ora == hand, "ORACLE diverges from the hand derivation"
+
+
+# ---------------------------------------------------------------------------
+# Unregistered specs (extended.UNREGISTERED_SPECS)
+# ---------------------------------------------------------------------------
+
+
+def test_hand_basket_size_histogram(spark, tmp_path):
+    """Orders 1 and 2 have 2 items, order 3 has 1: size 1 -> 1 order
+    (3333 bp of 3), size 2 -> 2 orders (6666 bp)."""
+    import pyarrow as pa
+
+    li = pa.table({
+        "l_orderkey": pa.array([1, 1, 2, 2, 3], pa.int64()),
+    })
+    d = _mk_sf(tmp_path, lineitem=li)
+    hand = [(1, 1, 3333), (2, 2, 6666)]
+    got_spark, got_ora = _run_both(spark, "orders_basket_size_histogram", d)
+    assert got_spark == hand, "SPARK diverges from the hand derivation"
+    assert got_ora == hand, "ORACLE diverges from the hand derivation"
+
+
+def test_hand_dup_group_size_histogram(spark, tmp_path):
+    """'x' x2 + 'y' x1: one group of size 1 (1 doc), one of size 2
+    (2 docs)."""
+    docs = _documents([(1, "x", "s"), (2, "x", "s"), (3, "y", "s")])
+    d = _mk_sf(tmp_path, documents=docs)
+    hand = [(1, 1, 1), (2, 1, 2)]
+    got_spark, got_ora = _run_both(spark, "dedup_group_size_histogram", d)
+    assert got_spark == hand, "SPARK diverges from the hand derivation"
+    assert got_ora == hand, "ORACLE diverges from the hand derivation"
+
+
+def test_hand_cents_profile(spark, tmp_path):
+    """Totals 10.00 / 10.99 / 3.99 (negative -5.00 and NULL excluded):
+    cents 0 x1, 99 x2 over total 3 -> 3333 / 6666 bp."""
+    rows = [
+        (1, 1, "O", 10.00, _ts("2024-01-05T00:00:00"), "A"),
+        (2, 1, "O", 10.99, _ts("2024-01-06T00:00:00"), "A"),
+        (3, 1, "O", 3.99, _ts("2024-01-07T00:00:00"), "A"),
+        (4, 1, "O", -5.00, _ts("2024-01-08T00:00:00"), "A"),
+        (5, 1, "O", None, _ts("2024-01-09T00:00:00"), "A"),
+    ]
+    d = _mk_sf(tmp_path, orders=_orders_full(rows))
+    hand = [(0, 1, 3333), (99, 2, 6666)]
+    got_spark, got_ora = _run_both(spark, "orders_cents_profile", d)
+    assert got_spark == hand, "SPARK diverges from the hand derivation"
+    assert got_ora == hand, "ORACLE diverges from the hand derivation"
+
+
+def test_hand_load_factor(spark, tmp_path):
+    """Type A: 3 events in hour 10, 1 in hour 11 -> peak 3 of 4 over 2
+    hours -> 3*2*10000//4 = 15000 bp. Type B: 2 in one hour -> 10000."""
+    d = _mk_sf(tmp_path, events=_events([
+        (1, _ts("2024-01-01T10:00:00"), 1, "A", 1.0),
+        (2, _ts("2024-01-01T10:10:00"), 1, "A", 1.0),
+        (3, _ts("2024-01-01T10:20:00"), 1, "A", 1.0),
+        (4, _ts("2024-01-01T11:00:00"), 1, "A", 1.0),
+        (5, _ts("2024-01-01T10:00:00"), 2, "B", 1.0),
+        (6, _ts("2024-01-01T10:30:00"), 2, "B", 1.0),
+    ]))
+    hand = [("A", 2, 4, 3, 15000), ("B", 1, 2, 2, 10000)]
+    got_spark, got_ora = _run_both(spark, "events_load_factor_hourly", d)
+    assert got_spark == hand, "SPARK diverges from the hand derivation"
+    assert got_ora == hand, "ORACLE diverges from the hand derivation"
+
+
+def test_hand_props_key_census(spark, tmp_path):
+    """Valid payloads: {'a','b'} and {'a'} -> a in 2/2 (10000 bp), b in
+    1/2 (5000). NULL and malformed payloads drop on both engines."""
+    import pyarrow as pa
+
+    events = pa.table({
+        "event_id": pa.array([1, 2, 3, 4], pa.int64()),
+        "ts": pa.array([dt.datetime(2024, 1, 1, 10)] * 4, pa.timestamp("us")),
+        "user_id": pa.array([1, 1, 1, 1], pa.int64()),
+        "event_type": pa.array(["view"] * 4, pa.string()),
+        "value": pa.array([1.0] * 4, pa.float64()),
+        "props": pa.array(
+            ['{"a": 1, "b": 2}', '{"a": 3}', None, "not json"], pa.string()
+        ),
+    })
+    d = _mk_sf(tmp_path, events=events)
+    hand = [("a", 2, 10000), ("b", 1, 5000)]
+    got_spark, got_ora = _run_both(spark, "events_props_key_census", d)
+    assert got_spark == hand, "SPARK diverges from the hand derivation"
+    assert got_ora == hand, "ORACLE diverges from the hand derivation"
+
+
+def test_hand_bounce_rate(spark, tmp_path):
+    """user 1: view@00:00 + click@00:10 (one session, entry view, not a
+    bounce); view@02:00 alone (bounce, entry view). user 2: click alone
+    (bounce, entry click). user 3: view@00:00 + purchase@exactly 00:30
+    -> gap == 1800s is NOT > 30 min, same session (entry view, no
+    bounce). view: 3 sessions / 1 bounce -> 3333 bp; click: 1/1 ->
+    10000 bp."""
+    rows = [
+        (1, _ts("2024-01-01T00:00:00"), 1, "view", 1.0),
+        (2, _ts("2024-01-01T00:10:00"), 1, "click", 1.0),
+        (3, _ts("2024-01-01T02:00:00"), 1, "view", 1.0),
+        (4, _ts("2024-01-01T00:00:00"), 2, "click", 1.0),
+        (5, _ts("2024-01-01T00:00:00"), 3, "view", 1.0),
+        (6, _ts("2024-01-01T00:30:00"), 3, "purchase", 1.0),
+    ]
+    d = _mk_sf(tmp_path, events=_events(rows))
+    hand = [("click", 1, 1, 10000), ("view", 3, 1, 3333)]
+    got_spark, got_ora = _run_both(spark, "events_bounce_rate_by_entry_type", d)
+    assert got_spark == hand, "SPARK diverges from the hand derivation"
+    assert got_ora == hand, "ORACLE diverges from the hand derivation"
+
+
+def test_hand_session_duration_hist(spark, tmp_path):
+    """user 1: 00:00 + 00:10 -> 600 s -> floor(log2 600) = 9. user 2:
+    single event -> 0 s -> bucket -1. user 3: 1 s gap -> log2(1) = 0.
+    user 4: 3 s -> floor(log2 3) = 1."""
+    rows = [
+        (1, _ts("2024-01-01T00:00:00"), 1, "view", 1.0),
+        (2, _ts("2024-01-01T00:10:00"), 1, "view", 1.0),
+        (3, _ts("2024-01-01T00:00:00"), 2, "view", 1.0),
+        (4, _ts("2024-01-01T00:00:00"), 3, "view", 1.0),
+        (5, _ts("2024-01-01T00:00:01"), 3, "view", 1.0),
+        (6, _ts("2024-01-01T00:00:00"), 4, "view", 1.0),
+        (7, _ts("2024-01-01T00:00:03"), 4, "view", 1.0),
+    ]
+    d = _mk_sf(tmp_path, events=_events(rows))
+    hand = [(-1, 1, 0), (0, 1, 1), (1, 1, 3), (9, 1, 600)]
+    got_spark, got_ora = _run_both(
+        spark, "events_session_duration_histogram_log2", d)
+    assert got_spark == hand, "SPARK diverges from the hand derivation"
+    assert got_ora == hand, "ORACLE diverges from the hand derivation"
+
+
+def test_hand_hourly_p95(spark, tmp_path):
+    """view: hour-00 has 3 events, hour-01 has 1 -> n_hours 2, max 3,
+    p95 = 1 + 0.95*(3-1) = 2.9. click: one hour of 2 -> p95 = 2.0."""
+    rows = [
+        (1, _ts("2024-01-01T00:00:00"), 1, "view", 1.0),
+        (2, _ts("2024-01-01T00:10:00"), 1, "view", 1.0),
+        (3, _ts("2024-01-01T00:20:00"), 2, "view", 1.0),
+        (4, _ts("2024-01-01T01:00:00"), 1, "view", 1.0),
+        (5, _ts("2024-01-01T00:00:00"), 2, "click", 1.0),
+        (6, _ts("2024-01-01T00:30:00"), 2, "click", 1.0),
+    ]
+    d = _mk_sf(tmp_path, events=_events(rows))
+    hand = [("click", 1, 2, 2.0), ("view", 2, 3, 2.9)]
+    got_spark, got_ora = _run_both(spark, "events_hourly_load_p95_per_type", d)
+    assert got_spark == hand, "SPARK diverges from the hand derivation"
+    assert got_ora == hand, "ORACLE diverges from the hand derivation"
+
+
+def test_hand_intersession_gaps(spark, tmp_path):
+    """user 1 has sessions starting 00:00, 02:00, 05:00 -> gaps 120
+    and 180 min; user 2 has one session (no gap). median = 150,
+    p90 = 120 + 0.9*60 = 174."""
+    rows = [
+        (1, _ts("2024-01-01T00:00:00"), 1, "view", 1.0),
+        (2, _ts("2024-01-01T00:10:00"), 1, "view", 1.0),
+        (3, _ts("2024-01-01T02:00:00"), 1, "view", 1.0),
+        (4, _ts("2024-01-01T05:00:00"), 1, "view", 1.0),
+        (5, _ts("2024-01-01T00:00:00"), 2, "view", 1.0),
+    ]
+    d = _mk_sf(tmp_path, events=_events(rows))
+    hand = [(2, 150.0, 174.0)]
+    got_spark, got_ora = _run_both(spark, "events_intersession_gap_stats", d)
+    assert got_spark == hand, "SPARK diverges from the hand derivation"
+    assert got_ora == hand, "ORACLE diverges from the hand derivation"
+
+
+def test_hand_embedding_dup_census(spark, tmp_path):
+    """[1,2] x3 + [3,4] x1 (NULL embedding excluded): 4 vectors, 2
+    distinct, 1 dup group holding 3 vectors, max group 3."""
+    d = _mk_sf(tmp_path, embeddings=_embeddings([
+        (1, [1.0, 2.0], 1),
+        (2, [1.0, 2.0], 1),
+        (3, [1.0, 2.0], 2),
+        (4, [3.0, 4.0], 1),
+        (5, None, 1),
+    ]))
+    hand = [(4, 2, 1, 3, 3)]
+    got_spark, got_ora = _run_both(spark, "embedding_exact_dup_census", d)
     assert got_spark == hand, "SPARK diverges from the hand derivation"
     assert got_ora == hand, "ORACLE diverges from the hand derivation"

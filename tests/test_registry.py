@@ -57,6 +57,22 @@ def test_order_pinned_at_r16_ledger(monkeypatch):
     )
 
 
+def test_window_composition_r17():
+    """The 50-spec prefix sampled after the CORRECTNESS_r16 fold: zero
+    never-green specs remain (281/281 have a green ledger row), so the
+    window is pure rotation — the 31 remaining r11-stale greens and the
+    19-spec r12-stale cohort (31 + 19 = 50)."""
+    paths = [_ROOT / f"CORRECTNESS_r{n:02d}.json" for n in range(1, 17)]
+    ledger = registry.load_green_ledger(paths)
+    window = registry.ordered_specs(ledger)[: registry.SAMPLING_WINDOW]
+    last = {s.name: registry._last_green_round(s.name, ledger) for s in window}
+    never = [n for n, r in last.items() if r == 0]
+    assert never == [], never
+    r11 = [n for n, r in last.items() if r == 11]
+    r12 = [n for n, r in last.items() if r == 12]
+    assert len(r11) == 31 and len(r12) == 19, (len(r11), len(r12))
+
+
 def test_green_ledger_derivation(tmp_path):
     row = {"rows_match": True, "schema_match": True, "hash_match": True,
            "spark_rows": 1, "oracle_rows": 1, "err": None}

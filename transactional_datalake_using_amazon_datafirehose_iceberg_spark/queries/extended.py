@@ -8427,3 +8427,511 @@ GROUP BY g.doc_id
 ORDER BY doc_id
 """,
 ))
+
+
+# ---------------------------------------------------------------------------
+# Unregistered specs: built and checked against their oracle and a
+# hand-derived answer (tests/test_oracle_parity.py, tests/test_hand_oracle.py)
+# but not part of the registry, so they never enter the sampled order.
+# ---------------------------------------------------------------------------
+UNREGISTERED_SPECS: list[QuerySpec] = []
+
+
+def _basket_hist_build(spark, sf):
+    # order-size histogram: items per order, then orders per size with
+    # the share in truncated bp — the fan-out profile that sizes the
+    # market-basket self-join before anyone runs it. Two keyed aggs;
+    # total is a driver scalar.
+    li = spark.table("lineitem").filter(F.col("l_orderkey").isNotNull())
+    per = li.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("n_items"))
+    n_orders = per.count()
+    return (
+        per.groupBy("n_items")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"))
+        .select(
+            F.col("n_items").cast("int").alias("n_items"),
+            "n_orders",
+            F.expr(f"n_orders * 10000 div {max(int(n_orders), 1)}")
+            .cast("bigint").alias("share_bp"),
+        )
+        .orderBy("n_items")
+    )
+
+
+UNREGISTERED_SPECS.append(QuerySpec(
+    name="orders_basket_size_histogram",
+    doc="Items-per-order histogram with truncated-bp shares: the "
+        "fan-out profile that bounds the market-basket pair self-join "
+        "(sum of n*(n-1)/2 over this histogram IS the pair count). Two "
+        "keyed aggregations; the total is a driver scalar.",
+    tags=("agg", "analytics"),
+    build=_basket_hist_build,
+    oracle="""
+WITH per AS (
+  SELECT l_orderkey, COUNT(*) AS n_items
+  FROM lineitem WHERE l_orderkey IS NOT NULL
+  GROUP BY 1
+)
+SELECT CAST(n_items AS INTEGER) AS n_items,
+       CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(COUNT(*) * 10000
+            // GREATEST((SELECT COUNT(*) FROM per), 1) AS BIGINT)
+         AS share_bp
+FROM per
+GROUP BY n_items
+ORDER BY n_items
+""",
+))
+
+
+def _dup_group_hist_build(spark, sf):
+    # exact-dup group-size histogram: how much of the corpus sits in
+    # groups of each size — the before/after measurement of any dedup
+    # run (n_docs - n_groups summed over this table = rows removed by
+    # keep-one dedup). Two hash-keyed aggregations.
+    d = spark.table("documents").filter(F.col("text").isNotNull())
+    grp = d.groupBy(F.md5("text").alias("__h")).agg(
+        F.count(F.lit(1)).alias("gs")
+    )
+    return (
+        grp.groupBy(F.col("gs").cast("int").alias("group_size"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_groups"),
+            # sum(gs) == n_groups * gs (gs is the group key): an
+            # aggregate, never first() on a would-be-constant column
+            F.sum("gs").cast("bigint").alias("n_docs"),
+        )
+        .orderBy("group_size")
+    )
+
+
+UNREGISTERED_SPECS.append(QuerySpec(
+    name="dedup_group_size_histogram",
+    doc="Exact-duplicate group-size histogram over md5(text): groups "
+        "and docs per group size — the dedup-impact measurement (docs "
+        "minus groups = rows a keep-one pass removes). Hash-keyed "
+        "aggregations only.",
+    tags=("llm", "dedup", "agg"),
+    build=_dup_group_hist_build,
+    oracle="""
+WITH g AS (
+  SELECT md5(text) AS h, COUNT(*) AS gs
+  FROM documents WHERE text IS NOT NULL
+  GROUP BY 1
+)
+SELECT CAST(gs AS INTEGER) AS group_size,
+       CAST(COUNT(*) AS BIGINT) AS n_groups,
+       CAST(COUNT(*) * gs AS BIGINT) AS n_docs
+FROM g
+GROUP BY gs
+ORDER BY group_size
+""",
+))
+
+
+def _cents_profile_build(spark, sf):
+    # price-point audit: distribution of the cents component of order
+    # totals — fabricated or re-priced data clusters on .00/.99 (the
+    # complement of the Benford first-digit audit,
+    # orders_benford_first_digit). Integer cents via the established
+    # round-to-cents idiom; total is one inlined driver scalar.
+    o = spark.table("orders").filter(
+        F.col("o_totalprice").isNotNull() & (F.col("o_totalprice") >= 0)
+    )
+    n_total = o.count()
+    return (
+        o.select(
+            (F.round(F.col("o_totalprice") * 100).cast("long") % 100)
+            .cast("int").alias("cents")
+        )
+        .groupBy("cents")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"))
+        .withColumn(
+            "share_bp",
+            F.expr(f"n_orders * 10000 div {max(int(n_total), 1)}")
+            .cast("bigint"),
+        )
+        .orderBy("cents")
+    )
+
+
+UNREGISTERED_SPECS.append(QuerySpec(
+    name="orders_cents_profile",
+    doc="Price-point (cents-component) distribution of order totals "
+        "with shares in truncated bp — the .00/.99 clustering audit "
+        "complementing the Benford first-digit test. One bounded "
+        "(<= 100 groups) agg; the total is an inlined driver scalar.",
+    tags=("agg", "quality", "analytics"),
+    build=_cents_profile_build,
+    oracle="""
+WITH o AS (
+  SELECT CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) % 100 AS cents
+  FROM orders
+  WHERE o_totalprice IS NOT NULL AND o_totalprice >= 0
+),
+n AS (SELECT GREATEST(COUNT(*), 1) AS total FROM o)
+SELECT CAST(cents AS INTEGER) AS cents,
+       CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(COUNT(*) * 10000 // MAX(n.total) AS BIGINT) AS share_bp
+FROM o CROSS JOIN n
+GROUP BY cents
+ORDER BY cents
+""",
+))
+
+
+def _load_factor_build(spark, sf):
+    # peak-to-mean hourly load per event type: the capacity-planning
+    # shape statistic (a flat profile loads ~10000 bp, a spiky one far
+    # above). Two keyed aggs; cross-multiplied integer ratio — never a
+    # double mean.
+    hourly = (
+        spark.table("events")
+        .filter(F.col("ts").isNotNull())
+        .groupBy("event_type", F.date_trunc("hour", "ts").alias("h"))
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    return (
+        hourly.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_hours"),
+            F.sum("c").cast("bigint").alias("n_events"),
+            F.max("c").cast("bigint").alias("peak_hour_events"),
+        )
+        .select(
+            "event_type",
+            "n_hours",
+            "n_events",
+            "peak_hour_events",
+            # peak/mean in bp = peak * n_hours * 10000 div total
+            F.expr("peak_hour_events * n_hours * 10000 div n_events")
+            .cast("bigint")
+            .alias("load_factor_bp"),
+        )
+        .orderBy("event_type")
+    )
+
+
+UNREGISTERED_SPECS.append(QuerySpec(
+    name="events_load_factor_hourly",
+    doc="Peak-to-mean hourly load factor per event type (truncated bp, "
+        "cross-multiplied integers — no double mean): the capacity-"
+        "planning shape statistic; 10000 bp = perfectly flat. Hourly "
+        "pre-aggregate then a type rollup.",
+    tags=("events", "agg", "analytics"),
+    build=_load_factor_build,
+    oracle="""
+WITH hourly AS (
+  SELECT event_type, date_trunc('hour', ts) AS h, COUNT(*) AS c
+  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
+)
+SELECT event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_hours,
+       CAST(SUM(c) AS BIGINT) AS n_events,
+       CAST(MAX(c) AS BIGINT) AS peak_hour_events,
+       CAST(MAX(c) * COUNT(*) * 10000 // SUM(c) AS BIGINT)
+         AS load_factor_bp
+FROM hourly GROUP BY event_type ORDER BY event_type
+""",
+))
+
+
+def _props_census_build(spark, sf):
+    # semi-structured schema census: which keys the props payloads
+    # actually carry, at what frequency — the schema-discovery pass an
+    # open-schema ingestion runs before declaring columns. Key explode
+    # is map-side; one key-keyed agg; the total is a driver scalar.
+    ev = spark.table("events").filter(F.col("props").isNotNull())
+    keyed = ev.select(F.expr("json_object_keys(props)").alias("ks")).filter(
+        F.col("ks").isNotNull()  # malformed payloads drop on both sides
+    )
+    n_payloads = keyed.count()
+    return (
+        keyed.select(F.explode("ks").alias("key"))
+        .groupBy("key")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_payloads"))
+        .select(
+            "key",
+            "n_payloads",
+            F.expr(f"n_payloads * 10000 div {max(int(n_payloads), 1)}")
+            .cast("bigint")
+            .alias("presence_bp"),
+        )
+        .orderBy("key")
+    )
+
+
+UNREGISTERED_SPECS.append(QuerySpec(
+    name="events_props_key_census",
+    doc="Semi-structured key census over the props payloads: every JSON "
+        "key's payload count and presence share in truncated bp — the "
+        "schema-discovery pass before an open-schema ingestion declares "
+        "columns. Malformed payloads drop identically on both engines "
+        "(NULL key array / json_valid gate).",
+    tags=("json", "quality", "agg"),
+    build=_props_census_build,
+    oracle="""
+WITH v AS (
+  SELECT props FROM events
+  WHERE props IS NOT NULL AND json_valid(props)
+),
+n AS (SELECT GREATEST(COUNT(*), 1) AS total FROM v),
+k AS (SELECT unnest(json_keys(props)) AS key FROM v)
+SELECT key, CAST(COUNT(*) AS BIGINT) AS n_payloads,
+       CAST(COUNT(*) * 10000 // MAX(n.total) AS BIGINT) AS presence_bp
+FROM k CROSS JOIN n
+GROUP BY key
+ORDER BY key
+""",
+))
+
+
+def _bounce_sql(epoch_us_fn: str, idiv: str) -> str:
+    """Per-entry-type session bounce rate over the repo's canonical
+    30-min-gap sessionization (events_sessionize_gap's window chain) —
+    identical plan in both dialects modulo the epoch-µs function and
+    the integer-division token (Spark ``div`` / DuckDB ``//``)."""
+    return f"""
+WITH e AS (
+  SELECT user_id, event_id, event_type, {epoch_us_fn} AS t FROM events
+  WHERE ts IS NOT NULL AND user_id IS NOT NULL
+), g AS (
+  SELECT user_id, event_id, event_type, t,
+         CASE WHEN t - LAG(t) OVER (PARTITION BY user_id ORDER BY t, event_id)
+                   > 1800000000
+              OR LAG(t) OVER (PARTITION BY user_id ORDER BY t, event_id) IS NULL
+              THEN 1 ELSE 0 END AS new_s
+  FROM e
+), s AS (
+  SELECT user_id, event_id, event_type, t,
+         SUM(new_s) OVER (PARTITION BY user_id ORDER BY t, event_id
+                          ROWS UNBOUNDED PRECEDING) AS sid
+  FROM g
+), r AS (
+  SELECT event_type,
+         ROW_NUMBER() OVER (PARTITION BY user_id, sid
+                            ORDER BY t, event_id) AS rn,
+         COUNT(*) OVER (PARTITION BY user_id, sid) AS ne
+  FROM s
+)
+SELECT event_type AS entry_type,
+       CAST(COUNT(*) AS BIGINT) AS n_sessions,
+       CAST(SUM(CASE WHEN ne = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_bounces,
+       CAST(SUM(CASE WHEN ne = 1 THEN 1 ELSE 0 END) * 10000
+            {idiv} COUNT(*) AS BIGINT) AS bounce_bp
+FROM r WHERE rn = 1
+GROUP BY event_type
+ORDER BY entry_type NULLS FIRST
+"""
+
+
+UNREGISTERED_SPECS.append(QuerySpec(
+    name="events_bounce_rate_by_entry_type",
+    doc="Session bounce rate by entry event type: sessions opened by "
+        "each type and the share that end after a single event — the "
+        "engagement-quality read on the canonical 30-min-gap "
+        "sessionization. All windows user-keyed; session-scale "
+        "aggregation after.",
+    tags=("events", "session"),
+    sql=_bounce_sql("unix_micros(ts)", "div"),
+    oracle=_bounce_sql("(epoch_ns(ts) // 1000)", "//"),
+))
+
+
+def _session_dur_hist_sql(epoch_us_fn: str, idiv: str) -> str:
+    """Log2 histogram of session durations over the canonical
+    30-min-gap sessionization — bucket -1 holds single-instant
+    sessions (duration 0 s); floor(log2) on integer seconds is
+    boundary-exact in IEEE."""
+    return f"""
+WITH e AS (
+  SELECT user_id, event_id, {epoch_us_fn} AS t FROM events
+  WHERE ts IS NOT NULL AND user_id IS NOT NULL
+), g AS (
+  SELECT user_id, event_id, t,
+         CASE WHEN t - LAG(t) OVER (PARTITION BY user_id ORDER BY t, event_id)
+                   > 1800000000
+              OR LAG(t) OVER (PARTITION BY user_id ORDER BY t, event_id) IS NULL
+              THEN 1 ELSE 0 END AS new_s
+  FROM e
+), s AS (
+  SELECT user_id, event_id, t,
+         SUM(new_s) OVER (PARTITION BY user_id ORDER BY t, event_id
+                          ROWS UNBOUNDED PRECEDING) AS sid
+  FROM g
+), sess AS (
+  SELECT user_id, sid,
+         CAST(FLOOR((MAX(t) - MIN(t)) / 1000000.0) AS BIGINT) AS dur_s
+  FROM s GROUP BY user_id, sid
+)
+SELECT CASE WHEN dur_s = 0 THEN -1
+            ELSE CAST(FLOOR(LOG2(dur_s)) AS INTEGER) END AS dur_bucket_log2,
+       CAST(COUNT(*) AS BIGINT) AS n_sessions,
+       CAST(MAX(dur_s) AS BIGINT) AS max_dur_s
+FROM sess
+GROUP BY 1
+ORDER BY dur_bucket_log2
+"""
+
+
+UNREGISTERED_SPECS.append(QuerySpec(
+    name="events_session_duration_histogram_log2",
+    doc="Session-duration histogram in log2-second buckets (bucket -1 "
+        "= single-instant sessions) over the canonical 30-min-gap "
+        "sessionization, with the bucket max — the session-length "
+        "distribution the bounce rate summarizes at one point. "
+        "User-keyed windows; session- then bucket-scale aggregation.",
+    tags=("events", "session", "agg"),
+    sql=_session_dur_hist_sql("unix_micros(ts)", "div"),
+    oracle=_session_dur_hist_sql("(epoch_ns(ts) // 1000)", "//"),
+))
+
+
+def _hourly_p95_build(spark, sf):
+    # capacity-planning percentile: hourly event counts per type, then
+    # the exact interpolated p95 and max per type — "what load do we
+    # provision for" against "what have we seen". Hour-keyed then
+    # type-keyed aggregations; the percentile runs over the bounded
+    # hours-per-type relation.
+    ev = spark.table("events").filter(
+        F.col("ts").isNotNull() & F.col("event_type").isNotNull()
+    )
+    hourly = ev.groupBy(
+        "event_type", F.date_trunc("hour", "ts").alias("h")
+    ).agg(F.count(F.lit(1)).alias("n"))
+    return (
+        hourly.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_hours"),
+            F.max("n").cast("bigint").alias("max_hourly"),
+            F.round(F.expr("percentile(n, 0.95)"), 4).cast("double")
+            .alias("p95_hourly"),
+        )
+        .orderBy("event_type")
+    )
+
+
+UNREGISTERED_SPECS.append(QuerySpec(
+    name="events_hourly_load_p95_per_type",
+    doc="Per-type hourly load profile: active hours, max hourly count, "
+        "and the exact interpolated p95 hourly count — the capacity-"
+        "planning complement of the peak-to-mean load factor. Hour- "
+        "then type-keyed aggregations; percentile over the bounded "
+        "hours-per-type relation.",
+    tags=("events", "analytics", "agg"),
+    build=_hourly_p95_build,
+    oracle="""
+WITH hourly AS (
+  SELECT event_type, date_trunc('hour', ts) AS h, COUNT(*) AS n
+  FROM events
+  WHERE ts IS NOT NULL AND event_type IS NOT NULL
+  GROUP BY 1, 2
+)
+SELECT event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_hours,
+       CAST(MAX(n) AS BIGINT) AS max_hourly,
+       CAST(ROUND(quantile_cont(n, 0.95), 4) AS DOUBLE) AS p95_hourly
+FROM hourly
+GROUP BY event_type
+ORDER BY event_type
+""",
+))
+
+
+def _intersession_sql(epoch_us_fn: str, idiv: str) -> str:
+    """Return-gap profile: minutes BETWEEN a user's consecutive
+    sessions (canonical 30-min-gap sessionization), global count +
+    exact interpolated median/p90 — one row."""
+    q = ("percentile" if idiv == "div" else "quantile_cont")
+    return f"""
+WITH e AS (
+  SELECT user_id, event_id, {epoch_us_fn} AS t FROM events
+  WHERE ts IS NOT NULL AND user_id IS NOT NULL
+), g AS (
+  SELECT user_id, event_id, t,
+         CASE WHEN t - LAG(t) OVER (PARTITION BY user_id ORDER BY t, event_id)
+                   > 1800000000
+              OR LAG(t) OVER (PARTITION BY user_id ORDER BY t, event_id) IS NULL
+              THEN 1 ELSE 0 END AS new_s
+  FROM e
+), s AS (
+  SELECT user_id, t,
+         SUM(new_s) OVER (PARTITION BY user_id ORDER BY t, event_id
+                          ROWS UNBOUNDED PRECEDING) AS sid
+  FROM g
+), starts AS (
+  SELECT user_id, sid, MIN(t) AS t0 FROM s GROUP BY user_id, sid
+), gaps AS (
+  SELECT (t0 - LAG(t0) OVER (PARTITION BY user_id ORDER BY t0, sid))
+           {idiv} 60000000 AS gap_min
+  FROM starts
+)
+SELECT CAST(COUNT(gap_min) AS BIGINT) AS n_gaps,
+       CAST(ROUND({q}(gap_min, 0.5), 4) AS DOUBLE) AS median_gap_min,
+       CAST(ROUND({q}(gap_min, 0.9), 4) AS DOUBLE) AS p90_gap_min
+FROM gaps
+WHERE gap_min IS NOT NULL
+"""
+
+
+UNREGISTERED_SPECS.append(QuerySpec(
+    name="events_intersession_gap_stats",
+    doc="Return-gap profile: minutes between a user's consecutive "
+        "session STARTS over the canonical 30-min sessionization, "
+        "with exact interpolated median/p90 — the comeback-cadence "
+        "complement of inactivity churn (how long until users return, "
+        "not whether). User-keyed windows; session-scale after.",
+    tags=("events", "session", "agg"),
+    sql=_intersession_sql("unix_micros(ts)", "div"),
+    oracle=_intersession_sql("(epoch_ns(ts) // 1000)", "//"),
+))
+
+
+def _emb_dup_census_build(spark, sf):
+    # exact-duplicate vector census: grouping by the raw float array
+    # (bit-exact equality) — re-embedded or re-ingested duplicates
+    # inflate ANN neighborhoods and bias centroid fits; this is the
+    # one-row accounting a vector-store load should log. Array-keyed
+    # aggregation; always exactly one row.
+    d = spark.table("embeddings").filter(F.col("embedding").isNotNull())
+    grp = d.groupBy("embedding").agg(F.count(F.lit(1)).alias("n"))
+    # SUMs coalesced to 0: on an EMPTY table the census must still read
+    # all-zeros on both engines (the oracle coalesces identically)
+    return grp.agg(
+        F.coalesce(F.sum("n"), F.lit(0)).cast("bigint").alias("n_vectors"),
+        F.count(F.lit(1)).cast("bigint").alias("n_distinct"),
+        F.count(F.when(F.col("n") >= 2, 1)).cast("bigint")
+        .alias("n_dup_groups"),
+        F.coalesce(
+            F.sum(F.when(F.col("n") >= 2, F.col("n")).otherwise(0)), F.lit(0)
+        ).cast("bigint").alias("n_vecs_in_dup_groups"),
+        F.coalesce(F.max("n"), F.lit(0)).cast("bigint")
+        .alias("max_group_size"),
+    )
+
+
+UNREGISTERED_SPECS.append(QuerySpec(
+    name="embedding_exact_dup_census",
+    doc="Exact-duplicate vector census (bit-exact array grouping): "
+        "vectors, distinct vectors, duplicate groups, vectors inside "
+        "them, and the largest group — the vector-store load "
+        "accounting that catches re-embedded/re-ingested rows before "
+        "they bias ANN neighborhoods. Array-keyed aggregation, one "
+        "row always.",
+    tags=("llm", "embedding", "dedup"),
+    build=_emb_dup_census_build,
+    oracle="""
+WITH grp AS (
+  SELECT embedding, COUNT(*) AS n
+  FROM embeddings WHERE embedding IS NOT NULL
+  GROUP BY embedding
+)
+SELECT CAST(COALESCE(SUM(n), 0) AS BIGINT) AS n_vectors,
+       CAST(COUNT(*) AS BIGINT) AS n_distinct,
+       CAST(COUNT(CASE WHEN n >= 2 THEN 1 END) AS BIGINT) AS n_dup_groups,
+       CAST(COALESCE(SUM(CASE WHEN n >= 2 THEN n ELSE 0 END), 0) AS BIGINT)
+         AS n_vecs_in_dup_groups,
+       CAST(COALESCE(MAX(n), 0) AS BIGINT) AS max_group_size
+FROM grp
+""",
+))
