@@ -17,6 +17,9 @@ from transactional_datalake_using_amazon_datafirehose_iceberg_spark.operators.cd
     transform,
 )
 from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import LakeTable
+from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.lake_table import (
+    batch_watermark,
+)
 from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.iceberg_compat import (
     IcebergTable,
     configure_catalog,
@@ -381,8 +384,8 @@ def test_stamp_properties_merges_ledger_and_escapes():
 
 def test_manifest_shim_surfaces_stream_sink_txn(monkeypatch):
     """manifest() must surface the JSON ledger property into
-    summary['stream_sink_txn'] — without it, _ledger_hwm read -1
-    forever for any non-default app and replays re-applied stale
+    summary['stream_sink_txn'] — without it, the batch watermark read
+    -1 forever for any non-default app and replays re-applied stale
     batches on the native backend (review round 11)."""
     import json
 
@@ -395,7 +398,6 @@ def test_manifest_shim_surfaces_stream_sink_txn(monkeypatch):
                     return [
                         {"key": "stream_sink_txn",
                          "value": json.dumps({"backfill": 4})},
-                        {"key": "stream_batch_id", "value": "9"},
                     ]
 
             return _Res()
@@ -404,4 +406,4 @@ def test_manifest_shim_surfaces_stream_sink_txn(monkeypatch):
     monkeypatch.setattr(IcebergTable, "snapshots", lambda self: [])
     m = t.manifest()
     assert m["summary"]["stream_sink_txn"] == {"backfill": 4}
-    assert m["summary"]["stream_batch_id"] == "9"
+    assert batch_watermark(m["summary"], "backfill") == 4

@@ -15,9 +15,6 @@ import pytest
 from transactional_datalake_using_amazon_datafirehose_iceberg_spark.queries import (
     QUERY_SPECS,
 )
-from transactional_datalake_using_amazon_datafirehose_iceberg_spark.queries.extended import (
-    UNREGISTERED_SPECS,
-)
 from transactional_datalake_using_amazon_datafirehose_iceberg_spark.schemas import (
     FIXTURE_TABLES,
 )
@@ -167,15 +164,6 @@ def _assert_spec_matches(spark, ducked, spec):
 
 @pytest.mark.parametrize("spec", _ORACLE_SPECS, ids=[s.name for s in _ORACLE_SPECS])
 def test_query_matches_oracle(spark, ducked, spec):
-    _assert_spec_matches(spark, ducked, spec)
-
-
-@pytest.mark.parametrize(
-    "spec", UNREGISTERED_SPECS, ids=[s.name for s in UNREGISTERED_SPECS]
-)
-def test_staged_specs_match_oracle(spark, ducked, spec):
-    """Specs built outside the registry are held to the same oracle
-    check as the declared ones."""
     _assert_spec_matches(spark, ducked, spec)
 
 

@@ -12,6 +12,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import LakeTable
+from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.lake_table import (
+    batch_watermark,
+)
 from transactional_datalake_using_amazon_datafirehose_iceberg_spark.schemas import (
     DEAD_LETTER,
     RETAIL_TRANS,
@@ -32,6 +35,10 @@ from transactional_datalake_using_amazon_datafirehose_iceberg_spark.streaming.pi
     stateful_dedup,
     windowed_event_counts,
 )
+
+
+def _hwm(table, app_id: str = "default") -> int:
+    return batch_watermark(table.manifest()["summary"], app_id)
 
 
 @pytest.fixture()
@@ -68,7 +75,7 @@ def test_cdc_stream_end_to_end(spark, stream_env, tmp_path):
     assert table.read(spark).count() == 12
 
 
-def test_cdc_stream_batch_id_skip(spark, stream_env, tmp_path):
+def test_cdc_stream_replayed_batch_skip(spark, stream_env, tmp_path):
     """Replaying an already-applied batchId is a no-op (exactly-once)."""
     in_dir, table, dl, ckpt = stream_env
     p1, _ = write_golden_corpus(str(tmp_path / "gen"))
@@ -84,7 +91,7 @@ def test_cdc_stream_batch_id_skip(spark, stream_env, tmp_path):
 
 
 def test_batch_id_committed_atomically_with_data(spark, stream_env, tmp_path):
-    """The stream_batch_id watermark must land INSIDE the merge commit's
+    """The batch watermark must land INSIDE the merge commit's
     manifest (exclusive-create), never via a post-commit rewrite of the
     snapshot file — a crash between commit and a separate stamp write
     would corrupt the current snapshot."""
@@ -96,9 +103,9 @@ def test_batch_id_committed_atomically_with_data(spark, stream_env, tmp_path):
     m = table.manifest()
     # same manifest carries both the merge result and the watermark
     assert m["summary"]["operation"] == "merge"
-    assert m["summary"]["stream_batch_id"] == 7
+    assert batch_watermark(m["summary"], "default") == 7
     # and it is the manifest of the CURRENT version, written exactly once
-    assert pipe._last_applied_batch() == 7
+    assert _hwm(table) == 7
 
 
 def test_batch_id_survives_maintenance_and_dml(spark, stream_env, tmp_path):
@@ -113,22 +120,22 @@ def test_batch_id_survives_maintenance_and_dml(spark, stream_env, tmp_path):
     p1, _ = write_golden_corpus(str(tmp_path / "gen"))
     pipe = CdcStreamPipeline(table, "db", "tbl", dead_letter_table=dl)
     pipe.process_batch(spark.read.text(p1), 3)
-    assert pipe._last_applied_batch() == 3
+    assert _hwm(table) == 3
 
     # maintenance commit
     compact(spark, table, target_file_bytes=1 << 30)
-    assert pipe._last_applied_batch() == 3, "compact() erased the watermark"
+    assert _hwm(table) == 3, "compact() erased the watermark"
 
     # manual DML commit (append of a real row; empty appends are no-ops)
     v_before = table.current_version()
     table.append(table.read(spark).limit(1))
     assert table.current_version() == v_before + 1
-    assert pipe._last_applied_batch() == 3, "append() erased the watermark"
+    assert _hwm(table) == 3, "append() erased the watermark"
 
     # empty append: no-op, no empty snapshot, watermark intact
     table.append(table.read(spark).limit(0))
     assert table.current_version() == v_before + 1
-    assert pipe._last_applied_batch() == 3
+    assert _hwm(table) == 3
 
     # replay of batch 3 after maintenance is still a no-op
     v = table.current_version()
@@ -502,7 +509,7 @@ def test_lake_table_batch_sink_append_overwrite(spark, tmp_path):
 def test_lake_table_stream_sink_exactly_once_across_restart(spark, tmp_path):
     """writeStream.format('lake_table'): one atomic commit per
     micro-batch; a checkpoint restart must not replay committed batches
-    (stream_sink_batch_id ledger)."""
+    (per-app batch watermark)."""
     from pyspark.sql import types as T
 
     from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.lake_table import (
@@ -539,7 +546,7 @@ def test_lake_table_stream_sink_exactly_once_across_restart(spark, tmp_path):
 
     run()
     assert t.read(spark).count() == 50
-    assert t.manifest()["summary"]["stream_sink_batch_id"] == 0
+    assert _hwm(t) == 0
     # second source batch + restart from the same checkpoint: only the
     # new data lands, batch 0 is not replayed
     spark.sql(
@@ -547,7 +554,7 @@ def test_lake_table_stream_sink_exactly_once_across_restart(spark, tmp_path):
     ).coalesce(1).write.parquet(src + "/b2")
     run()
     assert t.read(spark).count() == 80
-    assert t.manifest()["summary"]["stream_sink_batch_id"] == 1
+    assert _hwm(t) == 1
     # idempotent end state: rerunning with nothing new changes nothing
     v = t.current_version()
     run()
@@ -660,6 +667,7 @@ def test_lake_table_sink_txn_ledger_survives_concurrent_commit(
     intact, and B's replay of batch 7 must stay a no-op."""
     from pyspark.sql import types as T
 
+    import transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.lake_table as lt
     import transactional_datalake_using_amazon_datafirehose_iceberg_spark.sources.lake_stream as ls
     from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.lake_table import (
         LakeTable,
@@ -672,18 +680,18 @@ def test_lake_table_sink_txn_ledger_survives_concurrent_commit(
     staging = "data/_staging-stream"
     os.makedirs(os.path.join(root, staging), exist_ok=True)
 
-    orig = ls._stream_txn_ledger
+    orig = lt.is_replay
     state = {"fired": False}
 
-    def interleave(summary):
-        led = orig(summary)
+    def interleave(summary, app_id, batch_id):
+        replay = orig(summary, app_id, batch_id)
         if not state["fired"]:
             state["fired"] = True
-            # app B commits between A's ledger snapshot and A's commit
+            # app B commits between A's ledger read and A's commit
             ls._driver_commit(root, staging, [], batch_id=7, app_id="B")
-        return led
+        return replay
 
-    monkeypatch.setattr(ls, "_stream_txn_ledger", interleave)
+    monkeypatch.setattr(lt, "is_replay", interleave)
     ls._driver_commit(root, staging, [], batch_id=0, app_id="A")
     assert t.manifest()["summary"]["stream_sink_txn"] == {"A": 0, "B": 7}
 
@@ -814,8 +822,7 @@ def test_lake_table_sink_batch_regression_fails_loudly(spark, tmp_path):
     for b in range(4):
         _driver_commit(root, staging, [], batch_id=b)
     assert t.manifest()["summary"]["stream_sink_txn"] == {"default": 3}
-    # legacy mirror maintained for the default app
-    assert t.manifest()["summary"]["stream_sink_batch_id"] == 3
+    assert _hwm(t) == 3
 
     with _pytest.raises(ValueError, match="txnAppId"):
         _driver_commit(root, staging, [_FileCommit(name="", rows=0)], batch_id=1)
@@ -837,35 +844,45 @@ def test_lake_table_sink_batch_regression_fails_loudly(spark, tmp_path):
     assert t.manifest()["summary"]["stream_sink_txn"]["appX"] == 3
 
 
-def test_lake_table_sink_legacy_scalar_ledger_migrates(spark, tmp_path):
-    """Tables written by the pre-r7 sink carry only the scalar
-    stream_sink_batch_id; the per-app ledger must read it as the
-    'default' app's watermark so restarts of the original query stay
-    exactly-once across the upgrade."""
-    from pyspark.sql import types as T
+def test_batch_ledger_policy_on_plain_summaries():
+    """The streaming ledger's read, replay decision, stamp and merge are
+    plain functions over a snapshot summary dict (no Spark)."""
+    import json
 
     from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.lake_table import (
-        LakeTable,
-    )
-    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.sources.lake_stream import (
-        _driver_commit,
+        batch_stamp,
+        is_replay,
+        merge_watermarks,
     )
 
-    root = str(tmp_path / "t")
-    t = LakeTable.create(
-        root, T.StructType([T.StructField("k", T.LongType())]), keys=["k"]
-    )
-    t.commit([], operation="append", extra_summary={"stream_sink_batch_id": 5})
-    staging = "data/_staging-stream"
-    os.makedirs(os.path.join(root, staging), exist_ok=True)
-    # replay of batch 5 no-ops; batch 6 advances both forms
-    v = t.current_version()
-    _driver_commit(root, staging, [], batch_id=5)
-    assert t.current_version() == v
-    _driver_commit(root, staging, [], batch_id=6)
-    s = t.manifest()["summary"]
-    assert s["stream_sink_txn"] == {"default": 6}
-    assert s["stream_sink_batch_id"] == 6
+    assert batch_watermark({}, "default") == -1
+    assert batch_watermark({"operation": "append"}, "a") == -1
+    s = {"stream_sink_txn": {"a": 3, "b": 9}}
+    assert batch_watermark(s, "a") == 3 and batch_watermark(s, "b") == 9
+    assert batch_watermark(s, "c") == -1
+    # apps are independent: b's high watermark never replays a's batches
+    assert is_replay(s, "a", 4) is False
+    assert is_replay(s, "c", 0) is False
+    # an explicit app at or below its watermark is a silent replay
+    assert is_replay(s, "a", 3) is True
+    assert is_replay(s, "b", 0) is True
+    # the implicit app: its last batch replays, anything below raises,
+    # with one message naming both writers' app-id settings
+    d = {"stream_sink_txn": {"default": 5}}
+    assert is_replay(d, "default", 5) is True
+    assert is_replay(d, "default", 6) is False
+    with pytest.raises(ValueError, match="app_id=") as exc:
+        is_replay(d, "default", 2)
+    assert "txnAppId" in str(exc.value)
+    # the stamp is one app's fragment; the merge is per-app max
+    assert batch_stamp("a", 7) == {"stream_sink_txn": {"a": 7}}
+    assert merge_watermarks({"a": 3, "b": 9}, {"a": 7, "b": 2, "c": 0}) == {
+        "a": 7, "b": 9, "c": 0,
+    }
+    # the JSON-decoded shape IcebergTable.manifest() surfaces reads alike
+    decoded = {"stream_sink_txn": json.loads(json.dumps({"a": 3, "b": 9}))}
+    assert batch_watermark(decoded, "b") == 9
+    assert is_replay(decoded, "a", 3) is True
 
 
 def test_lake_table_sink_files_carry_task_computed_blooms(spark, tmp_path):
@@ -1088,7 +1105,7 @@ def test_pipeline_fresh_checkpoint_fails_loudly(spark, stream_env, tmp_path):
     p1, p2 = write_golden_corpus(str(tmp_path / "gen"))
     pipe = CdcStreamPipeline(table, "db", "tbl", dead_letter_table=dl)
     pipe.process_batch(spark.read.text(p1), 7)
-    assert pipe._last_applied_batch() == 7
+    assert _hwm(table) == 7
 
     with pytest.raises(ValueError, match="app_id"):
         pipe.process_batch(spark.read.text(p2), 0)  # fresh checkpoint
@@ -1098,8 +1115,8 @@ def test_pipeline_fresh_checkpoint_fails_loudly(spark, stream_env, tmp_path):
     v = table.current_version()
     pipe2.process_batch(spark.read.text(p2), 0)
     assert table.current_version() > v  # applied, not skipped
-    assert pipe2._last_applied_batch() == 0
-    assert pipe._last_applied_batch() == 7  # implicit watermark intact
+    assert _hwm(table, "backfill") == 0
+    assert _hwm(table) == 7  # implicit watermark intact
 
 
 def test_pipeline_dead_letter_replay_idempotent(spark, stream_env, tmp_path):
@@ -1126,14 +1143,105 @@ def test_pipeline_dead_letter_replay_idempotent(spark, stream_env, tmp_path):
     # replaying the batch must not append the dead row again
     import transactional_datalake_using_amazon_datafirehose_iceberg_spark.streaming.pipeline as pl
 
-    orig = pl.CdcStreamPipeline._last_applied_batch
+    orig = pl.is_replay
     try:
-        pl.CdcStreamPipeline._last_applied_batch = lambda self: -1
+        pl.is_replay = lambda summary, app_id, batch_id: False
         pipe.process_batch(df, 0)  # full replay
     finally:
-        pl.CdcStreamPipeline._last_applied_batch = orig
+        pl.is_replay = orig
     assert dl.read(spark).count() == 1  # no duplicate dead rows
     assert table.read(spark).count() == 1  # merge replay idempotent too
+
+
+def _envelope(trans_id: int, ts: str, txn: int | None) -> str:
+    txn_field = "" if txn is None else f', "transaction-id": {txn}'
+    return (
+        f'{{"data": {{"trans_id": {trans_id}, "customer_id": "c", '
+        '"event": "e", "sku": "s", "amount": 2, "device": "pc", '
+        '"trans_datetime": "2023-01-16T06:00:00Z"}, '
+        f'"metadata": {{"timestamp": "{ts}", "record-type": "data", '
+        '"operation": "insert", "partition-key-type": "primary-key", '
+        f'"schema-name": "db", "table-name": "tbl"{txn_field}}}}}'
+    )
+
+
+def test_pipeline_crash_after_any_commit_replays_exactly_once(
+    spark, tmp_path, monkeypatch
+):
+    """A crash right after ANY durable commit of process_batch, followed
+    by a replay of the same batch id on a fresh pipeline object, ends in
+    exactly the state of an uncrashed run: main table, dead-letter table
+    and the app's watermark. One batch fires every commit the method
+    makes: the transform-dead dl append (a malformed line), the
+    no-ordering-evidence dl append (neither order column parses on a
+    stale-guard table) and the watermark-stamping MERGE."""
+    schema = T.StructType(
+        RETAIL_TRANS.fields
+        + [
+            T.StructField("_order_ts", T.TimestampType()),
+            T.StructField("_order_txn", T.LongType()),
+        ]
+    )
+    batch = spark.createDataFrame(
+        [
+            ("this is not json",),
+            (_envelope(1, "not-a-timestamp", None),),
+            (_envelope(2, "2023-01-16T06:00:00.000001Z", 5),),
+        ],
+        "value string",
+    )
+
+    def tables(name):
+        main = LakeTable.create(
+            str(tmp_path / name / "t"), schema, keys=RETAIL_TRANS_KEYS
+        )
+        dl = LakeTable.create(str(tmp_path / name / "dead"), DEAD_LETTER)
+        return main, dl
+
+    def state(main, dl):
+        return (
+            sorted(tuple(r) for r in main.read(spark).collect()),
+            sorted((r.raw, r.error_type) for r in dl.read(spark).collect()),
+            _hwm(main),
+        )
+
+    class Crash(Exception):
+        pass
+
+    real_commit = LakeTable.commit
+    commits = {"n": 0, "crash_after": None}
+
+    def crashing_commit(self, *args, **kwargs):
+        version = real_commit(self, *args, **kwargs)
+        commits["n"] += 1
+        if commits["n"] == commits["crash_after"]:
+            raise Crash(f"crash after commit {commits['n']}")
+        return version
+
+    monkeypatch.setattr(LakeTable, "commit", crashing_commit)
+
+    main, dl = tables("ref")
+    CdcStreamPipeline(main, "db", "tbl", dead_letter_table=dl).process_batch(
+        batch, 4
+    )
+    expected = state(main, dl)
+    n_commits = commits["n"]
+    assert n_commits == 3, "the batch must fire all three durable commits"
+    assert len(expected[0]) == 1 and len(expected[1]) == 2
+    assert expected[2] == 4
+
+    for k in range(1, n_commits + 1):
+        main, dl = tables(f"crash{k}")
+        commits.update(n=0, crash_after=k)
+        with pytest.raises(Crash):
+            CdcStreamPipeline(main, "db", "tbl", dead_letter_table=dl).process_batch(
+                batch, 4
+            )
+        commits["crash_after"] = None
+        CdcStreamPipeline(main, "db", "tbl", dead_letter_table=dl).process_batch(
+            batch, 4
+        )
+        assert state(main, dl) == expected, f"crash after commit {k}"
 
 
 def test_shared_dead_letter_table_scoped_per_pipeline(spark, tmp_path):

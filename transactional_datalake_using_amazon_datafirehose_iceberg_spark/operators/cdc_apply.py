@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plans.lake_table import LakeTable
+from ..plans.lake_table import LakeTable, append_once
 from ..plans.merge import merge_into
 from ..schemas import CDC_DATA_RETAIL
 
@@ -119,19 +119,16 @@ def apply_batch(
 
     ``dl_stamp``: optional ``(app_id, batch_id)`` exactly-once scope for
     the dl append (the streaming pipeline passes a ``#noev``-suffixed
-    per-pipeline key): the append commits a ``stream_sink_txn`` stamp
-    and a replayed batch at-or-below the watermark skips it — without
+    per-pipeline key), handed to ``lake_table.append_once``: a replayed
+    batch at or below the scope's watermark appends nothing — without
     the stamp a crash-restart cycle re-appended the rows once PER
-    replay, not the single documented duplicate (review round 12).
-    Backends without the stamping surface (no ``_write_files``) fall
-    back to a plain append: duplicated observability rows on replay,
-    never lost table rows.
+    replay (review round 12).
 
     ``extra_summary`` lands inside the atomic manifest commit — the
-    streaming pipeline uses it to stamp ``stream_batch_id`` with the
-    data (a post-commit rewrite of the manifest would break the
-    exclusive-create immutability contract and could corrupt the
-    current snapshot on crash).
+    streaming pipeline passes its ``batch_stamp`` so the watermark
+    commits with the data (a post-commit rewrite of the manifest would
+    break the exclusive-create immutability contract and could corrupt
+    the current snapshot on crash).
 
     Rows whose unique key is NULL (a ``data`` payload that parsed as JSON
     but carries no key — e.g. a foreign table's row) are dropped before
@@ -180,28 +177,9 @@ def apply_batch(
                     F.to_json(F.struct(*no_ev.columns)).alias("raw"),
                     F.lit("no-ordering-evidence").alias("error_type"),
                 )
-                shaped = to_dead_letter(dead_rows)
-                if dl_stamp is not None and hasattr(
-                    dead_letter_table, "_write_files"
-                ):
-                    dl_app, dl_bid = dl_stamp
-                    hwm = (
-                        dead_letter_table.manifest()["summary"]
-                        .get("stream_sink_txn", {})
-                        .get(dl_app)
-                    )
-                    if hwm is None or dl_bid > int(hwm):
-                        metas = dead_letter_table._write_files(shaped)
-                        if metas:
-                            dead_letter_table.commit(
-                                metas,
-                                operation="append",
-                                extra_summary={
-                                    "stream_sink_txn": {dl_app: dl_bid}
-                                },
-                            )
-                else:
-                    dead_letter_table.append(shaped)
+                append_once(
+                    dead_letter_table, to_dead_letter(dead_rows), dl_stamp
+                )
                 latest = latest.filter(~no_evidence)
 
         # NULL operation (malformed CDC metadata) is "not a delete" on

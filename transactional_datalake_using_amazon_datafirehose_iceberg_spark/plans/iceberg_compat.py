@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .lake_table import merge_watermarks
+
 CATALOG = "lakehouse"
 
 
@@ -137,14 +139,12 @@ class IcebergTable:
         """Minimal manifest shim (properties + summary) for callers that
         branch on table properties (e.g. write.delete.mode).
 
-        The streaming exactly-once watermarks are persisted as TABLE
-        PROPERTIES on this backend (``sql_merge`` stamps them after the
-        MERGE), so they are surfaced into ``summary`` here: the legacy
-        scalar ``stream_batch_id`` AND the per-app ``stream_sink_txn``
-        ledger (JSON-encoded property; review round 11 — without the
-        ledger, ``CdcStreamPipeline._ledger_hwm`` read hwm=-1 forever
-        for any non-default app_id and checkpoint replays re-applied
-        stale batches on the native backend)."""
+        The streaming exactly-once ledger is persisted as a TABLE
+        PROPERTY on this backend (``sql_merge`` stamps it after the
+        MERGE), so it is surfaced into ``summary`` here, JSON-decoded,
+        where ``lake_table.batch_watermark`` reads it (review round 11 —
+        without it the watermark read -1 forever and checkpoint replays
+        re-applied stale batches on the native backend)."""
         import json as _json
 
         props = {
@@ -153,15 +153,13 @@ class IcebergTable:
         }
         snaps = self.snapshots()
         summary = dict(snaps[-1].get("summary", {})) if snaps else {}
-        if "stream_batch_id" in props:
-            summary.setdefault("stream_batch_id", props["stream_batch_id"])
         if "stream_sink_txn" in props:
             try:
                 summary.setdefault(
                     "stream_sink_txn", _json.loads(props["stream_sink_txn"])
                 )
             except (ValueError, TypeError):
-                pass  # unreadable ledger property: fall back to scalar
+                pass  # unreadable ledger property: no watermark
         return {
             "version": snaps[-1]["version"] if snaps else 0,
             "properties": props,
@@ -384,7 +382,7 @@ class IcebergTable:
         per delivery (routed upsert/delete by unique key). ``merge_into``
         dispatches here when the target is an IcebergTable.
 
-        ``extra_summary`` (the streaming ``stream_batch_id`` watermark)
+        ``extra_summary`` (the streaming ledger's ``batch_stamp``)
         is persisted as TABLE PROPERTIES immediately after the MERGE —
         previously it was silently dropped, leaving the pipeline's
         replay guard inert on this backend (a checkpoint-replayed batch
@@ -448,7 +446,7 @@ class IcebergTable:
         """Persist watermark metadata as table properties.
 
         Dict values (the per-app ``stream_sink_txn`` ledger) are merged
-        per key against the live property (max wins — the
+        per key against the live property (``merge_watermarks``, the
         ``_commit_once`` discipline) and JSON-encoded; naive f-string
         interpolation of a dict produced unparseable SQL whose failure
         AFTER the MERGE crashed the stream, and on restart the
@@ -468,18 +466,13 @@ class IcebergTable:
                             f"SHOW TBLPROPERTIES {self.identifier}"
                         ).collect()
                     }
-                merged = {}
+                head = {}
                 if k in live:
                     try:
-                        merged = dict(_json.loads(live[k]))
+                        head = dict(_json.loads(live[k]))
                     except (ValueError, TypeError):
-                        merged = {}
-                for app, bid in v.items():
-                    prev = merged.get(app)
-                    merged[app] = (
-                        max(int(prev), int(bid)) if prev is not None else int(bid)
-                    )
-                v = _json.dumps(merged, sort_keys=True)
+                        head = {}
+                v = _json.dumps(merge_watermarks(head, v), sort_keys=True)
             sv = _sql_str_literal(v)
             sk = _sql_str_literal(k)
             parts.append(f"'{sk}'='{sv}'")

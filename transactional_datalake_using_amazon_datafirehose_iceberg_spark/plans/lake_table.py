@@ -440,20 +440,127 @@ class DanglingDeleteRefs(CommitConflict):
     so callers' re-plan paths engage unchanged."""
 
 
+# ---------------------------------------------------------------------------
+# Streaming exactly-once ledger. Every streaming writer (the foreachBatch
+# CDC pipeline, its dead-letter appends and the lake_table stream sink)
+# records the batch it commits in ONE snapshot-summary entry,
+# ``stream_sink_txn`` = {app id: last committed batch id}, inside the
+# same atomic commit as the batch's data. Modeled on Delta's
+# txnAppId/txnVersion idempotent-write contract: each app id owns its
+# watermark, so a query under its own app id (fresh checkpoint, batch
+# ids from 0) is never mistaken for a replay of another's batches.
+# Writers that share an app id share its watermark; the pipeline and
+# the sink both default to the implicit "default" app. Every commit
+# carries the entry forward (``_carried_summary``), so maintenance and
+# DDL between batches never erase the replay guard. This section is
+# the only code that knows the entry's format and the replay policy.
+# ---------------------------------------------------------------------------
+_TXN_KEY = "stream_sink_txn"
+DEFAULT_APP_ID = "default"
+
+
+def batch_watermark(summary: dict, app_id: str) -> int:
+    """``app_id``'s last committed batch id in a snapshot summary, or -1
+    when it has committed none. Reads the on-disk summary and the
+    JSON-decoded one ``IcebergTable.manifest()`` surfaces alike."""
+    hwm = summary.get(_TXN_KEY, {}).get(app_id)
+    return -1 if hwm is None else int(hwm)
+
+
+def is_replay(summary: dict, app_id: str, batch_id: int) -> bool:
+    """True when ``batch_id`` already committed for ``app_id`` (at or
+    below its watermark): the writer drops the batch whole.
+
+    An explicit app id owns its uniqueness, so any id at or below the
+    watermark is a legitimate replay (e.g. a checkpoint restored from
+    backup). The implicit ``"default"`` app is shared by every anonymous
+    writer, and a restarted query replays at most its last batch: an id
+    strictly below the watermark means a NEW query is writing
+    anonymously, and dropping its batches as replays would lose data
+    silently, so that raises instead."""
+    hwm = batch_watermark(summary, app_id)
+    if app_id == DEFAULT_APP_ID and 0 <= batch_id < hwm:
+        raise ValueError(
+            f"batch {batch_id} is below the implicit app's committed "
+            f"watermark {hwm}. A restarted query replays at most its "
+            "last batch; a far-regressed id means a NEW query (fresh "
+            "checkpoint) is writing anonymously to this table, and "
+            "treating its batches as replays would silently drop data. "
+            "Give each independent writer its own app id: "
+            "CdcStreamPipeline(..., app_id=...) or the lake_table "
+            "sink's .option('txnAppId', ...)."
+        )
+    return batch_id <= hwm
+
+
+def batch_stamp(app_id: str, batch_id: int) -> dict:
+    """The ``extra_summary`` fragment that records ``batch_id`` for
+    ``app_id`` in the commit carrying the batch's data. ``commit``
+    merges it into the head's ledger (``merge_watermarks``), so one
+    app's stamp never regresses another's watermark."""
+    return {_TXN_KEY: {app_id: batch_id}}
+
+
+def merge_watermarks(head: dict, stamp: dict) -> dict:
+    """Per-app max of two ledgers. Watermarks only advance, so the max
+    over (freshly re-read head, this commit's stamp) is exact even when
+    another app committed between this writer's ledger read and its
+    commit."""
+    merged = {str(k): int(v) for k, v in head.items()}
+    for k, v in stamp.items():
+        merged[str(k)] = max(int(v), merged.get(str(k), int(v)))
+    return merged
+
+
+def append_once(table, df: DataFrame, scope: tuple[str, int] | None) -> None:
+    """Append ``df`` to ``table`` at most once per ``scope`` =
+    ``(app_id, batch_id)``: the streaming dead-letter appends, which
+    commit before the batch's watermark-stamping MERGE and so replay
+    after a crash in between. Rows and stamp land in one commit; a
+    replayed scope commits nothing, and neither does an empty frame
+    (replaying zero rows is trivially idempotent).
+
+    ``scope=None`` is a plain append. So is a backend without the
+    stamping surface (``IcebergTable`` has no ``_write_files``): there a
+    crash-replay may duplicate dead-letter rows, which are observability
+    rows, never lost table rows."""
+    if scope is None or not hasattr(table, "_write_files"):
+        table.append(df)
+        return
+    app_id, batch_id = scope
+    if is_replay(table.manifest()["summary"], app_id, batch_id):
+        return
+    metas = table._write_files(df)
+    if metas:
+        table.commit(
+            metas, operation="append",
+            extra_summary=batch_stamp(app_id, batch_id),
+        )
+
+
+def _carried_summary(summary: dict, keys_unique: bool) -> dict:
+    """Summary entries a new snapshot inherits from its parent: the
+    streaming ledger always, ``keys_unique`` only when the caller says
+    the commit cannot break key uniqueness."""
+    carried = {_TXN_KEY: summary[_TXN_KEY]} if _TXN_KEY in summary else {}
+    if keys_unique and summary.get("keys_unique") is True:
+        carried["keys_unique"] = True
+    return carried
+
+
+def _live_rows(files: list[dict], delete_files: list[dict]) -> int:
+    """Delete-aware live-row count from manifest entries, no scan: data
+    rows minus position-delete rows (exact because the delete set is
+    kept dangling-free and deduplicated). Pending EQUALITY deletes are
+    not subtracted (their match count needs a scan), so the count is
+    then an upper bound, as with Iceberg's record_count."""
+    return sum(f["rows"] for f in files) - sum(
+        d["rows"] for d in delete_files if d.get("kind", "position") != "equality"
+    )
+
+
 class LakeTable:
     """A snapshot-versioned Parquet table rooted at a directory."""
-
-    # summary keys carried forward across commits unless overridden
-    # (streaming exactly-once watermark must survive compaction/DML)
-    # stream_batch_id: foreachBatch CDC pipeline high-watermark;
-    # stream_sink_txn: the Python Data Source append sink's per-app
-    # exactly-once ledger ({txnAppId: last batchId}; the scalar
-    # stream_sink_batch_id is its pre-r7 legacy mirror for the
-    # "default" app) — independent keys so the two streaming write
-    # mechanisms never replay-guard each other
-    _CARRY_SUMMARY_KEYS = (
-        "stream_batch_id", "stream_sink_batch_id", "stream_sink_txn",
-    )
 
     # operations that cannot introduce a duplicate key into a table that
     # had none: row removal (delete/delete-eq), row-preserving rewrites
@@ -1284,11 +1391,12 @@ class LakeTable:
         via ``_KU_PRESERVING_OPS``). ``update_where`` passes False when
         an assignment targets a key column.
 
-        Watermark keys (``stream_batch_id``) are carried forward from the
-        parent summary unless the caller overrides them: a maintenance
-        compaction or manual DML between stream batches must not erase
-        the exactly-once replay guard (a checkpoint-replayed batch would
-        otherwise re-apply stale after-images over newer data).
+        The streaming ledger (``batch_stamp``) is carried forward from
+        the parent summary and a caller's stamp is merged into it: a
+        maintenance compaction or manual DML between stream batches must
+        not erase the exactly-once replay guard (a checkpoint-replayed
+        batch would otherwise re-apply stale after-images over newer
+        data).
 
         Merge-on-read bookkeeping: ``added_deletes`` registers position-
         delete files; delete entries are carried forward, minus
@@ -1437,11 +1545,6 @@ class LakeTable:
             kept_deletes = self._prune_dangling_deletes(kept_deletes, removed)
         delete_files = kept_deletes + list(added_deletes or [])
 
-        carried = {
-            k: cur["summary"][k]
-            for k in self._CARRY_SUMMARY_KEYS
-            if k in cur.get("summary", {})
-        }
         # keys_unique is carried only through commits that cannot break
         # it; anything else drops it to unknown (absent). The changelog
         # reader falls back to its per-diff uniqueness probe when either
@@ -1452,27 +1555,20 @@ class LakeTable:
             if preserves_key_uniqueness is None
             else preserves_key_uniqueness
         )
-        if cur["keys"] and preserves and cur["summary"].get("keys_unique") is True:
-            carried["keys_unique"] = True
-        # Per-app stream-sink ledger: MERGE, never overwrite. The caller
-        # snapshotted the ledger before building extra_summary; a
-        # concurrently-committing app (or a commit this retry loop lost
-        # the pointer race to) may have advanced ITS watermark in
-        # between, and carrying the caller's stale full dict forward
-        # would regress the victim's watermark — a replayed micro-batch
-        # would then pass the replay guard and commit twice. Watermarks
-        # only ever advance, so per-app max over (fresh head, caller
-        # delta) is exact; ``cur`` is re-read on every optimistic-retry
-        # attempt, making the merge race-free under the
-        # exclusive-create commit protocol.
+        carried = _carried_summary(
+            cur.get("summary", {}), bool(cur["keys"]) and preserves
+        )
+        # Streaming ledger: MERGE the caller's stamp, never overwrite.
+        # Another app (or a commit this retry loop lost the pointer race
+        # to) may have advanced ITS watermark since the caller read the
+        # ledger; ``cur`` is re-read on every optimistic-retry attempt,
+        # so the per-app max is race-free under the exclusive-create
+        # commit protocol.
         extra_summary = dict(extra_summary or {})
-        if "stream_sink_txn" in extra_summary and "stream_sink_txn" in carried:
-            merged = {
-                str(k): int(v) for k, v in carried["stream_sink_txn"].items()
-            }
-            for k, v in extra_summary["stream_sink_txn"].items():
-                merged[str(k)] = max(int(v), merged.get(str(k), int(v)))
-            extra_summary["stream_sink_txn"] = merged
+        if _TXN_KEY in extra_summary and _TXN_KEY in carried:
+            extra_summary[_TXN_KEY] = merge_watermarks(
+                carried[_TXN_KEY], extra_summary[_TXN_KEY]
+            )
         manifest = {
             "version": version,
             "parent": cur["version"],
@@ -1492,16 +1588,7 @@ class LakeTable:
                 "operation": operation,
                 "added_files": len(added),
                 "removed_files": len(removed),
-                # total_rows is exact under position deletes; pending
-                # EQUALITY deletes make it an upper bound (their match
-                # count is unknown without a scan — same caveat as
-                # Iceberg's record_count with eq-deletes)
-                "total_rows": sum(f["rows"] for f in files)
-                - sum(
-                    d["rows"]
-                    for d in delete_files
-                    if d.get("kind", "position") != "equality"
-                ),
+                "total_rows": _live_rows(files, delete_files),
                 **(
                     {
                         "position_delete_files": len(
@@ -1996,18 +2083,11 @@ class LakeTable:
         return df.drop("__meta_file_path", "__meta_row_index")
 
     def row_count(self, version: int | None = None) -> int:
-        """Exact row count from manifest stats — no scan (Iceberg parity).
-        With merge-on-read position deletes: data rows − delete rows
-        (exact because the delete set is kept dangling-free and
-        deduplicated). Pending EQUALITY deletes are not subtracted (their
-        match count needs a scan) — the result is then an upper bound,
-        as with Iceberg's record_count."""
+        """Row count from manifest stats, no scan (Iceberg parity): the
+        delete-aware ``_live_rows``, an upper bound while EQUALITY
+        deletes are pending."""
         m = self.manifest(version)
-        return sum(f["rows"] for f in m["files"]) - sum(
-            d["rows"]
-            for d in m.get("delete_files", [])
-            if d.get("kind", "position") != "equality"
-        )
+        return _live_rows(m["files"], m.get("delete_files", []))
 
     def changelog(
         self,
@@ -2838,11 +2918,6 @@ class LakeTable:
             if c not in names:
                 raise ValueError(f"no such column: {c}")
         version = self._next_version()
-        carried = {
-            k: cur["summary"][k]
-            for k in (*self._CARRY_SUMMARY_KEYS, "keys_unique")
-            if k in cur.get("summary", {})
-        }
         manifest = {
             **cur,
             "version": version,
@@ -2851,15 +2926,10 @@ class LakeTable:
             "summary": {
                 "operation": "set-cluster-by",
                 "cluster_by": ",".join(cols),
-                "total_rows": sum(f["rows"] for f in cur["files"])
-                # position deletes only — equality deletes need a scan
-                # to count matches (same contract as row_count)
-                - sum(
-                    d["rows"]
-                    for d in cur.get("delete_files", [])
-                    if d.get("kind", "position") != "equality"
+                "total_rows": _live_rows(
+                    cur["files"], cur.get("delete_files", [])
                 ),
-                **carried,
+                **_carried_summary(cur.get("summary", {}), True),
             },
             "created": _dt.datetime.now(_dt.timezone.utc).isoformat(),
         }
@@ -2907,13 +2977,6 @@ class LakeTable:
                 f"derived from v{cur['version']}; re-read and retry"
             )
         version = self._next_version()
-        # schema evolution is row-preserving and key columns cannot be
-        # dropped, so keys_unique survives alongside the stream watermark
-        carried = {
-            k: cur["summary"][k]
-            for k in (*self._CARRY_SUMMARY_KEYS, "keys_unique")
-            if k in cur.get("summary", {})
-        }
         manifest = {
             **cur,
             **(manifest_updates or {}),
@@ -2928,15 +2991,12 @@ class LakeTable:
             "schema_v": cur.get("schema_v", 0) + 1,
             "summary": {
                 **summary,
-                "total_rows": sum(f["rows"] for f in cur["files"])
-                # position deletes only — equality deletes need a scan
-                # to count matches (same contract as row_count)
-                - sum(
-                    d["rows"]
-                    for d in cur.get("delete_files", [])
-                    if d.get("kind", "position") != "equality"
+                "total_rows": _live_rows(
+                    cur["files"], cur.get("delete_files", [])
                 ),
-                **carried,
+                # schema evolution is row-preserving and key columns
+                # cannot be dropped, so keys_unique survives too
+                **_carried_summary(cur.get("summary", {}), True),
             },
             "created": _dt.datetime.now(_dt.timezone.utc).isoformat(),
         }

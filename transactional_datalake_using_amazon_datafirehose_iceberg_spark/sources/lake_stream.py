@@ -380,8 +380,9 @@ class _LakeStreamReader(DataSourceStreamReader):
 # leave stray files in staging; commit() renames only message-listed
 # files into the final commit dir and deletes the staging dir, so
 # orphans never reach a manifest. Streaming commits are exactly-once:
-# each batch records stream_sink_batch_id in the summary and a replayed
-# batch (restart from checkpoint) is dropped whole.
+# each batch stamps its txnAppId's watermark into the commit through the
+# lake_table streaming ledger, and a replayed batch (restart from
+# checkpoint) is dropped whole.
 #
 # Semantics: APPEND (the Firehose-delivery shape). Keyed MERGE apply
 # stays in the foreachBatch pipeline (streaming/pipeline.py) where the
@@ -488,23 +489,6 @@ class _ArrowFileWriter:
         return _FileCommit(name=name, rows=rows, blooms=blooms)
 
 
-def _stream_txn_ledger(summary: dict) -> dict[str, int]:
-    """Per-app exactly-once ledger {txnAppId: last committed batchId}.
-
-    Modeled on Delta's public txnAppId/txnVersion idempotent-write
-    contract: two different streaming queries writing the same table
-    get independent watermarks, so a NEW query with a fresh checkpoint
-    (batch ids restart at 0) is never mistaken for a replay of an OLD
-    query's committed batches. Legacy tables that only carry the
-    pre-r7 scalar ``stream_sink_batch_id`` migrate as the ledger of
-    the implicit "default" app."""
-    led = summary.get("stream_sink_txn")
-    if led is not None:
-        return {str(k): int(v) for k, v in led.items()}
-    legacy = summary.get("stream_sink_batch_id")
-    return {} if legacy is None else {"default": int(legacy)}
-
-
 def _driver_commit(root: str, staging_rel: str, messages, *,
                    overwrite: bool = False, batch_id: int | None = None,
                    app_id: str = "default",
@@ -514,57 +498,33 @@ def _driver_commit(root: str, staging_rel: str, messages, *,
     scale). Streaming replays — a restart re-running the last in-flight
     batch, or a restored-from-backup checkpoint re-running older
     already-committed batches — are dropped whole (staged files
-    deleted) via the per-app stream_sink_txn ledger: any batch at or
-    below the app's watermark is an idempotent replay under Delta's
-    txnAppId/txnVersion contract, where the USER owns app-id
-    uniqueness. Only the implicit "default" app fails loudly on a
-    regressed batch id, because anonymous queries colliding there are
-    indistinguishable from silent data loss. Only message-listed
+    deleted) by ``lake_table.is_replay`` on the app's watermark; the
+    implicit "default" app fails loudly on a far-regressed batch id.
+    A committed batch carries its ``batch_stamp``. Only message-listed
     files ever leave staging; stray files from failed/speculative task
     attempts are age-swept by expire_snapshots' staging retention."""
     import uuid as _uuid
 
-    from ..plans.lake_table import LakeTable, _DATA_DIR
+    from ..plans.lake_table import (
+        LakeTable,
+        _DATA_DIR,
+        batch_stamp,
+        is_replay,
+    )
 
     table = LakeTable.load(root)
     staging_abs = os.path.join(root, staging_rel)
     names = sorted({m.name for m in messages if m is not None and m.name})
     extra = None
     if batch_id is not None:
-        ledger = _stream_txn_ledger(table.manifest()["summary"])
-        hwm = ledger.get(app_id)
-        if hwm is not None and batch_id < int(hwm) and app_id == "default":
-            # ANONYMOUS queries share the implicit app: a far-regressed
-            # batch id here means a NEW query (fresh checkpoint) whose
-            # early batches would be silently dropped as replays —
-            # data loss, so fail loudly. With an EXPLICIT txnAppId the
-            # user owns app-id uniqueness (Delta's txnAppId/txnVersion
-            # contract) and any id at-or-below the watermark is a
-            # legitimate idempotent replay — e.g. a checkpoint restored
-            # from backup re-running already-committed batches — and is
-            # skipped silently below.
-            raise ValueError(
-                f"lake_table sink: batch {batch_id} is below the "
-                f"implicit app's committed watermark {hwm}. A restarted "
-                "query replays at most its last batch; a far-regressed "
-                "id means a NEW query (fresh checkpoint) is writing "
-                "anonymously to this table, and treating its first "
-                "batches as replays would silently drop data. Give "
-                "each independent query its own "
-                ".option('txnAppId', ...)."
-            )
-        if hwm is not None and batch_id <= int(hwm):
+        if is_replay(table.manifest()["summary"], app_id, batch_id):
             for n in names:  # replayed batch: drop its staged output
                 try:
                     os.remove(os.path.join(staging_abs, n))
                 except FileNotFoundError:
                     pass
             return
-        ledger[app_id] = batch_id
-        extra = {"stream_sink_txn": ledger}
-        if app_id == "default":
-            # mirror the legacy scalar so pre-r7 readers keep working
-            extra["stream_sink_batch_id"] = batch_id
+        extra = batch_stamp(app_id, batch_id)
     if not names:
         if overwrite:
             # overwrite with an empty frame must still EMPTY the table
@@ -703,7 +663,7 @@ class _LakeStreamWriter(DataSourceStreamArrowWriter):
     """Streaming append sink: one staging dir per query (batches are
     sequential within a query; unique file names keep attempts apart),
     one atomic LakeTable commit per micro-batch, exactly-once via the
-    stream_sink_batch_id summary ledger."""
+    txnAppId's watermark in the lake_table streaming ledger."""
 
     def __init__(self, root: str, schema: T.StructType,
                  app_id: str = "default", overwrite: bool = False):

@@ -9,11 +9,11 @@ foreachBatch:
     latest-per-key collapse (D4) -> MERGE INTO (S7/D1-D3)
 
 Exactly-once: Structured Streaming checkpointing gives at-least-once
-foreachBatch invocations; the batchId high-watermark stored in the
-table's snapshot summary makes the apply idempotent (a replayed batch
-is skipped), and the MERGE itself is idempotent by key on top of that
-(reference analogue: 3 Firehose retries, firehose_to_iceberg.py:52-54,
-must not duplicate).
+foreachBatch invocations; the per-app batch watermark in the table's
+snapshot summary (the ``lake_table`` streaming ledger) makes the apply
+idempotent (a replayed batch is skipped), and the MERGE itself is
+idempotent by key on top of that (reference analogue: 3 Firehose
+retries, firehose_to_iceberg.py:52-54, must not duplicate).
 """
 
 from __future__ import annotations
@@ -23,7 +23,14 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.cdc_apply import apply_batch, typed_rows
 from ..operators.cdc_transform import to_dead_letter, transform
-from ..plans.lake_table import LakeTable
+from ..plans.lake_table import (
+    DEFAULT_APP_ID,
+    CommitConflict,
+    LakeTable,
+    append_once,
+    batch_stamp,
+    is_replay,
+)
 from ..sources.cdc_jsonl import read_cdc_stream
 
 
@@ -34,7 +41,7 @@ class CdcStreamPipeline:
         destination_database: str,
         destination_table: str,
         dead_letter_table: LakeTable | None = None,
-        app_id: str = "default",
+        app_id: str = DEFAULT_APP_ID,
     ):
         self.table = table
         self.db = destination_database
@@ -42,7 +49,8 @@ class CdcStreamPipeline:
         self.dead_letter_table = dead_letter_table
         # per-app watermark scoping (the data-source sink's txnAppId
         # contract): a second pipeline or a FRESH checkpoint restarting
-        # batch ids at 0 must not collide with this pipeline's watermark
+        # batch ids at 0 must not collide with this pipeline's watermark;
+        # the sink's implicit app is the same "default" watermark
         self.app_id = app_id
         if dead_letter_table is None:
             import warnings
@@ -54,18 +62,6 @@ class CdcStreamPipeline:
                 "to retain them",
                 stacklevel=2,
             )
-
-    # -- exactly-once bookkeeping ------------------------------------------
-    @staticmethod
-    def _ledger_hwm(table: LakeTable, app_id: str) -> int:
-        s = table.manifest()["summary"]
-        hwm = s.get("stream_sink_txn", {}).get(app_id)
-        if hwm is None and app_id == "default":
-            hwm = s.get("stream_batch_id")  # pre-ledger tables
-        return int(hwm) if hwm is not None else -1
-
-    def _last_applied_batch(self) -> int:
-        return self._ledger_hwm(self.table, self.app_id)
 
     @property
     def _dl_app_id(self) -> str:
@@ -91,87 +87,43 @@ class CdcStreamPipeline:
         return f"{self.app_id}@{ident}"
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch body. Skips batches at or below the applied
-        high-watermark (idempotent under checkpoint replay).
+        """foreachBatch body. Skips batches at or below this app's
+        watermark (``lake_table.is_replay``: idempotent under checkpoint
+        replay; a far-regressed id under the implicit app raises).
 
-        The batch-id watermark is committed ATOMICALLY with the data:
-        ``apply_batch`` threads ``stream_batch_id`` into the manifest's
-        summary inside the exclusive-create commit. (An earlier version
-        re-opened and rewrote the committed manifest in place — a crash
-        mid-rewrite could truncate the CURRENT snapshot file, exactly the
-        window exactly-once exists to close.) ``LakeTable.commit`` then
-        carries the watermark forward across later compaction/DML
-        commits so the replay guard survives table maintenance.
+        The watermark is committed ATOMICALLY with the data:
+        ``apply_batch`` threads this app's ``batch_stamp`` into the
+        MERGE's manifest summary inside the exclusive-create commit.
+        (An earlier version re-opened and rewrote the committed manifest
+        in place — a crash mid-rewrite could truncate the CURRENT
+        snapshot file, exactly the window exactly-once exists to close.)
+        ``LakeTable.commit`` then carries the watermark forward across
+        later compaction/DML commits so the replay guard survives table
+        maintenance. The dead-letter appends commit BEFORE that MERGE,
+        so each stamps the dead-letter table under its own scope
+        (``lake_table.append_once``) and a crash-replay never appends
+        the same dead rows twice.
 
         The micro-batch is cached first: the dead-letter write and the
         MERGE's two passes (touched-file semi-join + rewrite) would
         otherwise re-read the source three times — 3x read amplification
         per delivery buffer at scale (observed via the delivery log:
         numInputRows was 3x the batch size before caching)."""
-        hwm = self._last_applied_batch()
-        if self.app_id == "default" and 0 <= batch_id < hwm:
-            # anonymous pipelines share the implicit app: a far-regressed
-            # batch id means a FRESH checkpoint restarted ids at 0, and
-            # treating its batches as replays would silently drop new
-            # data forever (review round 10) — the data-source sink's
-            # txnAppId contract, applied here
-            raise ValueError(
-                f"CdcStreamPipeline: batch {batch_id} is below the "
-                f"implicit app's committed watermark {hwm}. A restarted "
-                "query replays at most its last batch; a far-regressed id "
-                "means a NEW checkpoint is writing anonymously to this "
-                "table. Give each independent pipeline its own "
-                "app_id=... (per-app watermarks never collide)."
-            )
-        if batch_id <= hwm:
+        if is_replay(self.table.manifest()["summary"], self.app_id, batch_id):
             return
         batch_df = batch_df.cache()
         try:
             good, dead = transform(batch_df, self.db, self.tbl)
             if self.dead_letter_table is not None:
-                # dead-letter idempotency: the dl append commits BEFORE
-                # the watermark-stamping merge, so a crash in between
-                # replays the batch and used to append the same dead
-                # rows again — the dl table keeps its OWN per-app
-                # watermark; an empty dl write commits nothing and needs
-                # no stamp (replaying zero rows is trivially idempotent)
-                dl = self.dead_letter_table
-                # Only the scoped key is consulted: honoring a
-                # pre-scoping unscoped watermark would re-import the
-                # shared-dl-table collision (another pipeline's frozen
-                # high legacy value silently skipping this one's
-                # appends). Worst case of ignoring it is one duplicate
-                # dl append if a crash-replay straddles the upgrade —
-                # duplicated observability rows, never lost ones.
-                if batch_id > self._ledger_hwm(dl, self._dl_app_id):
-                    if hasattr(dl, "_write_files"):
-                        metas = dl._write_files(to_dead_letter(dead))
-                        if metas:
-                            dl.commit(
-                                metas,
-                                operation="append",
-                                extra_summary={
-                                    "stream_sink_txn": {
-                                        self._dl_app_id: batch_id
-                                    }
-                                },
-                            )
-                    else:
-                        # backend without the atomic-stamp surface
-                        # (IcebergTable shim): plain append — a crash-
-                        # replay may duplicate dl rows (observability
-                        # rows, never lost ones), but the pipeline works
-                        # on both backends (review round 12)
-                        dl.append(to_dead_letter(dead))
-            typed = typed_rows(good)
-            extra = {"stream_sink_txn": {self.app_id: batch_id}}
-            if self.app_id == "default":
-                # legacy scalar kept for pre-ledger readers
-                extra["stream_batch_id"] = batch_id
+                append_once(
+                    self.dead_letter_table,
+                    to_dead_letter(dead),
+                    (self._dl_app_id, batch_id),
+                )
             apply_batch(
                 self.table,
-                typed,
-                extra_summary=extra,
+                typed_rows(good),
+                extra_summary=batch_stamp(self.app_id, batch_id),
                 dead_letter_table=self.dead_letter_table,
                 # distinct scope from the transform-dead stamp above:
                 # both routes write the same batch id, and sharing one
@@ -182,7 +134,6 @@ class CdcStreamPipeline:
             # merge-on-read upkeep: fold accumulated position-delete
             # files back into data once past the reference's
             # optimize_rewrite_delete_file_threshold (README.md:307)
-            from ..plans.lake_table import CommitConflict
             from ..plans.maintenance import (
                 rewrite_delete_files,
                 should_rewrite_deletes,
