@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -18,6 +19,22 @@ SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.
 # without this export a full-suite run (harness default sf0.001) would
 # compare sf0.001 Spark results against sf0.01 oracle values.
 os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = SF_DIR_ORACLE
+
+
+def count_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn launched), counted under a fresh
+    job group. The status store is fed off the async listener bus, so
+    the bus is drained before counting; the group is cleared after so
+    later jobs fall back to no group."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def pytest_collection_modifyitems(config, items):

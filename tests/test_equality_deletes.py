@@ -15,6 +15,8 @@ from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.mainte
     rewrite_delete_files,
 )
 
+from conftest import count_jobs
+
 SCHEMA = T.StructType([
     T.StructField("k", T.LongType()),
     T.StructField("v", T.StringType()),
@@ -40,6 +42,17 @@ def test_delete_eq_is_metadata_only_and_applies_on_read(spark, tmp_path):
     assert _live(spark, t) == {1: "a", 3: "c"}
     m = t.manifest()
     assert m["summary"]["equality_delete_files"] == 1
+
+
+def test_read_plan_over_equality_deletes_launches_no_jobs(spark, tmp_path):
+    """Building the read plan takes each delete file's schema from its
+    footer in-process: no per-delete-file inference job."""
+    t = _mk(spark, tmp_path, [(1, "a"), (2, "b"), (3, "c")])
+    t.delete_eq([{"k": 2}])
+    t.delete_eq([{"k": 3}])
+    df, jobs = count_jobs(spark, lambda: t.read(spark))
+    assert jobs == 0
+    assert {r["k"]: r["v"] for r in df.collect()} == {1: "a"}
 
 
 def test_reinserted_key_survives_older_equality_delete(spark, tmp_path):

@@ -810,6 +810,36 @@ def test_bloom_distributed_and_driver_paths_bit_identical(
     assert manifests["distributed"] == manifests["driver"]
 
 
+def test_bloom_build_matches_plain_python_reference():
+    """The vectorized bit-setting reduces h1 and h2 mod m before the
+    uint64 arithmetic; the bitset must equal the plain big-int
+    (h1 + i*h2) % m loop for ints, strings, keys >= 10^12, canonicalized
+    floats and the 1024-bit floor."""
+    import base64
+
+    import transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.lake_table as lt
+
+    def reference(values):
+        m = max(1024, lt._BLOOM_BITS_PER_KEY * len(values))
+        m = (m + 7) // 8 * 8
+        bits = bytearray(m // 8)
+        for v in values:
+            h1, h2 = lt._bloom_hashes(v)
+            for i in range(lt._BLOOM_K):
+                b = (h1 + i * h2) % m
+                bits[b >> 3] |= 1 << (b & 7)
+        return {"m": m, "k": lt._BLOOM_K, "bits": base64.b64encode(bytes(bits)).decode()}
+
+    for values in (
+        set(range(22000)),
+        {f"cust-{i}" for i in range(5000)},
+        {10**12 + 7919 * i for i in range(3000)},
+        {2.0, 2.5, -3, "x"},
+        {42},
+    ):
+        assert lt._bloom_build(values) == reference(values)
+
+
 def test_bloom_mor_delete_prunes_candidate_files(spark, table):
     """delete_by_keys_mor collects its (micro-batch-scale) key set and
     lets the bloom prune the candidate scan; deletes still land."""

@@ -61,10 +61,13 @@ _COMMIT_TL = _threading.local()
 from dataclasses import dataclass
 from typing import Any, Iterable
 
+import numpy as np
 import pyarrow.parquet as _pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..schemas import read_parquet
 
 _SNAPSHOT_DIR = "_snapshots"
 _CURRENT = "_current"
@@ -167,15 +170,25 @@ def _bloom_hashes_cached(s: str) -> tuple[int, int]:
 
 
 def _bloom_build(values: set) -> dict:
+    """Sets bit (h1 + i*h2) % m for each value and each i < k. Vectorized
+    over values (the in-process commit path builds up to 65,536 keys):
+    h1 and h2 are reduced mod m per value first, so the uint64
+    (h1 % m + i*(h2 % m)) % m is the same bit and stays far below 2^64.
+    A test pins the bitset against the plain big-int loop."""
     m_bits = max(1024, _BLOOM_BITS_PER_KEY * len(values))
     m_bits = (m_bits + 7) // 8 * 8
-    bits = bytearray(m_bits // 8)
-    for v in values:
-        h1, h2 = _bloom_hashes(v)
-        for i in range(_BLOOM_K):
-            b = (h1 + i * h2) % m_bits
-            bits[b >> 3] |= 1 << (b & 7)
-    return {"m": m_bits, "k": _BLOOM_K, "bits": base64.b64encode(bytes(bits)).decode()}
+    m = np.uint64(m_bits)
+    hs = [_bloom_hashes(v) for v in values]
+    h1 = np.fromiter((a % m_bits for a, _ in hs), np.uint64, len(hs))
+    h2 = np.fromiter((b % m_bits for _, b in hs), np.uint64, len(hs))
+    bits = np.zeros(m_bits // 8, dtype=np.uint8)
+    for i in range(_BLOOM_K):
+        b = (h1 + np.uint64(i) * h2) % m
+        np.bitwise_or.at(
+            bits, b >> np.uint64(3),
+            (np.uint64(1) << (b & np.uint64(7))).astype(np.uint8),
+        )
+    return {"m": m_bits, "k": _BLOOM_K, "bits": base64.b64encode(bits.tobytes()).decode()}
 
 
 # decoded-bitset memo keyed by the base64 payload (CPython caches a
@@ -1962,8 +1975,12 @@ class LakeTable:
         for key_cols, files in groups.items():
             parts = []
             for d in files:
+                # the FILE's footer schema, not the table's key types:
+                # delete_eq writes Python values through pyarrow (an
+                # int key lands as int64), and reading the footer
+                # in-process keeps plan building free of Spark jobs
                 e = (
-                    spark.read.parquet(os.path.join(self.root, d["path"]))
+                    read_parquet(spark, os.path.join(self.root, d["path"]))
                     .select(
                         *[F.col(k).alias(f"__eq_{k}") for k in key_cols],
                     )

@@ -28,8 +28,9 @@ def _pin_session_confs(spark: SparkSession) -> None:
 
     - UTC session TZ (DuckDB timestamps are UTC-naive; date_trunc etc.
       operate in session TZ);
-    - nanosAsLong so events.parquet's TIMESTAMP(NANOS) column is
-      readable at all (PARQUET_TYPE_ILLEGAL otherwise).
+    - nanosAsLong, the fallback for a TIMESTAMP(NANOS) events.ts (the
+      fixtures store µs, read as TIMESTAMP_NTZ): it reads as a long the
+      fixture loader converts.
     """
     for k, v in (
         ("spark.sql.session.timeZone", "UTC"),

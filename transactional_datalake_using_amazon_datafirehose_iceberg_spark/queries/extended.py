@@ -19,7 +19,9 @@ from ..operators.cdc_apply import apply_batch, typed_rows
 from ..operators.cdc_transform import to_dead_letter, transform
 from ..operators.materialize import materialize
 from ..plans.lake_table import LakeTable, batch_watermark
-from ..schemas import RETAIL_TRANS, RETAIL_TRANS_KEYS, RETAIL_TRANS_PARTITION
+from ..schemas import (
+    RETAIL_TRANS, RETAIL_TRANS_KEYS, RETAIL_TRANS_PARTITION, read_parquet,
+)
 from ..sources.cdc_jsonl import read_cdc_batch, write_golden_corpus
 from .base import QuerySpec, scratch_dir
 
@@ -6013,7 +6015,7 @@ def _stream_complete_build(spark, sf):
             import shutil as _shutil
 
             _shutil.copy(fixture, link)
-    ev_schema = spark.read.parquet(fixture).schema
+    ev_schema = read_parquet(spark, fixture).schema
     q = (
         spark.readStream.schema(ev_schema).parquet(src)
         .groupBy("event_type")

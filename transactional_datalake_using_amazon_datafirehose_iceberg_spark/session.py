@@ -76,8 +76,9 @@ def get_spark(
         # 100 TB; 8 MB is both faster here and the honest scale shape.)
         .config("spark.sql.autoBroadcastJoinThreshold", str(8 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        # events.parquet carries TIMESTAMP(NANOS) which Spark cannot read
-        # natively (PARQUET_TYPE_ILLEGAL); read as long, convert in loader
+        # a TIMESTAMP(NANOS) parquet column reads as long and the fixture
+        # loader converts it (the fixtures' events.ts is µs today and
+        # reads as TIMESTAMP_NTZ; this is the fallback for NANOS files)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # deterministic timestamp semantics for the DuckDB oracle
         .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")

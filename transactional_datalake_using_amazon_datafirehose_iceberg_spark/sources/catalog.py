@@ -4,11 +4,14 @@ Loads the driver's TPC-H-ish parquet tables (/root/repo/TESTDATA.md) with
 declared-schema discipline and registers temp views so both the
 DataFrame and SQL surfaces see the same relations (reference analogue:
 Glue catalog database + tables, cdk_stacks/firehose_to_iceberg.py:80-82).
+Each table's schema comes from its parquet footer, read in-process
+(``schemas.read_parquet``), so registering the views runs no Spark job.
 
-One normalization: ``events.ts`` is TIMESTAMP(NANOS) parquet, which
-Spark cannot scan natively; with ``spark.sql.legacy.parquet.nanosAsLong``
-it arrives as a long and is converted to a µs timestamp here (floor
-division — DuckDB's ns→µs cast truncates the same way).
+One normalization: ``events.ts`` is TIMESTAMP(MICROS) without
+isAdjustedToUTC, which Spark reads as TIMESTAMP_NTZ; it is cast to LTZ
+TIMESTAMP here. A TIMESTAMP(NANOS) file instead arrives as a long under
+``spark.sql.legacy.parquet.nanosAsLong`` and is converted to a µs
+timestamp (floor division — DuckDB's ns→µs cast truncates the same way).
 """
 
 from __future__ import annotations
@@ -18,16 +21,17 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import FIXTURE_TABLES
+from ..schemas import FIXTURE_TABLES, read_parquet
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # ((applicationId, session identity), sf_dir, table) -> DataFrame.
-# Loading a fixture table costs a file listing + parquet footer read
-# (~0.1 s each, ~1 s for the set — over half the measured per-query
-# floor when every query re-registered all views). DataFrames are lazy
-# plans: caching one caches only the resolved SCHEMA, every action
-# still re-scans data, so this is safe for immutable fixture paths.
+# Loading a fixture table costs a file listing + an in-process parquet
+# footer read; before the footer path it cost one schema-inference
+# Spark job per table (10 per register_views), now none. DataFrames
+# are lazy plans: caching one caches only the resolved SCHEMA, every
+# action still re-scans data, so this is safe for immutable fixture
+# paths.
 # Keyed by applicationId AND the SparkSession's own identity: sibling
 # sessions from spark.newSession() share one applicationId, and a
 # DataFrame bound to session A registered via createOrReplaceTempView
@@ -57,18 +61,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     stale = [k for k in _TABLE_CACHE if k[0] != sess]
     for k in stale:
         del _TABLE_CACHE[k]
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
-            # ns since epoch -> µs timestamp. MUST be integer division
-            # (`div`): `/` promotes int64 ns to double, which loses
+            # fallback for a TIMESTAMP(NANOS) file under nanosAsLong
+            # (the fixtures store µs): ns since epoch -> µs timestamp.
+            # MUST be integer division (`div`): `/` promotes int64 ns
+            # to double, which loses
             # precision above 2^53 and shifts some values ±1 µs vs
             # DuckDB's exact epoch_ns//1000
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif ts_type == "timestamp_ntz":
-            # Spark 4.1 reads TIMESTAMP(NANOS) parquet natively as
-            # TIMESTAMP_NTZ (the nanosAsLong legacy conf is ignored).
+            # the fixtures' TIMESTAMP(MICROS, isAdjustedToUTC=false)
+            # reads as TIMESTAMP_NTZ (spark.sql.parquet.inferTimestampNTZ).
             # Event-time operators (withWatermark) require LTZ TIMESTAMP;
             # with the session TZ pinned UTC the cast is value-preserving
             # and matches DuckDB's naive-UTC convention.
