@@ -1832,3 +1832,292 @@ def test_create_recovers_from_crash_before_pointer_swap(spark, tmp_path):
     with pytest.raises(CommitConflict):
         LakeTable.create(root, SCHEMA, keys=["id"])
     assert os.path.exists(os.path.join(root, _CURRENT))
+
+
+# --- in-process small writes ----------------------------------------------
+# LakeTable._write_files writes an output of at most _BLOOM_DRIVER_ROWS
+# rows from one Arrow collect with pyarrow; the pins below hold its job
+# counts and file layout, and the parity test holds it to the Spark
+# writer's table.
+
+_EV_SCHEMA = T.StructType([
+    T.StructField("id", T.LongType()),
+    T.StructField("ev", T.StringType()),
+    T.StructField("amt", T.IntegerType()),
+])
+
+
+def _ev_source(spark, tmp_path, n, n_values):
+    """n keyed rows cycling ``ev`` over n_values values, as a parquet
+    scan read under an explicit schema (plan size known, no inference
+    job)."""
+    path = str(tmp_path / f"src{n}")
+    spark.range(n).select(
+        "id",
+        F.concat(F.lit("e"), (F.col("id") % n_values).cast("string")).alias("ev"),
+        (F.col("id") % 97).cast("int").alias("amt"),
+    ).write.parquet(path)
+    return spark.read.schema(_EV_SCHEMA).parquet(path)
+
+
+def _counted_append(spark, t, df, shuffle_partitions=None):
+    """(jobs launched, write/bloom path counters) of one append."""
+    from conftest import count_jobs
+    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import metrics
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    if shuffle_partitions is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    metrics.reset()
+    try:
+        _, jobs = count_jobs(spark, lambda: t.append(df))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    paths = {
+        k: v for k, v in metrics.snapshot().items()
+        if k.startswith(("write.", "bloom."))
+    }
+    return jobs, paths
+
+
+def _ev_spans(t):
+    spans = sorted((f["min"]["ev"], f["max"]["ev"]) for f in t.manifest()["files"])
+    # range layout: no ev value lands in two files
+    assert all(a[1] < b[0] for a, b in zip(spans, spans[1:])), spans
+    return spans
+
+
+@pytest.mark.parametrize("n_parts", [4, 8])
+def test_small_clustered_append_is_one_job_in_process(spark, tmp_path, n_parts):
+    """A 20,000-row append clustered on a 6-value column: one collect
+    job instead of range sampling + shuffle + write; at most
+    shuffle-partitions files, one per value when the values fit."""
+    src = _ev_source(spark, tmp_path, 20_000, 6)
+    t = LakeTable.create(
+        str(tmp_path / "t"), _EV_SCHEMA, keys=["id"], cluster_by=["ev"]
+    )
+    jobs, paths = _counted_append(spark, t, src, n_parts)
+    assert jobs == 1
+    assert paths == {"write.inprocess": 1, "bloom.inprocess_small": 1}
+    spans = _ev_spans(t)
+    assert 1 < len(spans) <= n_parts
+    if n_parts >= 6:
+        assert spans == [(f"e{i}", f"e{i}") for i in range(6)]
+    assert all("id" in f.get("bloom", {}) for f in t.manifest()["files"])
+    assert sorted(t.read(spark).collect()) == sorted(src.collect())
+
+
+def test_append_over_the_gate_keeps_the_spark_path(spark, tmp_path):
+    """One row over _BLOOM_DRIVER_ROWS: the compressed parquet scan's
+    size estimate is under the gate, so the bounded collect runs (1
+    job), returns the gate + 1 rows, and the write falls to the
+    unchanged Spark path: range sampling, shuffle and write, then the
+    distributed bloom build, in the same range layout."""
+    import transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.lake_table as lt
+
+    src = _ev_source(spark, tmp_path, lt._BLOOM_DRIVER_ROWS + 1, 6)
+    t = LakeTable.create(
+        str(tmp_path / "t"), _EV_SCHEMA, keys=["id"], cluster_by=["ev"]
+    )
+    jobs, paths = _counted_append(spark, t, src)
+    assert paths == {"write.spark": 1, "bloom.distributed": 1}
+    # the Spark path's 5 jobs plus the one bounded collect
+    assert jobs == 6
+    assert 1 < len(_ev_spans(t)) <= 4
+    assert t.row_count() == lt._BLOOM_DRIVER_ROWS + 1
+
+
+def test_empty_append_commits_nothing_and_leaves_no_dir(spark, tmp_path):
+    src = _ev_source(spark, tmp_path, 10, 2).filter("id < 0")
+    t = LakeTable.create(
+        str(tmp_path / "t"), _EV_SCHEMA, keys=["id"], cluster_by=["ev"]
+    )
+    v = t.current_version()
+    jobs, paths = _counted_append(spark, t, src)
+    assert (jobs, paths) == (1, {"write.inprocess": 1})
+    assert t.current_version() == v
+    data = os.path.join(t.root, "data")
+    assert not os.path.isdir(data) or os.listdir(data) == []
+
+
+def test_cow_micro_batch_job_count(spark, tmp_path):
+    """One 2,000-envelope copy-on-write micro-batch over a 20,000-row
+    clustered table: the dead-letter append and the MERGE rewrite both
+    write in-process, 7 jobs in all (8 with Spark writes)."""
+    import datetime as dt
+
+    from conftest import count_jobs
+    from perfbench import cdcgen
+    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import metrics
+    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.schemas import (
+        DEAD_LETTER, RETAIL_TRANS, RETAIL_TRANS_KEYS, RETAIL_TRANS_PARTITION,
+    )
+    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.streaming import (
+        CdcStreamPipeline,
+    )
+
+    stream = cdcgen.CdcStream(7, 20_000, 2_000)
+    seed = [
+        r[:6] + (dt.datetime.strptime(r[6], "%Y-%m-%dT%H:%M:%SZ")
+                 .replace(tzinfo=dt.timezone.utc),)
+        for r in stream.seed_rows
+    ]
+    spark.createDataFrame(seed, RETAIL_TRANS).write.parquet(str(tmp_path / "seed"))
+    t = LakeTable.create(
+        str(tmp_path / "t"), RETAIL_TRANS, keys=RETAIL_TRANS_KEYS,
+        cluster_by=RETAIL_TRANS_PARTITION,
+    )
+    t.append(spark.read.schema(RETAIL_TRANS).parquet(str(tmp_path / "seed")))
+    dead = LakeTable.create(str(tmp_path / "dead"), DEAD_LETTER)
+    pipe = CdcStreamPipeline(t, "db", "tbl", dead_letter_table=dead)
+    for b in range(2):  # batch 0 warms the session; batch 1 is counted
+        lines, _ = stream.next_batch()
+        path = tmp_path / f"batch{b}.jsonl"
+        path.write_text("\n".join(lines) + "\n")
+        metrics.reset()
+        _, jobs = count_jobs(
+            spark, lambda: pipe.process_batch(spark.read.text(str(path)), b)
+        )
+    assert jobs == 7
+    assert metrics.snapshot()["write.inprocess"] == 2
+    assert "write.spark" not in metrics.snapshot()
+    assert dead.row_count() == stream.malformed
+    got = {r["trans_id"]: r["event"] for r in t.read(spark).collect()}
+    assert got == {k: row[2] for k, row in stream.state.items()}
+
+
+_TYPES_SCHEMA = T.StructType([
+    T.StructField("id", T.IntegerType(), False),
+    T.StructField("b", T.BooleanType()),
+    T.StructField("i8", T.ByteType()),
+    T.StructField("i16", T.ShortType()),
+    T.StructField("l", T.LongType()),
+    T.StructField("f", T.FloatType()),
+    T.StructField("d", T.DoubleType()),
+    T.StructField("dec", T.DecimalType(38, 6)),
+    T.StructField("s", T.StringType()),
+    T.StructField("bin", T.BinaryType()),
+    T.StructField("dt", T.DateType()),
+    T.StructField("ts", T.TimestampType()),
+    T.StructField("ntz", T.TimestampNTZType()),
+])
+
+# every whitelisted type, each NULL on some rows; the range id stays a
+# non-nullable column, as the table declares it
+_TYPES_SQL = """
+SELECT CAST(id AS INT) AS id,
+  IF(id % 5 = 0, NULL, id % 3 = 0) AS b,
+  IF(id % 6 = 0, NULL, CAST(id % 100 - 50 AS TINYINT)) AS i8,
+  IF(id % 7 = 0, NULL, CAST(id * 131 - 9000 AS SMALLINT)) AS i16,
+  IF(id % 8 = 0, NULL, id * 1000003 - 77) AS l,
+  IF(id % 9 = 0, NULL, CAST(id / 7 AS FLOAT)) AS f,
+  IF(id % 10 = 0, NULL, id / 3 - 20) AS d,
+  IF(id % 11 = 0, NULL, CAST(id * 1234.567891 - 99999 AS DECIMAL(38, 6))) AS dec,
+  ELT(CAST(id % 4 AS INT) + 1, NULL, 'äpfel', '日本語', 'zéro') AS s,
+  IF(id % 12 = 0, NULL, CAST(CONCAT('b', id) AS BINARY)) AS bin,
+  IF(id % 13 = 0, NULL, DATE_ADD(DATE'2024-02-26', CAST(id % 9 AS INT))) AS dt,
+  IF(id % 14 = 0, NULL, TIMESTAMP_SECONDS(1700000000 + id * 3601)) AS ts,
+  IF(id % 15 = 0, NULL,
+     CAST(TIMESTAMP_SECONDS(1600000000 - id * 7919) AS TIMESTAMP_NTZ)) AS ntz
+FROM range(0, 240, 1, 1)
+"""
+
+
+def _build_types(spark, root, cluster_by):
+    t = LakeTable.create(root, _TYPES_SCHEMA, keys=["id"], cluster_by=cluster_by)
+    t.append(spark.sql(_TYPES_SQL))
+    return t
+
+
+def _build_lineage(spark, root, cluster_by):
+    """Row-lineage table whose MERGE rewrite carries ``_row_id``."""
+    t = LakeTable.create(
+        root,
+        T.StructType([T.StructField("k", T.LongType()), T.StructField("v", T.StringType())]),
+        keys=["k"], cluster_by=cluster_by, properties={"row-lineage": "true"},
+    )
+    t.append(spark.sql("SELECT id AS k, CONCAT('v', id % 3) AS v FROM range(0, 200, 1, 1)"))
+    merge_into(t, spark.sql(
+        "SELECT id * 3 AS k, CONCAT('ü', id) AS v FROM range(0, 120, 1, 1)"
+    ))
+    return t
+
+
+@pytest.mark.parametrize(
+    "build, cluster_by",
+    [
+        (_build_types, ["s", "ntz"]),  # non-ASCII strings, NULLs first
+        (_build_types, ["ts"]),  # LTZ timestamp (UTC session)
+        (_build_types, ["ntz", "dec"]),
+        (_build_lineage, ["v"]),
+    ],
+    ids=["string", "timestamp", "timestamp_ntz", "row_lineage"],
+)
+def test_inprocess_and_spark_writes_build_the_same_table(
+    spark, tmp_path, monkeypatch, build, cluster_by
+):
+    """The same rows written in-process and by Spark (gate forced to 0,
+    which also sends the blooms to the distributed build): equal reads,
+    schemas, per-file min/max and bloom bitsets; every in-process file
+    is sorted as sortWithinPartitions(*cluster_by) leaves it."""
+    import transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.lake_table as lt
+    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import metrics
+
+    tables = {}
+    for label, gate, other in (
+        ("spark", 0, "inprocess"), ("inprocess", lt._BLOOM_DRIVER_ROWS, "spark")
+    ):
+        monkeypatch.setattr(lt, "_BLOOM_DRIVER_ROWS", gate)
+        metrics.reset()
+        tables[label] = build(spark, str(tmp_path / label), cluster_by)
+        assert f"write.{label}" in metrics.snapshot()
+        assert f"write.{other}" not in metrics.snapshot()
+    sp, ip = tables["spark"], tables["inprocess"]
+
+    lineage = sp.row_lineage
+    rows = {k: sorted(t.read(spark, with_row_ids=lineage).collect()) for k, t in tables.items()}
+    assert rows["spark"] == rows["inprocess"]
+    assert sp.read(spark).schema == ip.read(spark).schema
+
+    def files(t):
+        return [os.path.join(t.root, f["path"]) for f in t.manifest()["files"]]
+
+    assert (
+        spark.read.parquet(*files(sp)).schema == spark.read.parquet(*files(ip)).schema
+    )
+
+    def layout(t):
+        return sorted(
+            (f["rows"], sorted(f["min"].items()), sorted(f["max"].items()),
+             sorted(f.get("bloom", {}).items()))
+            for f in t.manifest()["files"]
+        )
+
+    assert layout(sp) == layout(ip)
+    assert all("bloom" in f for f in ip.manifest()["files"])
+    read_schema = T.StructType(ip.schema.fields + ([LakeTable._ROW_ID_FIELD] if lineage else []))
+    for path in files(ip):
+        if lineage:
+            import pyarrow.parquet as pq
+
+            assert "_row_id" in pq.ParquetFile(path).schema_arrow.names
+        df = spark.read.schema(read_schema).parquet(path)
+        assert df.rdd.getNumPartitions() == 1
+        assert df.collect() == df.sortWithinPartitions(*cluster_by).collect()
+
+
+def test_nested_column_takes_the_spark_path(spark, tmp_path):
+    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import metrics
+
+    t = LakeTable.create(
+        str(tmp_path / "t"),
+        T.StructType([
+            T.StructField("id", T.LongType()),
+            T.StructField("xs", T.ArrayType(T.IntegerType())),
+        ]),
+    )
+    metrics.reset()
+    t.append(spark.sql("SELECT id, ARRAY(CAST(id AS INT), NULL) AS xs FROM range(10)"))
+    assert metrics.snapshot().get("write.spark") == 1
+    assert "write.inprocess" not in metrics.snapshot()
+    assert sorted(r["id"] for r in t.read(spark).collect()) == list(range(10))

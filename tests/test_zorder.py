@@ -24,20 +24,19 @@ SCHEMA = T.StructType(
 
 
 def _grid_table(spark, path, n_files=16):
-    """100x100 grid of (a, b) appended in a/b-oblivious random order, so
-    every file's min/max spans nearly the full range of BOTH columns."""
+    """100x100 grid of (a, b) in n_files a/b-oblivious files, one append
+    of the ids congruent to k mod n_files each (625 rows for 16 files),
+    so every file's min/max spans nearly the full range of BOTH
+    columns."""
     t = LakeTable.create(str(path), SCHEMA)
-    df = (
-        spark.range(10_000)
-        .select(
-            (F.col("id") % 100).cast("int").alias("a"),
-            (F.col("id") / 100).cast("int").alias("b"),
-            F.md5(F.col("id").cast("string")).alias("payload"),
-        )
-        # shuffle by payload hash: interleaves a and b values arbitrarily
-        .repartition(n_files, "payload")
+    grid = spark.range(10_000).select(
+        "id",
+        (F.col("id") % 100).cast("int").alias("a"),
+        (F.col("id") / 100).cast("int").alias("b"),
+        F.md5(F.col("id").cast("string")).alias("payload"),
     )
-    t.append(df)
+    for k in range(n_files):
+        t.append(grid.filter(F.col("id") % n_files == k).drop("id"))
     return t
 
 

@@ -37,6 +37,7 @@ concurrency, Iceberg-style).
 from __future__ import annotations
 
 import base64
+import bisect
 import collections as _collections
 import contextlib as _contextlib
 import datetime as _dt
@@ -62,6 +63,8 @@ from dataclasses import dataclass
 from typing import Any, Iterable
 
 import numpy as np
+import pyarrow as _pa
+import pyarrow.compute as _pc
 import pyarrow.parquet as _pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -148,6 +151,133 @@ _BLOOM_DRIVER_ROWS = 65536
 # target bytes per written data file when a caller supplies a write-size
 # hint (Iceberg's write.target-file-size-bytes analogue)
 _TARGET_FILE_BYTES = 128 * 1024 * 1024
+
+# flat column types the in-process small-output writer takes: pyarrow
+# writes each as a value Spark reads back unchanged and sorts each in
+# Spark's order (UTF-8 binary collation only; float cluster keys stay
+# on the Spark path, where NaN sorts last instead of with the nulls)
+_INPROCESS_TYPES = tuple(
+    t() for t in (
+        T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+        T.FloatType, T.DoubleType, T.StringType, T.BinaryType, T.DateType,
+        T.TimestampType, T.TimestampNTZType,
+    )
+)
+# spark.sql.parquet.compression.codec -> pyarrow compression; a codec
+# missing here (lzo, Hadoop-framed lz4) keeps the Spark writer
+_ARROW_CODECS = {
+    "none": "none", "uncompressed": "none", "snappy": "snappy",
+    "gzip": "gzip", "brotli": "brotli", "zstd": "zstd", "lz4_raw": "lz4",
+}
+
+
+def _range_cuts(lead, n_parts: int) -> list[int]:
+    """Row offsets splitting a column sorted nulls-first into at most
+    ``n_parts`` contiguous files the way ``RangePartitioner`` bounds
+    do: a cut only ever falls where the value changes, at the first
+    change at or past each 1/n_parts quantile; with no more values than
+    parts, every value gets its own file."""
+    n = len(lead)
+    if n < 2:
+        return []
+    a, b = lead.slice(1), lead.slice(0, n - 1)
+    same = _pc.or_(
+        _pc.and_(a.is_null(), b.is_null()),
+        _pc.fill_null(_pc.equal(a, b), False),
+    )
+    starts = (np.flatnonzero(~same.to_numpy(zero_copy_only=False)) + 1).tolist()
+    if len(starts) < n_parts:
+        return starts
+    picks = (bisect.bisect_left(starts, k * n / n_parts) for k in range(1, n_parts))
+    return sorted({starts[i] for i in picks if i < len(starts)})
+
+
+def _small_output(
+    df: DataFrame, cluster_cols: list[str],
+    size_hint_bytes: int | None, max_rows: int | None,
+):
+    """``(arrow table, pyarrow codec, columns to write statistics
+    for)`` when the conformed ``df`` may be written in-process (see
+    ``_write_files``), else None. Every fact of the gate is known
+    before any job runs. The row bound is the caller's proven
+    ``max_rows`` or, failing that, the optimized plan's size
+    estimate over the row's default size; an estimated frame is
+    collected under ``limit(_BLOOM_DRIVER_ROWS + 1)``, so a wrong
+    estimate costs one bounded collect and then the Spark path."""
+    spark = df.sparkSession
+    fields = df.schema.fields
+    if not all(
+        isinstance(f.dataType, T.DecimalType) or f.dataType in _INPROCESS_TYPES
+        for f in fields
+    ) or any(
+        isinstance(df.schema[c].dataType, (T.FloatType, T.DoubleType))
+        for c in cluster_cols
+    ):
+        return None
+    codec = _ARROW_CODECS.get(
+        spark.conf.get("spark.sql.parquet.compression.codec").lower()
+    )
+    ltz = [f.name for f in fields if isinstance(f.dataType, T.TimestampType)]
+    ts_out = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    if codec is None or (ltz and ts_out not in ("INT96", "TIMESTAMP_MICROS")):
+        return None
+    # pyarrow writes LTZ timestamps as INT64 micros; Spark's INT96
+    # columns carry no min/max, so neither do these
+    stat_cols = [
+        f.name for f in fields if ts_out == "TIMESTAMP_MICROS" or f.name not in ltz
+    ]
+    if max_rows is None or size_hint_bytes is None:
+        plan_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        if size_hint_bytes is None:
+            size_hint_bytes = plan_bytes
+    if size_hint_bytes > _TARGET_FILE_BYTES:
+        return None
+    if max_rows is not None:
+        tbl = df.toArrow() if max_rows <= _BLOOM_DRIVER_ROWS else None
+    elif plan_bytes // max(1, df._jdf.schema().defaultSize()) <= _BLOOM_DRIVER_ROWS:
+        tbl = df.limit(_BLOOM_DRIVER_ROWS + 1).toArrow()
+    else:
+        tbl = None
+    if tbl is None or tbl.num_rows > _BLOOM_DRIVER_ROWS:
+        return None
+    return tbl, codec, stat_cols
+
+
+def _write_sorted(
+    tbl: _pa.Table, commit_dir: str, cluster_cols: list[str], n_files: int,
+    codec: str, stat_cols: list[str],
+) -> None:
+    """Write a non-empty Arrow table into ``commit_dir`` as at most
+    ``n_files`` parquet files, sorted on ``cluster_cols`` ascending with
+    nulls first (``sortWithinPartitions`` order) and split by
+    ``_range_cuts`` on the leading cluster column."""
+    if cluster_cols:
+        tbl = tbl.take(_pc.sort_indices(
+            tbl, sort_keys=[(c, "ascending") for c in cluster_cols],
+            null_placement="at_start",
+        ))
+    # every column optional, whatever the frame's nullability: file
+    # sources read parquet columns as nullable either way
+    tbl = tbl.cast(_pa.schema([f.with_nullable(True) for f in tbl.schema]))
+    cuts = _range_cuts(tbl.column(cluster_cols[0]), n_files) if cluster_cols else []
+    # dictionary-encode only columns that repeat values, as parquet-mr
+    # falls back to plain for near-unique ones (on the CDC table
+    # always-dictionary files come out ~13% larger)
+    dict_cols = [
+        c for c in tbl.column_names
+        if 2 * _pc.count_distinct(tbl.column(c)).as_py() <= tbl.num_rows
+    ]
+    os.makedirs(commit_dir)
+    tag = uuid.uuid4().hex
+    bounds = [0, *cuts, tbl.num_rows]
+    for i, (lo, hi) in enumerate(zip(bounds, bounds[1:])):
+        _pq.write_table(
+            tbl.slice(lo, hi - lo),
+            os.path.join(commit_dir, f"part-{i:05d}-{tag}.parquet"),
+            compression=codec,
+            use_dictionary=dict_cols,
+            write_statistics=stat_cols,
+        )
 
 
 def _bloom_hashes(v: Any) -> tuple[int, int]:
@@ -1062,12 +1192,14 @@ class LakeTable:
         return df.select(*cols)
 
     def _write_files(self, df: DataFrame, cluster: bool = True,
-                     size_hint_bytes: int | None = None) -> list[dict]:
+                     size_hint_bytes: int | None = None,
+                     max_rows: int | None = None) -> list[dict]:
         """Write df as parquet under data/<uuid>/ and return file metas.
 
-        Clustering (repartition + local sort on ``cluster_by``) makes the
-        per-file min/max tight on those columns — that's what turns the
-        manifest stats into a partition-pruning structure at scale.
+        Clustering (range partitioning + local sort on ``cluster_by``)
+        makes the per-file min/max tight on those columns — that's what
+        turns the manifest stats into a partition-pruning structure at
+        scale.
 
         ``size_hint_bytes``: caller's estimate of the output volume
         (e.g. a MERGE knows the touched files' manifest bytes). Sizes
@@ -1076,7 +1208,29 @@ class LakeTable:
         rewrite writes 1 file with 1 task, a 10 GB rewrite ~80 — and a
         hint of one partition skips the range-boundary sampling job
         entirely (a global sort of one partition is the same file).
+
+        ``max_rows``: a proven upper bound on the output rows (a MERGE
+        knows its touched files' manifest rows plus its source rows).
+
+        Small outputs are written in-process (see ``_small_output``): one
+        Arrow collect, a pyarrow sort on ``cluster_by`` (ascending,
+        nulls first, as ``sortWithinPartitions``) and ``pq.write_table``
+        replace the range-sampling job, the shuffle and the Spark write.
+        The gate is a flat schema of whitelisted types, at most
+        ``_BLOOM_DRIVER_ROWS`` rows and at most ``_TARGET_FILE_BYTES``
+        estimated bytes, each known without running a job; anything
+        unknown keeps the Spark path. The file layout stays the one the
+        Spark path writes: with a size hint the file count comes from
+        the hint, and a hint under the byte gate always means one file;
+        with no hint a clustered output splits like ``RangePartitioner``
+        into at most ``spark.sql.shuffle.partitions`` contiguous files,
+        no value of the leading cluster column spanning two (one file
+        per value when there are no more values than partitions). An
+        unclustered output is one file. Both paths end in the same
+        ``_collect_stats``, so stats, blooms and the commit are shared.
         """
+        from . import metrics
+
         # one manifest read for both the conform schema and the
         # schema_v stamp: a stamp older than the conformed schema would
         # mis-apply initial defaults to files that physically contain
@@ -1084,9 +1238,23 @@ class LakeTable:
         head = self.manifest()
         head_schema_v = head.get("schema_v", 0)
         df = self._conform(df, T.StructType.fromJson(json.loads(head["schema"])))
-        cb = self.cluster_by
+        cb = self.cluster_by if cluster else []
         commit_dir = os.path.join(self.root, _DATA_DIR, uuid.uuid4().hex[:16])
-        if cluster and cb:
+        spark = df.sparkSession
+        small = _small_output(df, cb, size_hint_bytes, max_rows)
+        metrics.bump("write.spark" if small is None else "write.inprocess")
+        if small is not None:
+            tbl, codec, stat_cols = small
+            if tbl.num_rows == 0:
+                return []
+            _write_sorted(
+                tbl, commit_dir, cb,
+                # a hint under the byte gate always sizes to one file
+                1 if size_hint_bytes is not None
+                else int(spark.conf.get("spark.sql.shuffle.partitions")),
+                codec, stat_cols,
+            )
+        elif cb:
             # RANGE partitioning, not hash: each output file covers a
             # contiguous range of the cluster columns, so per-file
             # min/max are tight and disjoint -> manifest pruning behaves
@@ -1095,7 +1263,6 @@ class LakeTable:
             # coalescing would merge adjacent ranges back together on
             # small batches, so it is suspended for the clustered write
             # (single-writer; restored immediately after).
-            spark = df.sparkSession
             n_parts = None
             if size_hint_bytes is not None:
                 ceiling = int(

@@ -460,7 +460,9 @@ def _merge_into_cow(
     # ---- 3. fast path: nothing matched -> append the non-delete rows -----
     if not touched_rel:
         inserts = src.filter(~is_delete).select(*data_cols)
-        added = table._write_files(inserts, size_hint_bytes=src_bytes)
+        added = table._write_files(
+            inserts, size_hint_bytes=src_bytes, max_rows=src_rows
+        )
         if src_obs is not None and src_rows is None:
             # probe skipped (no candidate files, e.g. a brand-new table):
             # the write just consumed the observed source, so the count
@@ -564,8 +566,16 @@ def _merge_into_cow(
         if touched_bytes_hint is not None
         else table._manifest_bytes_of(touched_rel)
     )
+    # the full outer join emits each touched row at most once and each
+    # source row at most once unmatched: a proven output row bound
+    touched_set = set(touched_rel)
+    touched_rows = sum(
+        int(f["rows"]) for f in table.manifest()["files"] if f["path"] in touched_set
+    )
     added = table._write_files(
-        result, size_hint_bytes=touched_bytes + (src_bytes or 0)
+        result,
+        size_hint_bytes=touched_bytes + (src_bytes or 0),
+        max_rows=touched_rows + src_rows if src_rows is not None else None,
     )
     return table.commit(
         added,

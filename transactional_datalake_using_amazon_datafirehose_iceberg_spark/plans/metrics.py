@@ -1,8 +1,9 @@
 """In-process path-frequency counters for plan-level decisions.
 
-The MERGE planner and the bloom-stats builder each pick between a
-metadata-scale fast path and a distributed job at runtime (see
-``merge._merge_into_cow`` step 2 and ``LakeTable._build_blooms``).
+The MERGE planner, the data-file writer and the bloom-stats builder
+each pick between a metadata-scale fast path and a distributed job at
+runtime (see ``merge._merge_into_cow`` step 2,
+``LakeTable._write_files`` and ``LakeTable._build_blooms``).
 Which branch actually fires at a given scale factor is an empirical
 question — the r8 verdict asked for exactly this measurement ("check
 whether the InjectRuntimeFilter path can replace the in-process probe
@@ -32,6 +33,12 @@ Keys currently emitted:
 - ``bloom.fallback_inprocess``— distributed build FAILED and fell back
                                  (also logged to stderr; a persistently
                                  nonzero count is a bug signal)
+- ``write.inprocess``         — ``LakeTable._write_files`` output of at
+                                 most ``_BLOOM_DRIVER_ROWS`` rows written
+                                 from one Arrow collect with pyarrow
+- ``write.spark``             — the same call took the Spark write
+                                 (over the gate, a nested type, or a
+                                 size that cannot be known without a job)
 - ``manifest_cache.hit`` / ``manifest_cache.miss``
                               — process-wide immutable-manifest LRU
                                  (``lake_table._load_manifest_cached``)
