@@ -80,8 +80,8 @@ def test_merge_upsert_delete(spark, table):
 
 def test_merge_null_op_value_is_not_a_delete(spark, table):
     """A matched source row whose op_col is NULL (malformed CDC
-    metadata) must behave like the native backend's WHEN MATCHED AND
-    op='delete' — the branch simply doesn't fire and the row UPDATES.
+    metadata) must behave like SQL MERGE's WHEN MATCHED AND
+    op='delete' — the clause simply doesn't fire and the row UPDATES.
     The un-coalesced three-valued predicate used to null the keep
     filter and silently DELETE the matched target row, and drop the
     row from the fast-path insert too (review round 10)."""
@@ -122,8 +122,9 @@ def test_merge_null_key_updates_in_place(spark, tmp_path):
 
 
 def test_merge_update_cols_validated_like_native(spark, table):
-    """A misspelled update_cols entry raises (native-backend parity)
-    instead of silently no-opping the whole matched update."""
+    """A misspelled update_cols entry raises, as SQL MERGE rejects an
+    unknown SET column, instead of silently no-opping the whole matched
+    update."""
     table.append(_mk(spark, [(1, "a", 1.0)]))
     src = spark.createDataFrame(
         [(1, "a", 2.0)], schema="id int, cat string, val double"

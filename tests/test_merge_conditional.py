@@ -336,29 +336,45 @@ def test_mor_delete_routing_still_used_without_guard_columns(spark, tmp_path):
     assert "delete" in ops
 
 
-def test_merge_sql_empty_update_cols_is_insert_only(spark):
-    """update_cols=[] means 'update NO columns' on BOTH backends: the
-    generated MERGE must omit the matched-update clause entirely (the
-    falsy check silently expanded [] to ALL columns, clobbering matched
-    rows on the native backend only; review round 12)."""
-    from tests.test_iceberg_backend import COLS, _tbl
+def test_merge_empty_update_cols_keeps_matched_rows_inserts_new(spark, tmp_path):
+    """update_cols=[] means 'update NO columns': every matched row keeps
+    its target values and only unmatched source rows are inserted (a
+    falsy check once expanded [] to ALL columns, clobbering matched
+    rows; review round 12). update_cols=None still updates every
+    column."""
+    rows = [(1, 10, "x"), (2, 20, "y")]
+    src = spark.createDataFrame([(2, 99, "new"), (3, 30, "z")], SCHEMA)
+    t = _mk(spark, tmp_path, rows)
+    merge_into(t, src, update_cols=[])
+    assert _state(spark, t) == {1: (10, "x"), 2: (20, "y"), 3: (30, "z")}
 
-    sql = _tbl().merge_sql(update_cols=[], data_cols=COLS)
-    assert "THEN UPDATE" not in sql
-    assert "WHEN NOT MATCHED THEN INSERT" in sql
-    # None still updates every column
-    assert "THEN UPDATE SET" in _tbl().merge_sql(update_cols=None, data_cols=COLS)
+    t_all = _mk(spark, tmp_path / "all", rows)
+    merge_into(t_all, src, update_cols=None)
+    assert _state(spark, t_all) == {1: (10, "x"), 2: (99, "new"), 3: (30, "z")}
 
 
-def test_merge_sql_quoted_delete_value_escaped(spark):
-    """delete_value is a VALUE: a quote inside it must be escaped in the
-    generated SQL (parser round-trip), not break or inject clauses."""
-    from tests.test_iceberg_backend import COLS, _tbl
-
-    sql = _tbl().merge_sql(op_col="_op", delete_value="can't-keep", data_cols=COLS)
-    assert "s.`_op` = 'can''t-keep'" in sql
-    got = spark.sql("SELECT 'can''t-keep' AS v").collect()[0]["v"]
-    assert got == "can't-keep"
+def test_merge_quoted_delete_value_deletes_only_its_matches(spark, tmp_path):
+    """delete_value is a VALUE compared as data, so a quote inside it
+    neither breaks nor widens the delete: exactly the matched rows whose
+    _op equals it are deleted (an unmatched one is not inserted), and
+    rows carrying any other _op — its SQL-escaped spelling, a prefix,
+    the default 'delete' — upsert."""
+    t = _mk(spark, tmp_path, [(k, k * 10, "old") for k in (1, 2, 3, 4)])
+    src = spark.createDataFrame(
+        [
+            (1, 0, "gone", "can't-keep"),
+            (2, 21, "upd", "can''t-keep"),
+            (3, 31, "upd", "can't"),
+            (4, 41, "upd", "delete"),
+            (5, 50, "new", "insert"),
+            (6, 60, "never", "can't-keep"),
+        ],
+        "k long, a long, b string, _op string",
+    )
+    merge_into(t, src, op_col="_op", delete_value="can't-keep")
+    assert _state(spark, t) == {
+        2: (21, "upd"), 3: (31, "upd"), 4: (41, "upd"), 5: (50, "new"),
+    }
 
 
 def test_merge_key_column_named_count(spark, tmp_path):

@@ -201,13 +201,7 @@ def apply_batch(
         # go through the gated MERGE below instead (correctness over
         # write amplification).
         props = table.manifest().get("properties", {})
-        # (hasattr guard: a real-Iceberg backend handles merge-on-read
-        # natively inside MERGE INTO, no position-delete routing needed)
-        if (
-            props.get("write.delete.mode") == "merge-on-read"
-            and not stale_guard
-            and hasattr(table, "delete_by_keys_mor")
-        ):
+        if props.get("write.delete.mode") == "merge-on-read" and not stale_guard:
             from ..plans.lake_table import CommitConflict
             from ..plans.merge import source_key_stats
 
@@ -218,25 +212,23 @@ def apply_batch(
             # contract (rangeable dtypes, NULL-key pruning disable)
             # cannot drift
             preds, n_deletes = source_key_stats(deletes, keys)
+            # a concurrent commit (compaction) that moves the head
+            # between plan and commit RE-RUNS the delete, never blind-
+            # retries it — the (file, pos) tuples were computed against
+            # the old snapshot (merge_into's one-re-plan shape)
             if n_deletes > 0:
-                try:
-                    table.delete_by_keys_mor(
-                        typed.sparkSession,
-                        deletes.select(*keys),
-                        keys,
-                        predicates=preds,
-                    )
-                except CommitConflict:
-                    # a concurrent commit (compaction) moved the head
-                    # between plan and commit: RE-RUN, never blind-retry
-                    # — the (file, pos) tuples were computed against the
-                    # old snapshot (merge_into's one-re-plan shape)
-                    table.delete_by_keys_mor(
-                        typed.sparkSession,
-                        deletes.select(*keys),
-                        keys,
-                        predicates=preds,
-                    )
+                for attempt in range(2):
+                    try:
+                        table.delete_by_keys_mor(
+                            typed.sparkSession,
+                            deletes.select(*keys),
+                            keys,
+                            predicates=preds,
+                        )
+                        break
+                    except CommitConflict:
+                        if attempt:
+                            raise
             latest = latest.filter(~is_del)
 
         return merge_into(

@@ -604,8 +604,7 @@ DEFAULT_APP_ID = "default"
 
 def batch_watermark(summary: dict, app_id: str) -> int:
     """``app_id``'s last committed batch id in a snapshot summary, or -1
-    when it has committed none. Reads the on-disk summary and the
-    JSON-decoded one ``IcebergTable.manifest()`` surfaces alike."""
+    when it has committed none."""
     hwm = summary.get(_TXN_KEY, {}).get(app_id)
     return -1 if hwm is None else int(hwm)
 
@@ -655,19 +654,15 @@ def merge_watermarks(head: dict, stamp: dict) -> dict:
     return merged
 
 
-def append_once(table, df: DataFrame, scope: tuple[str, int] | None) -> None:
+def append_once(table: "LakeTable", df: DataFrame, scope: tuple[str, int] | None) -> None:
     """Append ``df`` to ``table`` at most once per ``scope`` =
     ``(app_id, batch_id)``: the streaming dead-letter appends, which
     commit before the batch's watermark-stamping MERGE and so replay
     after a crash in between. Rows and stamp land in one commit; a
     replayed scope commits nothing, and neither does an empty frame
-    (replaying zero rows is trivially idempotent).
-
-    ``scope=None`` is a plain append. So is a backend without the
-    stamping surface (``IcebergTable`` has no ``_write_files``): there a
-    crash-replay may duplicate dead-letter rows, which are observability
-    rows, never lost table rows."""
-    if scope is None or not hasattr(table, "_write_files"):
+    (replaying zero rows is trivially idempotent). ``scope=None`` is a
+    plain append."""
+    if scope is None:
         table.append(df)
         return
     app_id, batch_id = scope

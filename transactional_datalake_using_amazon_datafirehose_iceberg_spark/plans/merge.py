@@ -138,28 +138,6 @@ def merge_into(
         bad = [c for c in not_matched_by_source_update if c in key_cols]
         if bad:
             raise ValueError(f"not_matched_by_source_update cannot assign key columns: {bad}")
-    # real-Iceberg backend (plans/iceberg_compat.py): native MERGE INTO.
-    # Every semantic option is forwarded (a silently-dropped
-    # match_condition would disarm the out-of-order CDC stale guard on
-    # this backend; a dropped evolve_schema would silently narrow the
-    # CDC schema-drift story to the LakeTable backend — sql_merge runs
-    # generated ALTER TABLE statements before the MERGE instead).
-    if hasattr(table, "sql_merge"):
-        return table.sql_merge(
-            source,
-            on=on,
-            op_col=op_col,
-            delete_value=delete_value,
-            extra_summary=extra_summary,
-            match_condition=match_condition,
-            update_cols=update_cols,
-            condition_gates_delete=condition_gates_delete,
-            not_matched_by_source_delete=not_matched_by_source_delete,
-            not_matched_by_source_update=not_matched_by_source_update,
-            evolve_schema=evolve_schema,
-            evolve_ignore=evolve_ignore,
-        )
-
     # Lost-race re-plan (the COW commit removes files, so commit-level
     # retry is forbidden — see LakeTable.commit): the merge is a pure
     # function of (source batch, current table state), so on a
@@ -170,24 +148,21 @@ def merge_into(
     # snapshot expiry.
     from .lake_table import CommitConflict
 
-    try:
-        return _merge_into_cow(
-            table, source, on, op_col, delete_value, assume_unique,
-            broadcast_source, extra_summary, evolve_schema, evolve_ignore,
-            match_condition, update_cols, condition_gates_delete,
-            not_matched_by_source_delete, not_matched_by_source_update,
-        )
-    except CommitConflict:
-        # evolve_schema is passed through unchanged: column evolution is
-        # idempotent (the evolve loop skips columns that already exist),
-        # and hardcoding False here would silently drop new source
-        # columns when the conflict raced the add-column commits
-        return _merge_into_cow(
-            table, source, on, op_col, delete_value, assume_unique,
-            broadcast_source, extra_summary, evolve_schema, evolve_ignore,
-            match_condition, update_cols, condition_gates_delete,
-            not_matched_by_source_delete, not_matched_by_source_update,
-        )
+    # evolve_schema is passed through unchanged on the re-plan: column
+    # evolution is idempotent (the evolve loop skips columns that
+    # already exist), and hardcoding False would silently drop new
+    # source columns when the conflict raced the add-column commits
+    for attempt in range(2):
+        try:
+            return _merge_into_cow(
+                table, source, on, op_col, delete_value, assume_unique,
+                broadcast_source, extra_summary, evolve_schema, evolve_ignore,
+                match_condition, update_cols, condition_gates_delete,
+                not_matched_by_source_delete, not_matched_by_source_update,
+            )
+        except CommitConflict:
+            if attempt:
+                raise
 
 
 def _merge_into_cow(
@@ -253,8 +228,8 @@ def _merge_into_cow(
     schema = table.schema
     data_cols = [f.name for f in schema.fields]
     if update_cols is not None:
-        # same contract as the native backend (iceberg_compat.merge_sql):
         # a misspelled column must raise, not silently no-op the update
+        # of the column the caller meant
         unknown = [c for c in update_cols if c not in data_cols]
         if unknown:
             raise ValueError(f"update_cols not in table schema: {unknown}")
@@ -359,9 +334,9 @@ def _merge_into_cow(
     # NULL op value (malformed CDC metadata) must read as "not a
     # delete", never as three-valued NULL: an un-coalesced NULL gate
     # silently dropped the row from the fast-path insert filter AND
-    # deleted the matched target row in the rewrite's keep predicate —
-    # while the native backend's WHEN MATCHED AND op='delete' branch
-    # simply doesn't fire (review round 10)
+    # deleted the matched target row in the rewrite's keep predicate,
+    # where SQL MERGE's WHEN MATCHED AND op='delete' clause simply does
+    # not fire on a NULL op (review round 10)
     is_delete = (
         F.coalesce(F.col(op_col) == F.lit(delete_value), F.lit(False))
         if op_col
@@ -413,8 +388,8 @@ def _merge_into_cow(
         src_keys = src.select(*keys).distinct()
         tgt = table.read(spark, predicates=key_preds, with_file_path=True)
         probe = F.broadcast(src_keys) if broadcast_source else src_keys
-        # NULL-SAFE probe, same as the rewrite join and the native
-        # backend's ON t.k <=> s.k: a plain on=keys semi-join drops a
+        # NULL-SAFE probe, same as the rewrite join (SQL MERGE's
+        # ON t.k <=> s.k): a plain on=keys semi-join drops a
         # null-key match, the file goes unprobed, and the source row
         # double-inserts instead of updating (review round 10). <=> is
         # still a hash-joinable equi-condition — same plan shape.

@@ -33,8 +33,8 @@ def get_spark(
     all cores). Runtime configs can be overridden via ``extra_conf``;
     NOTE Spark applies only runtime-modifiable configs when a session
     already exists in the process — a pre-existing session keeps its
-    master, ``spark.jars``, and driver memory (a warning is emitted so
-    a silently-ignored Iceberg jar or memory bump is visible).
+    master and driver memory (a warning is emitted so a silently-ignored
+    ``SPARK_DRIVER_MEMORY`` bump is visible).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
@@ -84,49 +84,34 @@ def get_spark(
         .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
         .config("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
     )
-    if os.environ.get("SPARK_DRIVER_MEMORY"):
-        builder = builder.config("spark.driver.memory", os.environ["SPARK_DRIVER_MEMORY"])
-    # Opportunistic real-Iceberg backend (plans/iceberg_compat.py): point
-    # SPARK_GRAFT_ICEBERG_JAR at a vendored iceberg-spark-runtime jar and
-    # the dual-backend tests run both halves instead of skipping; offline
-    # (no jar) everything runs on the built-in LakeTable format. See
-    # README "Real Apache Iceberg backend".
-    if os.environ.get("SPARK_GRAFT_ICEBERG_JAR"):
-        builder = builder.config("spark.jars", os.environ["SPARK_GRAFT_ICEBERG_JAR"])
+    memory = os.environ.get("SPARK_DRIVER_MEMORY")
+    if memory:
+        builder = builder.config("spark.driver.memory", memory)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # creation-time configs (jars, driver memory) silently do NOT apply
+    # a creation-time config (driver memory) silently does NOT apply
     # to an already-running session. Warn only when the session
     # getOrCreate actually RETURNED carries a different value than was
     # requested — the old any-active-session check fired on every call
     # after the first even when that session was created by get_spark
     # with these exact settings, and the thread-local getActiveSession
     # missed a default-but-inactive session entirely (round-11 advice).
-    wanted: dict[str, str] = {}
-    if os.environ.get("SPARK_GRAFT_ICEBERG_JAR"):
-        wanted["spark.jars"] = os.environ["SPARK_GRAFT_ICEBERG_JAR"]
-    if os.environ.get("SPARK_DRIVER_MEMORY"):
-        wanted["spark.driver.memory"] = os.environ["SPARK_DRIVER_MEMORY"]
     # read the CONTEXT conf, not session.conf: getOrCreate copies the
     # builder's options onto an existing session's runtime conf, so the
     # session conf always "matches" even when the JVM was created with
     # different static settings — only the SparkContext conf holds the
     # values that actually applied at creation
-    cc = spark.sparkContext.getConf()
-    mismatched = []
-    for k, v in wanted.items():
-        got = cc.get(k, None)
-        if got != v:
-            mismatched.append(f"{k}={v!r} (active session has {got!r})")
-    if mismatched:
+    got = spark.sparkContext.getConf().get("spark.driver.memory", None)
+    if memory and got != memory:
         import warnings
 
         warnings.warn(
             "get_spark: a SparkSession already exists in this process "
-            "and its creation-time settings differ from the requested "
-            "ones — " + "; ".join(mismatched) + ". Stop the existing "
-            "session first if they must take effect",
+            "and its creation-time setting differs from the requested "
+            f"one — spark.driver.memory={memory!r} (active session has "
+            f"{got!r}). Stop the existing session first if it must "
+            "take effect",
             stacklevel=2,
         )
     spark.sparkContext.setLogLevel("WARN")
