@@ -23,8 +23,13 @@ SCHEMA = T.StructType([
 ])
 
 
-def _mk(spark, tmp_path, rows):
-    t = LakeTable.create(os.path.join(str(tmp_path), "t"), SCHEMA, keys=["k"])
+_MOR = {"write.delete.mode": "merge-on-read"}
+
+
+def _mk(spark, tmp_path, rows, properties=None):
+    t = LakeTable.create(
+        os.path.join(str(tmp_path), "t"), SCHEMA, keys=["k"], properties=properties
+    )
     t.append(spark.createDataFrame(rows, SCHEMA))
     return t
 
@@ -91,8 +96,8 @@ def test_changelog_emits_equality_deletes(spark, tmp_path):
 
 
 def test_mixed_position_and_equality_deletes(spark, tmp_path):
-    t = _mk(spark, tmp_path, [(1, "a"), (2, "b"), (3, "c"), (4, "d")])
-    t.delete_where(spark, "k = 1", mode="merge-on-read")  # position delete
+    t = _mk(spark, tmp_path, [(1, "a"), (2, "b"), (3, "c"), (4, "d")], _MOR)
+    t.delete_where(spark, "k = 1")  # position delete
     t.delete_eq([{"k": 3}])
     assert _live(spark, t) == {2: "b", 4: "d"}
 
@@ -106,7 +111,9 @@ def test_random_interleavings_match_model(spark, tmp_path):
     import random
 
     rng = random.Random(47)
-    t = LakeTable.create(os.path.join(str(tmp_path), "prop"), SCHEMA, keys=["k"])
+    t = LakeTable.create(
+        os.path.join(str(tmp_path), "prop"), SCHEMA, keys=["k"], properties=_MOR
+    )
     model: list[tuple[int, str, int]] = []  # (k, v, seq)
     seq = t.current_version()
     for step in range(14):
@@ -127,7 +134,7 @@ def test_random_interleavings_match_model(spark, tmp_path):
                 model = [r for r in model if not (r[0] in ks and r[2] < dseq)]
         else:
             bound = rng.randrange(8)
-            t.delete_where(spark, f"k < {bound}", mode="merge-on-read")
+            t.delete_where(spark, f"k < {bound}")
             model = [r for r in model if not (r[0] < bound)]
         got = sorted((r["k"], r["v"]) for r in t.read(spark).collect())
         want = sorted((k, v) for k, v, _ in model)

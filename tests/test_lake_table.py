@@ -1941,10 +1941,11 @@ def test_empty_append_commits_nothing_and_leaves_no_dir(spark, tmp_path):
     assert not os.path.isdir(data) or os.listdir(data) == []
 
 
-def test_cow_micro_batch_job_count(spark, tmp_path):
-    """One 2,000-envelope copy-on-write micro-batch over a 20,000-row
-    clustered table: the dead-letter append and the MERGE rewrite both
-    write in-process, 7 jobs in all (8 with Spark writes)."""
+def _micro_batch_job_count(spark, tmp_path, delete_mode):
+    """Run two 2,000-envelope micro-batches over a 20,000-row clustered
+    table created with ``write.delete.mode=delete_mode``; return the
+    second batch's Spark job count, its planner metrics and the table's
+    snapshots, after checking the table and dead letters."""
     import datetime as dt
 
     from conftest import count_jobs
@@ -1967,6 +1968,7 @@ def test_cow_micro_batch_job_count(spark, tmp_path):
     t = LakeTable.create(
         str(tmp_path / "t"), RETAIL_TRANS, keys=RETAIL_TRANS_KEYS,
         cluster_by=RETAIL_TRANS_PARTITION,
+        properties={"write.delete.mode": delete_mode},
     )
     t.append(spark.read.schema(RETAIL_TRANS).parquet(str(tmp_path / "seed")))
     dead = LakeTable.create(str(tmp_path / "dead"), DEAD_LETTER)
@@ -1979,12 +1981,32 @@ def test_cow_micro_batch_job_count(spark, tmp_path):
         _, jobs = count_jobs(
             spark, lambda: pipe.process_batch(spark.read.text(str(path)), b)
         )
-    assert jobs == 7
-    assert metrics.snapshot()["write.inprocess"] == 2
-    assert "write.spark" not in metrics.snapshot()
+    counted = metrics.snapshot()
     assert dead.row_count() == stream.malformed
     got = {r["trans_id"]: r["event"] for r in t.read(spark).collect()}
     assert got == {k: row[2] for k, row in stream.state.items()}
+    return jobs, counted, t.snapshots()
+
+
+def test_cow_micro_batch_job_count(spark, tmp_path):
+    """One 2,000-envelope copy-on-write micro-batch over a 20,000-row
+    clustered table: the dead-letter append and the MERGE rewrite both
+    write in-process, 7 jobs in all (8 with Spark writes)."""
+    jobs, counted, _ = _micro_batch_job_count(spark, tmp_path, "copy-on-write")
+    assert jobs == 7
+    assert counted["write.inprocess"] == 2
+    assert "write.spark" not in counted
+
+
+def test_mor_micro_batch_job_count(spark, tmp_path):
+    """The same micro-batch on a merge-on-read table runs the same path:
+    7 jobs, 2 in-process writes, and its upserts and deletes land in one
+    merge commit, never a separate delete commit."""
+    jobs, counted, snaps = _micro_batch_job_count(spark, tmp_path, "merge-on-read")
+    assert jobs == 7
+    assert counted["write.inprocess"] == 2
+    assert "write.spark" not in counted
+    assert "delete" not in {s["operation"] for s in snaps}
 
 
 _TYPES_SCHEMA = T.StructType([

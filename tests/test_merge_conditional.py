@@ -300,11 +300,12 @@ def test_stale_guard_holds_on_merge_on_read_table(spark, tmp_path):
     assert {r["k"] for r in t.read(spark).collect()} == {2}
 
 
-def test_mor_delete_routing_still_used_without_guard_columns(spark, tmp_path):
-    """Tables NOT persisting ordering metadata keep the position-delete
-    fast path on merge-on-read (write amplification win intact)."""
-    from pyspark.sql import functions as F
-
+def test_cdc_batch_on_mor_table_is_one_merge_commit(spark, tmp_path):
+    """A CDC batch on a merge-on-read table without guard columns applies
+    its delete, update and insert in ONE merge commit. The MERGE rewrites
+    the file a pending position delete points at: the earlier-deleted row
+    stays deleted, no delete entry outlives its data file, and the rows
+    equal the copy-on-write table's after the same steps."""
     from transactional_datalake_using_amazon_datafirehose_iceberg_spark.operators.cdc_apply import (
         apply_batch,
     )
@@ -313,27 +314,43 @@ def test_mor_delete_routing_still_used_without_guard_columns(spark, tmp_path):
         T.StructField("k", T.LongType()),
         T.StructField("v", T.StringType()),
     ])
-    t = LakeTable.create(
-        os.path.join(str(tmp_path), "mor_plain"),
-        schema,
-        keys=["k"],
-        properties={"write.delete.mode": "merge-on-read"},
-    )
+    batch = spark.createDataFrame(
+        [
+            (1, None, "delete", "2024-01-02 00:00:00", 3),
+            (3, "c2", "update", "2024-01-02 00:00:00", 4),
+            (6, "f", "insert", "2024-01-02 00:00:00", 5),
+        ],
+        "k long, v string, operation string, _order_ts string, _order_txn long",
+    ).withColumn("_order_ts", F.to_timestamp("_order_ts"))
 
-    def batch(rows):
-        return spark.createDataFrame(
-            rows, "k long, v string, operation string, _order_ts string, _order_txn long"
-        ).withColumn("_order_ts", F.to_timestamp("_order_ts"))
+    def run(mode):
+        t = LakeTable.create(
+            os.path.join(str(tmp_path), mode), schema, keys=["k"],
+            properties={"write.delete.mode": mode},
+        )
+        t.append(spark.createDataFrame(
+            [(k, c) for k, c in zip(range(1, 6), "abcde")], schema
+        ).coalesce(1))
+        assert len(t.manifest()["files"]) == 1
+        t.delete_where(spark, "k = 2")
+        before = len(t.snapshots())
+        apply_batch(t, batch)
+        return t, before
 
-    apply_batch(t, batch([
-        (1, "a", "insert", "2024-01-01 00:00:00", 1),
-        (2, "b", "insert", "2024-01-01 00:00:00", 2),
-    ]))
-    apply_batch(t, batch([(1, None, "delete", "2024-01-02 00:00:00", 3)]))
-    assert {r["k"] for r in t.read(spark).collect()} == {2}
-    # the delete landed as a delete-file commit, not a COW rewrite
-    ops = [s["operation"] for s in t.snapshots()]
-    assert "delete" in ops
+    t, before = run("merge-on-read")
+    snaps = t.snapshots()
+    assert t.manifest(snaps[before - 1]["version"])["delete_files"]
+    assert [s["operation"] for s in snaps[before:]] == ["merge"]
+    rows = sorted((r["k"], r["v"]) for r in t.read(spark).collect())
+    assert rows == [(3, "c2"), (4, "d"), (5, "e"), (6, "f")]
+    for s in snaps:
+        m = t.manifest(s["version"])
+        live = {f["path"] for f in m["files"]}
+        for d in m["delete_files"]:
+            assert set(d["refs"]) <= live, (s["version"], d)
+
+    cow, _ = run("copy-on-write")
+    assert sorted((r["k"], r["v"]) for r in cow.read(spark).collect()) == rows
 
 
 def test_merge_empty_update_cols_keeps_matched_rows_inserts_new(spark, tmp_path):

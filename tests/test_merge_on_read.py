@@ -295,77 +295,3 @@ def test_mor_with_reserved_like_column_names(spark, tmp_path):
     assert out == [(2, "f2", 20), (3, "f3", 30), (4, "f4", 40), (5, "f5", 50)]
     assert t.row_count() == 4
 
-
-def test_cdc_apply_reruns_mor_delete_after_losing_race(spark, tmp_path):
-    """apply_batch on a merge-on-read table whose position-delete commit
-    loses a race with a compaction from a second handle: the first
-    attempt's DanglingDeleteRefs is absorbed, the delete is RE-RUN
-    against the compacted head, and the table ends exactly as without
-    the race, with no delete entry referencing a removed data file."""
-    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.lake_table import (
-        DanglingDeleteRefs,
-    )
-
-    def batch():
-        return spark.createDataFrame(
-            [
-                (1, "a", None, "delete", "2024-01-02 00:00:00", 5),
-                (2, "b", 20.0, "update", "2024-01-02 00:00:00", 6),
-                (5, "e", 5.0, "insert", "2024-01-02 00:00:00", 7),
-            ],
-            "id int, cat string, val double, operation string, "
-            "_order_ts string, _order_txn long",
-        ).withColumn("_order_ts", F.to_timestamp("_order_ts"))
-
-    def seeded(name):
-        t = LakeTable.create(
-            str(tmp_path / name), SCHEMA, keys=["id"], cluster_by=["cat"],
-            properties={"write.delete.mode": "merge-on-read"},
-        )
-        # two files so compaction has something to rewrite
-        t.append(_mk(spark, [(1, "a", 1.0), (2, "b", 2.0)]))
-        t.append(_mk(spark, [(3, "c", 3.0), (4, "d", 4.0)]))
-        return t
-
-    def rows(t):
-        return sorted((r["id"], r["cat"], r["val"]) for r in t.read(spark).collect())
-
-    calm = seeded("calm")
-    apply_batch(calm, batch())
-
-    t1 = seeded("raced")
-    t2 = LakeTable(t1.root)
-    real_write, real_delete = t1._write_manifest, t1.delete_by_keys_mor
-    raced, raised = [], []
-
-    def racing_write(manifest):
-        if not raced:
-            raced.append(True)
-            compact(spark, t2)  # rewrites the files the delete points at
-        real_write(manifest)
-
-    def watched_delete(*args, **kwargs):
-        try:
-            return real_delete(*args, **kwargs)
-        except Exception as e:
-            raised.append(type(e))
-            raise
-
-    t1._write_manifest = racing_write
-    t1.delete_by_keys_mor = watched_delete
-    apply_batch(t1, batch())
-
-    assert raised == [DanglingDeleteRefs]
-    assert rows(t1) == rows(calm) == [
-        (2, "b", 20.0), (3, "c", 3.0), (4, "d", 4.0), (5, "e", 5.0),
-    ]
-    # the re-run committed its delete file on top of the compaction, and
-    # no snapshot holds a delete entry referencing a removed data file
-    snaps = t1.snapshots()
-    assert [s["operation"] for s in snaps][-3:] == ["compact", "delete", "merge"]
-    assert t1.manifest(snaps[-2]["version"])["delete_files"]
-    for s in snaps:
-        m = t1.manifest(s["version"])
-        live = {f["path"] for f in m["files"]}
-        for d in m["delete_files"]:
-            assert set(d["refs"]) <= live, (s["version"], d)

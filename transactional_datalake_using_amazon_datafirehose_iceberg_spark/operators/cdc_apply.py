@@ -20,7 +20,9 @@ SURVEY.md §7.3 item 1.
 
 Scale: the window for D4 shuffles one micro-batch (small); the MERGE is
 file-pruned copy-on-write (see plans/merge.py) so cost is bounded by
-touched files, not table size.
+touched files, not table size. Every table takes this one MERGE commit,
+whatever its ``write.delete.mode``: a separate position-delete commit
+would point at the very file the MERGE then rewrites.
 """
 
 from __future__ import annotations
@@ -105,7 +107,9 @@ def apply_batch(
     dead_letter_table: LakeTable | None = None,
     dl_stamp: tuple[str, int] | None = None,
 ) -> int:
-    """D1–D5: collapse then MERGE; returns the committed snapshot version.
+    """D1–D5: collapse then MERGE upserts and deletes in ONE commit, on
+    every table whatever its delete mode; returns the committed snapshot
+    version.
 
     ``dead_letter_table``: under the cross-batch stale guard, a record
     with NO ordering evidence at all (both ``_order_ts`` and
@@ -181,55 +185,6 @@ def apply_batch(
                     dead_letter_table, to_dead_letter(dead_rows), dl_stamp
                 )
                 latest = latest.filter(~no_evidence)
-
-        # NULL operation (malformed CDC metadata) is "not a delete" on
-        # every path — merge_into coalesces the same way, so MOR and COW
-        # tables treat the row identically (upsert) instead of the MOR
-        # split dropping it from BOTH sides
-        is_del = F.coalesce(F.col("operation") == "delete", F.lit(False))
-
-        # merge-on-read CDC: route the batch's deletes to a position-
-        # delete file (O(deleted rows) written) instead of a copy-on-
-        # write file rewrite — bounded write amplification for delete-
-        # heavy streams (reference tables run merge-on-read,
-        # README.md:307). Upserts still MERGE copy-on-write. Keys are
-        # disjoint (D4 collapsed per key), so the two commits cannot
-        # conflict; the watermark stamps the final one.
-        # NOT taken under the stale guard: a position-delete commit has
-        # no newer-than-current check, so a replayed older batch's
-        # delete would silently remove a newer row image — those deletes
-        # go through the gated MERGE below instead (correctness over
-        # write amplification).
-        props = table.manifest().get("properties", {})
-        if props.get("write.delete.mode") == "merge-on-read" and not stale_guard:
-            from ..plans.lake_table import CommitConflict
-            from ..plans.merge import source_key_stats
-
-            deletes = latest.filter(is_del)
-            # one fused aggregate answers "any deletes?" AND the key
-            # range for manifest pruning (was two separate jobs per
-            # micro-batch); shared with merge_into so the pruning
-            # contract (rangeable dtypes, NULL-key pruning disable)
-            # cannot drift
-            preds, n_deletes = source_key_stats(deletes, keys)
-            # a concurrent commit (compaction) that moves the head
-            # between plan and commit RE-RUNS the delete, never blind-
-            # retries it — the (file, pos) tuples were computed against
-            # the old snapshot (merge_into's one-re-plan shape)
-            if n_deletes > 0:
-                for attempt in range(2):
-                    try:
-                        table.delete_by_keys_mor(
-                            typed.sparkSession,
-                            deletes.select(*keys),
-                            keys,
-                            predicates=preds,
-                        )
-                        break
-                    except CommitConflict:
-                        if attempt:
-                            raise
-            latest = latest.filter(~is_del)
 
         return merge_into(
             table,

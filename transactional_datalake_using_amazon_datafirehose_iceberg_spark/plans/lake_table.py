@@ -2555,22 +2555,18 @@ class LakeTable:
         spark: SparkSession,
         condition: str,
         predicates: list[Predicate] | None = None,
-        mode: str | None = None,
     ) -> int:
         """``DELETE FROM t WHERE condition`` (reference runbook Q6,
         README.md:421-431).
 
-        ``mode``: ``copy-on-write`` (default) rewrites only files that may
-        contain matches; ``merge-on-read`` writes a position-delete file
-        instead — O(matched rows) written, no data-file rewrite — the
-        right trade for delete-heavy CDC (the reference runs its Iceberg
-        tables merge-on-read with
-        ``optimize_rewrite_delete_file_threshold=10``, README.md:307).
-        Defaults to the table property ``write.delete.mode``."""
-        mode = mode or self.manifest().get("properties", {}).get(
-            "write.delete.mode", "copy-on-write"
-        )
-        if mode == "merge-on-read":
+        The table property ``write.delete.mode`` picks the layout:
+        ``copy-on-write`` (default) rewrites only files that may contain
+        matches; ``merge-on-read`` writes a position-delete file instead
+        — O(matched rows) written, no data-file rewrite (the reference
+        runs its Iceberg tables merge-on-read with
+        ``optimize_rewrite_delete_file_threshold=10``, README.md:307)."""
+        props = self.manifest().get("properties", {})
+        if props.get("write.delete.mode") == "merge-on-read":
             return self._delete_where_mor(spark, condition, predicates)
         cand = self.file_paths(predicates=predicates)
         if not cand:
@@ -2630,14 +2626,13 @@ class LakeTable:
         spark: SparkSession,
         keys_df: DataFrame,
         keys: list[str] | None = None,
-        predicates: list[Predicate] | None = None,
-        extra_summary: dict | None = None,
     ) -> int:
-        """Merge-on-read DELETE by key set — the CDC delete path: rows
-        whose key appears in ``keys_df`` get their (file, pos) recorded
-        in a position-delete file; no data file is rewritten. The key set
-        is broadcast (a micro-batch's delete keys are tiny next to the
-        table)."""
+        """Merge-on-read DELETE by key set: rows whose key appears in
+        ``keys_df`` get their (file, pos) recorded in a position-delete
+        file; no data file is rewritten. The key set is broadcast (a
+        delete's key set is tiny next to the table). CDC micro-batches do
+        not come here: ``apply_batch`` applies their deletes in its one
+        MERGE commit."""
         keys = keys or self.keys
         # single-column key sets are micro-batch scale (they broadcast
         # below anyway): collect them once and let the per-file key
@@ -2659,9 +2654,7 @@ class LakeTable:
             kvals = [v for v in kvals if v is not None]
             if 0 < len(kvals) <= 10000 and not has_null_key:
                 extra_preds = [Predicate(keys[0], "in", tuple(kvals))]
-        cand = self.file_paths(
-            predicates=None if has_null_key else [*(predicates or []), *extra_preds]
-        )
+        cand = self.file_paths(predicates=None if has_null_key else extra_preds)
         if not cand:
             return self.current_version()
         m = self.manifest()
@@ -2707,7 +2700,7 @@ class LakeTable:
             [],
             operation="delete",
             added_deletes=[meta],
-            extra_summary={"delete_mode": "merge-on-read", **(extra_summary or {})},
+            extra_summary={"delete_mode": "merge-on-read"},
         )
 
     def _write_delete_file(self, dels: DataFrame) -> dict | None:

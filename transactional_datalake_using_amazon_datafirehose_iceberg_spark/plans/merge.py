@@ -579,34 +579,6 @@ def _observed_rows(obs, src: DataFrame) -> int | None:
             return None
 
 
-def source_key_stats(
-    src: DataFrame, keys: list[str]
-) -> tuple[list[Predicate], int]:
-    """ONE fused aggregate over a merge/delete source: row count plus —
-    when the key is single, orderable and NULL-free in this batch — the
-    min/max manifest-pruning predicate pair. Shared by merge_into-style
-    callers (cdc_apply's MOR delete probe) so the pruning contract
-    (rangeable dtypes, NULL-key pruning disable) lives in one place."""
-    range_key = _rangeable_key(src, keys)
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    if range_key:
-        aggs += [
-            F.min(range_key).alias("__lo"),
-            F.max(range_key).alias("__hi"),
-            F.max(
-                F.when(F.col(range_key).isNull(), 1).otherwise(0)
-            ).alias("__nrk"),
-        ]
-    s = src.agg(*aggs).collect()[0]
-    preds: list[Predicate] = []
-    if range_key and s["__lo"] is not None and not s["__nrk"]:
-        preds = [
-            Predicate(range_key, ">=", s["__lo"]),
-            Predicate(range_key, "<=", s["__hi"]),
-        ]
-    return preds, int(s["__n"])
-
-
 def _rangeable_key(src: DataFrame, keys: list[str]) -> str | None:
     """The single orderable key whose min/max buys manifest file skipping
     on the target (None when keys are composite or unordered). The
