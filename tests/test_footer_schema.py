@@ -17,6 +17,7 @@ from pyspark.sql import types as T
 
 from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import (
     LakeTable,
+    lake_table,
 )
 from transactional_datalake_using_amazon_datafirehose_iceberg_spark.schemas import (
     FIXTURE_TABLES,
@@ -80,7 +81,7 @@ def test_footer_schema_of_delete_eq_file_is_the_file_type(spark, tmp_path):
 
 
 def test_footer_schema_falls_back_when_spark_mapping_is_conf_dependent(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     ts = [dt.datetime(2024, 1, 1)]
     unsure = {
@@ -110,6 +111,9 @@ def test_footer_schema_falls_back_when_spark_mapping_is_conf_dependent(
         os.path.join(str(tmp_path), "lake"),
         T.StructType([T.StructField("k", T.LongType())]),
     )
+    # a one-row append is written in-process; a zero-row gate forces
+    # the Spark writer, whose files carry its row-metadata key
+    monkeypatch.setattr(lake_table, "_INPROCESS_MAX_ROWS", 0)
     t.append(spark.createDataFrame([(1,)], "k long"))
     unsure["spark-written LakeTable file"] = os.path.join(
         t.root, t.manifest()["files"][0]["path"]

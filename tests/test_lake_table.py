@@ -691,81 +691,65 @@ def test_bloom_point_lookup_prunes_overlapping_ranges(spark, table):
     assert none == []
 
 
-def test_bloom_skips_duplicated_basenames(spark, table, tmp_path, capfd):
-    """Bloom maps are keyed by basename while _collect_stats walks the
-    commit dir recursively: two same-named files in different subdirs
-    must get NO bloom (ambiguous attachment would false-negative prune
-    — rows missing from reads), while min/max stats still collect
-    (r8 advice, plans/lake_table.py basename-keying hazard)."""
+def test_bloom_per_file_under_duplicated_basenames(spark, table):
+    """_collect_stats walks the commit dir recursively: two same-named
+    files in different subdirectories each get the bloom of their own
+    keys, so a point lookup inside both files' id ranges keeps only the
+    file that holds the key."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    commit = tmp_path / "commit"
-    for sub, ids in (("a", [1, 2]), ("b", [3, 4])):
-        d = commit / sub
-        d.mkdir(parents=True)
+    import transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.lake_table as lt
+
+    commit = os.path.join(table.root, "data", "dup")
+    for sub, ids in (("a", [1, 5]), ("b", [3, 4])):
+        d = os.path.join(commit, sub)
+        os.makedirs(d)
         pq.write_table(
             pa.table({
-                "id": pa.array(ids, pa.int64()),
-                "name": pa.array(["x"] * len(ids)),
-                "score": pa.array([1.0] * len(ids)),
+                "id": pa.array(ids, pa.int32()),
+                "cat": pa.array(["x"] * len(ids)),
+                "val": pa.array([1.0] * len(ids)),
             }),
-            d / "part-000.parquet",
+            os.path.join(d, "part-000.parquet"),
         )
-    metas = table._collect_stats(str(commit))
-    assert len(metas) == 2
-    assert all("bloom" not in m for m in metas), metas
-    # min/max stats are attachment-safe (computed per walked file)
-    assert all(m["min"].get("id") is not None for m in metas)
-    assert "duplicated parquet basename" in capfd.readouterr().err
+    metas = sorted(table._collect_stats(commit), key=lambda m: m["path"])
+    assert [m["path"] for m in metas] == [
+        os.path.join("data", "dup", s, "part-000.parquet") for s in ("a", "b")
+    ]
+    for m, ids in zip(metas, ({1, 5}, {3, 4})):
+        assert m["bloom"] == {"id": lt._bloom_build(ids)}
+    table.commit(metas)
+    # file a's range 1..5 covers 3: only its bloom can prune it
+    assert table.file_paths(predicates=[Predicate("id", "=", 3)]) == [
+        os.path.join(commit, "b", "part-000.parquet")
+    ]
+    got = table.read(spark, predicates=[Predicate("id", "=", 3)])
+    assert [r["id"] for r in got.filter(F.col("id") == 3).collect()] == [3]
 
 
-def test_bloom_respects_property_and_row_cap(spark, tmp_path):
-    """write.bloom-filter.enabled=false skips bloom writing; files over
-    the row cap skip it too (manifest stays metadata-scale)."""
-    t = LakeTable.create(
-        str(tmp_path / "nb"), SCHEMA, keys=["id"],
-        properties={"write.bloom-filter.enabled": "false"},
-    )
-    t.append(_mk(spark, [(1, "a", 1.0)]))
-    assert all("bloom" not in f for f in t.manifest()["files"])
-    # pruning still falls back to min/max
+def test_bloom_respects_row_cap(spark, tmp_path, monkeypatch):
+    """A file over _BLOOM_MAX_ROWS gets no bloom (the manifest stays
+    metadata-scale); its min/max stats still prune."""
+    import transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.lake_table as lt
+
+    monkeypatch.setattr(lt, "_BLOOM_MAX_ROWS", 2)
+    t = LakeTable.create(str(tmp_path / "nb"), SCHEMA, keys=["id"])
+    t.append(_mk(spark, [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)]))
+    files = t.manifest()["files"]
+    assert len(files) == 1 and files[0]["rows"] == 3
+    assert "bloom" not in files[0]
     assert t.file_paths(predicates=[Predicate("id", "=", 999)]) == []
+    assert len(t.file_paths(predicates=[Predicate("id", "=", 2)])) == 1
 
 
-def test_bloom_builds_executor_side_above_driver_gate(spark, table):
-    """Commits above the micro-batch gate (_BLOOM_DRIVER_ROWS) build
-    blooms via the distributed grouped-by-file job, not a driver column
-    read (r7 verdict #3) — the resulting blooms must be identical in
-    behavior: point lookups prune absent keys and never lose present
-    ones."""
-    n = 6000  # > _BLOOM_DRIVER_ROWS, < _BLOOM_MAX_ROWS
-    df = spark.range(n).select(
-        F.col("id").cast("int").alias("id"),
-        F.lit("x").alias("cat"),
-        F.col("id").cast("double").alias("val"),
-    )
-    table.append(df)
-    files = table.manifest()["files"]
-    assert all("bloom" in f and "id" in f["bloom"] for f in files)
-    # present key: kept; absent key: fully pruned (ranges overlap 0..n)
-    assert len(table.file_paths(predicates=[Predicate("id", "=", 17)])) >= 1
-    assert table.file_paths(predicates=[Predicate("id", "=", n + 5)]) == []
-    got = table.read(spark, predicates=[Predicate("id", "=", 17)]).filter(
-        F.col("id") == 17
-    )
-    assert got.count() == 1
+def test_bloom_exact_for_wide_bigints_nulls_and_dates(spark, tmp_path):
+    """Each key bloom equals _bloom_build of the file's non-null keys
+    read back with pyarrow: bigint keys above 2^53 (where a float64
+    detour would round them), NULLs (never hashed) and date keys (hashed
+    as epoch days) all stay exact."""
+    import pyarrow.parquet as pq
 
-
-def test_bloom_distributed_and_driver_paths_bit_identical(
-    spark, tmp_path, monkeypatch
-):
-    """The executor-side (applyInPandas) and in-process (pyarrow) bloom
-    builds must produce bit-identical filters for the same file — the
-    Arrow->pandas conversion upcasts a nullable int64 key to float64
-    (5 -> 5.0) and renders dates as python date objects, and any
-    encoding drift between the paths would silently diverge pruning
-    between micro-batch and bulk commits."""
     import transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.lake_table as lt
 
     schema = T.StructType([
@@ -773,10 +757,6 @@ def test_bloom_distributed_and_driver_paths_bit_identical(
         T.StructField("name", T.StringType()),
         T.StructField("day", T.DateType()),
     ])
-    # ids pushed above 2^53 with NULLs present: the pandas path would
-    # upcast the column to float64 and hash lossy scientific-notation
-    # strings — exactly the regime where snowflake-style bigint keys
-    # live; the Arrow-native build must stay exact
     rows = spark.sql("""
         SELECT CASE WHEN id % 97 = 0 THEN NULL
                ELSE 9223372036854000000 + id END AS id,
@@ -784,31 +764,16 @@ def test_bloom_distributed_and_driver_paths_bit_identical(
                DATE_ADD(DATE'2024-01-01', CAST(id % 30 AS INT)) AS day
         FROM range(6000)
     """).coalesce(1)
-
-    manifests = {}
-    for label, gate in (("distributed", 0), ("driver", 10**9)):
-        monkeypatch.setattr(lt, "_BLOOM_DRIVER_ROWS", gate)
-        if label == "distributed":
-            # the silent driver-read fallback must NOT mask a broken
-            # distributed job here (it did once: applyInArrow keys are
-            # pyarrow scalars, the job crashed, the fallback hid it)
-            monkeypatch.setattr(
-                lt.LakeTable,
-                "_build_blooms_inprocess",
-                lambda self, need, cols: (_ for _ in ()).throw(
-                    AssertionError("distributed bloom job fell back")
-                ),
-            )
-        t = lt.LakeTable.create(
-            str(tmp_path / label), schema, keys=["id", "name", "day"]
-        )
-        t.append(rows)
-        monkeypatch.undo()
-        monkeypatch.setattr(lt, "_BLOOM_DRIVER_ROWS", gate)
-        files = t.manifest()["files"]
-        assert len(files) == 1 and "bloom" in files[0]
-        manifests[label] = files[0]["bloom"]
-    assert manifests["distributed"] == manifests["driver"]
+    t = LakeTable.create(str(tmp_path / "t"), schema, keys=["id", "name", "day"])
+    t.append(rows)
+    files = t.manifest()["files"]
+    assert len(files) == 1
+    back = pq.read_table(os.path.join(t.root, files[0]["path"]))
+    assert back.column("id").null_count > 0
+    for c in ("id", "name", "day"):
+        keys = {lt._encode_stat(x) for x in back.column(c).to_pylist() if x is not None}
+        assert files[0]["bloom"][c] == lt._bloom_build(keys), c
+    assert lt._bloom_may_contain(files[0]["bloom"]["id"], 9223372036854000001)
 
 
 def test_bloom_build_matches_plain_python_reference():
@@ -1347,13 +1312,13 @@ def test_row_ids_distinct_and_stable_without_lineage_flag(spark, tmp_path):
 def test_plan_path_metrics_observable(spark, table, monkeypatch):
     """plans.metrics counts which planner branch fired (r8 verdict #5:
     'measure how often the in-process paths fire at sf0.1') — the merge
-    probe-skip/probe-job split and the bloom driver/distributed split
-    must be distinguishable without log scraping."""
+    probe-skip/probe-job split and the bloom builds must be countable
+    without log scraping."""
     import transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.merge as mg
     from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import metrics
 
     metrics.reset()
-    # micro-batch append: under _BLOOM_DRIVER_ROWS -> in-process bloom
+    # every commit that writes keyed rows builds its blooms in-process
     table.append(_mk(spark, [(1, "a", 1.0), (2, "b", 2.0)]))
     assert metrics.snapshot().get("bloom.inprocess_small") == 1
 
@@ -1836,7 +1801,7 @@ def test_create_recovers_from_crash_before_pointer_swap(spark, tmp_path):
 
 
 # --- in-process small writes ----------------------------------------------
-# LakeTable._write_files writes an output of at most _BLOOM_DRIVER_ROWS
+# LakeTable._write_files writes an output of at most _INPROCESS_MAX_ROWS
 # rows from one Arrow collect with pyarrow; the pins below hold its job
 # counts and file layout, and the parity test holds it to the Spark
 # writer's table.
@@ -1909,23 +1874,53 @@ def test_small_clustered_append_is_one_job_in_process(spark, tmp_path, n_parts):
 
 
 def test_append_over_the_gate_keeps_the_spark_path(spark, tmp_path):
-    """One row over _BLOOM_DRIVER_ROWS: the compressed parquet scan's
+    """One row over _INPROCESS_MAX_ROWS: the compressed parquet scan's
     size estimate is under the gate, so the bounded collect runs (1
     job), returns the gate + 1 rows, and the write falls to the
-    unchanged Spark path: range sampling, shuffle and write, then the
-    distributed bloom build, in the same range layout."""
+    unchanged Spark path: range sampling, shuffle and write, in the
+    same range layout. Every file still gets the key bloom of its own
+    keys, built as the stats pass reads it."""
+    import pyarrow.parquet as pq
+
     import transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.lake_table as lt
 
-    src = _ev_source(spark, tmp_path, lt._BLOOM_DRIVER_ROWS + 1, 6)
+    n = lt._INPROCESS_MAX_ROWS + 1
+    src = _ev_source(spark, tmp_path, n, 6)
     t = LakeTable.create(
         str(tmp_path / "t"), _EV_SCHEMA, keys=["id"], cluster_by=["ev"]
     )
     jobs, paths = _counted_append(spark, t, src)
-    assert paths == {"write.spark": 1, "bloom.distributed": 1}
-    # the Spark path's 5 jobs plus the one bounded collect
-    assert jobs == 6
+    assert paths == {"write.spark": 1, "bloom.inprocess_small": 1}
+    # the Spark path's 3 jobs plus the one bounded collect
+    assert jobs == 4
     assert 1 < len(_ev_spans(t)) <= 4
-    assert t.row_count() == lt._BLOOM_DRIVER_ROWS + 1
+    assert t.row_count() == n
+    files = t.manifest()["files"]
+    for f in files:
+        ids = pq.read_table(os.path.join(t.root, f["path"]), columns=["id"])
+        assert f["bloom"] == {"id": lt._bloom_build(set(ids.column(0).to_pylist()))}
+    # every file's id range spans the table: only the blooms prune, down
+    # to the one file whose ev value id 17 carries
+    assert len(t.file_paths(predicates=[Predicate("id", "=", 17)])) == 1
+    assert t.file_paths(predicates=[Predicate("id", "=", n + 5)]) == []
+    got = t.read(spark, predicates=[Predicate("id", "=", 17)]).filter(F.col("id") == 17)
+    assert got.count() == 1
+
+
+def test_list_frame_append_is_one_job_in_process(spark, tmp_path):
+    """A frame from spark.createDataFrame(<python list>) has no plan
+    size estimate (spark.sql.defaultSizeInBytes). It takes the bounded
+    collect and is gated on what that returns: 5 rows on local[4] land
+    as one in-process file, not one Spark-written file per input
+    partition."""
+    t = LakeTable.create(str(tmp_path / "t"), SCHEMA, keys=["id"])
+    src = _mk(spark, [(i, "a", float(i)) for i in range(5)])
+    jobs, paths = _counted_append(spark, t, src)
+    assert paths == {"write.inprocess": 1, "bloom.inprocess_small": 1}
+    assert jobs == 1
+    files = t.manifest()["files"]
+    assert len(files) == 1 and files[0]["rows"] == 5
+    assert sorted(r["id"] for r in t.read(spark).collect()) == list(range(5))
 
 
 def test_empty_append_commits_nothing_and_leaves_no_dir(spark, tmp_path):
@@ -2079,8 +2074,8 @@ def _build_lineage(spark, root, cluster_by):
 def test_inprocess_and_spark_writes_build_the_same_table(
     spark, tmp_path, monkeypatch, build, cluster_by
 ):
-    """The same rows written in-process and by Spark (gate forced to 0,
-    which also sends the blooms to the distributed build): equal reads,
+    """The same rows written in-process and by Spark (gate forced to 0):
+    equal reads,
     schemas, per-file min/max and bloom bitsets; every in-process file
     is sorted as sortWithinPartitions(*cluster_by) leaves it."""
     import transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.lake_table as lt
@@ -2088,9 +2083,9 @@ def test_inprocess_and_spark_writes_build_the_same_table(
 
     tables = {}
     for label, gate, other in (
-        ("spark", 0, "inprocess"), ("inprocess", lt._BLOOM_DRIVER_ROWS, "spark")
+        ("spark", 0, "inprocess"), ("inprocess", lt._INPROCESS_MAX_ROWS, "spark")
     ):
-        monkeypatch.setattr(lt, "_BLOOM_DRIVER_ROWS", gate)
+        monkeypatch.setattr(lt, "_INPROCESS_MAX_ROWS", gate)
         metrics.reset()
         tables[label] = build(spark, str(tmp_path / label), cluster_by)
         assert f"write.{label}" in metrics.snapshot()

@@ -128,12 +128,10 @@ def test_sustained_cdc_apply_throughput(spark, tmp_path):
     # batches kept getting applied at roughly constant cost (no blow-up):
     # final batch within 5x of the first (generous local-jitter bound)
     assert timings[-1] < timings[0] * 5 + 2.0, timings
-    # planner census pins the micro-batch hot path mechanically: every
-    # commit stayed under the in-process bloom gate, no merge ever ran
-    # the touched-file probe scan (candidates under _PROBE_SKIP_BYTES),
-    # and the distributed bloom build never silently fell back
+    # planner census pins the micro-batch hot path mechanically: no
+    # merge ever ran the touched-file probe scan (candidates under
+    # _PROBE_SKIP_BYTES)
     snap = metrics.snapshot()
-    assert snap.get("bloom.fallback_inprocess", 0) == 0, snap
     assert snap.get("merge.probe_job", 0) == 0, snap
     # batch 0 merges into an empty table (pruning leaves zero candidate
     # files -> append fast path); the other 9 take the byte-gated

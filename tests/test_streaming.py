@@ -881,16 +881,14 @@ def test_batch_ledger_policy_on_plain_summaries():
     }
 
 
-def test_lake_table_sink_files_carry_task_computed_blooms(spark, tmp_path):
-    """Arrow-sink-written files must carry per-file key blooms computed
-    IN the write task (shipped via WriterCommitMessage), not by a
-    driver-side column re-read (r6 verdict: the driver bloom build was
-    the one data-volume stats path). Prune behavior matches the
-    driver-built blooms exactly."""
+def test_lake_table_sink_files_carry_blooms(spark, tmp_path):
+    """Arrow-sink-written files carry per-file key blooms: the sink's
+    commit ends in the same _collect_stats as every other writer, so
+    each file's bloom is _bloom_build of its own keys."""
     from pyspark.sql import types as T
 
     from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.lake_table import (
-        LakeTable, Predicate, _bloom_may_contain,
+        LakeTable, Predicate, _bloom_build, _bloom_may_contain,
     )
     from transactional_datalake_using_amazon_datafirehose_iceberg_spark.sources.lake_stream import (
         LakeStreamDataSource,
@@ -925,9 +923,10 @@ def test_lake_table_sink_files_carry_task_computed_blooms(spark, tmp_path):
     }
     for f in files:
         own = rows_per_file[f["path"]]
+        assert f["bloom"] == {"k": _bloom_build(own)}
         for k in own:
             assert _bloom_may_contain(f["bloom"]["k"], k)
-    # point-lookup file pruning via the task-computed blooms
+    # point-lookup file pruning via the blooms
     some_key = next(iter(rows_per_file[files[0]["path"]]))
     pruned = t.file_paths(predicates=[Predicate("k", "=", some_key)])
     assert len(pruned) < 4

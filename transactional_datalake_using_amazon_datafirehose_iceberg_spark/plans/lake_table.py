@@ -120,33 +120,22 @@ def _encode_pred_value(v: Any) -> Any:
 
 
 # --- per-file key bloom filters (manifest-level point-lookup skipping) ----
-# Iceberg-parity idea: min/max stats prune RANGE predicates, but CDC point
-# lookups (MERGE key probes, MOR deletes) on a table whose key ranges
-# overlap across files prune nothing. A small per-file bloom over the key
-# column lets `key = v` / `key IN (...)` skip files that provably lack the
-# key (Iceberg ships the same capability via parquet bloom filters +
-# metadata skipping). ~10 bits/key, 7 probes -> ~1% false positives; false
-# negatives impossible. Files beyond the row cap skip the bloom (their
+# Iceberg-parity idea: min/max stats prune RANGE predicates, but point
+# lookups (``Predicate`` "=" / "in" on a key, as in MOR deletes and
+# snapshot reads) on a table whose key ranges overlap across files prune
+# nothing. A small per-file bloom over the key column lets
+# `key = v` / `key IN (...)` skip files that provably lack the key
+# (Iceberg ships the same capability via parquet bloom filters +
+# metadata skipping). ~10 bits/key, 7 probes -> ~1% false positives;
+# false negatives impossible. ``_collect_stats`` builds one per file from
+# its key columns; files beyond the row cap skip the bloom (their
 # min/max still applies), keeping manifests metadata-scale.
 
 _BLOOM_K = 7
 _BLOOM_MAX_ROWS = 65536
 _BLOOM_BITS_PER_KEY = 10
-# commits whose bloom-eligible files total at most this many rows build
-# blooms with an in-process read — the micro-batch MERGE / small-append
-# hot path, where a per-commit Spark job would dominate the commit.
-# Raised 4096 -> 65536 (= _BLOOM_MAX_ROWS, round-17 optimization): the
-# crossover is one Spark job's fixed latency (~0.4-0.6 s measured on
-# the commit path) vs driver-hashing at most 65k keys (~0.1 s), and the
-# driver read stays bounded — KEY COLUMNS ONLY of files each already
-# row-capped for bloom eligibility, so <= 65536 rows x key width per
-# commit, the same metadata-scale class as a collected aggregate.
-# Measured on the partition-evolution append (15k rows, 25 files):
-# 1.06 -> 0.53 s mean, bloom bitsets bit-identical across both paths.
-# Anything larger runs the distributed executor-side build (at 100 TB
-# every real data commit exceeds this and the driver never reads data
-# volume).
-_BLOOM_DRIVER_ROWS = 65536
+# most rows an output may have to be written in-process (``_small_output``)
+_INPROCESS_MAX_ROWS = 65536
 
 # target bytes per written data file when a caller supplies a write-size
 # hint (Iceberg's write.target-file-size-bytes analogue)
@@ -198,12 +187,15 @@ def _small_output(
 ):
     """``(arrow table, pyarrow codec, columns to write statistics
     for)`` when the conformed ``df`` may be written in-process (see
-    ``_write_files``), else None. Every fact of the gate is known
-    before any job runs. The row bound is the caller's proven
-    ``max_rows`` or, failing that, the optimized plan's size
-    estimate over the row's default size; an estimated frame is
-    collected under ``limit(_BLOOM_DRIVER_ROWS + 1)``, so a wrong
-    estimate costs one bounded collect and then the Spark path."""
+    ``_write_files``), else None. Every fact of the gate but the
+    size of a frame with no estimate is known before any job runs.
+    The row bound is the caller's proven ``max_rows`` or, failing
+    that, the optimized plan's size estimate over the row's default
+    size; an estimated frame is collected under
+    ``limit(_INPROCESS_MAX_ROWS + 1)``, so a wrong estimate costs one
+    bounded collect and then the Spark path. A frame with no estimate
+    takes the same bounded collect and is gated on the rows and Arrow
+    bytes it returns."""
     spark = df.sparkSession
     fields = df.schema.fields
     if not all(
@@ -226,19 +218,35 @@ def _small_output(
     stat_cols = [
         f.name for f in fields if ts_out == "TIMESTAMP_MICROS" or f.name not in ltz
     ]
+    plan_bytes = None
     if max_rows is None or size_hint_bytes is None:
-        plan_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        plan = df._jdf.queryExecution().optimizedPlan()
+        # a leaf without statistics (a frame from a Python list or an
+        # RDD) reports spark.sql.defaultSizeInBytes, which projections
+        # above it rescale: then the plan has no estimate at all
+        leaves = plan.collectLeaves()
+        unknown = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
+        if all(
+            int(leaves.apply(i).stats().sizeInBytes()) < unknown
+            for i in range(leaves.length())
+        ):
+            plan_bytes = int(plan.stats().sizeInBytes())
         if size_hint_bytes is None:
             size_hint_bytes = plan_bytes
-    if size_hint_bytes > _TARGET_FILE_BYTES:
+    if size_hint_bytes is not None and size_hint_bytes > _TARGET_FILE_BYTES:
         return None
     if max_rows is not None:
-        tbl = df.toArrow() if max_rows <= _BLOOM_DRIVER_ROWS else None
-    elif plan_bytes // max(1, df._jdf.schema().defaultSize()) <= _BLOOM_DRIVER_ROWS:
-        tbl = df.limit(_BLOOM_DRIVER_ROWS + 1).toArrow()
+        tbl = df.toArrow() if max_rows <= _INPROCESS_MAX_ROWS else None
+    elif (
+        plan_bytes is None
+        or plan_bytes // max(1, df._jdf.schema().defaultSize()) <= _INPROCESS_MAX_ROWS
+    ):
+        tbl = df.limit(_INPROCESS_MAX_ROWS + 1).toArrow()
     else:
         tbl = None
-    if tbl is None or tbl.num_rows > _BLOOM_DRIVER_ROWS:
+    if tbl is None or tbl.num_rows > _INPROCESS_MAX_ROWS or (
+        size_hint_bytes is None and tbl.nbytes > _TARGET_FILE_BYTES
+    ):
         return None
     return tbl, codec, stat_cols
 
@@ -1212,9 +1220,9 @@ class LakeTable:
         nulls first, as ``sortWithinPartitions``) and ``pq.write_table``
         replace the range-sampling job, the shuffle and the Spark write.
         The gate is a flat schema of whitelisted types, at most
-        ``_BLOOM_DRIVER_ROWS`` rows and at most ``_TARGET_FILE_BYTES``
-        estimated bytes, each known without running a job; anything
-        unknown keeps the Spark path. The file layout stays the one the
+        ``_INPROCESS_MAX_ROWS`` rows and at most ``_TARGET_FILE_BYTES``
+        bytes; a frame whose plan has no size estimate is measured by
+        one bounded collect. The file layout stays the one the
         Spark path writes: with a size hint the file count comes from
         the hint, and a hint under the byte gate always means one file;
         with no hint a clustered output splits like ``RangePartitioner``
@@ -1304,13 +1312,7 @@ class LakeTable:
 
     def bloom_key_columns(self) -> list[str]:
         """Key columns eligible for per-file blooms: exact-match-
-        friendly types only (never float); opt out via table property
-        write.bloom-filter.enabled. Shared by the driver-side stats
-        fallback and the Arrow sink's executor-side bloom build."""
-        if self.manifest().get("properties", {}).get(
-            "write.bloom-filter.enabled", "true"
-        ) == "false":
-            return []
+        friendly types only (never float)."""
         return [
             f.name
             for f in self.schema.fields
@@ -1322,8 +1324,12 @@ class LakeTable:
             )
         ]
 
-    def _collect_stats(self, commit_dir: str, schema_v: int | None = None,
-                       precomputed_blooms: dict[str, dict] | None = None) -> list[dict]:
+    def _collect_stats(self, commit_dir: str, schema_v: int | None = None) -> list[dict]:
+        """Footer min/max and the key bloom of every parquet file under
+        ``commit_dir``, one manifest entry each. Every writer (the Spark
+        and in-process writes, the Arrow sink, compaction) ends here."""
+        from . import metrics
+
         # every data file records the schema generation it was written
         # under — how initial-default columns tell pre-ALTER files (read
         # the default) from post-ALTER files (read stored values); a
@@ -1335,34 +1341,7 @@ class LakeTable:
         stat_cols = {f.name for f in schema.fields if isinstance(f.dataType, _STATS_TYPES)}
         bloom_cols = self.bloom_key_columns()
         metas: list[dict] = []
-        # (abs path, its meta, the already-open ParquetFile handle —
-        # the in-process bloom path reuses it instead of re-parsing the
-        # footer on the micro-batch hot path)
-        need_bloom: list[tuple[str, dict, Any]] = []
-        # Bloom maps are keyed by file BASENAME (the executor-side
-        # builds see only input_file_name / the sink's commit message,
-        # not commit_dir). The walk is recursive, so two same-named
-        # files in different subdirectories would silently attach one
-        # file's bloom to the other — false-NEGATIVE pruning, i.e. rows
-        # missing from reads. Writes are flat today; enforce it: any
-        # duplicated basename gets NO bloom (min/max stats still apply),
-        # never a possibly-wrong one.
-        basename_counts: dict[str, int] = {}
-        for dirpath, _dirs, files in os.walk(commit_dir):
-            for name in files:
-                if name.endswith(".parquet"):
-                    basename_counts[name] = basename_counts.get(name, 0) + 1
-        dup_names = {n for n, c in basename_counts.items() if c > 1}
-        if dup_names:
-            import sys as _sys
-
-            print(
-                f"lake_table: {len(dup_names)} duplicated parquet "
-                f"basename(s) under {commit_dir}; skipping key blooms "
-                f"for them (basename-keyed attachment would be "
-                f"ambiguous)",
-                file=_sys.stderr,
-            )
+        built_bloom = False
         for dirpath, _dirs, files in os.walk(commit_dir):
             for name in sorted(files):
                 if not name.endswith(".parquet"):
@@ -1405,149 +1384,27 @@ class LakeTable:
                     "max": {k: v for k, v in maxs.items() if v is not None},
                     **({"schema_v": schema_v} if schema_v else {}),
                 }
-                # per-file key blooms (see module-level notes). The
-                # Arrow sink builds them EXECUTOR-SIDE in the write task
-                # and ships them via WriterCommitMessage (metadata
-                # scale) — those arrive here precomputed, keyed by file
-                # basename. Files from other writers are deferred to
-                # ``_build_blooms`` below (one distributed job for the
-                # whole commit — the footer pass here never reads column
-                # data); large files skip (min/max still applies) to
-                # keep manifests metadata-scale.
-                if name in dup_names:
-                    pass  # ambiguous basename: stats-only (see above)
-                elif precomputed_blooms is not None and name in precomputed_blooms:
-                    pb = {
-                        k: v
-                        for k, v in (precomputed_blooms[name] or {}).items()
-                        if k in bloom_cols
-                    }
-                    if pb:
-                        meta["bloom"] = pb
-                elif bloom_cols and md.num_rows <= _BLOOM_MAX_ROWS:
-                    need_bloom.append((path, meta, pf))
+                # per-file key blooms (see module-level notes), read from
+                # the open file's key columns; files over the row cap
+                # skip them (min/max still applies) to keep manifests
+                # metadata-scale
+                if md.num_rows <= _BLOOM_MAX_ROWS:
+                    blooms = {}
+                    for kcol in bloom_cols:
+                        vals = {
+                            _encode_stat(x)
+                            for x in pf.read(columns=[kcol]).column(0).to_pylist()
+                            if x is not None
+                        }
+                        if vals:
+                            blooms[kcol] = _bloom_build(vals)
+                    if blooms:
+                        meta["bloom"] = blooms
+                        built_bloom = True
                 metas.append(meta)
-        if need_bloom:
-            built = self._build_blooms(need_bloom, bloom_cols)
-            for _path, meta, _pf in need_bloom:
-                b = built.get(os.path.basename(_path))
-                if b:
-                    meta["bloom"] = b
-        return metas
-
-    def _build_blooms(
-        self, need: list[tuple[str, dict, Any]], bloom_cols: list[str]
-    ) -> dict[str, dict]:
-        """Build per-file key blooms for freshly written files, keyed by
-        file basename.
-
-        EXECUTOR-SIDE by default: one grouped-by-file Arrow job per
-        commit reads the (row-capped) eligible files where they live
-        and ships only finished bitsets (~10 bits/key) to the driver —
-        the last data-volume driver read in stats collection, removed
-        (r7 verdict, What's wrong #3). Two narrow in-process fallbacks
-        remain, both metadata-scale: commits totaling at most
-        ``_BLOOM_DRIVER_ROWS`` rows (the micro-batch MERGE hot path —
-        a per-commit Spark job would cost more than the batch itself;
-        the read is bounded by the same small constant as a collected
-        aggregate) and the no-active-session case."""
-        from . import metrics
-
-        total_rows = sum(m["rows"] for _p, m, _pf in need)
-        spark = SparkSession.getActiveSession()
-        if spark is None or total_rows <= _BLOOM_DRIVER_ROWS:
+        if built_bloom:
             metrics.bump("bloom.inprocess_small")
-            return self._build_blooms_inprocess(need, bloom_cols)
-        metrics.bump("bloom.distributed")
-
-        cols = list(bloom_cols)
-        read_schema = T.StructType(
-            [f for f in self.schema.fields if f.name in cols]
-        )
-
-        # Arrow-native group handler, NOT applyInPandas: the
-        # Arrow->pandas conversion upcasts a nullable int64 key column
-        # to float64, which silently loses precision for keys >= 2^53
-        # (and renders them in scientific notation) — the resulting
-        # bloom would false-negative on exact probes and prune files
-        # that DO hold the key. to_pylist() on the Arrow column is the
-        # exact extraction the in-process pyarrow path uses, so the two
-        # builds stay bit-identical for every type and magnitude.
-        def _build(key, tbl):
-            import json as _json
-            import os as _os
-            import urllib.parse as _up
-
-            import pyarrow as _pa
-
-            # the grouping key arrives as a pyarrow scalar, not str
-            fname = key[0].as_py() if hasattr(key[0], "as_py") else key[0]
-            name = _os.path.basename(_up.urlparse(fname).path)
-            blooms = {}
-            for c in cols:
-                vals = {
-                    _encode_stat(x)
-                    for x in tbl.column(c).to_pylist()
-                    if x is not None
-                }
-                if vals:
-                    blooms[c] = _bloom_build(vals)
-            return _pa.Table.from_pydict(
-                {"name": [name], "blooms": [_json.dumps(blooms)]}
-            )
-
-        try:
-            rows = (
-                # explicit schema: no footer-inference job; group-by-file
-                # is correct under any input partitioning (a split file
-                # still lands whole in one group), and each group is
-                # bounded by the _BLOOM_MAX_ROWS cap checked from footers
-                spark.read.schema(read_schema)
-                .parquet(*[p for p, _m, _pf in need])
-                .select(F.input_file_name().alias("__f"), *cols)
-                .groupBy("__f")
-                .applyInArrow(_build, "name string, blooms string")
-                .collect()
-            )
-        except Exception as exc:
-            # blooms are an optimization: a failed build job must not
-            # fail the DATA commit. Fall back to the in-process read —
-            # same bitsets (pinned bit-identical), bounded by the
-            # per-file row cap — but say so: a silently-persistent
-            # fallback once masked a broken distributed build entirely.
-            import sys as _sys
-
-            print(
-                f"lake_table: distributed bloom build failed "
-                f"({type(exc).__name__}: {exc}); falling back to the "
-                f"in-process read for {len(need)} file(s)",
-                file=_sys.stderr,
-            )
-            metrics.bump("bloom.fallback_inprocess")
-            return self._build_blooms_inprocess(need, bloom_cols)
-        return {
-            r["name"]: {k: v for k, v in json.loads(r["blooms"]).items()}
-            for r in rows
-            if r["blooms"] != "{}"
-        }
-
-    def _build_blooms_inprocess(
-        self, need: list[tuple[str, dict, Any]], bloom_cols: list[str]
-    ) -> dict[str, dict]:
-        out: dict[str, dict] = {}
-        for path, _meta, pf in need:
-            blooms = {}
-            for kcol in bloom_cols:
-                vals = {
-                    _encode_stat(x)
-                    for x in pf.read(columns=[kcol]).column(0).to_pylist()
-                    if x is not None
-                }
-                if vals:
-                    blooms[kcol] = _bloom_build(vals)
-            if blooms:
-                out[os.path.basename(path)] = blooms
-        return out
+        return metas
 
     def commit(
         self,
@@ -2219,23 +2076,16 @@ class LakeTable:
         elif timestamp is not None:
             version = self.version_as_of_timestamp(timestamp)
         m = self.manifest(version)
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
-        paths = self.file_paths(version, predicates)
+        paths = self.file_paths(m["version"], predicates)
         if not paths:
-            df = spark.createDataFrame([], schema)
+            df = spark.createDataFrame([], T.StructType.fromJson(json.loads(m["schema"])))
             if with_row_ids:
                 df = df.withColumn("_row_id", F.lit(None).cast("long"))
             return df.withColumn("_file", F.lit(None).cast("string")) if with_file_path else df
-        df = self._scan(
-            spark, paths, m,
-            extra_fields=[self._ROW_ID_FIELD] if with_row_ids else None,
+        return self.read_files(
+            spark, paths, m["version"],
+            with_file_path=with_file_path, with_row_ids=with_row_ids,
         )
-        if with_row_ids:
-            df = self._attach_row_ids(spark, df, m)
-        df = self._apply_position_deletes(spark, df, m)
-        if with_file_path:
-            df = df.withColumn("_file", self._raw_file_col(df))
-        return df.drop("__meta_file_path", "__meta_row_index")
 
     def read_files(
         self,

@@ -58,10 +58,8 @@ def merge_into(
     op_col: str | None = None,
     delete_value: str = "delete",
     assume_unique: bool = False,
-    broadcast_source: bool = True,
     extra_summary: dict | None = None,
     evolve_schema: bool = False,
-    evolve_ignore: tuple[str, ...] = (),
     match_condition: str | None = None,
     update_cols: list[str] | None = None,
     condition_gates_delete: bool = False,
@@ -80,8 +78,6 @@ def merge_into(
     an upstream ALTER COLUMN applies losslessly) so source DDL
     propagated through CDC applies without operator intervention
     (reference: DMS forwards source DDL on the task stream).
-    ``evolve_ignore`` names transport columns (op/ordering metadata)
-    that must never be promoted to table columns.
 
     ``match_condition``: SQL boolean over aliases ``t`` (target row) and
     ``s`` (source row) gating the WHEN MATCHED THEN UPDATE branch — a
@@ -126,10 +122,7 @@ def merge_into(
             # same call is about to ADD from the source is a legal
             # assignment target (review round 12)
             tbl_cols |= {
-                f.name
-                for f in source.schema.fields
-                if f.name not in set(evolve_ignore)
-                and f.name != (op_col or "")
+                f.name for f in source.schema.fields if f.name != (op_col or "")
             }
         bad = [c for c in not_matched_by_source_update if c not in tbl_cols]
         if bad:
@@ -156,9 +149,9 @@ def merge_into(
         try:
             return _merge_into_cow(
                 table, source, on, op_col, delete_value, assume_unique,
-                broadcast_source, extra_summary, evolve_schema, evolve_ignore,
-                match_condition, update_cols, condition_gates_delete,
-                not_matched_by_source_delete, not_matched_by_source_update,
+                extra_summary, evolve_schema, match_condition, update_cols,
+                condition_gates_delete, not_matched_by_source_delete,
+                not_matched_by_source_update,
             )
         except CommitConflict:
             if attempt:
@@ -172,10 +165,8 @@ def _merge_into_cow(
     op_col: str | None,
     delete_value: str,
     assume_unique: bool,
-    broadcast_source: bool,
     extra_summary: dict | None,
     evolve_schema: bool,
-    evolve_ignore: tuple[str, ...],
     match_condition: str | None,
     update_cols: list[str] | None,
     condition_gates_delete: bool,
@@ -187,10 +178,9 @@ def _merge_into_cow(
     if not keys:
         raise ValueError("merge_into requires key columns (table.keys or on=)")
     if evolve_schema:
-        skip = set(evolve_ignore) | ({op_col} if op_col else set())
         existing = {f.name: f.dataType for f in table.schema.fields}
         for f in source.schema.fields:
-            if f.name in skip:
+            if f.name == op_col:
                 continue
             cur_t = existing.get(f.name)
             if cur_t is None:
@@ -371,7 +361,7 @@ def _merge_into_cow(
     ):
         # the probe job exists to shrink the rewrite to files that truly
         # hold matching keys — but it SCANS every candidate to find out.
-        # When the bloom+range-pruned candidates total less than one
+        # When the range-pruned candidates total less than one
         # target output file, rewriting them all outright is cheaper
         # than scanning them twice (and compacts small files for free);
         # carried-over rows of an unmatched candidate diff as non-
@@ -387,13 +377,12 @@ def _merge_into_cow(
         metrics.bump("merge.probe_job")
         src_keys = src.select(*keys).distinct()
         tgt = table.read(spark, predicates=key_preds, with_file_path=True)
-        probe = F.broadcast(src_keys) if broadcast_source else src_keys
         # NULL-SAFE probe, same as the rewrite join (SQL MERGE's
         # ON t.k <=> s.k): a plain on=keys semi-join drops a
         # null-key match, the file goes unprobed, and the source row
         # double-inserts instead of updating (review round 10). <=> is
         # still a hash-joinable equi-condition — same plan shape.
-        probe = probe.select(
+        probe = F.broadcast(src_keys).select(
             *[F.col(k).alias(f"__p_{k}") for k in keys]
         )
         cond = [

@@ -1,9 +1,8 @@
 """In-process path-frequency counters for plan-level decisions.
 
-The MERGE planner, the data-file writer and the bloom-stats builder
-each pick between a metadata-scale fast path and a distributed job at
-runtime (see ``merge._merge_into_cow`` step 2,
-``LakeTable._write_files`` and ``LakeTable._build_blooms``).
+The MERGE planner and the data-file writer each pick between a
+metadata-scale fast path and a distributed job at runtime (see
+``merge._merge_into_cow`` step 2 and ``LakeTable._write_files``).
 Which branch actually fires at a given scale factor is an empirical
 question — the r8 verdict asked for exactly this measurement ("check
 whether the InjectRuntimeFilter path can replace the in-process probe
@@ -26,19 +25,14 @@ Keys currently emitted:
                                  touched-file set
 - ``merge.full_candidates``   — NOT MATCHED BY SOURCE mode: every file
                                  is a candidate by construction
-- ``bloom.inprocess_small``   — commit at most ``_BLOOM_DRIVER_ROWS``
-                                 rows (or no active session): driver
-                                 pyarrow read
-- ``bloom.distributed``       — executor-side grouped Arrow build job
-- ``bloom.fallback_inprocess``— distributed build FAILED and fell back
-                                 (also logged to stderr; a persistently
-                                 nonzero count is a bug signal)
+- ``bloom.inprocess_small``   — ``LakeTable._collect_stats`` built at
+                                 least one key bloom (one per call)
 - ``write.inprocess``         — ``LakeTable._write_files`` output of at
-                                 most ``_BLOOM_DRIVER_ROWS`` rows written
+                                 most ``_INPROCESS_MAX_ROWS`` rows written
                                  from one Arrow collect with pyarrow
 - ``write.spark``             — the same call took the Spark write
-                                 (over the gate, a nested type, or a
-                                 size that cannot be known without a job)
+                                 (over the gate, a nested type or a
+                                 codec pyarrow does not write)
 - ``manifest_cache.hit`` / ``manifest_cache.miss``
                               — process-wide immutable-manifest LRU
                                  (``lake_table._load_manifest_cached``)
