@@ -102,6 +102,23 @@ def test_mixed_position_and_equality_deletes(spark, tmp_path):
     assert _live(spark, t) == {2: "b", 4: "d"}
 
 
+def test_delete_by_keys_mor_skips_rows_an_equality_delete_removed(spark, tmp_path):
+    """A key a pending equality delete already removed has no live row:
+    a merge-on-read key delete of it commits nothing, as a merge-on-read
+    ``delete_where`` of it does, instead of a position delete for the
+    dead row."""
+    t = _mk(spark, tmp_path, [(1, "a"), (2, "b"), (3, "c")], _MOR)
+    t.delete_eq([{"k": 2}])
+    v = t.current_version()
+    assert t.delete_by_keys_mor(spark, spark.createDataFrame([(2,)], "k long")) == v
+    assert t.delete_where(spark, "k = 2") == v
+    assert [d.get("kind") for d in t.manifest()["delete_files"]] == ["equality"]
+    # a live key next to the dead one deletes only the live row
+    t.delete_by_keys_mor(spark, spark.createDataFrame([(2,), (3,)], "k long"))
+    assert [d["rows"] for d in t.manifest()["delete_files"]] == [1, 1]
+    assert _live(spark, t) == {1: "a"}
+
+
 def test_random_interleavings_match_model(spark, tmp_path):
     """Random append / delete_eq / MOR-position-delete interleavings must
     match a list-of-(key, val, seq) reference model: an equality delete

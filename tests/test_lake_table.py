@@ -2004,6 +2004,50 @@ def test_mor_micro_batch_job_count(spark, tmp_path):
     assert "delete" not in {s["operation"] for s in snaps}
 
 
+def _mor_20k(spark, tmp_path, name):
+    """A one-file 20,000-row merge-on-read table."""
+    t = LakeTable.create(
+        str(tmp_path / name), SCHEMA, keys=["id"],
+        properties={"write.delete.mode": "merge-on-read"},
+    )
+    t.append(spark.range(20_000).select(
+        F.col("id").cast("int").alias("id"), F.lit("a").alias("cat"),
+        F.col("id").cast("double").alias("val"),
+    ))
+    assert len(t.manifest()["files"]) == 1
+    return t
+
+
+def test_mor_delete_where_job_count(spark, tmp_path):
+    """A merge-on-read DELETE collects its (file, pos) hits in one job
+    and writes the delete file in-process: 1 job, 2 with a delete file
+    already pending (its broadcast read)."""
+    from conftest import count_jobs
+
+    t = _mor_20k(spark, tmp_path, "t")
+    _, jobs = count_jobs(spark, lambda: t.delete_where(spark, "id < 100"))
+    assert jobs == 1
+    _, jobs = count_jobs(
+        spark, lambda: t.delete_where(spark, "id >= 100 AND id < 200")
+    )
+    assert jobs == 2
+    assert [d["rows"] for d in t.manifest()["delete_files"]] == [100, 100]
+    assert t.row_count() == t.read(spark).count() == 19_800
+
+
+def test_delete_by_keys_mor_job_count(spark, tmp_path):
+    """A 50-key merge-on-read delete: the key collect for pruning, the
+    broadcast key probe and the one (file, pos) collect, 5 jobs."""
+    from conftest import count_jobs
+
+    t = _mor_20k(spark, tmp_path, "t")
+    keys = spark.createDataFrame([(i,) for i in range(1000, 1050)], "id int")
+    _, jobs = count_jobs(spark, lambda: t.delete_by_keys_mor(spark, keys))
+    assert jobs == 5
+    assert [d["rows"] for d in t.manifest()["delete_files"]] == [50]
+    assert t.row_count() == t.read(spark).count() == 19_950
+
+
 _TYPES_SCHEMA = T.StructType([
     T.StructField("id", T.IntegerType(), False),
     T.StructField("b", T.BooleanType()),

@@ -7,7 +7,7 @@ import os
 
 from pyspark.sql import types as T
 
-from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import LakeTable
+from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import LakeTable, lake_table
 from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.maintenance import (
     compact,
     expire_snapshots,
@@ -177,7 +177,7 @@ def test_expire_dry_run_reports_without_removing(spark, tmp_path):
     assert sorted(r["id"] for r in t.read(spark).collect()) == [0, 1, 2, 3, 4]
 
 
-def test_compact_range_partitions_keep_cluster_stats_tight(spark, tmp_path):
+def test_compact_range_partitions_keep_cluster_stats_tight(spark, tmp_path, monkeypatch):
     """compact() must RANGE-partition on the cluster columns (review
     round 11): a hash repartition scattered adjacent keys so every
     compacted file spanned ~the whole key domain, defeating the
@@ -198,7 +198,8 @@ def test_compact_range_partitions_keep_cluster_stats_tight(spark, tmp_path):
             )
         )
     # force multiple outputs: tiny target size
-    compact(spark, t, target_file_bytes=2048)
+    monkeypatch.setattr(lake_table, "_TARGET_FILE_BYTES", 2048)
+    compact(spark, t)
     m = t.manifest()
     assert len(m["files"]) > 1, "test needs >1 compacted file"
     spans = sorted(

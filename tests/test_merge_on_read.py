@@ -152,6 +152,29 @@ def test_rewrite_delete_files_restores_plain_scan(spark, tmp_path):
     assert t.row_count() == 37
 
 
+def test_rewrite_delete_files_keeps_small_clustered_file_count(spark, tmp_path):
+    """Folding deletes into three small clustered files is sized by the
+    files it replaces: it must not split them into one range file per
+    shuffle partition."""
+    t = LakeTable.create(
+        str(tmp_path / "t"), SCHEMA, keys=["id"], cluster_by=["id"],
+        properties={"write.delete.mode": "merge-on-read"},
+    )
+    for part in range(3):  # each insert-only MERGE writes one file
+        merge_into(t, spark.range(part * 6000, (part + 1) * 6000).select(
+            F.col("id").cast("int").alias("id"), F.lit("a").alias("cat"),
+            F.col("id").cast("double").alias("val"),
+        ))
+    n_before = len(t.manifest()["files"])
+    assert n_before == 3
+    t.delete_where(spark, "id % 1000 = 0")
+    rewrite_delete_files(spark, t)
+    m = t.manifest()
+    assert m["delete_files"] == []
+    assert len(m["files"]) <= n_before
+    assert t.row_count() == t.read(spark).count() == 18_000 - 18
+
+
 def test_compact_folds_deletes(spark, mor_table):
     t = mor_table
     t.append(_mk(spark, [(i, "a", 1.0) for i in range(10)]))

@@ -123,7 +123,7 @@ def test_batch_id_survives_maintenance_and_dml(spark, stream_env, tmp_path):
     assert _hwm(table) == 3
 
     # maintenance commit
-    compact(spark, table, target_file_bytes=1 << 30)
+    compact(spark, table)
     assert _hwm(table) == 3, "compact() erased the watermark"
 
     # manual DML commit (append of a real row; empty appends are no-ops)

@@ -1658,9 +1658,6 @@ class LakeTable:
         drop. Only a straddling delete file (some refs removed, some
         live) is rewritten — driver-side pyarrow, fine because position
         deletes are metadata-scale (ids, not rows)."""
-        import pyarrow as _pa
-        import pyarrow.compute as _pc
-
         out: list[dict] = []
         for d in delete_files:
             refs = set(d.get("refs", []))
@@ -1672,19 +1669,11 @@ class LakeTable:
                 continue  # fully dangling -> drop the entry
             tbl = _pq.read_table(os.path.join(self.root, d["path"]))
             live_arr = _pa.array(sorted(live_refs), type=_pa.string())
-            kept_tbl = tbl.filter(_pc.is_in(tbl.column("file"), value_set=live_arr))
-            new_rel = os.path.join(
-                _DATA_DIR, f"del-{uuid.uuid4().hex[:16]}.parquet"
+            kept = self._write_delete_file(
+                tbl.filter(_pc.is_in(tbl.column("file"), value_set=live_arr))
             )
-            _pq.write_table(kept_tbl, os.path.join(self.root, new_rel))
-            out.append(
-                {
-                    "path": new_rel,
-                    "rows": kept_tbl.num_rows,
-                    "bytes": os.path.getsize(os.path.join(self.root, new_rel)),
-                    "refs": sorted(live_refs),
-                }
-            )
+            if kept is not None:
+                out.append(kept)
         return out
 
     def append(self, df: DataFrame) -> int:
@@ -2018,31 +2007,23 @@ class LakeTable:
 
     def delete_eq(self, rows: list[dict], eq_cols: list[str] | None = None) -> int:
         """DELETE by key values as a pure metadata+keys commit: write one
-        equality-delete file holding the key tuples and commit — ZERO
-        data-file I/O, the property that makes merge-on-read CDC deletes
-        O(batch) instead of O(touched files). ``rows``: list of
-        {key_col: value} dicts (metadata scale). ``eq_cols`` defaults to
-        the table keys; Iceberg assigns equality field ids per delete
-        file, so different commits may delete by different column sets
-        (the read path applies each file under its OWN columns)."""
+        equality-delete file holding the key tuples (``_write_delete_file``,
+        in-process, no Spark job) and commit — ZERO data-file I/O, the
+        property that makes merge-on-read CDC deletes O(batch) instead of
+        O(touched files). ``rows``: list of {key_col: value} dicts
+        (metadata scale); the file's column types are pyarrow's for
+        those Python values. ``eq_cols`` defaults to the table keys;
+        Iceberg assigns equality field ids per delete file, so different
+        commits may delete by different column sets (the read path
+        applies each file under its OWN columns)."""
         eq_cols = list(eq_cols or self.keys or [])
         if not eq_cols:
             raise ValueError("delete_eq requires eq_cols (or a keyed table)")
         if not rows:
             return self.current_version()
-        import pyarrow as _pa
-
-        tbl = _pa.table({k: [r[k] for r in rows] for k in eq_cols})
-        rel = os.path.join(_DATA_DIR, f"eqdel-{uuid.uuid4().hex[:16]}.parquet")
-        _pq.write_table(tbl, os.path.join(self.root, rel))
-        meta = {
-            "path": rel,
-            "rows": len(rows),
-            "bytes": os.path.getsize(os.path.join(self.root, rel)),
-            "kind": "equality",
-            "eq_cols": eq_cols,
-            "refs": [],
-        }
+        meta = self._write_delete_file(
+            _pa.table({k: [r[k] for r in rows] for k in eq_cols}), eq_cols
+        )
         return self.commit(
             [],
             operation="delete-eq",
@@ -2398,7 +2379,7 @@ class LakeTable:
         return out
 
     # ------------------------------------------------------------------
-    # row-level DML (copy-on-write, file-pruned)
+    # row-level DML (copy-on-write rewrites, merge-on-read delete files)
     # ------------------------------------------------------------------
     def delete_where(
         self,
@@ -2410,65 +2391,23 @@ class LakeTable:
         README.md:421-431).
 
         The table property ``write.delete.mode`` picks the layout:
-        ``copy-on-write`` (default) rewrites only files that may contain
-        matches; ``merge-on-read`` writes a position-delete file instead
-        — O(matched rows) written, no data-file rewrite (the reference
-        runs its Iceberg tables merge-on-read with
-        ``optimize_rewrite_delete_file_threshold=10``, README.md:307)."""
+        ``copy-on-write`` (default) rewrites only files that hold a
+        matching live row; ``merge-on-read`` writes one position-delete
+        file of the matching live rows' (file, pos) instead — O(matched
+        rows) written, no data-file rewrite (the reference runs its
+        Iceberg tables merge-on-read with
+        ``optimize_rewrite_delete_file_threshold=10``, README.md:307).
+        Rows already removed by a pending position or equality delete
+        never match, so a delete of nothing live commits nothing."""
+        cand = self.file_paths(predicates=predicates)
+        if not cand:
+            return self.current_version()
         props = self.manifest().get("properties", {})
         if props.get("write.delete.mode") == "merge-on-read":
-            return self._delete_where_mor(spark, condition, predicates)
-        cand = self.file_paths(predicates=predicates)
-        if not cand:
-            return self.current_version()
-        df = self.read_files(spark, cand, with_file_path=True)
-        hit_files = [
-            r["_file"] for r in df.filter(condition).select("_file").distinct().collect()
-        ]
-        hit_rel = {self._relpath(p) for p in hit_files}
-        if not hit_rel:
-            return self.current_version()
-        hit_abs = [os.path.join(self.root, p) for p in sorted(hit_rel)]
-        survivors = self.read_files(
-            spark, hit_abs, with_row_ids=self.row_lineage
-        ).filter(f"NOT ({condition})")
-        added = self._write_files(
-            survivors, size_hint_bytes=self._manifest_bytes_of(hit_rel)
-        )
-        return self.commit(added, removed_paths=hit_rel, operation="delete")
-
-    def _delete_where_mor(
-        self,
-        spark: SparkSession,
-        condition: str,
-        predicates: list[Predicate] | None = None,
-    ) -> int:
-        """Merge-on-read DELETE: record (file, pos) of matched rows in a
-        position-delete file; the data files are untouched. Already-
-        deleted positions are excluded first so the delete set stays
-        duplicate-free (keeps manifest row accounting exact)."""
-        cand = self.file_paths(predicates=predicates)
-        if not cand:
-            return self.current_version()
-        m = self.manifest()
-        df = self._scan(spark, cand, m)
-        df = self._apply_position_deletes(spark, df, m)
-        hits = (
-            df.filter(condition)
-            .select(
-                self._rel_file_col(df).alias("file"),
-                self._row_index_col(df).alias("pos"),
-            )
-            .orderBy("file", "pos")
-        )
-        meta = self._write_delete_file(hits)
-        if meta is None:
-            return self.current_version()
-        return self.commit(
-            [],
+            return self._delete_positions(spark, cand, lambda df: df.filter(condition))
+        return self._rewrite_hit_files(
+            spark, cand, condition, lambda old: old.filter(f"NOT ({condition})"),
             operation="delete",
-            added_deletes=[meta],
-            extra_summary={"delete_mode": "merge-on-read"},
         )
 
     def delete_by_keys_mor(
@@ -2477,12 +2416,14 @@ class LakeTable:
         keys_df: DataFrame,
         keys: list[str] | None = None,
     ) -> int:
-        """Merge-on-read DELETE by key set: rows whose key appears in
-        ``keys_df`` get their (file, pos) recorded in a position-delete
-        file; no data file is rewritten. The key set is broadcast (a
-        delete's key set is tiny next to the table). CDC micro-batches do
-        not come here: ``apply_batch`` applies their deletes in its one
-        MERGE commit."""
+        """Merge-on-read DELETE by key set: the live rows whose key
+        appears in ``keys_df`` (null-safe, ``t.k <=> s.k``) get their
+        (file, pos) recorded in one position-delete file; no data file
+        is rewritten, and a key set that matches no live row commits
+        nothing. Same delete-aware scan and writer as a merge-on-read
+        ``delete_where``. The key set is broadcast (a delete's key set
+        is tiny next to the table). CDC micro-batches do not come here:
+        ``apply_batch`` applies their deletes in its one MERGE commit."""
         keys = keys or self.keys
         # single-column key sets are micro-batch scale (they broadcast
         # below anyway): collect them once and let the per-file key
@@ -2507,43 +2448,38 @@ class LakeTable:
         cand = self.file_paths(predicates=None if has_null_key else extra_preds)
         if not cand:
             return self.current_version()
-        m = self.manifest()
-        # materialize (file, pos) into plain columns straight off the
-        # scan — the hidden _metadata column does not survive joins —
-        # under reserved __-names so a key/schema column named file/pos
-        # cannot collide
-        scan = self._scan(spark, cand, m)
-        df = scan.select(
-            *[F.col(k) for k in keys],
-            self._rel_file_col(scan).alias("__file"),
-            self._row_index_col(scan).alias("__pos"),
-        )
-        # position-delete files ONLY: an equality-delete parquet's
-        # columns are the eq key tuple, not (file, pos) — reading it
-        # under this schema is wasted I/O at best and misread positions
-        # at worst (same kind filter as _apply_position_deletes)
-        dels = [
-            d for d in m.get("delete_files", [])
-            if d.get("kind") != "equality"
-        ]
-        if dels:
-            del_paths = [os.path.join(self.root, d["path"]) for d in dels]
-            existing = spark.read.schema("file string, pos long").parquet(*del_paths).select(
-                F.col("file").alias("__file"), F.col("pos").alias("__pos")
-            )
-            df = df.join(F.broadcast(existing), ["__file", "__pos"], "left_anti")
         # null-safe semi-join (t.k <=> s.k): a NULL-key delete must hit
-        # the NULL-key row, matching the COW path's MERGE semantics
+        # the NULL-key row, matching the COW path's MERGE semantics; the
+        # probe side takes reserved __-names so no column can collide
         probe = keys_df.select(
             *[F.col(k).alias(f"__d_{k}") for k in keys]
         ).distinct()
         cond = [F.col(k).eqNullSafe(F.col(f"__d_{k}")) for k in keys]
-        hits = (
-            df.join(F.broadcast(probe), on=cond, how="left_semi")
-            .select(F.col("__file").alias("file"), F.col("__pos").alias("pos"))
-            .orderBy("file", "pos")
+        return self._delete_positions(
+            spark, cand,
+            lambda df: df.join(F.broadcast(probe), on=cond, how="left_semi"),
         )
-        meta = self._write_delete_file(hits)
+
+    def _delete_positions(self, spark: SparkSession, cand: list[str], hits) -> int:
+        """The merge-on-read tail of every row-level delete: the rows
+        ``hits`` keeps of the live rows of ``cand`` (the scan with every
+        pending position and equality delete applied) are collected as
+        (file, pos) in one Arrow collect and committed as one position-
+        delete file. Live rows only, so the delete set stays duplicate-
+        free (manifest row accounting stays exact) and a hit set that
+        is already gone commits nothing. The collect adds no scale limit
+        reads do not have: every read broadcasts the whole position-
+        delete set already."""
+        m = self.manifest()
+        live = self._apply_position_deletes(spark, self._scan(spark, cand, m), m)
+        meta = self._write_delete_file(
+            hits(live)
+            .select(
+                self._rel_file_col(live).alias("file"),
+                self._row_index_col(live).alias("pos"),
+            )
+            .toArrow()
+        )
         if meta is None:
             return self.current_version()
         return self.commit(
@@ -2553,32 +2489,49 @@ class LakeTable:
             extra_summary={"delete_mode": "merge-on-read"},
         )
 
-    def _write_delete_file(self, dels: DataFrame) -> dict | None:
-        """Write a position-delete DataFrame (file string, pos long; the
-        ``file`` values are ROOT-RELATIVE) as a single parquet file;
-        returns its manifest entry (with ``refs`` = the distinct data
-        files it covers) or None when empty."""
-        commit_dir = os.path.join(self.root, _DATA_DIR, f"del-{uuid.uuid4().hex[:16]}")
-        dels.coalesce(1).write.mode("errorifexists").parquet(commit_dir)
-        part = None
-        for name in sorted(os.listdir(commit_dir)):
-            if name.endswith(".parquet"):
-                part = os.path.join(commit_dir, name)
-                break
-        if part is None:
-            shutil.rmtree(commit_dir)
-            return None
-        tbl = _pq.read_table(part, columns=["file"])
+    # position-delete file schema; ``file`` is a ROOT-RELATIVE data-file
+    # path, which keeps a relocated table matching its pending deletes
+    _POSITION_DELETE_SCHEMA = _pa.schema(
+        [("file", _pa.string()), ("pos", _pa.int64())]
+    )
+
+    def _write_delete_file(
+        self, tbl: _pa.Table, eq_cols: list[str] | None = None
+    ) -> dict | None:
+        """Write ``tbl`` in-process as one delete file,
+        ``data/<del|eqdel>-<uuid>.parquet``, and return its manifest
+        entry (``path``, ``rows``, ``bytes``, ``refs``), or None when
+        ``tbl`` has no rows. Every delete file is written here.
+
+        Without ``eq_cols`` ``tbl`` holds positions: it is cast to
+        ``_POSITION_DELETE_SCHEMA`` and sorted by (file, pos), and
+        ``refs`` lists the distinct data files it covers. With
+        ``eq_cols`` it holds equality-delete key tuples; the entry adds
+        ``kind``/``eq_cols`` and has no refs."""
         if tbl.num_rows == 0:
-            shutil.rmtree(commit_dir)
             return None
-        refs = sorted(set(tbl.column("file").to_pylist()))  # already relative
-        return {
-            "path": os.path.relpath(part, self.root),
+        if eq_cols is None:
+            tbl = tbl.cast(self._POSITION_DELETE_SCHEMA).sort_by(
+                [("file", "ascending"), ("pos", "ascending")]
+            )
+            refs = sorted(_pc.unique(tbl.column("file")).to_pylist())
+        else:
+            refs = []
+        rel = os.path.join(
+            _DATA_DIR,
+            f"{'del' if eq_cols is None else 'eqdel'}-{uuid.uuid4().hex[:16]}.parquet",
+        )
+        path = os.path.join(self.root, rel)
+        _pq.write_table(tbl, path)
+        meta = {
+            "path": rel,
             "rows": tbl.num_rows,
-            "bytes": os.path.getsize(part),
+            "bytes": os.path.getsize(path),
             "refs": refs,
         }
+        if eq_cols is not None:
+            meta.update(kind="equality", eq_cols=list(eq_cols))
+        return meta
 
     def update_where(
         self,
@@ -2592,41 +2545,56 @@ class LakeTable:
         cand = self.file_paths(predicates=predicates)
         if not cand:
             return self.current_version()
-        schema = self.schema
-        df = self.read_files(spark, cand, with_file_path=True)
-        hit_files = [
-            r["_file"] for r in df.filter(condition).select("_file").distinct().collect()
-        ]
-        hit_rel = {self._relpath(p) for p in hit_files}
-        if not hit_rel:
-            return self.current_version()
-        hit_abs = [os.path.join(self.root, p) for p in sorted(hit_rel)]
-        old = self.read_files(spark, hit_abs, with_row_ids=self.row_lineage)
         cond = F.expr(condition)
-        cols = []
-        for f in schema.fields:
-            if f.name in assignments:
-                cols.append(
-                    F.when(cond, F.expr(assignments[f.name]).cast(f.dataType))
-                    .otherwise(F.col(f.name))
-                    .alias(f.name)
-                )
-            else:
-                cols.append(F.col(f.name))
-        if "_row_id" in old.columns:
-            cols.append(F.col("_row_id"))  # updated rows keep their lineage id
-        added = self._write_files(
-            old.select(*cols), size_hint_bytes=self._manifest_bytes_of(hit_rel)
-        )
-        return self.commit(
-            added,
-            removed_paths=hit_rel,
+
+        def assign(old: DataFrame) -> DataFrame:
+            cols = [
+                F.when(cond, F.expr(assignments[f.name]).cast(f.dataType))
+                .otherwise(F.col(f.name))
+                .alias(f.name)
+                if f.name in assignments
+                else F.col(f.name)
+                for f in self.schema.fields
+            ]
+            if "_row_id" in old.columns:
+                cols.append(F.col("_row_id"))  # updated rows keep their lineage id
+            return old.select(*cols)
+
+        return self._rewrite_hit_files(
+            spark, cand, condition, assign,
             operation="update",
             # SET on a non-key column keeps one-row-per-key intact; an
             # assignment targeting a key column may collide with rows in
             # untouched files, so only then is the flag dropped
             preserves_key_uniqueness=not (set(assignments) & set(self.keys or [])),
         )
+
+    def _rewrite_hit_files(
+        self, spark: SparkSession, cand: list[str], condition: str,
+        transform, **commit_kw,
+    ) -> int:
+        """The copy-on-write tail of ``delete_where`` and
+        ``update_where``: one distinct-file probe finds the files of
+        ``cand`` holding a live row matching ``condition``; only those
+        are re-read (delete-aware, row lineage carried), passed through
+        ``transform`` and rewritten, sized by their manifest bytes, in
+        one commit that removes them. No hit commits nothing."""
+        df = self.read_files(spark, cand, with_file_path=True)
+        hit_rel = {
+            self._relpath(r["_file"])
+            for r in df.filter(condition).select("_file").distinct().collect()
+        }
+        if not hit_rel:
+            return self.current_version()
+        old = self.read_files(
+            spark,
+            [os.path.join(self.root, p) for p in sorted(hit_rel)],
+            with_row_ids=self.row_lineage,
+        )
+        added = self._write_files(
+            transform(old), size_hint_bytes=self._manifest_bytes_of(hit_rel)
+        )
+        return self.commit(added, removed_paths=hit_rel, **commit_kw)
 
     def _relpath(self, spark_file_path: str) -> str:
         p = spark_file_path

@@ -25,6 +25,7 @@ import time
 
 from pyspark.sql import SparkSession
 
+from . import lake_table as _lake_table
 from .lake_table import (
     LakeTable,
     _DATA_DIR,
@@ -34,9 +35,6 @@ from .lake_table import (
     _is_manifest_name,
     _load_manifest_or_none,
 )
-
-
-DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 
 def should_compact(table: LakeTable, small_file_threshold: int = 10,
@@ -50,10 +48,8 @@ def should_compact(table: LakeTable, small_file_threshold: int = 10,
 
 def compact(
     spark: SparkSession,
-    target_table: LakeTable | None = None,
-    target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
+    table: LakeTable,
     *,
-    table: LakeTable | None = None,
     binpack: bool = True,
     small_bytes: int = 8 * 1024 * 1024,
 ) -> int:
@@ -67,15 +63,10 @@ def compact(
     re-shuffled on every maintenance run. Files already at target size
     are untouched (their pending merge-on-read deletes also stay
     pending, exactly like Iceberg). ``binpack=False`` forces the old
-    whole-table rewrite (full recluster).
+    whole-table rewrite (full recluster). Output files are sized to
+    the table-wide ``lake_table._TARGET_FILE_BYTES``.
     """
-    t = table if table is not None else target_table
-    if t is None:
-        # ValueError, not assert: stripped under python -O the assert
-        # let a None table proceed to an opaque AttributeError
-        # (round-14 review sweep)
-        raise ValueError("compact requires a table")
-    m = t.manifest()
+    m = table.manifest()
     if not m["files"]:
         return m["version"]
     if binpack:
@@ -86,18 +77,18 @@ def compact(
         victims = list(m["files"])
     victim_paths = [f["path"] for f in victims]
     total_bytes = sum(f["bytes"] for f in victims)
-    n_out = max(1, int(total_bytes // target_file_bytes) + (1 if total_bytes % target_file_bytes else 0))
-    victim_abs = [os.path.join(t.root, p) for p in victim_paths]
+    n_out = max(1, -(-total_bytes // _lake_table._TARGET_FILE_BYTES))
+    victim_abs = [os.path.join(table.root, p) for p in victim_paths]
     # delete-aware read of exactly the victim files; their pending
     # position deletes are folded in by the rewrite (row-lineage ids
     # materialize into the rewritten files so they survive compaction)
-    df = t.read_files(spark, victim_abs, with_row_ids=t.row_lineage)
-    cb = t.cluster_by
+    df = table.read_files(spark, victim_abs, with_row_ids=table.row_lineage)
+    cb = table.cluster_by
     import uuid
 
     from pyspark.sql import functions as F
 
-    commit_dir = os.path.join(t.root, _DATA_DIR, uuid.uuid4().hex[:16])
+    commit_dir = os.path.join(table.root, _DATA_DIR, uuid.uuid4().hex[:16])
     if cb:
         # RANGE partitioning, not hash (review round 11): compaction
         # exists to restore tight per-file min/max on the cluster
@@ -106,7 +97,7 @@ def compact(
         # manifest pruning clustering pays for. Same discipline as
         # LakeTable._write_files, including the AQE-coalesce suspension
         # (merging range partitions would re-widen file stats).
-        out = t._conform(
+        out = table._conform(
             df.repartitionByRange(n_out, *[F.col(c) for c in cb])
             .sortWithinPartitions(*cb)
         )
@@ -121,10 +112,10 @@ def compact(
                 "spark.sql.adaptive.coalescePartitions.enabled", prev
             )
     else:
-        t._conform(df.coalesce(n_out)).write.mode("errorifexists").parquet(
+        table._conform(df.coalesce(n_out)).write.mode("errorifexists").parquet(
             commit_dir
         )
-    added = t._collect_stats(commit_dir)
+    added = table._collect_stats(commit_dir)
     # commit() prunes position-delete entries made dangling by
     # removed_paths, so victims' folded-in deletes disappear with them
     # automatically. Equality deletes carry no refs: after a FULL
@@ -134,7 +125,7 @@ def compact(
     removed_delete_paths = (
         [d["path"] for d in m.get("delete_files", [])] if not binpack else ()
     )
-    return t.commit(
+    return table.commit(
         added,
         removed_paths=victim_paths,
         operation="compact",
@@ -148,7 +139,6 @@ def zorder_by(
     cols: list[str],
     bits: int = 8,
     n_files: int | None = None,
-    target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
 ) -> int:
     """Z-order rewrite (Iceberg ``rewrite_data_files`` with
     ``sort_order => zorder(...)``): recluster the live file set on the
@@ -214,11 +204,7 @@ def zorder_by(
             )
 
     total_bytes = sum(f["bytes"] for f in m["files"])
-    n_out = n_files or max(
-        1,
-        int(total_bytes // target_file_bytes)
-        + (1 if total_bytes % target_file_bytes else 0),
-    )
+    n_out = n_files or max(1, -(-total_bytes // _lake_table._TARGET_FILE_BYTES))
     import uuid
 
     zdf = (
@@ -304,7 +290,11 @@ def rewrite_delete_files(spark: SparkSession, table: LakeTable) -> int:
     # read_files applies the pending deletes; the rewrite materializes
     # the net rows of exactly those files
     net = table.read_files(spark, affected_abs, with_row_ids=table.row_lineage)
-    added = table._write_files(net)
+    # sized like any COW rewrite of those files: with no hint a
+    # clustered write splits into spark.sql.shuffle.partitions files
+    added = table._write_files(
+        net, size_hint_bytes=table._manifest_bytes_of(affected)
+    )
     return table.commit(
         added,
         removed_paths=affected,

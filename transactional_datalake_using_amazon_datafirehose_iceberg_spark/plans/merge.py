@@ -314,12 +314,7 @@ def _merge_into_cow(
         and not not_matched_by_source_delete
         and not not_matched_by_source_update
     ):
-        if extra_summary is None:
-            return table.current_version()
-        return table.commit(
-            [], operation="merge",
-            extra_summary={"matched_files": 0, **extra_summary},
-        )
+        return _empty_source_exit(table, extra_summary)
 
     # NULL op value (malformed CDC metadata) must read as "not a
     # delete", never as three-valued NULL: an un-coalesced NULL gate
@@ -405,12 +400,7 @@ def _merge_into_cow(
             # unhinted)
             src_rows = _observed_rows(src_obs, src)
             if src_rows == 0:
-                if extra_summary is None:
-                    return table.current_version()
-                return table.commit(
-                    [], operation="merge",
-                    extra_summary={"matched_files": 0, **extra_summary},
-                )
+                return _empty_source_exit(table, extra_summary)
 
     # rough in-parquet volume of the source rows (sizes the clustered
     # write shuffle; order-of-magnitude is all the hint needs — the
@@ -546,6 +536,17 @@ def _merge_into_cow(
         removed_paths=touched_rel,
         operation="merge",
         extra_summary={"matched_files": len(touched_rel), **(extra_summary or {})},
+    )
+
+
+def _empty_source_exit(table: LakeTable, extra_summary: dict | None) -> int:
+    """The MERGE of an empty source: no snapshot, unless the caller's
+    ``extra_summary`` still needs its (metadata-only) commit."""
+    if extra_summary is None:
+        return table.current_version()
+    return table.commit(
+        [], operation="merge",
+        extra_summary={"matched_files": 0, **extra_summary},
     )
 
 
