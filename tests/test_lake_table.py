@@ -2004,6 +2004,55 @@ def test_mor_micro_batch_job_count(spark, tmp_path):
     assert "delete" not in {s["operation"] for s in snaps}
 
 
+def _six_appends(spark, tmp_path, name):
+    """A table clustered on ``id`` built by six 500-row appends."""
+    t = LakeTable.create(str(tmp_path / name), SCHEMA, keys=["id"], cluster_by=["id"])
+    for k in range(6):
+        t.append(spark.range(k * 500, (k + 1) * 500).select(
+            F.col("id").cast("int").alias("id"), F.lit("a").alias("cat"),
+            (F.col("id") % 97).cast("double").alias("val"),
+        ))
+    return t
+
+
+def test_compact_job_count(spark, tmp_path):
+    """A binpack compaction of a small clustered table is one copy-on-
+    write rewrite written in-process: 1 job (the Arrow collect), one
+    output file."""
+    from conftest import count_jobs
+    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import metrics
+    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.maintenance import (
+        compact,
+    )
+
+    t = _six_appends(spark, tmp_path, "t")
+    metrics.reset()
+    _, jobs = count_jobs(spark, lambda: compact(spark, t))
+    assert jobs == 1
+    assert metrics.snapshot().get("write.inprocess") == 1
+    assert len(t.manifest()["files"]) == 1
+    assert t.row_count() == t.read(spark).count() == 3000
+
+
+def test_zorder_job_count(spark, tmp_path):
+    """A z-order of the same table runs its min/max aggregate and then
+    the in-process rewrite sorted on the z-value: 3 jobs."""
+    from conftest import count_jobs
+    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import metrics
+    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.maintenance import (
+        zorder_by,
+    )
+
+    t = _six_appends(spark, tmp_path, "t")
+    metrics.reset()
+    _, jobs = count_jobs(spark, lambda: zorder_by(spark, t, ["id", "val"]))
+    assert jobs == 3
+    assert metrics.snapshot().get("write.inprocess") == 1
+    m = t.manifest()
+    assert len(m["files"]) == 1 and "__z" not in m["schema"]
+    assert t.row_count() == t.read(spark).count() == 3000
+
+
 def _mor_20k(spark, tmp_path, name):
     """A one-file 20,000-row merge-on-read table."""
     t = LakeTable.create(
@@ -2036,14 +2085,15 @@ def test_mor_delete_where_job_count(spark, tmp_path):
 
 
 def test_delete_by_keys_mor_job_count(spark, tmp_path):
-    """A 50-key merge-on-read delete: the key collect for pruning, the
-    broadcast key probe and the one (file, pos) collect, 5 jobs."""
+    """A 50-key merge-on-read delete: the key collect, which prunes the
+    candidate files and then serves as the broadcast key probe, and the
+    one (file, pos) collect, 4 jobs."""
     from conftest import count_jobs
 
     t = _mor_20k(spark, tmp_path, "t")
     keys = spark.createDataFrame([(i,) for i in range(1000, 1050)], "id int")
     _, jobs = count_jobs(spark, lambda: t.delete_by_keys_mor(spark, keys))
-    assert jobs == 5
+    assert jobs == 4
     assert [d["rows"] for d in t.manifest()["delete_files"]] == [50]
     assert t.row_count() == t.read(spark).count() == 19_950
 

@@ -19,6 +19,7 @@ from transactional_datalake_using_amazon_datafirehose_iceberg_spark.operators.cd
 )
 from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import (
     LakeTable,
+    lake_table,
     merge_into,
 )
 from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.maintenance import (
@@ -172,6 +173,35 @@ def test_rewrite_delete_files_keeps_small_clustered_file_count(spark, tmp_path):
     m = t.manifest()
     assert m["delete_files"] == []
     assert len(m["files"]) <= n_before
+    assert t.row_count() == t.read(spark).count() == 18_000 - 18
+
+
+def test_rewrite_delete_files_sizes_by_target_without_partition_cap(
+    spark, tmp_path, monkeypatch
+):
+    """With the target file size at 1/8 of the files it replaces, the
+    fold writes 8 range-disjoint files on the cluster column — the file
+    count comes from the target size alone, not capped by
+    ``spark.sql.shuffle.partitions`` (4 here)."""
+    t = LakeTable.create(
+        str(tmp_path / "t"), SCHEMA, keys=["id"], cluster_by=["id"],
+        properties={"write.delete.mode": "merge-on-read"},
+    )
+    for part in range(3):  # each insert-only MERGE writes one file
+        merge_into(t, spark.range(part * 6000, (part + 1) * 6000).select(
+            F.col("id").cast("int").alias("id"), F.lit("a").alias("cat"),
+            F.col("id").cast("double").alias("val"),
+        ))
+    t.delete_where(spark, "id % 1000 = 0")
+    total = sum(f["bytes"] for f in t.manifest()["files"])
+    monkeypatch.setattr(lake_table, "_TARGET_FILE_BYTES", -(-total // 8))
+    rewrite_delete_files(spark, t)
+    m = t.manifest()
+    assert m["delete_files"] == []
+    assert len(m["files"]) == 8
+    spans = sorted((f["min"]["id"], f["max"]["id"]) for f in m["files"])
+    for (_, hi1), (lo2, _) in zip(spans, spans[1:]):
+        assert hi1 < lo2
     assert t.row_count() == t.read(spark).count() == 18_000 - 18
 
 

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F, types as T
 
-from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import LakeTable
+from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import LakeTable, lake_table
 from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.lake_table import (
     Predicate,
 )
@@ -40,11 +40,17 @@ def _grid_table(spark, path, n_files=16):
     return t
 
 
+def _target_n_files(monkeypatch, t, n):
+    """Size rewrites of ``t`` to about ``n`` output files."""
+    total = sum(f["bytes"] for f in t.manifest()["files"])
+    monkeypatch.setattr(lake_table, "_TARGET_FILE_BYTES", total // n)
+
+
 def _n_matching(t, col, lo, hi):
     return len(t.file_paths(predicates=[Predicate(col, ">=", lo), Predicate(col, "<=", hi)]))
 
 
-def test_zorder_prunes_on_both_columns(spark, tmp_path):
+def test_zorder_prunes_on_both_columns(spark, tmp_path, monkeypatch):
     t = _grid_table(spark, tmp_path / "t")
     n_before = len(t.file_paths())
     assert n_before >= 8
@@ -52,7 +58,8 @@ def test_zorder_prunes_on_both_columns(spark, tmp_path):
     assert _n_matching(t, "a", 10, 19) == n_before
     assert _n_matching(t, "b", 10, 19) == n_before
 
-    zorder_by(spark, t, ["a", "b"], bits=5, n_files=16)
+    _target_n_files(monkeypatch, t, 16)
+    zorder_by(spark, t, ["a", "b"], bits=5)
     n_after = len(t.file_paths())
     assert n_after >= 8  # AQE did not merge the range partitions
     # z-order: a 10%-selectivity range on EITHER column prunes most files
@@ -60,13 +67,14 @@ def test_zorder_prunes_on_both_columns(spark, tmp_path):
     assert _n_matching(t, "b", 10, 19) <= n_after // 2
 
 
-def test_zorder_preserves_content_and_count(spark, tmp_path):
+def test_zorder_preserves_content_and_count(spark, tmp_path, monkeypatch):
     t = _grid_table(spark, tmp_path / "t")
     before = t.read(spark)
     sums = before.agg(
         F.count("*").alias("n"), F.sum("a").alias("sa"), F.sum("b").alias("sb")
     ).collect()[0]
-    v = zorder_by(spark, t, ["a", "b"], bits=5, n_files=8)
+    _target_n_files(monkeypatch, t, 8)
+    v = zorder_by(spark, t, ["a", "b"], bits=5)
     assert t.current_version() == v
     after = t.read(spark)
     assert after.exceptAll(before).count() == 0

@@ -253,12 +253,13 @@ def _small_output(
 
 def _write_sorted(
     tbl: _pa.Table, commit_dir: str, cluster_cols: list[str], n_files: int,
-    codec: str, stat_cols: list[str],
+    codec: str, stat_cols: list[str], unwritten: list[str],
 ) -> None:
     """Write a non-empty Arrow table into ``commit_dir`` as at most
     ``n_files`` parquet files, sorted on ``cluster_cols`` ascending with
     nulls first (``sortWithinPartitions`` order) and split by
-    ``_range_cuts`` on the leading cluster column."""
+    ``_range_cuts`` on the leading cluster column; the ``unwritten``
+    sort columns are dropped before the write."""
     if cluster_cols:
         tbl = tbl.take(_pc.sort_indices(
             tbl, sort_keys=[(c, "ascending") for c in cluster_cols],
@@ -268,6 +269,8 @@ def _write_sorted(
     # sources read parquet columns as nullable either way
     tbl = tbl.cast(_pa.schema([f.with_nullable(True) for f in tbl.schema]))
     cuts = _range_cuts(tbl.column(cluster_cols[0]), n_files) if cluster_cols else []
+    tbl = tbl.drop_columns(unwritten)
+    stat_cols = [c for c in stat_cols if c not in unwritten]
     # dictionary-encode only columns that repeat values, as parquet-mr
     # falls back to plain for near-unique ones (on the CDC table
     # always-dictionary files come out ~13% larger)
@@ -1194,43 +1197,48 @@ class LakeTable:
             cols.append(F.col("_row_id").cast("long").alias("_row_id"))
         return df.select(*cols)
 
-    def _write_files(self, df: DataFrame, cluster: bool = True,
+    def _write_files(self, df: DataFrame, sort_by: list[str] | None = None,
                      size_hint_bytes: int | None = None,
                      max_rows: int | None = None) -> list[dict]:
         """Write df as parquet under data/<uuid>/ and return file metas.
+        Every data file a write or a copy-on-write rewrite adds is
+        written here.
 
-        Clustering (range partitioning + local sort on ``cluster_by``)
-        makes the per-file min/max tight on those columns — that's what
-        turns the manifest stats into a partition-pruning structure at
-        scale.
+        ``sort_by`` (default: the table's ``cluster_by``) orders the
+        rows: range partitioning + a local sort make the per-file
+        min/max tight on those columns — that's what turns the manifest
+        stats into a partition-pruning structure at scale. A ``sort_by``
+        column outside the table schema (z-order's ``__z``) orders the
+        rows on both write paths and is not written.
 
-        ``size_hint_bytes``: caller's estimate of the output volume
-        (e.g. a MERGE knows the touched files' manifest bytes). Sizes
-        the clustered range shuffle to ~target-file-size partitions
-        instead of the static shuffle-partition fan-out — a micro-batch
-        rewrite writes 1 file with 1 task, a 10 GB rewrite ~80 — and a
-        hint of one partition skips the range-boundary sampling job
-        entirely (a global sort of one partition is the same file).
+        ``size_hint_bytes``: caller's estimate of the output volume (a
+        rewrite knows its files' manifest bytes). It sizes the output
+        to ``ceil(hint / _TARGET_FILE_BYTES)`` files — a micro-batch
+        rewrite writes 1 file with 1 task, a 10 GB rewrite ~80: a
+        sorted output is range-partitioned into that many files (one
+        file skips the range-boundary sampling job, a global sort of
+        one partition being the same file), an unsorted one is
+        coalesced to them.
 
-        ``max_rows``: a proven upper bound on the output rows (a MERGE
-        knows its touched files' manifest rows plus its source rows).
+        ``max_rows``: a proven upper bound on the output rows (a
+        rewrite knows its files' manifest rows).
 
         Small outputs are written in-process (see ``_small_output``): one
-        Arrow collect, a pyarrow sort on ``cluster_by`` (ascending,
-        nulls first, as ``sortWithinPartitions``) and ``pq.write_table``
+        Arrow collect, a pyarrow sort on ``sort_by`` (ascending, nulls
+        first, as ``sortWithinPartitions``) and ``pq.write_table``
         replace the range-sampling job, the shuffle and the Spark write.
         The gate is a flat schema of whitelisted types, at most
         ``_INPROCESS_MAX_ROWS`` rows and at most ``_TARGET_FILE_BYTES``
         bytes; a frame whose plan has no size estimate is measured by
         one bounded collect. The file layout stays the one the
-        Spark path writes: with a size hint the file count comes from
-        the hint, and a hint under the byte gate always means one file;
-        with no hint a clustered output splits like ``RangePartitioner``
-        into at most ``spark.sql.shuffle.partitions`` contiguous files,
-        no value of the leading cluster column spanning two (one file
-        per value when there are no more values than partitions). An
-        unclustered output is one file. Both paths end in the same
-        ``_collect_stats``, so stats, blooms and the commit are shared.
+        Spark path writes: a hint under the byte gate always means one
+        file; with no hint a sorted output splits like
+        ``RangePartitioner`` into at most ``spark.sql.shuffle.partitions``
+        contiguous files, no value of the leading sort column spanning
+        two (one file per value when there are no more values than
+        partitions), and an unsorted output is one file. Both paths end
+        in the same ``_collect_stats``, so stats, blooms and the commit
+        are shared.
         """
         from . import metrics
 
@@ -1240,8 +1248,16 @@ class LakeTable:
         # the column (single-writer discipline covers the reverse race)
         head = self.manifest()
         head_schema_v = head.get("schema_v", 0)
-        df = self._conform(df, T.StructType.fromJson(json.loads(head["schema"])))
-        cb = self.cluster_by if cluster else []
+        schema = T.StructType.fromJson(json.loads(head["schema"]))
+        cb = self.cluster_by if sort_by is None else list(sort_by)
+        unwritten = [c for c in cb if c not in schema.fieldNames()]
+        df = self._conform(
+            df, T.StructType([*schema.fields, *(df.schema[c] for c in unwritten)])
+        )
+        n_files = (
+            None if size_hint_bytes is None
+            else max(1, -(-int(size_hint_bytes) // _TARGET_FILE_BYTES))
+        )
         commit_dir = os.path.join(self.root, _DATA_DIR, uuid.uuid4().hex[:16])
         spark = df.sparkSession
         small = _small_output(df, cb, size_hint_bytes, max_rows)
@@ -1252,41 +1268,25 @@ class LakeTable:
                 return []
             _write_sorted(
                 tbl, commit_dir, cb,
-                # a hint under the byte gate always sizes to one file
-                1 if size_hint_bytes is not None
-                else int(spark.conf.get("spark.sql.shuffle.partitions")),
-                codec, stat_cols,
+                n_files or int(spark.conf.get("spark.sql.shuffle.partitions")),
+                codec, stat_cols, unwritten,
             )
         elif cb:
             # RANGE partitioning, not hash: each output file covers a
-            # contiguous range of the cluster columns, so per-file
-            # min/max are tight and disjoint -> manifest pruning behaves
-            # like partition pruning (hash would co-locate unrelated
-            # values and widen every file's range). AQE partition
-            # coalescing would merge adjacent ranges back together on
-            # small batches, so it is suspended for the clustered write
+            # contiguous range of the sort columns, so per-file min/max
+            # are tight and disjoint -> manifest pruning behaves like
+            # partition pruning (hash would co-locate unrelated values
+            # and widen every file's range). AQE partition coalescing
+            # would merge adjacent ranges back together on small
+            # batches, so it is suspended for the sorted write
             # (single-writer; restored immediately after).
-            n_parts = None
-            if size_hint_bytes is not None:
-                ceiling = int(
-                    spark.conf.get("spark.sql.shuffle.partitions", "32")
-                )
-                n_parts = max(
-                    1,
-                    min(ceiling, -(-int(size_hint_bytes) // _TARGET_FILE_BYTES)),
-                )
-            if n_parts == 1:
-                # single output range: a lone sorted partition IS the
-                # range partitioning, minus the sampling pass
-                df = df.repartition(1).sortWithinPartitions(*cb)
-            elif n_parts is not None:
-                df = df.repartitionByRange(
-                    n_parts, *[F.col(c) for c in cb]
-                ).sortWithinPartitions(*cb)
+            if n_files == 1:
+                df = df.repartition(1)
             else:
                 df = df.repartitionByRange(
-                    *[F.col(c) for c in cb]
-                ).sortWithinPartitions(*cb)
+                    *([n_files] if n_files else []), *[F.col(c) for c in cb]
+                )
+            df = df.sortWithinPartitions(*cb).drop(*unwritten)
             prev = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
             spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
             try:
@@ -1294,6 +1294,8 @@ class LakeTable:
             finally:
                 spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev)
         else:
+            if n_files:
+                df = df.coalesce(n_files)
             df.write.mode("errorifexists").parquet(commit_dir)
         metas = self._collect_stats(commit_dir, schema_v=head_schema_v)
         if not metas:  # all parts empty: leave no orphan dir behind
@@ -1301,8 +1303,8 @@ class LakeTable:
         return metas
 
     def _manifest_bytes_of(self, rel_paths) -> int:
-        """Summed manifest bytes of the given data files — the exact
-        write-size hint for a COW rewrite of those files."""
+        """Summed manifest bytes of the given data files (MERGE's
+        probe-skip gate)."""
         wanted = set(rel_paths)
         return sum(
             int(f.get("bytes", 0))
@@ -2425,6 +2427,12 @@ class LakeTable:
         is tiny next to the table). CDC micro-batches do not come here:
         ``apply_batch`` applies their deletes in its one MERGE commit."""
         keys = keys or self.keys
+        # null-safe semi-join (t.k <=> s.k): a NULL-key delete must hit
+        # the NULL-key row, matching the COW path's MERGE semantics; the
+        # probe side takes reserved __-names so no column can collide
+        probe = keys_df.select(
+            *[F.col(k).alias(f"__d_{k}") for k in keys]
+        ).distinct()
         # single-column key sets are micro-batch scale (they broadcast
         # below anyway): collect them once and let the per-file key
         # bloom + min/max prune the candidate scan down to files that
@@ -2433,9 +2441,11 @@ class LakeTable:
         extra_preds: list[Predicate] = []
         has_null_key = False
         if len(keys) == 1:
-            kvals = [
-                r[0] for r in keys_df.select(keys[0]).distinct().limit(10001).collect()
-            ]
+            kvals = [r[0] for r in probe.limit(10001).collect()]
+            if len(kvals) <= 10000:
+                # the collect holds the whole key set: probe with it
+                # rather than evaluate keys_df a second time
+                probe = spark.createDataFrame([(v,) for v in kvals], probe.schema)
             # blooms and min/max stats exclude NULLs: a NULL-key delete
             # row would prune away the very file holding the NULL-key
             # target, so ANY null in the batch disables pruning (and the
@@ -2448,12 +2458,6 @@ class LakeTable:
         cand = self.file_paths(predicates=None if has_null_key else extra_preds)
         if not cand:
             return self.current_version()
-        # null-safe semi-join (t.k <=> s.k): a NULL-key delete must hit
-        # the NULL-key row, matching the COW path's MERGE semantics; the
-        # probe side takes reserved __-names so no column can collide
-        probe = keys_df.select(
-            *[F.col(k).alias(f"__d_{k}") for k in keys]
-        ).distinct()
         cond = [F.col(k).eqNullSafe(F.col(f"__d_{k}")) for k in keys]
         return self._delete_positions(
             spark, cand,
@@ -2576,9 +2580,8 @@ class LakeTable:
         """The copy-on-write tail of ``delete_where`` and
         ``update_where``: one distinct-file probe finds the files of
         ``cand`` holding a live row matching ``condition``; only those
-        are re-read (delete-aware, row lineage carried), passed through
-        ``transform`` and rewritten, sized by their manifest bytes, in
-        one commit that removes them. No hit commits nothing."""
+        are rewritten through ``transform`` by ``_rewrite_files``. No
+        hit commits nothing."""
         df = self.read_files(spark, cand, with_file_path=True)
         hit_rel = {
             self._relpath(r["_file"])
@@ -2586,15 +2589,40 @@ class LakeTable:
         }
         if not hit_rel:
             return self.current_version()
+        return self._rewrite_files(spark, sorted(hit_rel), transform, **commit_kw)
+
+    def _rewrite_files(
+        self, spark: SparkSession, rel_paths: list[str], transform,
+        extra_bytes: int = 0, extra_rows: int | None = 0,
+        sort_by: list[str] | None = None, **commit_kw,
+    ) -> int:
+        """The one copy-on-write rewrite (Iceberg's RewriteFiles): the
+        live rows of the data files ``rel_paths`` (delete-aware, row
+        lineage carried) pass through ``transform`` and are written by
+        ``_write_files`` in one commit that removes those files. The
+        write is sized by the files' manifest bytes plus
+        ``extra_bytes`` and bounded by their manifest rows plus
+        ``extra_rows`` (None: no bound), which is what a transform that
+        adds rows (a MERGE's inserts) declares. MERGE, copy-on-write
+        UPDATE/DELETE, compaction, z-order and the delete-file fold
+        all end here."""
+        wanted = set(rel_paths)
+        files = [f for f in self.manifest()["files"] if f["path"] in wanted]
         old = self.read_files(
             spark,
-            [os.path.join(self.root, p) for p in sorted(hit_rel)],
+            [os.path.join(self.root, p) for p in rel_paths],
             with_row_ids=self.row_lineage,
         )
         added = self._write_files(
-            transform(old), size_hint_bytes=self._manifest_bytes_of(hit_rel)
+            transform(old),
+            sort_by=sort_by,
+            size_hint_bytes=sum(int(f.get("bytes", 0)) for f in files) + extra_bytes,
+            max_rows=(
+                None if extra_rows is None
+                else sum(int(f["rows"]) for f in files) + extra_rows
+            ),
         )
-        return self.commit(added, removed_paths=hit_rel, **commit_kw)
+        return self.commit(added, removed_paths=rel_paths, **commit_kw)
 
     def _relpath(self, spark_file_path: str) -> str:
         p = spark_file_path
@@ -2898,34 +2926,16 @@ class LakeTable:
         # head's file list, so an unlocked racing data commit would be
         # silently dropped (round-9 lost-update class)
         with self._commit_lock():
-            return self._set_cluster_by_locked(cols)
-
-    def _set_cluster_by_locked(self, cols: list[str]) -> int:
-        cur = self.manifest()
-        schema = T.StructType.fromJson(json.loads(cur["schema"]))
-        names = [f.name for f in schema.fields]
-        for c in cols:
-            if c not in names:
-                raise ValueError(f"no such column: {c}")
-        version = self._next_version()
-        manifest = {
-            **cur,
-            "version": version,
-            "parent": cur["version"],
-            "cluster_by": list(cols),
-            "summary": {
-                "operation": "set-cluster-by",
-                "cluster_by": ",".join(cols),
-                "total_rows": _live_rows(
-                    cur["files"], cur.get("delete_files", [])
-                ),
-                **_carried_summary(cur.get("summary", {}), True),
-            },
-            "created": _dt.datetime.now(_dt.timezone.utc).isoformat(),
-        }
-        self._write_manifest(manifest)
-        self._swap_pointer(version)
-        return version
+            cur = self.manifest()
+            schema = T.StructType.fromJson(json.loads(cur["schema"]))
+            for c in cols:
+                if c not in schema.fieldNames():
+                    raise ValueError(f"no such column: {c}")
+            return self._metadata_commit_locked(
+                cur, schema,
+                {"operation": "set-cluster-by", "cluster_by": ",".join(cols)},
+                {"cluster_by": list(cols)},
+            )
 
     def _metadata_commit(
         self,
@@ -2934,12 +2944,13 @@ class LakeTable:
         summary: dict,
         manifest_updates: dict | None = None,
     ) -> int:
-        """Schema-evolution commit: same files, new schema. Carries the
+        """Metadata-only DDL commit: same files, new schema. Carries the
         streaming watermark and keeps total_rows delete-aware (a
         metadata-only DDL between stream batches must not erase the
         exactly-once guard or distort the row count).
         ``manifest_updates`` lets rename_column update keys/cluster_by/
-        renames in the same atomic commit.
+        renames, and set_cluster_by the layout, in the same atomic
+        commit.
 
         Runs under the commit lock with a parent-freshness check: the
         caller derived ``cur`` (and the new schema) from an UNLOCKED

@@ -15,6 +15,12 @@ covered here:
   read path;
 - history -> ``expire_snapshots`` retires old snapshots + unreferenced
   files (Iceberg ``expire_snapshots``).
+
+``compact``, ``zorder_by`` and ``rewrite_delete_files`` only choose the
+files to rewrite and the row transform: every rewrite reads, writes,
+sizes and commits through ``LakeTable._rewrite_files``, the same
+copy-on-write rewrite MERGE, UPDATE and DELETE end in, so its output
+takes the table-wide file-sizing rule of ``LakeTable._write_files``.
 """
 
 from __future__ import annotations
@@ -25,7 +31,6 @@ import time
 
 from pyspark.sql import SparkSession
 
-from . import lake_table as _lake_table
 from .lake_table import (
     LakeTable,
     _DATA_DIR,
@@ -63,8 +68,8 @@ def compact(
     re-shuffled on every maintenance run. Files already at target size
     are untouched (their pending merge-on-read deletes also stay
     pending, exactly like Iceberg). ``binpack=False`` forces the old
-    whole-table rewrite (full recluster). Output files are sized to
-    the table-wide ``lake_table._TARGET_FILE_BYTES``.
+    whole-table rewrite (full recluster). The rewritten rows are sorted
+    on the table's ``cluster_by`` and sized like every rewrite.
     """
     m = table.manifest()
     if not m["files"]:
@@ -75,61 +80,18 @@ def compact(
             return m["version"]
     else:
         victims = list(m["files"])
-    victim_paths = [f["path"] for f in victims]
-    total_bytes = sum(f["bytes"] for f in victims)
-    n_out = max(1, -(-total_bytes // _lake_table._TARGET_FILE_BYTES))
-    victim_abs = [os.path.join(table.root, p) for p in victim_paths]
-    # delete-aware read of exactly the victim files; their pending
-    # position deletes are folded in by the rewrite (row-lineage ids
-    # materialize into the rewritten files so they survive compaction)
-    df = table.read_files(spark, victim_abs, with_row_ids=table.row_lineage)
-    cb = table.cluster_by
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    commit_dir = os.path.join(table.root, _DATA_DIR, uuid.uuid4().hex[:16])
-    if cb:
-        # RANGE partitioning, not hash (review round 11): compaction
-        # exists to restore tight per-file min/max on the cluster
-        # columns, and a hash repartition scatters adjacent keys so
-        # every output file spans ~the whole key domain — defeating the
-        # manifest pruning clustering pays for. Same discipline as
-        # LakeTable._write_files, including the AQE-coalesce suspension
-        # (merging range partitions would re-widen file stats).
-        out = table._conform(
-            df.repartitionByRange(n_out, *[F.col(c) for c in cb])
-            .sortWithinPartitions(*cb)
-        )
-        prev = spark.conf.get(
-            "spark.sql.adaptive.coalescePartitions.enabled", "true"
-        )
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        try:
-            out.write.mode("errorifexists").parquet(commit_dir)
-        finally:
-            spark.conf.set(
-                "spark.sql.adaptive.coalescePartitions.enabled", prev
-            )
-    else:
-        table._conform(df.coalesce(n_out)).write.mode("errorifexists").parquet(
-            commit_dir
-        )
-    added = table._collect_stats(commit_dir)
     # commit() prunes position-delete entries made dangling by
     # removed_paths, so victims' folded-in deletes disappear with them
     # automatically. Equality deletes carry no refs: after a FULL
     # rewrite every surviving file outranks them (new seq), so their
     # entries are provably inert — drop them explicitly or every later
     # read pays their anti-join for zero effect (review round 11).
-    removed_delete_paths = (
-        [d["path"] for d in m.get("delete_files", [])] if not binpack else ()
-    )
-    return table.commit(
-        added,
-        removed_paths=victim_paths,
+    return table._rewrite_files(
+        spark, [f["path"] for f in victims], lambda df: df,
         operation="compact",
-        removed_delete_paths=removed_delete_paths,
+        removed_delete_paths=(
+            [d["path"] for d in m.get("delete_files", [])] if not binpack else ()
+        ),
     )
 
 
@@ -138,7 +100,6 @@ def zorder_by(
     table: LakeTable,
     cols: list[str],
     bits: int = 8,
-    n_files: int | None = None,
 ) -> int:
     """Z-order rewrite (Iceberg ``rewrite_data_files`` with
     ``sort_order => zorder(...)``): recluster the live file set on the
@@ -150,88 +111,69 @@ def zorder_by(
     Mechanics: each column is mapped to a ``2**bits``-bucket rank via an
     equal-width [min, max] scale (one fused min/max aggregate for all
     columns), the bucket bits are interleaved into one long z-value, and
-    the table is range-repartitioned + sorted on that z-value — each
-    output file then covers a small hyper-rectangle of the key space.
-    All compute is JVM-side column arithmetic; the only driver-side data
-    is the 1-row min/max aggregate. Scale cost = one full-table shuffle,
-    identical to any clustering rewrite; run it like compaction
-    (periodic, or on cold data once).
+    the table is rewritten sorted on that z-value (range-partitioned
+    into files sized like every rewrite; the z-value is not stored) —
+    each output file then covers a small hyper-rectangle of the key
+    space. All compute is JVM-side column arithmetic; the only
+    driver-side data is the 1-row min/max aggregate. Scale cost = one
+    full-table shuffle, identical to any clustering rewrite; run it
+    like compaction (periodic, or on cold data once).
     """
     m = table.manifest()
     if not m["files"]:
         return m["version"]
     if len(cols) * bits > 63:
         raise ValueError(f"bits={bits} over {len(cols)} columns exceeds a long")
-    df = table.read(spark, with_row_ids=table.row_lineage)
-    dtypes = dict(df.dtypes)
-    numeric = ("tinyint", "smallint", "int", "bigint", "float", "double") + tuple(
-        t for c, t in dtypes.items() if t.startswith("decimal")
-    )
-    for c in cols:
-        if c not in dtypes:
-            raise ValueError(f"no such column: {c}")
-        if dtypes[c] not in numeric:
-            raise ValueError(
-                f"zorder_by supports numeric columns; {c} is {dtypes[c]}"
-            )
     from pyspark.sql import functions as F
 
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"__lo_{c}"), F.max(c).alias(f"__hi_{c}")]
-    stats = df.agg(*aggs).collect()[0]
-
-    nb = (1 << bits) - 1
-    buckets = []
-    for c in cols:
-        lo, hi = stats[f"__lo_{c}"], stats[f"__hi_{c}"]
-        if lo is None or hi is None or float(hi) == float(lo):
-            buckets.append(F.lit(0).cast("long"))
-            continue
-        scaled = (F.col(c).cast("double") - F.lit(float(lo))) / F.lit(
-            float(hi) - float(lo)
-        ) * F.lit(nb)
-        b = F.floor(scaled).cast("long")
-        buckets.append(
-            F.coalesce(F.greatest(F.least(b, F.lit(nb)), F.lit(0)), F.lit(0))
+    def add_z(df):
+        dtypes = dict(df.dtypes)
+        numeric = ("tinyint", "smallint", "int", "bigint", "float", "double") + tuple(
+            t for c, t in dtypes.items() if t.startswith("decimal")
         )
-    z = F.lit(0).cast("long")
-    k = len(cols)
-    for bit in range(bits):
-        for i, b in enumerate(buckets):
-            z = z.bitwiseOR(
-                F.shiftleft(F.shiftright(b, bit).bitwiseAND(F.lit(1)), bit * k + i)
+        for c in cols:
+            if c not in dtypes:
+                raise ValueError(f"no such column: {c}")
+            if dtypes[c] not in numeric:
+                raise ValueError(
+                    f"zorder_by supports numeric columns; {c} is {dtypes[c]}"
+                )
+        aggs = []
+        for c in cols:
+            aggs += [F.min(c).alias(f"__lo_{c}"), F.max(c).alias(f"__hi_{c}")]
+        stats = df.agg(*aggs).collect()[0]
+
+        nb = (1 << bits) - 1
+        buckets = []
+        for c in cols:
+            lo, hi = stats[f"__lo_{c}"], stats[f"__hi_{c}"]
+            if lo is None or hi is None or float(hi) == float(lo):
+                buckets.append(F.lit(0).cast("long"))
+                continue
+            scaled = (F.col(c).cast("double") - F.lit(float(lo))) / F.lit(
+                float(hi) - float(lo)
+            ) * F.lit(nb)
+            b = F.floor(scaled).cast("long")
+            buckets.append(
+                F.coalesce(F.greatest(F.least(b, F.lit(nb)), F.lit(0)), F.lit(0))
             )
+        z = F.lit(0).cast("long")
+        k = len(cols)
+        for bit in range(bits):
+            for i, b in enumerate(buckets):
+                z = z.bitwiseOR(
+                    F.shiftleft(F.shiftright(b, bit).bitwiseAND(F.lit(1)), bit * k + i)
+                )
+        return df.withColumn("__z", z)
 
-    total_bytes = sum(f["bytes"] for f in m["files"])
-    n_out = n_files or max(1, -(-total_bytes // _lake_table._TARGET_FILE_BYTES))
-    import uuid
-
-    zdf = (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_out, F.col("__z"))
-        .sortWithinPartitions("__z")
-    )
-    out = table._conform(zdf)  # projects away __z, keeps the partitioning
-    commit_dir = os.path.join(table.root, _DATA_DIR, uuid.uuid4().hex[:16])
-    # suspend AQE partition coalescing for the clustered write (as in
-    # LakeTable._write_files): merging range partitions would re-widen
-    # the per-file stats the rewrite exists to tighten
-    prev = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        out.write.mode("errorifexists").parquet(commit_dir)
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev)
-    added = table._collect_stats(commit_dir)
     # full rewrite: every surviving file has a new (higher) seq, so all
     # pending delete entries are inert afterwards — position deletes are
     # pruned as ref-dangling by commit(), equality deletes (no refs)
     # must be dropped explicitly or every later read pays their
     # anti-join for zero effect (review round 11)
-    return table.commit(
-        added,
-        removed_paths=[f["path"] for f in m["files"]],
+    return table._rewrite_files(
+        spark, [f["path"] for f in m["files"]], add_z,
+        sort_by=["__z"],
         operation="zorder",
         extra_summary={"zorder_by": ",".join(cols)},
         removed_delete_paths=[d["path"] for d in m.get("delete_files", [])],
@@ -286,18 +228,10 @@ def rewrite_delete_files(spark: SparkSession, table: LakeTable) -> int:
             operation="rewrite-deletes",
             removed_delete_paths=[d["path"] for d in dels],
         )
-    affected_abs = [os.path.join(table.root, p) for p in affected]
-    # read_files applies the pending deletes; the rewrite materializes
-    # the net rows of exactly those files
-    net = table.read_files(spark, affected_abs, with_row_ids=table.row_lineage)
-    # sized like any COW rewrite of those files: with no hint a
-    # clustered write splits into spark.sql.shuffle.partitions files
-    added = table._write_files(
-        net, size_hint_bytes=table._manifest_bytes_of(affected)
-    )
-    return table.commit(
-        added,
-        removed_paths=affected,
+    # the rewrite's delete-aware read materializes the net rows of
+    # exactly those files
+    return table._rewrite_files(
+        spark, affected, lambda df: df,
         operation="rewrite-deletes",
         removed_delete_paths=[d["path"] for d in dels],
     )

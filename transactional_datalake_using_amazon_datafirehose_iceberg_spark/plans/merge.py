@@ -331,7 +331,6 @@ def _merge_into_cow(
     # ---- 2. find touched files (manifest-stats prune + semi join) --------
     # zero candidate files after pruning (empty table, or the source key
     # range misses every file) -> skip the probe job entirely
-    touched_bytes_hint: int | None = None
     if not_matched_by_source_delete or not_matched_by_source_update:
         # a to-be-deleted/updated (not-in-source) row can live in ANY
         # file, even one outside the source key range: every file is
@@ -346,12 +345,10 @@ def _merge_into_cow(
     elif (
         key_preds  # real key-range pruning happened (rangeable key)
         and src_rows  # known NON-EMPTY source (an empty batch must not rewrite)
-        # the parenthesized walrus is compared with <=, never truthiness-
-        # tested, so a ZERO-byte candidate set stays on the skip path
-        and (
-            cand_bytes := table._manifest_bytes_of(
-                cand_rel := sorted(table._relpath(p) for p in cand_paths)
-            )
+        # compared with <=, never truthiness-tested, so a ZERO-byte
+        # candidate set stays on the skip path
+        and table._manifest_bytes_of(
+            cand_rel := sorted(table._relpath(p) for p in cand_paths)
         ) <= _PROBE_SKIP_BYTES
     ):
         # the probe job exists to shrink the rewrite to files that truly
@@ -366,7 +363,6 @@ def _merge_into_cow(
         # non-empty source. At scale the candidates of a real merge
         # exceed the byte threshold and the probe earns its keep.
         touched_rel = cand_rel
-        touched_bytes_hint = cand_bytes  # already in hand from the gate
         metrics.bump("merge.probe_skip_small")
     else:
         metrics.bump("merge.probe_job")
@@ -402,9 +398,8 @@ def _merge_into_cow(
             if src_rows == 0:
                 return _empty_source_exit(table, extra_summary)
 
-    # rough in-parquet volume of the source rows (sizes the clustered
-    # write shuffle; order-of-magnitude is all the hint needs — the
-    # static shuffle-partition count stays the ceiling)
+    # rough in-parquet volume of the source rows (adds to the rewrite's
+    # file-count hint; order-of-magnitude is all the hint needs)
     src_bytes = (
         src_rows * _EST_ROW_BYTES_PER_COL * len(data_cols)
         if src_rows is not None
@@ -439,20 +434,10 @@ def _merge_into_cow(
         )
 
     # ---- 4. rewrite touched files via full-outer join --------------------
-    import os
-
-    touched_abs = [os.path.join(table.root, p) for p in touched_rel]
-    # delete-aware read: rewriting a file with pending merge-on-read
-    # position deletes must not resurrect the deleted rows
-    lineage = table.row_lineage
-    old = (
-        table.read_files(spark, touched_abs, with_row_ids=lineage)
-        .withColumn("__tgt", F.lit(1))
-        .alias("t")
-    )
+    # the touched files' live rows (delete-aware: pending merge-on-read
+    # deletes are not resurrected) are aliased t, the source s
     new = src.withColumn("__src", F.lit(1)).alias("s")
     cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
-    joined = old.join(new, on=cond, how="full_outer")
 
     src_present = F.col("s.__src").isNotNull()
     tgt_present = F.col("t.__tgt").isNotNull()
@@ -506,34 +491,24 @@ def _merge_into_cow(
                 tgt_present & ~src_present, F.expr(nmbs_upd[f.name])
             ).otherwise(c)
         out_cols.append(c.cast(f.dataType).alias(f.name))
-    if lineage:
+    if table.row_lineage:
         # carried/updated rows keep their lineage id; source-inserted
         # rows write NULL and lazily derive a fresh id from the new
         # file's first_row_id block (Iceberg v3 row-lineage semantics)
         out_cols.append(F.col("t._row_id").cast("long").alias("_row_id"))
-    result = joined.filter(keep).select(*out_cols)
 
-    # rewrite volume = the touched files' manifest bytes (exact, already
-    # in hand) plus the source's insert contribution (estimated)
-    touched_bytes = (
-        touched_bytes_hint
-        if touched_bytes_hint is not None
-        else table._manifest_bytes_of(touched_rel)
-    )
-    # the full outer join emits each touched row at most once and each
-    # source row at most once unmatched: a proven output row bound
-    touched_set = set(touched_rel)
-    touched_rows = sum(
-        int(f["rows"]) for f in table.manifest()["files"] if f["path"] in touched_set
-    )
-    added = table._write_files(
-        result,
-        size_hint_bytes=touched_bytes + (src_bytes or 0),
-        max_rows=touched_rows + src_rows if src_rows is not None else None,
-    )
-    return table.commit(
-        added,
-        removed_paths=touched_rel,
+    # rewrite volume = the touched files' manifest bytes plus the
+    # source's insert contribution (estimated); the full outer join
+    # emits each touched row at most once and each source row at most
+    # once unmatched, so their rows bound the output
+    return table._rewrite_files(
+        spark, touched_rel,
+        lambda old: old.withColumn("__tgt", F.lit(1)).alias("t")
+        .join(new, on=cond, how="full_outer")
+        .filter(keep)
+        .select(*out_cols),
+        extra_bytes=src_bytes or 0,
+        extra_rows=src_rows,
         operation="merge",
         extra_summary={"matched_files": len(touched_rel), **(extra_summary or {})},
     )

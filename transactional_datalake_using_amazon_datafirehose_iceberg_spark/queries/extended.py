@@ -700,7 +700,7 @@ def _zorder_build(spark, sf):
         ),
     )
     t.append(li.repartition(8))
-    zorder_by(spark, t, ["l_orderkey", "l_partkey"], bits=6, n_files=8)
+    zorder_by(spark, t, ["l_orderkey", "l_partkey"], bits=6)
     return (
         t.read(spark)
         .groupBy("l_returnflag")

@@ -187,25 +187,6 @@ def write_golden_corpus(out_dir: str) -> tuple[str, str]:
     return p1, p2
 
 
-def write_demo_rate_corpus(
-    out_path: str, n_records: int, start_key: int = 100_000, seed: int = 13
-) -> str:
-    """One delivery buffer's worth of synthetic insert envelopes — the
-    reference demo generator's shape (gen_fake_cdc_data.py:26-59) at its
-    configured rate (``--max-count`` records pushed per run, README.md:357)
-    so a latency bench can measure 'one buffer applied within the trigger
-    interval'. Distinct keys: every record MERGEs as an insert."""
-    rng = random.Random(seed)
-    os.makedirs(os.path.dirname(os.path.abspath(out_path)), exist_ok=True)
-    txn = _BASE_TXN + 1_000_000
-    with open(out_path, "w") as f:
-        for i in range(n_records):
-            row = _mk_row(rng, start_key + i)
-            ts = f"2023-01-17T0{i % 6}:{(i // 60) % 60:02d}:{i % 60:02d}.{i % 1000000:06d}Z"
-            f.write(json.dumps(_envelope(row, "insert", ts, txn + i)) + "\n")
-    return out_path
-
-
 def read_cdc_batch(spark: SparkSession, path: str) -> DataFrame:
     """Batch-read raw JSONL envelope lines (one string column ``value``).
 
