@@ -59,3 +59,15 @@ def test_get_spark_warns_only_on_actual_conf_mismatch(spark, monkeypatch):
         get_spark()
     msgs = [str(w.message) for w in rec]
     assert any("spark.driver.memory" in m and "123g" in m for m in msgs), msgs
+
+
+def test_get_spark_turns_off_dataframe_call_site_capture(spark):
+    """``get_spark`` switches off PySpark's DataFrame debugging, which
+    captures the Python call site of every ``F.*``/DataFrame call with
+    extra py4j round trips; a CDC micro-batch builds ~181 such calls."""
+    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.session import (
+        get_spark,
+    )
+
+    got = get_spark()
+    assert got.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"

@@ -1314,6 +1314,7 @@ def test_plan_path_metrics_observable(spark, table, monkeypatch):
     'measure how often the in-process paths fire at sf0.1') — the merge
     probe-skip/probe-job split and the bloom builds must be countable
     without log scraping."""
+    import transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.lake_table as lt
     import transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans.merge as mg
     from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import metrics
 
@@ -1322,11 +1323,19 @@ def test_plan_path_metrics_observable(spark, table, monkeypatch):
     table.append(_mk(spark, [(1, "a", 1.0), (2, "b", 2.0)]))
     assert metrics.snapshot().get("bloom.inprocess_small") == 1
 
-    # small-candidate merge: byte-gated rewrite, probe job skipped
+    # a small merge runs on the driver: no probe job, no probe skip
     src = spark.createDataFrame(
         [(2, "b", 9.0, "update")],
         schema="id int, cat string, val double, operation string",
     )
+    merge_into(table, src, on=["id"], op_col="operation")
+    snap = metrics.snapshot()
+    assert snap.get("merge.inprocess") == 1
+    assert "merge.probe_job" not in snap and "merge.probe_skip_small" not in snap
+
+    # over the in-process row gate, the Spark MERGE: small candidates
+    # take the byte-gated rewrite, probe job skipped
+    monkeypatch.setattr(lt, "_INPROCESS_MAX_ROWS", 0)
     merge_into(table, src, on=["id"], op_col="operation")
     snap = metrics.snapshot()
     assert snap.get("merge.probe_skip_small") == 1
@@ -1985,20 +1994,23 @@ def _micro_batch_job_count(spark, tmp_path, delete_mode):
 
 def test_cow_micro_batch_job_count(spark, tmp_path):
     """One 2,000-envelope copy-on-write micro-batch over a 20,000-row
-    clustered table: the dead-letter append and the MERGE rewrite both
-    write in-process, 7 jobs in all (8 with Spark writes)."""
+    clustered table: the dead-letter collect and the collapsed batch's
+    one Arrow collect (2 jobs: the collapse window's shuffle and the
+    result); the MERGE's stats, probe and rewrite run on the driver and
+    both writes are in-process. 3 jobs in all."""
     jobs, counted, _ = _micro_batch_job_count(spark, tmp_path, "copy-on-write")
-    assert jobs == 7
+    assert jobs == 3
+    assert counted["merge.inprocess"] == 1
     assert counted["write.inprocess"] == 2
     assert "write.spark" not in counted
 
 
 def test_mor_micro_batch_job_count(spark, tmp_path):
     """The same micro-batch on a merge-on-read table runs the same path:
-    7 jobs, 2 in-process writes, and its upserts and deletes land in one
+    3 jobs, 2 in-process writes, and its upserts and deletes land in one
     merge commit, never a separate delete commit."""
     jobs, counted, snaps = _micro_batch_job_count(spark, tmp_path, "merge-on-read")
-    assert jobs == 7
+    assert jobs == 3
     assert counted["write.inprocess"] == 2
     assert "write.spark" not in counted
     assert "delete" not in {s["operation"] for s in snaps}

@@ -136,23 +136,33 @@ def test_merge_matches_reference_model(prop_spark, tmp_path_factory, batches, re
 def test_probe_skip_path_equivalent_to_probed_path(
     prop_spark, tmp_path_factory, batches
 ):
-    """The probe-skip fast path (rewrite all pruned candidates outright)
-    and the probed path (semi-join to the truly-touched files) must
-    converge to IDENTICAL table state for arbitrary op sequences — the
-    skip is a physical shortcut, never a semantic one."""
+    """The driver path (one Arrow collect, a pyarrow probe and rewrite),
+    the Spark probe-skip path (rewrite all pruned candidates outright)
+    and the Spark probed path (semi-join to the truly-touched files)
+    must converge to IDENTICAL table state for arbitrary op sequences —
+    each is a physical choice, never a semantic one. The Spark paths
+    are forced by setting the in-process row gate to 0."""
+    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import (
+        lake_table,
+    )
     from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import (
         merge as merge_mod,
     )
 
     spark = prop_spark
     states = []
-    for skip_bytes in (0, 1 << 60):  # probe always / probe never
-        orig = merge_mod._PROBE_SKIP_BYTES
-        merge_mod._PROBE_SKIP_BYTES = skip_bytes
+    # (in-process row gate, probe-skip bytes): driver / probe always /
+    # probe never
+    modes = (
+        (lake_table._INPROCESS_MAX_ROWS, merge_mod._PROBE_SKIP_BYTES),
+        (0, 0),
+        (0, 1 << 60),
+    )
+    for i, (max_rows, skip_bytes) in enumerate(modes):
+        orig = lake_table._INPROCESS_MAX_ROWS, merge_mod._PROBE_SKIP_BYTES
+        lake_table._INPROCESS_MAX_ROWS, merge_mod._PROBE_SKIP_BYTES = max_rows, skip_bytes
         try:
-            root = str(
-                tmp_path_factory.mktemp(f"pskip{skip_bytes % 97}") / "t"
-            )
+            root = str(tmp_path_factory.mktemp(f"pskip{i}") / "t")
             t = LakeTable.create(root, SCHEMA, keys=["k"], cluster_by=["cat"])
             for batch in batches:
                 # latest-per-key collapse like the CDC path (MERGE
@@ -169,8 +179,8 @@ def test_probe_skip_path_equivalent_to_probed_path(
                 sorted(map(tuple, t.read(spark).collect()))
             )
         finally:
-            merge_mod._PROBE_SKIP_BYTES = orig
-    assert states[0] == states[1], batches
+            lake_table._INPROCESS_MAX_ROWS, merge_mod._PROBE_SKIP_BYTES = orig
+    assert states[0] == states[1] == states[2], batches
 
 
 routed_ops_strategy = st.lists(

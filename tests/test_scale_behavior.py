@@ -75,11 +75,18 @@ def test_merge_rewrites_only_touched_files(spark, tmp_path, monkeypatch):
     assert t.row_count() == 600_000
 
 
-def test_merge_small_candidates_skip_probe(spark, tmp_path):
+def test_merge_small_candidates_skip_probe(spark, tmp_path, monkeypatch):
     """When the pruned candidates total less than one target output
-    file, the MERGE rewrites them outright — the probe scan would cost
-    more than the write it saves, and small files compact for free.
-    Results must be identical to the probed path."""
+    file, the Spark MERGE rewrites them outright — the probe scan would
+    cost more than the write it saves, and small files compact for free.
+    Results must be identical to the probed path. The in-process row
+    gate is set to 0 so this small MERGE stays on the Spark path (on
+    the driver path the pyarrow probe is exact and costs no job)."""
+    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import (
+        lake_table,
+    )
+
+    monkeypatch.setattr(lake_table, "_INPROCESS_MAX_ROWS", 0)
     t = LakeTable.create(str(tmp_path / "small"), SCHEMA, keys=["k"], cluster_by=["bucket"])
     base = spark.range(1_000).select(
         F.col("id").alias("k"),
@@ -128,17 +135,14 @@ def test_sustained_cdc_apply_throughput(spark, tmp_path):
     # batches kept getting applied at roughly constant cost (no blow-up):
     # final batch within 5x of the first (generous local-jitter bound)
     assert timings[-1] < timings[0] * 5 + 2.0, timings
-    # planner census pins the micro-batch hot path mechanically: no
-    # merge ever ran the touched-file probe scan (candidates under
-    # _PROBE_SKIP_BYTES)
+    # planner census pins the micro-batch hot path mechanically: every
+    # batch is merged on the driver, so no merge ever ran the
+    # touched-file probe scan; batch 0 merges into an empty table
+    # (pruning leaves zero candidate files -> append fast path)
     snap = metrics.snapshot()
     assert snap.get("merge.probe_job", 0) == 0, snap
-    # batch 0 merges into an empty table (pruning leaves zero candidate
-    # files -> append fast path); the other 9 take the byte-gated
-    # probe-skip rewrite
-    assert (
-        snap.get("merge.probe_skip_small", 0) + snap.get("merge.no_candidates", 0)
-    ) == 10, snap
+    assert snap.get("merge.inprocess", 0) == 10, snap
+    assert snap.get("merge.no_candidates", 0) == 1, snap
 
 
 # ---------------------------------------------------------------------------
@@ -447,11 +451,17 @@ def test_extras_all_executed_plans_free_of_scale_killers(spark):
     assert not bad, "scale-killer plan nodes found in extras:\n" + "\n".join(bad)
 
 
-def test_probe_skip_rewrites_diff_as_no_change_in_changelog(spark, tmp_path):
-    """The probe-skip fast path rewrites candidate files that hold NO
-    matching key; their carried-over rows appear in both the removed and
-    added file sets of the merge commit and must classify as non-changes
-    in the changelog — only the real upsert may surface."""
+def test_probe_skip_rewrites_diff_as_no_change_in_changelog(spark, tmp_path, monkeypatch):
+    """The Spark MERGE's probe-skip fast path rewrites candidate files
+    that hold NO matching key; their carried-over rows appear in both the
+    removed and added file sets of the merge commit and must classify as
+    non-changes in the changelog — only the real upsert may surface. The
+    in-process row gate is set to 0 to keep this small MERGE on Spark."""
+    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import (
+        lake_table,
+    )
+
+    monkeypatch.setattr(lake_table, "_INPROCESS_MAX_ROWS", 0)
     t = LakeTable.create(str(tmp_path / "t"), SCHEMA, keys=["k"], cluster_by=["bucket"])
     base = spark.range(200).select(
         F.col("id").alias("k"),

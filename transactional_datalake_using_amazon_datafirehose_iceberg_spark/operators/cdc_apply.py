@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans import lake_table
 from ..plans.lake_table import LakeTable, append_once
 from ..plans.merge import merge_into
 from ..schemas import CDC_DATA_RETAIL
@@ -144,15 +145,22 @@ def apply_batch(
     key_ok = F.lit(True)
     for k in keys:
         key_ok = key_ok & F.col(k).isNotNull()
-    # persist the collapsed batch: the MERGE evaluates its source in up
-    # to three separate jobs (fused stats, touched-file probe, rewrite),
-    # and without a cache each one re-parses the transport payload and
-    # re-runs the collapse window. A micro-batch is bounded by the
-    # delivery buffer (reference: 128 MB / 60 s), so caching it is the
-    # standard foreachBatch pattern, not a table-volume cache.
-    cached = collapse_latest_per_key(typed.filter(key_ok), keys).persist()
+    # A batch the plan estimates within merge_into's in-process gate is
+    # not persisted: the driver path reads it once (one Arrow collect),
+    # and a cache would cost a separate cache-materializing job. Any
+    # other batch (estimate over the gate, or none) is persisted as the
+    # standard foreachBatch pattern: the dead-letter check and the Spark
+    # MERGE (fused stats, touched-file probe, rewrite) each read it, and
+    # without a cache each would re-parse the payload and re-run the
+    # collapse window. A micro-batch is bounded by the delivery buffer
+    # (reference: 128 MB / 60 s), so this is never a table-volume cache.
+    batch = collapse_latest_per_key(typed.filter(key_ok), keys)
+    estimate = lake_table._plan_estimate(batch)
+    cached = estimate is None or estimate[1] > lake_table._INPROCESS_MAX_ROWS
+    if cached:
+        batch.persist()
     try:
-        latest = cached
+        latest = batch
 
         # Cross-batch out-of-order guard (SURVEY §7.3 hard part 1): when
         # the table persists the CDC ordering metadata (_order_ts/
@@ -169,8 +177,7 @@ def apply_batch(
         # columns NULL means the guard cannot rank this record against
         # the current row image — neither apply-on-a-guess nor a silent
         # drop is honest. Route the residue to the dead-letter table
-        # when one is wired. The isEmpty probe is one in-memory scan of
-        # the persisted micro-batch (common case: zero rows, no write).
+        # when one is wired (common case: zero rows, no write).
         no_evidence = F.col("_order_ts").isNull() & F.col("_order_txn").isNull()
         if stale_guard and dead_letter_table is not None:
             no_ev = latest.filter(no_evidence)
@@ -224,7 +231,8 @@ def apply_batch(
             condition_gates_delete=stale_guard,
         )
     finally:
-        cached.unpersist()
+        if cached:
+            batch.unpersist()
 
 
 def apply_routed(

@@ -181,29 +181,17 @@ def _range_cuts(lead, n_parts: int) -> list[int]:
     return sorted({starts[i] for i in picks if i < len(starts)})
 
 
-def _small_output(
-    df: DataFrame, cluster_cols: list[str],
-    size_hint_bytes: int | None, max_rows: int | None,
+def _inprocess_format(
+    spark: SparkSession, fields: list[T.StructField], cluster_cols: list[str],
 ):
-    """``(arrow table, pyarrow codec, columns to write statistics
-    for)`` when the conformed ``df`` may be written in-process (see
-    ``_write_files``), else None. Every fact of the gate but the
-    size of a frame with no estimate is known before any job runs.
-    The row bound is the caller's proven ``max_rows`` or, failing
-    that, the optimized plan's size estimate over the row's default
-    size; an estimated frame is collected under
-    ``limit(_INPROCESS_MAX_ROWS + 1)``, so a wrong estimate costs one
-    bounded collect and then the Spark path. A frame with no estimate
-    takes the same bounded collect and is gated on the rows and Arrow
-    bytes it returns."""
-    spark = df.sparkSession
-    fields = df.schema.fields
+    """``(pyarrow codec, columns to write statistics for)`` when columns
+    ``fields`` sorted on ``cluster_cols`` may be written in-process
+    under the session's parquet conf, else None. Runs no job."""
+    types = {f.name: f.dataType for f in fields}
     if not all(
-        isinstance(f.dataType, T.DecimalType) or f.dataType in _INPROCESS_TYPES
-        for f in fields
+        isinstance(t, T.DecimalType) or t in _INPROCESS_TYPES for t in types.values()
     ) or any(
-        isinstance(df.schema[c].dataType, (T.FloatType, T.DoubleType))
-        for c in cluster_cols
+        isinstance(types[c], (T.FloatType, T.DoubleType)) for c in cluster_cols
     ):
         return None
     codec = _ARROW_CODECS.get(
@@ -218,29 +206,59 @@ def _small_output(
     stat_cols = [
         f.name for f in fields if ts_out == "TIMESTAMP_MICROS" or f.name not in ltz
     ]
-    plan_bytes = None
+    return codec, stat_cols
+
+
+def _plan_estimate(df: DataFrame) -> tuple[int, int] | None:
+    """``(bytes, rows)`` of ``df`` by its plan's size estimate, the rows
+    at the row's default size; None when the plan has no estimate. The
+    plan is taken as written, before cached data replaces any part of
+    it: a filled cache reports its compressed in-memory bytes, which
+    would shrink the estimate of the same rows several-fold. Runs no
+    job."""
+    plan = df._jdf.queryExecution().analyzed()
+    # a leaf without statistics (a frame from a Python list or an RDD)
+    # reports spark.sql.defaultSizeInBytes, which projections above it
+    # rescale: then the plan has no estimate at all
+    leaves = plan.collectLeaves()
+    unknown = df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    if not all(
+        int(leaves.apply(i).stats().sizeInBytes()) < unknown
+        for i in range(leaves.length())
+    ):
+        return None
+    plan_bytes = int(plan.stats().sizeInBytes())
+    return plan_bytes, plan_bytes // max(1, df._jdf.schema().defaultSize())
+
+
+def _small_output(
+    df: DataFrame, cluster_cols: list[str],
+    size_hint_bytes: int | None, max_rows: int | None,
+):
+    """``(arrow table, pyarrow codec, columns to write statistics
+    for)`` when the conformed ``df`` may be written in-process (see
+    ``_write_files``), else None. Every fact of the gate but the
+    size of a frame with no estimate is known before any job runs.
+    The row bound is the caller's proven ``max_rows`` or, failing
+    that, the plan's estimate (``_plan_estimate``); an estimated frame
+    is collected under ``limit(_INPROCESS_MAX_ROWS + 1)``, so a wrong
+    estimate costs one bounded collect and then the Spark path. A
+    frame with no estimate takes the same bounded collect and is gated
+    on the rows and Arrow bytes it returns."""
+    spark = df.sparkSession
+    fmt = _inprocess_format(spark, df.schema.fields, cluster_cols)
+    if fmt is None:
+        return None
+    estimate = None
     if max_rows is None or size_hint_bytes is None:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        # a leaf without statistics (a frame from a Python list or an
-        # RDD) reports spark.sql.defaultSizeInBytes, which projections
-        # above it rescale: then the plan has no estimate at all
-        leaves = plan.collectLeaves()
-        unknown = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
-        if all(
-            int(leaves.apply(i).stats().sizeInBytes()) < unknown
-            for i in range(leaves.length())
-        ):
-            plan_bytes = int(plan.stats().sizeInBytes())
-        if size_hint_bytes is None:
-            size_hint_bytes = plan_bytes
+        estimate = _plan_estimate(df)
+        if size_hint_bytes is None and estimate is not None:
+            size_hint_bytes = estimate[0]
     if size_hint_bytes is not None and size_hint_bytes > _TARGET_FILE_BYTES:
         return None
     if max_rows is not None:
         tbl = df.toArrow() if max_rows <= _INPROCESS_MAX_ROWS else None
-    elif (
-        plan_bytes is None
-        or plan_bytes // max(1, df._jdf.schema().defaultSize()) <= _INPROCESS_MAX_ROWS
-    ):
+    elif estimate is None or estimate[1] <= _INPROCESS_MAX_ROWS:
         tbl = df.limit(_INPROCESS_MAX_ROWS + 1).toArrow()
     else:
         tbl = None
@@ -248,7 +266,7 @@ def _small_output(
         size_hint_bytes is None and tbl.nbytes > _TARGET_FILE_BYTES
     ):
         return None
-    return tbl, codec, stat_cols
+    return (tbl, *fmt)
 
 
 def _write_sorted(
@@ -1197,12 +1215,19 @@ class LakeTable:
             cols.append(F.col("_row_id").cast("long").alias("_row_id"))
         return df.select(*cols)
 
-    def _write_files(self, df: DataFrame, sort_by: list[str] | None = None,
+    def _write_files(self, df: DataFrame | _pa.Table, sort_by: list[str] | None = None,
                      size_hint_bytes: int | None = None,
-                     max_rows: int | None = None) -> list[dict]:
+                     max_rows: int | None = None,
+                     spark: SparkSession | None = None) -> list[dict]:
         """Write df as parquet under data/<uuid>/ and return file metas.
         Every data file a write or a copy-on-write rewrite adds is
         written here.
+
+        ``df`` may also be an Arrow table already conformed to the
+        table schema (its columns, in order, typed as ``toArrow``
+        returns them), as MERGE's driver path builds one. It is written
+        in-process, and ``spark`` supplies the parquet conf; its schema
+        and codec must pass ``_inprocess_format``.
 
         ``sort_by`` (default: the table's ``cluster_by``) orders the
         rows: range partitioning + a local sort make the per-file
@@ -1250,17 +1275,27 @@ class LakeTable:
         head_schema_v = head.get("schema_v", 0)
         schema = T.StructType.fromJson(json.loads(head["schema"]))
         cb = self.cluster_by if sort_by is None else list(sort_by)
-        unwritten = [c for c in cb if c not in schema.fieldNames()]
-        df = self._conform(
-            df, T.StructType([*schema.fields, *(df.schema[c] for c in unwritten)])
-        )
         n_files = (
             None if size_hint_bytes is None
             else max(1, -(-int(size_hint_bytes) // _TARGET_FILE_BYTES))
         )
         commit_dir = os.path.join(self.root, _DATA_DIR, uuid.uuid4().hex[:16])
-        spark = df.sparkSession
-        small = _small_output(df, cb, size_hint_bytes, max_rows)
+        if isinstance(df, _pa.Table):
+            unwritten = []
+            fmt = _inprocess_format(spark, schema.fields, cb)
+            if fmt is None or df.column_names != schema.fieldNames():
+                raise ValueError(
+                    "an Arrow table is written only in-process and in the "
+                    "table's column order"
+                )
+            small = (df, *fmt)
+        else:
+            unwritten = [c for c in cb if c not in schema.fieldNames()]
+            df = self._conform(
+                df, T.StructType([*schema.fields, *(df.schema[c] for c in unwritten)])
+            )
+            spark = df.sparkSession
+            small = _small_output(df, cb, size_hint_bytes, max_rows)
         metrics.bump("write.spark" if small is None else "write.inprocess")
         if small is not None:
             tbl, codec, stat_cols = small
@@ -1302,15 +1337,12 @@ class LakeTable:
             shutil.rmtree(commit_dir, ignore_errors=True)
         return metas
 
-    def _manifest_bytes_of(self, rel_paths) -> int:
-        """Summed manifest bytes of the given data files (MERGE's
-        probe-skip gate)."""
+    def _manifest_volume(self, rel_paths) -> tuple[int, int]:
+        """Summed manifest bytes and rows of the given data files (the
+        size of a rewrite, MERGE's probe and rewrite gates)."""
         wanted = set(rel_paths)
-        return sum(
-            int(f.get("bytes", 0))
-            for f in self.manifest()["files"]
-            if f["path"] in wanted
-        )
+        files = [f for f in self.manifest()["files"] if f["path"] in wanted]
+        return sum(int(f.get("bytes", 0)) for f in files), sum(int(f["rows"]) for f in files)
 
     def bloom_key_columns(self) -> list[str]:
         """Key columns eligible for per-file blooms: exact-match-
@@ -2094,6 +2126,42 @@ class LakeTable:
             df = df.withColumn("_file", self._raw_file_col(df))
         return df.drop("__meta_file_path", "__meta_row_index")
 
+    def _read_arrow(self, rel_paths: list[str], schema: _pa.Schema) -> list[_pa.Table]:
+        """The rows of the data files ``rel_paths`` read in-process with
+        pyarrow, one table per file, in file order, typed as ``schema``
+        (Spark's Arrow types for the table columns it names). As in
+        Spark's scan, a column the file lacks reads NULL, an older
+        narrower type is cast up and an INT96 timestamp reads as UTC.
+        Pending deletes, renames, initial defaults and row lineage are
+        NOT applied: the caller keeps such files on the Spark read."""
+        out = []
+        for rel in rel_paths:
+            pf = _pq.ParquetFile(
+                os.path.join(self.root, rel), coerce_int96_timestamp_unit="us"
+            )
+            have = set(pf.schema_arrow.names)
+            got = pf.read(columns=[f.name for f in schema if f.name in have])
+            n = pf.metadata.num_rows
+            out.append(_pa.table(
+                [
+                    got.column(f.name).cast(f.type, safe=False)
+                    if f.name in have else _pa.nulls(n, f.type)
+                    for f in schema
+                ],
+                schema=schema,
+            ))
+        return out
+
+    def _pending_deletes(self, rel_paths: Iterable[str]) -> bool:
+        """True when a pending delete file may remove rows of the data
+        files ``rel_paths``: a position delete that refers to one of
+        them, or any equality delete."""
+        wanted = set(rel_paths)
+        return any(
+            d.get("kind") == "equality" or not d.get("refs") or wanted & set(d["refs"])
+            for d in self.manifest().get("delete_files", [])
+        )
+
     def row_count(self, version: int | None = None) -> int:
         """Row count from manifest stats, no scan (Iceberg parity): the
         delete-aware ``_live_rows``, an upper bound while EQUALITY
@@ -2606,8 +2674,7 @@ class LakeTable:
         adds rows (a MERGE's inserts) declares. MERGE, copy-on-write
         UPDATE/DELETE, compaction, z-order and the delete-file fold
         all end here."""
-        wanted = set(rel_paths)
-        files = [f for f in self.manifest()["files"] if f["path"] in wanted]
+        n_bytes, n_rows = self._manifest_volume(rel_paths)
         old = self.read_files(
             spark,
             [os.path.join(self.root, p) for p in rel_paths],
@@ -2616,11 +2683,8 @@ class LakeTable:
         added = self._write_files(
             transform(old),
             sort_by=sort_by,
-            size_hint_bytes=sum(int(f.get("bytes", 0)) for f in files) + extra_bytes,
-            max_rows=(
-                None if extra_rows is None
-                else sum(int(f["rows"]) for f in files) + extra_rows
-            ),
+            size_hint_bytes=n_bytes + extra_bytes,
+            max_rows=None if extra_rows is None else n_rows + extra_rows,
         )
         return self.commit(added, removed_paths=rel_paths, **commit_kw)
 

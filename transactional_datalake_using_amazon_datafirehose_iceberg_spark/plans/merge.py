@@ -16,13 +16,37 @@ destination (cdk_stacks/firehose_to_iceberg.py:109-116: route by
 
 Physical strategy (the 100 TB story):
 
-1. A semi-join of target×source-keys — with the source side broadcast,
+1. Manifest min/max stats prune the candidate files by the source's
+   key range.
+2. A semi-join of target×source-keys — with the source side broadcast,
    since a CDC micro-batch is small — identifies the *files* containing
-   matched keys via the ``_metadata.file_path`` virtual column. Manifest
-   stats have already pruned candidate files by key range.
-2. Only those files are rewritten: their rows are full-outer-joined with
+   matched keys via the ``_metadata.file_path`` virtual column.
+3. Only those files are rewritten: their rows are full-outer-joined with
    the source (shuffle bounded by touched-file volume, not table volume).
-3. Untouched files carry over into the new snapshot by reference.
+4. Untouched files carry over into the new snapshot by reference.
+
+A small MERGE runs on the driver instead, the same steps without the
+Spark query machinery that costs a micro-batch more than its data. The
+source, cast to the table's types in Spark, is collected once to Arrow
+under ``_small_output``'s bounded collect; its key range, NULL-key flag,
+row count and duplicate check come from that table. The candidates' key
+columns are read with pyarrow and matched null-safe (step 2, no job),
+the touched files are read and rewritten with pyarrow, and the result is
+written by the same ``_write_files`` and committed the same way. The
+MERGE stays in Spark when the source exceeds ``_INPROCESS_MAX_ROWS``
+rows, a type or the codec is off the in-process whitelist, NOT MATCHED
+BY SOURCE or ``update_cols`` is set, the table tracks row lineage or has
+renamed or defaulted columns, or a key is a float. The probe stays in
+Spark (step 2 or its probe-skip) when a candidate file has a pending
+delete or the candidates exceed ``_TARGET_FILE_BYTES`` or
+``_INPROCESS_MAX_ROWS`` rows; the rewrite alone falls back to Spark
+when a pending delete covers a touched file, the touched files exceed
+``_TARGET_FILE_BYTES`` or their rows plus the inserts exceed
+``_INPROCESS_MAX_ROWS``. A ``match_condition`` keeps its Spark SQL
+semantics on the driver path: Spark evaluates it over the matched
+(t, s) pairs as a local relation, which runs no job. A Spark MERGE does
+not cache its source; ``apply_batch`` persists a micro-batch whose plan
+it does not estimate within the gate.
 
 This is exactly Iceberg's copy-on-write MERGE; the alternative
 merge-on-read (delete files) is traded away for read speed, matching the
@@ -31,10 +55,14 @@ reference's compaction-threshold choice (README.md:307).
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from . import metrics
+from . import lake_table, metrics
 from .lake_table import LakeTable, Predicate
 
 # rough parquet bytes per (row, column) for write-size hints; only the
@@ -227,6 +255,16 @@ def _merge_into_cow(
     needed = keys + ([op_col] if op_col else [])
     src = source.select(*dict.fromkeys(data_cols + [c for c in needed if c not in data_cols]))
 
+    nmbs = not_matched_by_source_delete or bool(not_matched_by_source_update)
+    gates_delete = condition_gates_delete and bool(match_condition)
+
+    # ---- 0. a small source is collected once and merged on the driver --
+    arrow = (
+        None
+        if update_cols is not None or nmbs
+        else _collect_source(table, src, schema, keys, op_col, delete_value)
+    )
+
     # ---- 1. one source pass: dup check + key range for manifest pruning --
     # (previously two separate jobs per merge; a streaming micro-batch
     # pays this on every trigger, so the fused aggregate halves the
@@ -244,7 +282,21 @@ def _merge_into_cow(
         else None
     )
     src_obs = None
-    if assume_unique:
+    if arrow is not None:
+        # a collected source answers all of it from its Arrow table
+        src_rows = arrow.num_rows
+        if not assume_unique and len(np.unique(_key_codes(arrow, keys))) < src_rows:
+            _raise_not_unique(keys)
+        stats = [{"__lo": None}]
+        if range_key:
+            col = arrow.column(range_key)
+            lo_hi = pc.min_max(col)
+            stats = [{
+                "__lo": lo_hi["min"].as_py(),
+                "__hi": lo_hi["max"].as_py(),
+                "__nrk": col.null_count > 0,
+            }]
+    elif assume_unique:
         # dedup already guaranteed (D4): plain min/max agg, no groupBy
         # shuffle. Composite/unordered keys have no fused stats aggregate
         # to ride, and the old dedicated isEmpty() probe was one extra
@@ -289,10 +341,7 @@ def _merge_into_cow(
         )
         src_rows = stats[0]["__n"] or 0
         if stats[0]["__mx"] is not None and stats[0]["__mx"] > 1:
-            raise MergeSourceNotUnique(
-                f"MERGE source has duplicate keys on {keys}; run latest-per-key "
-                "dedup (cdc_apply.collapse_latest_per_key) first"
-            )
+            _raise_not_unique(keys)
     stat0 = stats[0].asDict() if hasattr(stats[0], "asDict") else stats[0]
     if (
         range_key
@@ -309,29 +358,13 @@ def _merge_into_cow(
     # table or burn a snapshot version. Exceptions: NOT MATCHED BY SOURCE
     # clauses give an empty source real semantics (sync-to-empty), and a
     # caller-provided extra_summary still needs a (metadata-only) commit.
-    if (
-        src_rows == 0
-        and not not_matched_by_source_delete
-        and not not_matched_by_source_update
-    ):
+    if src_rows == 0 and not nmbs:
         return _empty_source_exit(table, extra_summary)
-
-    # NULL op value (malformed CDC metadata) must read as "not a
-    # delete", never as three-valued NULL: an un-coalesced NULL gate
-    # silently dropped the row from the fast-path insert filter AND
-    # deleted the matched target row in the rewrite's keep predicate,
-    # where SQL MERGE's WHEN MATCHED AND op='delete' clause simply does
-    # not fire on a NULL op (review round 10)
-    is_delete = (
-        F.coalesce(F.col(op_col) == F.lit(delete_value), F.lit(False))
-        if op_col
-        else F.lit(False)
-    )
 
     # ---- 2. find touched files (manifest-stats prune + semi join) --------
     # zero candidate files after pruning (empty table, or the source key
     # range misses every file) -> skip the probe job entirely
-    if not_matched_by_source_delete or not_matched_by_source_update:
+    if nmbs:
         # a to-be-deleted/updated (not-in-source) row can live in ANY
         # file, even one outside the source key range: every file is
         # touched and the probe job is pointless
@@ -343,13 +376,21 @@ def _merge_into_cow(
         touched_rel: list[str] = []
         metrics.bump("merge.no_candidates")
     elif (
+        arrow is not None
+        and not table._pending_deletes(cand_rel := sorted(table._relpath(p) for p in cand_paths))
+        and _fits_driver(*table._manifest_volume(cand_rel))
+    ):
+        # the collected source probes the candidates' key columns on
+        # the driver: the exact touched set, with no job
+        touched_rel = _probe_on_driver(table, arrow, keys, cand_rel)
+    elif (
         key_preds  # real key-range pruning happened (rangeable key)
         and src_rows  # known NON-EMPTY source (an empty batch must not rewrite)
         # compared with <=, never truthiness-tested, so a ZERO-byte
         # candidate set stays on the skip path
-        and table._manifest_bytes_of(
+        and table._manifest_volume(
             cand_rel := sorted(table._relpath(p) for p in cand_paths)
-        ) <= _PROBE_SKIP_BYTES
+        )[0] <= _PROBE_SKIP_BYTES
     ):
         # the probe job exists to shrink the rewrite to files that truly
         # hold matching keys — but it SCANS every candidate to find out.
@@ -405,13 +446,21 @@ def _merge_into_cow(
         if src_rows is not None
         else None
     )
+    summary = {"matched_files": len(touched_rel), **(extra_summary or {})}
 
     # ---- 3. fast path: nothing matched -> append the non-delete rows -----
     if not touched_rel:
-        inserts = src.filter(~is_delete).select(*data_cols)
-        added = table._write_files(
-            inserts, size_hint_bytes=src_bytes, max_rows=src_rows
-        )
+        if arrow is not None:
+            metrics.bump("merge.inprocess")
+            inserts = arrow.filter(pc.invert(arrow.column("__del"))).select(data_cols)
+            added = table._write_files(
+                inserts, size_hint_bytes=src_bytes, max_rows=src_rows, spark=spark
+            )
+        else:
+            inserts = src.filter(~_is_delete(op_col, delete_value)).select(*data_cols)
+            added = table._write_files(
+                inserts, size_hint_bytes=src_bytes, max_rows=src_rows
+            )
         if src_obs is not None and src_rows is None:
             # probe skipped (no candidate files, e.g. a brand-new table):
             # the write just consumed the observed source, so the count
@@ -423,17 +472,21 @@ def _merge_into_cow(
                 src_rows == 0
                 and not added
                 and extra_summary is None
-                and not not_matched_by_source_delete
-                and not not_matched_by_source_update
+                and not nmbs
             ):
                 return table.current_version()
-        return table.commit(
-            added,
-            operation="merge",
-            extra_summary={"matched_files": 0, **(extra_summary or {})},
-        )
+        return table.commit(added, operation="merge", extra_summary=summary)
 
-    # ---- 4. rewrite touched files via full-outer join --------------------
+    # ---- 4a. small rewrite on the driver ----------------------------------
+    if arrow is not None and not table._pending_deletes(touched_rel):
+        version = _rewrite_on_driver(
+            table, spark, arrow, keys, data_cols, touched_rel,
+            match_condition, gates_delete, src_bytes, summary,
+        )
+        if version is not None:
+            return version
+
+    # ---- 4b. rewrite touched files via full-outer join --------------------
     # the touched files' live rows (delete-aware: pending merge-on-read
     # deletes are not resurrected) are aliased t, the source s
     new = src.withColumn("__src", F.lit(1)).alias("s")
@@ -441,19 +494,12 @@ def _merge_into_cow(
 
     src_present = F.col("s.__src").isNotNull()
     tgt_present = F.col("t.__tgt").isNotNull()
-    # coalesce: NULL op = not a delete (see is_delete above); an
-    # un-coalesced NULL here nulled the keep predicate and the filter
-    # DELETED the matched target row
-    src_is_delete = (
-        F.coalesce(F.col(f"s.{op_col}") == F.lit(delete_value), F.lit(False))
-        if op_col
-        else F.lit(False)
-    )
+    src_is_delete = _is_delete(op_col, delete_value, "s.")
     # WHEN MATCHED [AND cond] THEN UPDATE: a matched row failing the
     # condition keeps its target values; inserts (no target row) always
     # take the source row in full
     upd_gate = F.expr(match_condition) if match_condition else F.lit(True)
-    if condition_gates_delete and match_condition:
+    if gates_delete:
         # a stale delete (condition false vs the current row) is a no-op
         keep = ~(
             src_present
@@ -510,8 +556,161 @@ def _merge_into_cow(
         extra_bytes=src_bytes or 0,
         extra_rows=src_rows,
         operation="merge",
-        extra_summary={"matched_files": len(touched_rel), **(extra_summary or {})},
+        extra_summary=summary,
     )
+
+
+def _is_delete(op_col: str | None, delete_value: str, prefix: str = ""):
+    """The source row's delete flag. A NULL op value (malformed CDC
+    metadata) reads as "not a delete", never as three-valued NULL: an
+    un-coalesced NULL gate silently dropped the row from the fast-path
+    insert filter AND deleted the matched target row in the rewrite's
+    keep predicate, where SQL MERGE's WHEN MATCHED AND op='delete'
+    clause simply does not fire on a NULL op (review round 10)."""
+    if not op_col:
+        return F.lit(False)
+    return F.coalesce(F.col(f"{prefix}{op_col}") == F.lit(delete_value), F.lit(False))
+
+
+def _raise_not_unique(keys: list[str]) -> None:
+    raise MergeSourceNotUnique(
+        f"MERGE source has duplicate keys on {keys}; run latest-per-key "
+        "dedup (cdc_apply.collapse_latest_per_key) first"
+    )
+
+
+def _collect_source(
+    table: LakeTable, src: DataFrame, schema: T.StructType, keys: list[str],
+    op_col: str | None, delete_value: str,
+) -> pa.Table | None:
+    """The source cast to the table's types in Spark (Spark's cast rules
+    hold), plus its op column when that is no table column and the
+    ``__del`` flag, collected once to Arrow by ``_small_output``'s
+    bounded collect. None, and no job, when the MERGE stays in Spark: a
+    row-lineage table, renamed or defaulted columns (the pyarrow read
+    does not apply them), a key outside the table or of a float type
+    (pyarrow does not match -0.0/NaN as Spark's join does), and every
+    case ``_small_output`` refuses (a type or codec off its whitelist,
+    more than ``_INPROCESS_MAX_ROWS`` rows)."""
+    m = table.manifest()
+    types = {f.name: f.dataType for f in schema.fields}
+    if (
+        table.row_lineage
+        or m.get("renames")
+        or m.get("defaults")
+        or not all(
+            k in types and not isinstance(types[k], (T.FloatType, T.DoubleType))
+            for k in keys
+        )
+    ):
+        return None
+    frame = src.select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields],
+        *([F.col(op_col)] if op_col and op_col not in types else []),
+        _is_delete(op_col, delete_value).alias("__del"),
+    )
+    small = lake_table._small_output(frame, table.cluster_by, None, None)
+    return None if small is None else small[0]
+
+
+def _key_codes(tbl: pa.Table, keys: list[str]) -> np.ndarray:
+    """One int64 code per row of ``tbl``, equal exactly when the rows'
+    ``keys`` tuples are equal, NULL equal to NULL (SQL MERGE's null-safe
+    ``t.k <=> s.k``)."""
+    codes = None
+    for k in keys:
+        enc = pc.dictionary_encode(tbl.column(k).combine_chunks(), null_encoding="encode")
+        idx = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+        codes = idx if codes is None else np.unique(
+            codes * len(enc.dictionary) + idx, return_inverse=True
+        )[1]
+    return codes
+
+
+def _fits_driver(n_bytes: int, n_rows: int) -> bool:
+    """Whether files of ``n_bytes`` and ``n_rows`` may be probed or
+    rewritten on the driver: the in-process writer's gate."""
+    return n_bytes <= lake_table._TARGET_FILE_BYTES and n_rows <= lake_table._INPROCESS_MAX_ROWS
+
+
+def _probe_on_driver(
+    table: LakeTable, arrow: pa.Table, keys: list[str], cand_rel: list[str]
+) -> list[str]:
+    """The candidate files holding a key of the collected source: only
+    their key columns are read, with pyarrow, and matched null-safe.
+    Runs no job."""
+    key_schema = pa.schema([arrow.schema.field(k).with_nullable(True) for k in keys])
+    parts = table._read_arrow(cand_rel, key_schema)
+    codes = _key_codes(pa.concat_tables([arrow.select(keys).cast(key_schema), *parts]), keys)
+    hit = np.isin(codes[arrow.num_rows:], codes[: arrow.num_rows])
+    bounds = np.cumsum([0, *(p.num_rows for p in parts)])
+    return [rel for rel, lo, hi in zip(cand_rel, bounds, bounds[1:]) if hit[lo:hi].any()]
+
+
+def _rewrite_on_driver(
+    table: LakeTable, spark, arrow: pa.Table, keys: list[str],
+    data_cols: list[str], touched_rel: list[str], match_condition: str | None,
+    gates_delete: bool, src_bytes: int, summary: dict,
+) -> int | None:
+    """Step 4 with pyarrow: the touched files are read in-process, their
+    rows whose key the source holds are replaced or deleted as the
+    Spark rewrite's full outer join would, and the result is written by
+    ``_write_files`` in one commit that removes the touched files.
+    None, before anything is written, when the rewrite must run in
+    Spark: the touched files exceed ``_TARGET_FILE_BYTES``, their rows
+    plus the source's non-delete rows exceed ``_INPROCESS_MAX_ROWS``,
+    or a source key matches several target rows."""
+    touched_bytes, touched_rows = table._manifest_volume(touched_rel)
+    is_del = arrow.column("__del").to_numpy(zero_copy_only=False)
+    max_rows = touched_rows + int((~is_del).sum())
+    if not _fits_driver(touched_bytes, max_rows):
+        return None
+    out_schema = pa.schema([arrow.schema.field(c).with_nullable(True) for c in data_cols])
+    src = arrow.select(data_cols).cast(out_schema)
+    tgt = pa.concat_tables(table._read_arrow(touched_rel, out_schema))
+    codes = _key_codes(pa.concat_tables([src.select(keys), tgt.select(keys)]), keys)
+    # the source row each target row matches (null: none)
+    pos = pc.index_in(pa.array(codes[src.num_rows:]), value_set=pa.array(codes[: src.num_rows]))
+    matched = pos.is_valid().to_numpy(zero_copy_only=False)
+    m_src = pos.drop_null().to_numpy(zero_copy_only=False)
+    if len(np.unique(m_src)) < len(m_src):
+        return None
+    # WHEN MATCHED [AND cond]: a pair failing the condition keeps its
+    # target row, and a delete is gated only under gates_delete
+    applies = (
+        np.ones(len(m_src), dtype=bool) if not (match_condition and len(m_src))
+        else _condition_on_driver(
+            spark, match_condition, tgt.filter(pa.array(matched)), arrow.take(m_src)
+        )
+    )
+    keep_tgt = ~matched
+    keep_tgt[matched] = ~(applies | (is_del[m_src] & (not gates_delete)))
+    take_src = ~is_del
+    take_src[m_src] &= applies
+    added = table._write_files(
+        pa.concat_tables([tgt.filter(pa.array(keep_tgt)), src.filter(pa.array(take_src))]),
+        size_hint_bytes=touched_bytes + src_bytes, max_rows=max_rows, spark=spark,
+    )
+    metrics.bump("merge.inprocess")
+    return table.commit(
+        added, removed_paths=touched_rel, operation="merge", extra_summary=summary
+    )
+
+
+def _condition_on_driver(spark, condition: str, t: pa.Table, s: pa.Table) -> np.ndarray:
+    """``coalesce(condition, false)`` for each matched (``t``, ``s``)
+    row pair. Spark evaluates the SQL, so its semantics are Spark's;
+    the pairs form a local relation, and collecting a projection of one
+    runs no job. Every field is made nullable: Spark's Arrow conversion
+    refuses a struct child declared NOT NULL."""
+    def struct(tbl: pa.Table):
+        return tbl.cast(pa.schema([f.with_nullable(True) for f in tbl.schema])).to_struct_array()
+
+    pairs = pa.table({"t": struct(t), "s": struct(s.drop_columns(["__del"]))})
+    rows = spark.createDataFrame(pairs).select(
+        F.coalesce(F.expr(condition), F.lit(False))
+    ).collect()
+    return np.array([r[0] for r in rows], dtype=bool)
 
 
 def _empty_source_exit(table: LakeTable, extra_summary: dict | None) -> int:

@@ -2,7 +2,7 @@
 
 The MERGE planner and the data-file writer each pick between a
 metadata-scale fast path and a distributed job at runtime (see
-``merge._merge_into_cow`` step 2 and ``LakeTable._write_files``).
+``merge._merge_planned`` steps 2-4 and ``LakeTable._write_files``).
 Which branch actually fires at a given scale factor is an empirical
 question — the r8 verdict asked for exactly this measurement ("check
 whether the InjectRuntimeFilter path can replace the in-process probe
@@ -25,6 +25,9 @@ Keys currently emitted:
                                  touched-file set
 - ``merge.full_candidates``   — NOT MATCHED BY SOURCE mode: every file
                                  is a candidate by construction
+- ``merge.inprocess``         — MERGE committed from its source's one
+                                 Arrow collect (pyarrow probe and
+                                 rewrite, no Spark job after the collect)
 - ``bloom.inprocess_small``   — ``LakeTable._collect_stats`` built at
                                  least one key bloom (one per call)
 - ``write.inprocess``         — ``LakeTable._write_files`` output of at

@@ -69,6 +69,12 @@ def get_spark(
             "true",
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # on by default, it captures the Python call site of every
+        # F.*/DataFrame call for error messages: ~11 extra py4j round
+        # trips per call (a CDC micro-batch builds ~181 of them) and a
+        # failed `import IPython`. Errors lose only their DataFrame
+        # call-site section.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # 8 MB: dimension tables broadcast, filtered FACT tables never do.
         # (An earlier 64 MB setting made Q3 broadcast half of lineitem —

@@ -105,10 +105,12 @@ class CdcStreamPipeline:
         the same dead rows twice.
 
         The micro-batch is cached first: the dead-letter write and the
-        MERGE's two passes (touched-file semi-join + rewrite) would
-        otherwise re-read the source three times — 3x read amplification
-        per delivery buffer at scale (observed via the delivery log:
-        numInputRows was 3x the batch size before caching)."""
+        MERGE both read it (a MERGE on the driver collects it once;
+        ``apply_batch`` caches the collapsed batch for the Spark MERGE's
+        passes when its plan does not estimate it within the gate), and
+        without the cache each re-reads the delivery buffer (observed via
+        the delivery log: numInputRows was 3x the batch size before
+        caching)."""
         if is_replay(self.table.manifest()["summary"], self.app_id, batch_id):
             return
         batch_df = batch_df.cache()
