@@ -1,15 +1,14 @@
-"""Composite-key MERGE source-emptiness contract (round-17 optimization).
-
-The dedicated ``src.isEmpty()`` probe job was replaced by an Observation
-riding the touched-file probe (or the fast-path write). The semantics it
-guarded must hold unchanged:
+"""Composite-key MERGE source-emptiness contract, on the driver path and
+on the Spark path (forced by setting the in-process row gate
+``lake_table._INPROCESS_MAX_ROWS`` to 0). Each path reads the source's
+row count in its one source pass and exits on an empty source right
+after it:
 
 - an empty source burns no snapshot version (idle streaming trigger),
   against both an empty and a non-empty table;
 - an empty source with extra_summary still gets its metadata-only commit;
-- a rows-bearing source merges exactly as before (update + insert);
-- a delete-only unmatched source still commits (the pre-existing
-  non-empty-source behavior).
+- a rows-bearing source merges (update + insert);
+- a delete-only unmatched source still commits.
 """
 
 from __future__ import annotations
@@ -19,6 +18,7 @@ from pyspark.sql import types as T
 
 from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import (
     LakeTable,
+    lake_table,
     merge_into,
 )
 
@@ -31,8 +31,10 @@ SCHEMA = T.StructType(
 )
 
 
-@pytest.fixture()
-def table(spark, tmp_path):
+@pytest.fixture(params=["driver", "spark"])
+def table(request, monkeypatch, tmp_path):
+    if request.param == "spark":
+        monkeypatch.setattr(lake_table, "_INPROCESS_MAX_ROWS", 0)
     return LakeTable.create(str(tmp_path / "t"), SCHEMA, keys=["k1", "k2"])
 
 
@@ -78,8 +80,9 @@ def test_unmatched_delete_only_source_still_commits(spark, table):
     merge_into(table, _df(spark, [(1, "a", 1.0)]), assume_unique=True)
     v1 = table.current_version()
     src = spark.createDataFrame(
-        [(9, "z", 0.0, "delete")], SCHEMA.add("operation", T.StringType())
+        [(9, "z", 0.0, "delete")],
+        T.StructType([*SCHEMA.fields, T.StructField("operation", T.StringType())]),
     )
     v2 = merge_into(table, src, assume_unique=True, op_col="operation")
-    assert v2 == v1 + 1  # non-empty source: commit happens (old behavior)
+    assert v2 == v1 + 1  # non-empty source: commit happens
     assert table.read(spark).count() == 1

@@ -419,6 +419,52 @@ def test_lake_table_stream_source_incremental_exactly_once(spark, tmp_path):
     assert sorted(r["id"] for r in spark.read.parquet(out).collect()) == [1, 2, 3, 4]
 
 
+def test_lake_table_stream_source_reads_int96_outside_nanosecond_range(
+    spark, tmp_path, monkeypatch
+):
+    """A file from the Spark writer stores timestamps as INT96 (Spark's
+    default ``outputTimestampType``): the stream reads 9999-12-31, far
+    outside the nanosecond range, exactly as the batch read does."""
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import (
+        LakeTable,
+        lake_table,
+    )
+    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.sources.lake_stream import (
+        LakeStreamDataSource,
+    )
+
+    spark.dataSource.register(LakeStreamDataSource)
+    monkeypatch.setattr(lake_table, "_INPROCESS_MAX_ROWS", 0)
+    schema = T.StructType(
+        [
+            T.StructField("id", T.IntegerType()),
+            T.StructField("ts", T.TimestampType()),
+        ]
+    )
+    t = LakeTable.create(str(tmp_path / "t"), schema, keys=["id"])
+    t.append(spark.createDataFrame(
+        [(1, dt.datetime(9999, 12, 31)), (2, dt.datetime(2024, 1, 1))], schema
+    ))
+    q = (
+        spark.readStream.format("lake_table")
+        .option("path", t.root)
+        .load()
+        .writeStream.format("memory")
+        .queryName("lake_int96_stream")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    q.awaitTermination()
+    assert sorted(spark.table("lake_int96_stream").collect()) == sorted(
+        t.read(spark).collect()
+    )
+
+
 def test_lake_table_stream_source_rejects_or_skips_change_commits(spark, tmp_path):
     """A COW delete rewrites data files: the append stream must refuse
     (pointing at changelog()), and skipChangeCommits must skip the

@@ -25,28 +25,31 @@ Physical strategy (the 100 TB story):
    the source (shuffle bounded by touched-file volume, not table volume).
 4. Untouched files carry over into the new snapshot by reference.
 
-A small MERGE runs on the driver instead, the same steps without the
-Spark query machinery that costs a micro-batch more than its data. The
+Each path reads its source's facts (row count, duplicate-key check, key
+range and NULL-key flag) in one pass, and an empty source exits right
+after it. A small MERGE runs on the driver, the same steps without the
+Spark query machinery that costs a micro-batch more than its data: the
 source, cast to the table's types in Spark, is collected once to Arrow
-under ``_small_output``'s bounded collect; its key range, NULL-key flag,
-row count and duplicate check come from that table. The candidates' key
-columns are read with pyarrow and matched null-safe (step 2, no job),
-the touched files are read and rewritten with pyarrow, and the result is
-written by the same ``_write_files`` and committed the same way. The
-MERGE stays in Spark when the source exceeds ``_INPROCESS_MAX_ROWS``
-rows, a type or the codec is off the in-process whitelist, NOT MATCHED
-BY SOURCE or ``update_cols`` is set, the table tracks row lineage or has
-renamed or defaulted columns, or a key is a float. The probe stays in
-Spark (step 2 or its probe-skip) when a candidate file has a pending
-delete or the candidates exceed ``_TARGET_FILE_BYTES`` or
-``_INPROCESS_MAX_ROWS`` rows; the rewrite alone falls back to Spark
-when a pending delete covers a touched file, the touched files exceed
-``_TARGET_FILE_BYTES`` or their rows plus the inserts exceed
-``_INPROCESS_MAX_ROWS``. A ``match_condition`` keeps its Spark SQL
-semantics on the driver path: Spark evaluates it over the matched
-(t, s) pairs as a local relation, which runs no job. A Spark MERGE does
-not cache its source; ``apply_batch`` persists a micro-batch whose plan
-it does not estimate within the gate.
+under ``_small_output``'s bounded collect, and its facts come from that
+table. The candidates' key columns are read with pyarrow and matched
+null-safe (step 2, no job), the touched files are read and rewritten
+with pyarrow, and the result is written by the same ``_write_files``
+and committed the same way. A Spark MERGE reads its facts from one
+aggregate of the source (grouped by key unless ``assume_unique``) and
+one collect(). The MERGE stays in Spark when the source exceeds
+``_INPROCESS_MAX_ROWS`` rows, a type or the codec is off the in-process
+whitelist, NOT MATCHED BY SOURCE or ``update_cols`` is set, the table
+tracks row lineage or has renamed or defaulted columns, or a key is a
+float. The probe stays in Spark (step 2 or its probe-skip) when a
+candidate file has a pending delete or the candidates exceed
+``_TARGET_FILE_BYTES`` or ``_INPROCESS_MAX_ROWS`` rows; the rewrite
+alone falls back to Spark when a pending delete covers a touched file,
+the touched files exceed ``_TARGET_FILE_BYTES`` or their rows plus the
+inserts exceed ``_INPROCESS_MAX_ROWS``. A ``match_condition`` keeps its
+Spark SQL semantics on the driver path: Spark evaluates it over the
+matched (t, s) pairs as a local relation, which runs no job. A Spark
+MERGE does not cache its source; ``apply_batch`` persists a micro-batch
+whose plan it does not estimate within the gate.
 
 This is exactly Iceberg's copy-on-write MERGE; the alternative
 merge-on-read (delete files) is traded away for read speed, matching the
@@ -54,6 +57,8 @@ reference's compaction-threshold choice (README.md:307).
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 import pyarrow as pa
@@ -63,7 +68,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import lake_table, metrics
-from .lake_table import LakeTable, Predicate
+from .lake_table import CommitConflict, LakeTable, Predicate
 
 # rough parquet bytes per (row, column) for write-size hints; only the
 # order of magnitude matters (see LakeTable._write_files size_hint_bytes)
@@ -79,6 +84,30 @@ class MergeSourceNotUnique(Exception):
     """Iceberg parity: MERGE throws when two source rows match one target row."""
 
 
+def _replan_once(merge):
+    """Lost-race re-plan (the COW commit removes files, so commit-level
+    retry is forbidden — see LakeTable.commit): the merge is a pure
+    function of (source batch, current table state), so on a
+    CommitConflict the WHOLE merge re-plans once against the new head
+    — re-probe touched files, re-rewrite — which is exactly what a
+    streaming micro-batch or a writer racing a compaction needs. The
+    first attempt's orphaned data files are unreferenced and reaped by
+    snapshot expiry. Every argument is passed unchanged: column
+    evolution is idempotent (the evolve loop skips columns that already
+    exist), and dropping it would lose new source columns when the
+    conflict raced the add-column commits."""
+
+    @functools.wraps(merge)
+    def run(*args, **kwargs):
+        try:
+            return merge(*args, **kwargs)
+        except CommitConflict:
+            return merge(*args, **kwargs)
+
+    return run
+
+
+@_replan_once
 def merge_into(
     table: LakeTable,
     source: DataFrame,
@@ -106,6 +135,9 @@ def merge_into(
     an upstream ALTER COLUMN applies losslessly) so source DDL
     propagated through CDC applies without operator intervention
     (reference: DMS forwards source DDL on the task stream).
+
+    ``assume_unique``: skips the duplicate-key check on both paths, so
+    a duplicate source key is then the caller's error.
 
     ``match_condition``: SQL boolean over aliases ``t`` (target row) and
     ``s`` (source row) gating the WHEN MATCHED THEN UPDATE branch — a
@@ -148,7 +180,7 @@ def merge_into(
         if evolve_schema:
             # validate against the POST-evolution schema: a column the
             # same call is about to ADD from the source is a legal
-            # assignment target (review round 12)
+            # assignment target
             tbl_cols |= {
                 f.name for f in source.schema.fields if f.name != (op_col or "")
             }
@@ -159,48 +191,6 @@ def merge_into(
         bad = [c for c in not_matched_by_source_update if c in key_cols]
         if bad:
             raise ValueError(f"not_matched_by_source_update cannot assign key columns: {bad}")
-    # Lost-race re-plan (the COW commit removes files, so commit-level
-    # retry is forbidden — see LakeTable.commit): the merge is a pure
-    # function of (source batch, current table state), so on a
-    # CommitConflict the WHOLE merge re-plans once against the new head
-    # — re-probe touched files, re-rewrite — which is exactly what a
-    # streaming micro-batch or a writer racing a compaction needs. The
-    # first attempt's orphaned data files are unreferenced and reaped by
-    # snapshot expiry.
-    from .lake_table import CommitConflict
-
-    # evolve_schema is passed through unchanged on the re-plan: column
-    # evolution is idempotent (the evolve loop skips columns that
-    # already exist), and hardcoding False would silently drop new
-    # source columns when the conflict raced the add-column commits
-    for attempt in range(2):
-        try:
-            return _merge_into_cow(
-                table, source, on, op_col, delete_value, assume_unique,
-                extra_summary, evolve_schema, match_condition, update_cols,
-                condition_gates_delete, not_matched_by_source_delete,
-                not_matched_by_source_update,
-            )
-        except CommitConflict:
-            if attempt:
-                raise
-
-
-def _merge_into_cow(
-    table: LakeTable,
-    source: DataFrame,
-    on: list[str] | None,
-    op_col: str | None,
-    delete_value: str,
-    assume_unique: bool,
-    extra_summary: dict | None,
-    evolve_schema: bool,
-    match_condition: str | None,
-    update_cols: list[str] | None,
-    condition_gates_delete: bool,
-    not_matched_by_source_delete: bool = False,
-    not_matched_by_source_update: dict[str, str] | None = None,
-) -> int:
     spark = source.sparkSession
     keys = on or table.keys
     if not keys:
@@ -265,93 +255,44 @@ def _merge_into_cow(
         else _collect_source(table, src, schema, keys, op_col, delete_value)
     )
 
-    # ---- 1. one source pass: dup check + key range for manifest pruning --
-    # (previously two separate jobs per merge; a streaming micro-batch
-    # pays this on every trigger, so the fused aggregate halves the
-    # source-side job count)
-    key_preds: list[Predicate] = []
+    # ---- 1. one source pass: row count, dup check, key range for pruning --
+    # min/max stats ignore NULLs, so a source carrying a NULL range key
+    # must disable stats pruning (a null-key target file would otherwise
+    # be skipped and the null-safe rewrite never sees its row — duplicate
+    # insert)
     range_key = _rangeable_key(src, keys)
-    src_rows: int | None = None  # rides the fused agg; sizes the write
-    # NULL-key flag rides the same fused aggregate: min/max stats ignore
-    # NULLs, so a source batch carrying a NULL range key must disable
-    # stats pruning (a null-key target file would otherwise be skipped
-    # and the null-safe rewrite never sees its row — duplicate insert)
-    null_rk = (
-        F.max(F.when(F.col(range_key).isNull(), 1).otherwise(0)).alias("__nrk")
-        if range_key
-        else None
-    )
-    src_obs = None
+    lo = hi = null_rk = None
     if arrow is not None:
-        # a collected source answers all of it from its Arrow table
         src_rows = arrow.num_rows
         if not assume_unique and len(np.unique(_key_codes(arrow, keys))) < src_rows:
             _raise_not_unique(keys)
-        stats = [{"__lo": None}]
         if range_key:
             col = arrow.column(range_key)
             lo_hi = pc.min_max(col)
-            stats = [{
-                "__lo": lo_hi["min"].as_py(),
-                "__hi": lo_hi["max"].as_py(),
-                "__nrk": col.null_count > 0,
-            }]
-    elif assume_unique:
-        # dedup already guaranteed (D4): plain min/max agg, no groupBy
-        # shuffle. Composite/unordered keys have no fused stats aggregate
-        # to ride, and the old dedicated isEmpty() probe was one extra
-        # driver-sequential job per merge (3x per scd2 build, review
-        # round 16 verdict). The row count now rides an Observation on
-        # whichever job consumes the source first — the touched-file
-        # probe, or the no-candidates fast-path write — and the
-        # empty-batch exit below moves to those sites intact: an empty
-        # broadcast side AQE-eliminates the probe's table scan, so an
-        # idle streaming trigger still never pays a full-table probe
-        # scan or burns a snapshot (guide §2.4: fewer jobs).
-        if not range_key:
-            from pyspark.sql import Observation
-
-            stats = [{"__lo": None}]
-            src_obs = Observation()
-            src = src.observe(src_obs, F.count(F.lit(1)).alias("__n"))
-        else:
-            stats = src.agg(
-                F.min(range_key).alias("__lo"),
-                F.max(range_key).alias("__hi"),
-                F.count(F.lit(1)).alias("__n"),
-                null_rk,
-            ).collect()
-            src_rows = stats[0]["__n"]
+            lo, hi, null_rk = lo_hi["min"].as_py(), lo_hi["max"].as_py(), col.null_count > 0
     else:
-        # aliased count, never .count(): a key column literally named
-        # "count" made the downstream max/sum references ambiguous
-        # (review round 12)
-        aggs = [F.max("__cnt").alias("__mx"), F.sum("__cnt").alias("__n")]
+        # assume_unique needs no groupBy shuffle; aliased count, never
+        # .count(): a key column literally named "count" made the max/sum
+        # references ambiguous
+        rows = src if assume_unique else src.groupBy(*keys).agg(F.count(F.lit(1)).alias("__cnt"))
+        cnt = F.lit(1) if assume_unique else F.col("__cnt")
+        aggs = [F.max(cnt).alias("__mx"), F.sum(cnt).alias("__n")]
         if range_key:
             aggs += [
                 F.min(range_key).alias("__lo"),
                 F.max(range_key).alias("__hi"),
-                null_rk,
+                F.max(F.col(range_key).isNull()).alias("__nrk"),
             ]
-        stats = (
-            src.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__cnt"))
-            .agg(*aggs)
-            .collect()
-        )
-        src_rows = stats[0]["__n"] or 0
-        if stats[0]["__mx"] is not None and stats[0]["__mx"] > 1:
+        stat = rows.agg(*aggs).collect()[0].asDict()
+        src_rows = stat["__n"] or 0
+        if (stat["__mx"] or 0) > 1:
             _raise_not_unique(keys)
-    stat0 = stats[0].asDict() if hasattr(stats[0], "asDict") else stats[0]
-    if (
-        range_key
-        and stat0["__lo"] is not None
-        and not stat0.get("__nrk")
-    ):
-        key_preds = [
-            Predicate(range_key, ">=", stat0["__lo"]),
-            Predicate(range_key, "<=", stat0["__hi"]),
-        ]
+        lo, hi, null_rk = stat.get("__lo"), stat.get("__hi"), stat.get("__nrk")
+    key_preds = (
+        [Predicate(range_key, ">=", lo), Predicate(range_key, "<=", hi)]
+        if lo is not None and not null_rk
+        else []
+    )
 
     # ---- empty-batch early exit ------------------------------------------
     # a zero-row source (idle streaming trigger) must not probe-scan the
@@ -359,7 +300,11 @@ def _merge_into_cow(
     # clauses give an empty source real semantics (sync-to-empty), and a
     # caller-provided extra_summary still needs a (metadata-only) commit.
     if src_rows == 0 and not nmbs:
-        return _empty_source_exit(table, extra_summary)
+        if extra_summary is None:
+            return table.current_version()
+        return table.commit(
+            [], operation="merge", extra_summary={"matched_files": 0, **extra_summary}
+        )
 
     # ---- 2. find touched files (manifest-stats prune + semi join) --------
     # zero candidate files after pruning (empty table, or the source key
@@ -385,7 +330,6 @@ def _merge_into_cow(
         touched_rel = _probe_on_driver(table, arrow, keys, cand_rel)
     elif (
         key_preds  # real key-range pruning happened (rangeable key)
-        and src_rows  # known NON-EMPTY source (an empty batch must not rewrite)
         # compared with <=, never truthiness-tested, so a ZERO-byte
         # candidate set stays on the skip path
         and table._manifest_volume(
@@ -400,9 +344,9 @@ def _merge_into_cow(
         # carried-over rows of an unmatched candidate diff as non-
         # changes in the changelog. Gated on key_preds so composite-key
         # merges (no range pruning -> candidates = the whole table)
-        # never degrade to a full-table rewrite, and on a known
-        # non-empty source. At scale the candidates of a real merge
-        # exceed the byte threshold and the probe earns its keep.
+        # never degrade to a full-table rewrite. At scale the candidates
+        # of a real merge exceed the byte threshold and the probe earns
+        # its keep.
         touched_rel = cand_rel
         metrics.bump("merge.probe_skip_small")
     else:
@@ -412,8 +356,8 @@ def _merge_into_cow(
         # NULL-SAFE probe, same as the rewrite join (SQL MERGE's
         # ON t.k <=> s.k): a plain on=keys semi-join drops a
         # null-key match, the file goes unprobed, and the source row
-        # double-inserts instead of updating (review round 10). <=> is
-        # still a hash-joinable equi-condition — same plan shape.
+        # double-inserts instead of updating. <=> is still a
+        # hash-joinable equi-condition — same plan shape.
         probe = F.broadcast(src_keys).select(
             *[F.col(k).alias(f"__p_{k}") for k in keys]
         )
@@ -428,24 +372,10 @@ def _merge_into_cow(
             .collect()
         ]
         touched_rel = sorted({table._relpath(p) for p in touched if p})
-        if src_obs is not None:
-            # the probe consumed the observed source: harvest the row
-            # count (NMBS modes never reach this branch, so an empty
-            # source means the empty-batch exit the upfront isEmpty()
-            # used to provide — and src_rows now also sizes the rewrite
-            # shuffle for composite-key merges, which the old path left
-            # unhinted)
-            src_rows = _observed_rows(src_obs, src)
-            if src_rows == 0:
-                return _empty_source_exit(table, extra_summary)
 
     # rough in-parquet volume of the source rows (adds to the rewrite's
     # file-count hint; order-of-magnitude is all the hint needs)
-    src_bytes = (
-        src_rows * _EST_ROW_BYTES_PER_COL * len(data_cols)
-        if src_rows is not None
-        else None
-    )
+    src_bytes = src_rows * _EST_ROW_BYTES_PER_COL * len(data_cols)
     summary = {"matched_files": len(touched_rel), **(extra_summary or {})}
 
     # ---- 3. fast path: nothing matched -> append the non-delete rows -----
@@ -461,20 +391,6 @@ def _merge_into_cow(
             added = table._write_files(
                 inserts, size_hint_bytes=src_bytes, max_rows=src_rows
             )
-        if src_obs is not None and src_rows is None:
-            # probe skipped (no candidate files, e.g. a brand-new table):
-            # the write just consumed the observed source, so the count
-            # is free now — preserve the empty-batch contract (an idle
-            # trigger must not burn a snapshot version). NMBS modes give
-            # an empty source real semantics and must still commit.
-            src_rows = _observed_rows(src_obs, src)
-            if (
-                src_rows == 0
-                and not added
-                and extra_summary is None
-                and not nmbs
-            ):
-                return table.current_version()
         return table.commit(added, operation="merge", extra_summary=summary)
 
     # ---- 4a. small rewrite on the driver ----------------------------------
@@ -553,7 +469,7 @@ def _merge_into_cow(
         .join(new, on=cond, how="full_outer")
         .filter(keep)
         .select(*out_cols),
-        extra_bytes=src_bytes or 0,
+        extra_bytes=src_bytes,
         extra_rows=src_rows,
         operation="merge",
         extra_summary=summary,
@@ -713,40 +629,10 @@ def _condition_on_driver(spark, condition: str, t: pa.Table, s: pa.Table) -> np.
     return np.array([r[0] for r in rows], dtype=bool)
 
 
-def _empty_source_exit(table: LakeTable, extra_summary: dict | None) -> int:
-    """The MERGE of an empty source: no snapshot, unless the caller's
-    ``extra_summary`` still needs its (metadata-only) commit."""
-    if extra_summary is None:
-        return table.current_version()
-    return table.commit(
-        [], operation="merge",
-        extra_summary={"matched_files": 0, **extra_summary},
-    )
-
-
-def _observed_rows(obs, src: DataFrame) -> int | None:
-    """Row count from a merge-source Observation after an action has
-    consumed the observed plan. A statically-empty source (an empty
-    LocalRelation) lets PropagateEmptyRelation eliminate the
-    CollectMetrics node before execution, so the metric row never
-    materializes and ``get`` raises — fall back to the direct probe,
-    which is near-free on exactly that corner (no scan to run). Any
-    other failure returns None = unknown, which every caller treats as
-    "do not take the empty-batch exit" (fail-safe: a merge is never
-    skipped on a source that might hold rows)."""
-    try:
-        return int(obs.get["__n"] or 0)
-    except Exception:
-        try:
-            return 0 if src.isEmpty() else None
-        except Exception:
-            return None
-
-
 def _rangeable_key(src: DataFrame, keys: list[str]) -> str | None:
     """The single orderable key whose min/max buys manifest file skipping
     on the target (None when keys are composite or unordered). The
-    min/max itself rides along in merge_into's fused source aggregate."""
+    min/max itself comes from merge_into's one source pass."""
     if len(keys) != 1:
         return None
     k = keys[0]

@@ -2,7 +2,7 @@
 
 The MERGE planner and the data-file writer each pick between a
 metadata-scale fast path and a distributed job at runtime (see
-``merge._merge_planned`` steps 2-4 and ``LakeTable._write_files``).
+``merge.merge_into`` steps 2-4 and ``LakeTable._write_files``).
 Which branch actually fires at a given scale factor is an empirical
 question — the r8 verdict asked for exactly this measurement ("check
 whether the InjectRuntimeFilter path can replace the in-process probe

@@ -325,12 +325,14 @@ class _LakeStreamReader(DataSourceStreamReader):
     def read(self, partition: _FilePartition):
         # executor-side: one parquet file via pyarrow, emitted as Arrow
         # record batches cast to the head schema (a pre-widening file's
-        # int32 promotes; a pre-add-column file's missing column nulls)
+        # int32 promotes; a pre-add-column file's missing column nulls;
+        # an INT96 timestamp reads as microseconds, which hold years
+        # outside the 1677-2262 range of nanoseconds)
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         target = partition.arrow_schema
-        pf = pq.ParquetFile(partition.abs_path)
+        pf = pq.ParquetFile(partition.abs_path, coerce_int96_timestamp_unit="us")
         phys = set(pf.schema_arrow.names)
         # per current logical column: the physical name in THIS file
         # (itself, or the first former name from the rename chain)
