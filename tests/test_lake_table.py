@@ -1206,7 +1206,7 @@ def test_default_survives_mor_delete_and_compaction(spark, dtable):
 
 def test_default_follows_rename_and_mixes_with_shadows(spark, dtable):
     # rename an OLD column first (shadow machinery), then add a default:
-    # the union branches must still coalesce former physical names
+    # the defaults projection must still coalesce former physical names
     dtable.rename_column("v", "name")
     dtable.add_column("score", T.LongType(), default=7)
     dtable.append(spark.sql("SELECT CAST(99 AS LONG) k, 'x' name, CAST(1 AS LONG) score"))
@@ -1236,6 +1236,88 @@ def test_default_dropped_with_column(spark, dtable):
 def test_default_rejects_non_scalar(dtable):
     with pytest.raises(ValueError, match="JSON-safe scalar"):
         dtable.add_column("j", T.StringType(), default={"a": 1})
+
+
+def _evolved_table(spark, root):
+    """A merge-on-read keyed table whose files read under every per-file
+    rule: a renamed column, string, timestamp and date initial defaults
+    (one stored explicitly NULL), a widened column, a position delete,
+    an equality delete and a later re-insert of the equality-deleted
+    key, which survives it."""
+    t = LakeTable.create(
+        root,
+        T.StructType([
+            T.StructField("k", T.LongType()),
+            T.StructField("v", T.StringType()),
+            T.StructField("n", T.IntegerType()),
+        ]),
+        keys=["k"],
+        properties={"write.delete.mode": "merge-on-read"},
+    )
+    t.append(spark.sql("SELECT id k, CONCAT('a', id) v, CAST(id AS INT) n FROM range(6)"))
+    t.rename_column("v", "label")
+    t.add_column("tag", T.StringType(), default="x")
+    t.add_column("seen", T.TimestampType(), default="2024-05-01 12:00:00")
+    t.add_column("day", T.DateType(), default="2024-05-02")
+    t.widen_column("n", T.LongType())
+    t.append(spark.sql(
+        "SELECT id + 10 k, CONCAT('b', id) label, id * 10000000000 n,"
+        " IF(id = 0, NULL, 'y') tag, TIMESTAMP'2025-01-01 00:00:00' seen,"
+        " DATE'2025-01-02' day FROM range(3)"
+    ))
+    t.delete_where(spark, "k = 3")
+    t.delete_eq([{"k": 11}])
+    t.append(spark.sql(
+        "SELECT 11L k, 'again' label, 7L n, 'z' tag,"
+        " TIMESTAMP'2026-01-01 00:00:00' seen, DATE'2026-01-02' day"
+    ))
+    return t
+
+
+def _sorted_rows(tbl):
+    return sorted((tuple(r.values()) for r in tbl.to_pylist()), key=repr)
+
+
+def test_read_arrow_matches_read_files_per_file(spark, tmp_path):
+    """The driver MERGE's pyarrow read gives, file by file, the rows of
+    the Spark read: renames, defaults, the widened type and both kinds
+    of pending delete resolved the same way."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    t = _evolved_table(spark, str(tmp_path / "t"))
+    schema = to_arrow_schema(t.schema)
+    files = [f["path"] for f in t.manifest()["files"]]
+    assert len(files) == 3 and len(t.manifest()["delete_files"]) == 2
+    got = {}
+    for rel in files:
+        (arrow,) = t._read_arrow([rel], schema)
+        spark_rows = t.read_files(spark, [os.path.join(t.root, rel)]).toArrow()
+        assert _sorted_rows(arrow) == _sorted_rows(spark_rows)
+        got.update((r["k"], r) for r in arrow.to_pylist())
+    assert sorted(got) == [0, 1, 2, 4, 5, 10, 11, 12]
+    assert got[0]["label"] == "a0" and got[0]["tag"] == "x"
+    assert str(got[0]["seen"]) == "2024-05-01 12:00:00+00:00"
+    assert str(got[0]["day"]) == "2024-05-02"
+    assert got[10]["tag"] is None and got[12]["n"] == 20_000_000_000
+    assert got[11]["label"] == "again"
+
+
+def test_versions_and_changelog_survive_dropping_a_defaulted_column(spark, tmp_path):
+    """After DROP COLUMN of a defaulted column, every earlier version
+    still reads it under its own schema, the default included, and the
+    changelog is unchanged but for the column."""
+    t = _evolved_table(spark, str(tmp_path / "t"))
+    head = t.current_version()
+
+    def versions():
+        return [_sorted_rows(t.read(spark, version=v).toArrow()) for v in range(head + 1)]
+
+    before = versions()
+    changes = _sorted_rows(t.changelog(spark, 0, head).drop("tag").toArrow())
+    t.drop_column("tag")
+    assert versions() == before
+    assert _sorted_rows(t.changelog(spark, 0).toArrow()) == changes
+    assert "tag" not in t.read(spark).columns
 
 
 # ---------------------------------------------------------------------------

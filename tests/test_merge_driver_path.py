@@ -86,6 +86,19 @@ def _cdc_run(spark, root, n_batches=3):
     return t
 
 
+# merge_into's step-2 counters: every MERGE past its empty-source exit
+# bumps exactly one
+_STEP2 = (
+    "merge.full_candidates", "merge.no_candidates", "merge.probe_driver",
+    "merge.probe_skip_small", "merge.probe_job",
+)
+
+
+def _step2_bumps():
+    snap = metrics.snapshot()
+    return sum(snap.get(k, 0) for k in _STEP2)
+
+
 def _rows(spark, t, version=None):
     return sorted(map(tuple, t.read(spark, version=version).collect()))
 
@@ -105,6 +118,7 @@ def test_driver_path_matches_spark_path_on_cdc_stream(spark, tmp_path, monkeypat
             metrics.reset()
             runs[path] = _cdc_run(spark, str(tmp_path / path))
             assert ("merge.inprocess" in metrics.snapshot()) == (path == "driver")
+            assert _step2_bumps() == 3
     d, s = runs["driver"], runs["spark"]
     assert d.current_version() == s.current_version() == 4
     for v in range(2, 5):
@@ -153,6 +167,10 @@ def _batch(spark, rows):
     ).withColumn("_order_ts", F.to_timestamp("_order_ts"))
 
 
+# each history step returns how the next batch is shaped for the table,
+# or None when the batch needs no change
+
+
 def _position_delete(spark, t):
     t.delete_where(spark, "k = 3")
 
@@ -161,27 +179,44 @@ def _equality_delete(spark, t):
     t.delete_eq([{"k": 3}])
 
 
+def _renamed(spark, t):
+    t.rename_column("v", "val")
+    return lambda b: b.withColumnRenamed("v", "val")
+
+
+def _defaulted(spark, t):
+    t.add_column("region", T.StringType(), default="emea")
+    return lambda b: b.withColumn("region", F.lit("apac"))
+
+
 def _nothing(spark, t):
     pass
 
 
 @pytest.mark.parametrize(
-    "properties, pending, on_driver",
+    "properties, history, on_driver",
     [
-        ({"write.delete.mode": "merge-on-read"}, _position_delete, False),
-        ({}, _equality_delete, False),
+        ({"write.delete.mode": "merge-on-read"}, _position_delete, True),
+        ({}, _equality_delete, True),
+        ({}, _renamed, True),
+        ({}, _defaulted, True),
         ({"row-lineage": "true"}, _nothing, False),
         ({}, _nothing, True),  # the stale guard alone stays on the driver
     ],
-    ids=["position-delete", "equality-delete", "row-lineage", "stale-guard"],
+    ids=[
+        "position-delete", "equality-delete", "renamed", "defaulted",
+        "row-lineage", "stale-guard",
+    ],
 )
 def test_gated_cases_give_the_spark_result(
-    spark, tmp_path, monkeypatch, properties, pending, on_driver
+    spark, tmp_path, monkeypatch, properties, history, on_driver
 ):
-    """A pending position or equality delete on a candidate file and a
-    row-lineage table keep the Spark MERGE; a stale-guarded table
-    evaluates its match condition in Spark over the matched pairs and
-    stays on the driver. Each gives the Spark path's rows."""
+    """A pending position or equality delete on a candidate file, a
+    renamed column and a defaulted column are resolved by the pyarrow
+    read and stay on the driver; a row-lineage table keeps the Spark
+    MERGE; a stale-guarded table evaluates its match condition in Spark
+    over the matched pairs and stays on the driver. Each gives the
+    Spark path's rows."""
     out = {}
     for path in PATHS:
         with monkeypatch.context() as mp:
@@ -190,17 +225,18 @@ def test_gated_cases_give_the_spark_result(
             apply_batch(t, _batch(spark, [
                 (k, f"v{k}", "insert", "2024-01-02 00:00:00", 200 + k) for k in range(1, 7)
             ]))
-            pending(spark, t)
+            shape = history(spark, t) or (lambda b: b)
             metrics.reset()
-            apply_batch(t, _batch(spark, [
+            apply_batch(t, shape(_batch(spark, [
                 (1, "stale", "update", "2024-01-01 00:00:00", 100),   # stale update
                 (2, None, "delete", "2024-01-01 00:00:00", 101),      # stale delete
                 (3, "back", "insert", "2024-01-03 00:00:00", 300),    # deleted key
                 (4, None, "delete", "2024-01-03 00:00:00", 301),      # fresh delete
                 (5, "new", None, "2024-01-03 00:00:00", 302),         # NULL op
                 (9, "ins", "insert", "2024-01-03 00:00:00", 303),     # new key
-            ]))
+            ])))
             assert ("merge.inprocess" in metrics.snapshot()) == (on_driver and path == "driver")
+            assert _step2_bumps() == 1
             out[path] = sorted(
                 map(tuple, t.read(spark, with_row_ids=t.row_lineage).collect())
             )
@@ -236,6 +272,7 @@ def test_exact_probe_rewrites_only_the_touched_file(spark, tmp_path):
     assert jobs == 1
     snap = metrics.snapshot()
     assert snap.get("merge.inprocess") == 1 and "merge.probe_job" not in snap
+    assert snap.get("merge.probe_driver") == _step2_bumps() == 1
     m = t.manifest()
     assert m["summary"]["matched_files"] == 1
     assert files[0] not in {f["path"] for f in m["files"]}
@@ -254,7 +291,8 @@ def test_candidates_over_the_row_gate_keep_the_spark_probe(spark, tmp_path, monk
     metrics.reset()
     merge_into(t, src, op_col="op")
     snap = metrics.snapshot()
-    assert snap.get("merge.probe_skip_small") == 1 and "merge.inprocess" not in snap
+    assert snap.get("merge.probe_skip_small") == _step2_bumps() == 1
+    assert "merge.inprocess" not in snap
     assert t.manifest()["summary"]["matched_files"] == 2
     rows = dict(map(tuple, t.read(spark).collect()))
     monkeypatch.undo()

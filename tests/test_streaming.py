@@ -1136,6 +1136,27 @@ def test_lake_stream_read_honors_renames_and_defaults(spark, tmp_path):
     assert got == {1: (10.0, "emea"), 2: (20.0, "apac")}
 
 
+def test_lake_stream_reads_a_timestamp_default(spark, tmp_path):
+    """A file that predates a timestamp column with an initial default
+    streams the default, read in the UTC session zone as the batch read
+    reads it (pyarrow's own cast of a zoneless string to a zoned
+    timestamp raises ArrowInvalid)."""
+    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.sources.lake_stream import (
+        _LakeStreamReader,
+    )
+
+    schema = T.StructType([T.StructField("id", T.IntegerType(), False)])
+    t = LakeTable.create(str(tmp_path / "t"), schema, keys=["id"])
+    t.append(spark.createDataFrame([(1,)], schema))
+    t.add_column("seen", T.TimestampType(), default="2024-05-01 12:00:00")
+
+    reader = _LakeStreamReader(t.root, t.schema, skip_change_commits=False)
+    parts = reader.partitions(reader.initialOffset(), {"version": t.current_version()})
+    got = [b.to_pydict() for p in parts for b in reader.read(p)]
+    assert got == [t.read(spark).toArrow().to_pydict()]
+    assert str(got[0]["seen"][0]) == "2024-05-01 12:00:00+00:00"
+
+
 def test_pipeline_fresh_checkpoint_fails_loudly(spark, stream_env, tmp_path):
     """A fresh checkpoint restarting batch ids at 0 against a table with
     a committed watermark means an anonymous SECOND query: treating its

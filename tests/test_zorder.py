@@ -59,7 +59,19 @@ def test_zorder_prunes_on_both_columns(spark, tmp_path, monkeypatch):
     assert _n_matching(t, "b", 10, 19) == n_before
 
     _target_n_files(monkeypatch, t, 16)
-    zorder_by(spark, t, ["a", "b"], bits=5)
+    # sample every row for the range bounds: a partial sample is seeded
+    # by the RDD id, so the file boundaries would shift with whatever
+    # the session ran before
+    key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, "10000")
+    try:
+        zorder_by(spark, t, ["a", "b"], bits=5)
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
     n_after = len(t.file_paths())
     assert n_after >= 8  # AQE did not merge the range partitions
     # z-order: a 10%-selectivity range on EITHER column prunes most files

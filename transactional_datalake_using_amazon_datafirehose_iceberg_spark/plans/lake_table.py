@@ -726,6 +726,70 @@ def _live_rows(files: list[dict], delete_files: list[dict]) -> int:
     )
 
 
+def _file_defaults(m: dict, fmeta: dict) -> dict[str, Any]:
+    """The initial defaults the data file ``fmeta`` of manifest ``m``
+    reads: those of the columns added after the file was written, which
+    it therefore predates (its ``schema_v`` is older than the column's
+    add-commit)."""
+    sv = fmeta.get("schema_v", 0)
+    return {c: d["value"] for c, d in m.get("defaults", {}).items() if sv < d["v"]}
+
+
+def _default_scalar(value: Any, typ: _pa.DataType) -> _pa.Scalar:
+    """An initial default as a scalar of ``typ``, cast as Spark's scan
+    casts it: a timestamp string without a zone reads in the session
+    zone, which ``session.get_spark`` pins to UTC."""
+    if _pa.types.is_timestamp(typ) and isinstance(value, str):
+        value = _dt.datetime.fromisoformat(value)
+        if value.tzinfo is None and typ.tz is not None:
+            value = value.replace(tzinfo=_dt.timezone.utc)
+    return _pa.array([value]).cast(typ)[0]
+
+
+def _file_batches(
+    path: str, schema: _pa.Schema, renames: dict, defaults: dict
+) -> Iterable[_pa.RecordBatch]:
+    """One data file's record batches under the Arrow ``schema``, by
+    Iceberg's per-file column projection: a column reads under its own
+    name, else the first name of ``renames[column]`` (its former names)
+    the file stores, else its initial default from ``defaults``
+    (``_file_defaults``), else NULL. A narrower stored type is cast up
+    and an INT96 timestamp reads as microseconds, which hold years
+    outside the 1677-2262 range of nanoseconds."""
+    pf = _pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
+    have = set(pf.schema_arrow.names)
+    stored = {}
+    for f in schema:
+        stored_as = [c for c in (f.name, *renames.get(f.name, ())) if c in have]
+        if stored_as:
+            stored[f.name] = stored_as[0]
+    fills = {
+        f.name: _default_scalar(defaults[f.name], f.type)
+        for f in schema if f.name not in stored and f.name in defaults
+    }
+    for batch in pf.iter_batches(columns=sorted(set(stored.values()))):
+        yield _pa.RecordBatch.from_arrays([
+            batch.column(stored[f.name]).cast(f.type, safe=False) if f.name in stored
+            else _pa.repeat(fills[f.name], batch.num_rows) if f.name in fills
+            else _pa.nulls(batch.num_rows, f.type)
+            for f in schema
+        ], schema=schema)
+
+
+def _key_codes(tbl: _pa.Table, keys: list[str]) -> np.ndarray:
+    """One int64 code per row of ``tbl``, equal exactly when the rows'
+    ``keys`` tuples are equal, NULL equal to NULL (SQL MERGE's null-safe
+    ``t.k <=> s.k``)."""
+    codes = None
+    for k in keys:
+        enc = _pc.dictionary_encode(tbl.column(k).combine_chunks(), null_encoding="encode")
+        idx = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+        codes = idx if codes is None else np.unique(
+            codes * len(enc.dictionary) + idx, return_inverse=True
+        )[1]
+    return codes
+
+
 class LakeTable:
     """A snapshot-versioned Parquet table rooted at a directory."""
 
@@ -1779,60 +1843,36 @@ class LakeTable:
         m: dict,
         extra_fields: list[T.StructField] | None = None,
     ) -> DataFrame:
-        """Schema-aware parquet scan honouring initial-default columns.
+        """Schema-aware parquet scan of data files under manifest ``m``,
+        typed by ``m``'s schema (not the head's: a version read after a
+        DROP COLUMN still reads the dropped column's default).
         ``extra_fields``: physical columns outside the table schema to
         surface when present in a file (NULL otherwise) — e.g. the
         materialized ``_row_id`` of row lineage.
 
-        Files stamped with a ``schema_v`` older than a defaulted
-        column's add-commit predate the column physically: they read
-        the INITIAL DEFAULT, while newer files read their stored values
-        (explicit NULLs stay NULL) — Iceberg v3 initial-default
-        semantics without a rewrite. Paths group by their applicable-
-        default set (in practice 2 groups: before/after the ALTER);
-        each group scans with full pushdown and the groups union by
-        name, so the plan stays a plain parquet union."""
-        defaults = m.get("defaults", {})
-        if defaults:
-            schema = T.StructType.fromJson(json.loads(m["schema"]))
-            field_by_name = {f.name: f for f in schema.fields}
-            sv_by_path = {
-                os.path.join(self.root, fm["path"]): fm.get("schema_v", 0)
-                for fm in m["files"]
-            }
-            groups: dict[frozenset, list[str]] = {}
-            for p in paths:
-                need = frozenset(
-                    c
-                    for c, d in defaults.items()
-                    if sv_by_path.get(p, 0) < d["v"] and c in field_by_name
-                )
-                groups.setdefault(need, []).append(p)
-            if any(groups):  # at least one file predates a default
-                parts: list[DataFrame] = []
-                for need, gpaths in sorted(
-                    groups.items(), key=lambda kv: sorted(kv[0])
-                ):
-                    df = self._scan_plain(spark, gpaths, m, extra_fields)
-                    # the virtual _metadata column dies at the Union:
-                    # materialize the two fields the delete/changelog
-                    # machinery needs while they are still resolvable
-                    df = df.withColumn(
-                        "__meta_file_path", F.col("_metadata.file_path")
-                    ).withColumn("__meta_row_index", F.col("_metadata.row_index"))
-                    for c in sorted(need):
-                        df = df.withColumn(
-                            c,
-                            F.lit(defaults[c]["value"]).cast(
-                                field_by_name[c].dataType
-                            ),
-                        )
-                    parts.append(df)
-                out = parts[0]
-                for extra in parts[1:]:
-                    out = out.unionByName(extra)
-                return out
-        return self._scan_plain(spark, paths, m, extra_fields)
+        A file that predates a defaulted column (``_file_defaults``)
+        reads the column's INITIAL DEFAULT, and every other file its
+        stored values (explicit NULLs stay NULL) — Iceberg v3
+        initial-default semantics without a rewrite. It is one scan
+        with full pushdown: the column reads ``when(file in the older
+        files, default).otherwise(column)``."""
+        df = self._scan_plain(spark, paths, m, extra_fields)
+        if not m.get("defaults"):
+            return df
+        fmetas = {f["path"]: f for f in m["files"]}
+        older: dict[str, list[str]] = {}
+        for p in paths:
+            rel = self._relpath(p)
+            for c in _file_defaults(m, fmetas.get(rel, {})):
+                older.setdefault(c, []).append(rel)
+        types = {f.name: f.dataType for f in T.StructType.fromJson(json.loads(m["schema"]))}
+        return df.withColumns({
+            c: F.when(
+                self._rel_file_col().isin(rels),
+                F.lit(m["defaults"][c]["value"]).cast(types[c]),
+            ).otherwise(F.col(c))
+            for c, rels in older.items()
+        })
 
     def _scan_plain(
         self,
@@ -1841,7 +1881,8 @@ class LakeTable:
         m: dict,
         extra_fields: list[T.StructField] | None = None,
     ) -> DataFrame:
-        """Schema-aware parquet scan of data files under manifest ``m``.
+        """The parquet scan under ``m``'s schema that ``_scan`` adds the
+        initial defaults to.
 
         With RENAME COLUMN history, files written before a rename carry
         the FORMER physical column name; parquet resolves columns by
@@ -1852,9 +1893,10 @@ class LakeTable:
         so the coalesce is unambiguous (rename_column enforces that no
         physical name is ever reused). The hidden ``_metadata`` column is
         NOT materialized — Spark propagates the virtual column through
-        projections, and materializing it flips the scan onto a read
-        path where the shadow columns come back null. Without renames
-        this is the plain pushdown scan, byte-for-byte the old plan."""
+        projections, so the defaults, the delete anti-joins and
+        ``_file`` read it above this select, and materializing it flips
+        the scan onto a read path where the shadow columns come back
+        null. Without renames this is the plain pushdown scan."""
         schema = T.StructType.fromJson(json.loads(m["schema"]))
         extras = list(extra_fields or [])
         renames = m.get("renames", {})
@@ -1882,31 +1924,12 @@ class LakeTable:
         cols.extend(F.col(e.name) for e in extras)
         return rdf.select(*cols)
 
-    # normalizes _metadata.file_path ("file:/x" or "file:///x") to "/x"
-    _NORM_FILE_EXPR = "regexp_replace(_metadata.file_path, '^file:/+', '/')"
-
-    # A defaulted-column scan is a UNION of per-file-group scans, and
-    # Spark's virtual _metadata column does not survive Union — those
-    # scans materialize the two needed fields per branch instead
-    # (__meta_file_path/__meta_row_index); consumers prefer them.
-    @staticmethod
-    def _raw_file_col(df: DataFrame):
-        if "__meta_file_path" in df.columns:
-            return F.col("__meta_file_path")
-        return F.col("_metadata.file_path")
-
-    @staticmethod
-    def _row_index_col(df: DataFrame):
-        if "__meta_row_index" in df.columns:
-            return F.col("__meta_row_index")
-        return F.col("_metadata.row_index")
-
-    def _rel_file_col(self, df: DataFrame):
+    def _rel_file_col(self):
         """The scanned row's data file as a ROOT-RELATIVE path — the same
         coordinate system the manifest and position-delete files use.
         Delete files storing relpaths keep the table relocation-safe: a
         moved/copied table root still matches its pending deletes."""
-        norm = F.regexp_replace(self._raw_file_col(df), "^file:/+", "/")
+        norm = F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
         return F.replace(norm, F.lit(self.root + os.sep), F.lit(""))
 
     @property
@@ -1930,8 +1953,8 @@ class LakeTable:
         ]
         frd = spark.createDataFrame(pairs, "__frd_path string, __frd long")
         df = (
-            df.withColumn("__rl_file", self._rel_file_col(df))
-            .withColumn("__rl_idx", self._row_index_col(df))
+            df.withColumn("__rl_file", self._rel_file_col())
+            .withColumn("__rl_idx", F.col("_metadata.row_index"))
             .join(
                 F.broadcast(frd),
                 F.col("__rl_file") == F.col("__frd_path"),
@@ -1965,8 +1988,8 @@ class LakeTable:
                 F.col("file").alias("__del_file"), F.col("pos").alias("__del_pos")
             )
             df = (
-                df.withColumn("__file", self._rel_file_col(df))
-                .withColumn("__pos", self._row_index_col(df))
+                df.withColumn("__file", self._rel_file_col())
+                .withColumn("__pos", F.col("_metadata.row_index"))
                 .join(
                     F.broadcast(del_df),
                     (F.col("__file") == F.col("__del_file"))
@@ -2006,7 +2029,7 @@ class LakeTable:
             "__seq_path string, __seq long",
         )
         df = (
-            df.withColumn("__file", self._rel_file_col(df))
+            df.withColumn("__file", self._rel_file_col())
             .join(
                 F.broadcast(seq_df),
                 F.col("__file") == F.col("__seq_path"),
@@ -2123,44 +2146,60 @@ class LakeTable:
             df = self._attach_row_ids(spark, df, m)
         df = self._apply_position_deletes(spark, df, m)
         if with_file_path:
-            df = df.withColumn("_file", self._raw_file_col(df))
-        return df.drop("__meta_file_path", "__meta_row_index")
+            df = df.withColumn("_file", F.col("_metadata.file_path"))
+        return df
 
     def _read_arrow(self, rel_paths: list[str], schema: _pa.Schema) -> list[_pa.Table]:
-        """The rows of the data files ``rel_paths`` read in-process with
-        pyarrow, one table per file, in file order, typed as ``schema``
-        (Spark's Arrow types for the table columns it names). As in
-        Spark's scan, a column the file lacks reads NULL, an older
-        narrower type is cast up and an INT96 timestamp reads as UTC.
-        Pending deletes, renames, initial defaults and row lineage are
-        NOT applied: the caller keeps such files on the Spark read."""
+        """The live rows of the head's data files ``rel_paths`` read
+        in-process with pyarrow, one table per file, in file order,
+        typed as ``schema`` (Spark's Arrow types for the table columns
+        it names). Each file is read by ``_file_batches`` under the
+        head's renames and its ``_file_defaults``, and loses the rows
+        ``read_files`` deletes: the positions of every position-delete
+        file whose ``refs`` name it, and the key tuples, matched
+        null-safe, of every equality-delete file with a higher ``seq``.
+        Row lineage is not attached."""
+        m = self.manifest()
+        fmetas = {f["path"]: f for f in m["files"]}
+        dels = m.get("delete_files", [])
+        # each delete file is read once per call
+        rows_of = _functools.cache(lambda d: _pq.read_table(os.path.join(self.root, d)))
         out = []
         for rel in rel_paths:
-            pf = _pq.ParquetFile(
-                os.path.join(self.root, rel), coerce_int96_timestamp_unit="us"
+            # a file a racing commit removed reads as the oldest; the
+            # caller's commit then conflicts and re-plans
+            fm = fmetas.get(rel, {})
+            eq = [
+                (d, d.get("eq_cols", self.keys)) for d in dels
+                if d.get("kind") == "equality" and d.get("eq_cols", self.keys)
+                and int(d.get("seq", 0)) > int(fm.get("seq", 0))
+            ]
+            # an equality column ``schema`` lacks reads as its delete file types it
+            extra = {
+                k: rows_of(d["path"]).schema.field(k)
+                for d, cols in eq for k in cols if k not in schema.names
+            }
+            read_schema = _pa.schema([*schema, *extra.values()])
+            tbl = _pa.Table.from_batches(
+                _file_batches(
+                    os.path.join(self.root, rel), read_schema,
+                    m.get("renames", {}), _file_defaults(m, fm),
+                ),
+                schema=read_schema,
             )
-            have = set(pf.schema_arrow.names)
-            got = pf.read(columns=[f.name for f in schema if f.name in have])
-            n = pf.metadata.num_rows
-            out.append(_pa.table(
-                [
-                    got.column(f.name).cast(f.type, safe=False)
-                    if f.name in have else _pa.nulls(n, f.type)
-                    for f in schema
-                ],
-                schema=schema,
-            ))
+            live = np.ones(tbl.num_rows, dtype=bool)
+            for d in dels:
+                if rel in d.get("refs", ()):
+                    pos = rows_of(d["path"])
+                    hit = pos.filter(_pc.equal(pos.column("file"), rel))
+                    live[hit.column("pos").to_numpy()] = False
+            for d, cols in eq:
+                keys = tbl.select(cols)
+                gone = rows_of(d["path"]).select(cols).cast(keys.schema)
+                codes = _key_codes(_pa.concat_tables([gone, keys]), cols)
+                live &= ~np.isin(codes[gone.num_rows:], codes[: gone.num_rows])
+            out.append(tbl.filter(_pa.array(live)).select(schema.names))
         return out
-
-    def _pending_deletes(self, rel_paths: Iterable[str]) -> bool:
-        """True when a pending delete file may remove rows of the data
-        files ``rel_paths``: a position delete that refers to one of
-        them, or any equality delete."""
-        wanted = set(rel_paths)
-        return any(
-            d.get("kind") == "equality" or not d.get("refs") or wanted & set(d["refs"])
-            for d in self.manifest().get("delete_files", [])
-        )
 
     def row_count(self, version: int | None = None) -> int:
         """Row count from manifest stats, no scan (Iceberg parity): the
@@ -2547,8 +2586,8 @@ class LakeTable:
         meta = self._write_delete_file(
             hits(live)
             .select(
-                self._rel_file_col(live).alias("file"),
-                self._row_index_col(live).alias("pos"),
+                self._rel_file_col().alias("file"),
+                F.col("_metadata.row_index").alias("pos"),
             )
             .toArrow()
         )
@@ -2720,9 +2759,10 @@ class LakeTable:
         # rename_column's invariant: physical names stay unambiguous
         # FOREVER (this format has no Iceberg field ids). Re-adding a
         # former physical name would make old files' bytes bleed into
-        # the new column through every rename-chain resolver (batch
-        # shadow-coalesce AND the stream reader's re-keyed candidates)
-        # instead of reading the declared default/NULL (review round 12).
+        # the new column through both rename-chain resolvers (the Spark
+        # scan's shadow-coalesce and the pyarrow ``_file_batches`` of the
+        # driver MERGE and the stream source) instead of reading the
+        # declared default/NULL (review round 12).
         for cur_name, formers in cur.get("renames", {}).items():
             if name in formers:
                 raise ValueError(

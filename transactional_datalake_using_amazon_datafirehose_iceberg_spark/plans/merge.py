@@ -34,18 +34,18 @@ under ``_small_output``'s bounded collect, and its facts come from that
 table. The candidates' key columns are read with pyarrow and matched
 null-safe (step 2, no job), the touched files are read and rewritten
 with pyarrow, and the result is written by the same ``_write_files``
-and committed the same way. A Spark MERGE reads its facts from one
-aggregate of the source (grouped by key unless ``assume_unique``) and
-one collect(). The MERGE stays in Spark when the source exceeds
+and committed the same way. The pyarrow read (``LakeTable._read_arrow``)
+resolves renames, initial defaults and pending deletes per file as
+Spark's read does. A Spark MERGE reads its facts from one aggregate of
+the source (grouped by key unless ``assume_unique``) and one collect().
+The MERGE stays in Spark when the source exceeds
 ``_INPROCESS_MAX_ROWS`` rows, a type or the codec is off the in-process
 whitelist, NOT MATCHED BY SOURCE or ``update_cols`` is set, the table
-tracks row lineage or has renamed or defaulted columns, or a key is a
-float. The probe stays in Spark (step 2 or its probe-skip) when a
-candidate file has a pending delete or the candidates exceed
-``_TARGET_FILE_BYTES`` or ``_INPROCESS_MAX_ROWS`` rows; the rewrite
-alone falls back to Spark when a pending delete covers a touched file,
-the touched files exceed ``_TARGET_FILE_BYTES`` or their rows plus the
-inserts exceed ``_INPROCESS_MAX_ROWS``. A ``match_condition`` keeps its
+tracks row lineage, or a key is a float. The probe stays in Spark (step
+2 or its probe-skip) when the candidates exceed ``_TARGET_FILE_BYTES``
+or ``_INPROCESS_MAX_ROWS`` rows; the rewrite alone falls back to Spark
+when the touched files exceed ``_TARGET_FILE_BYTES`` or their rows plus
+the inserts exceed ``_INPROCESS_MAX_ROWS``. A ``match_condition`` keeps its
 Spark SQL semantics on the driver path: Spark evaluates it over the
 matched (t, s) pairs as a local relation, which runs no job. A Spark
 MERGE does not cache its source; ``apply_batch`` persists a micro-batch
@@ -68,7 +68,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import lake_table, metrics
-from .lake_table import CommitConflict, LakeTable, Predicate
+from .lake_table import CommitConflict, LakeTable, Predicate, _key_codes
 
 # rough parquet bytes per (row, column) for write-size hints; only the
 # order of magnitude matters (see LakeTable._write_files size_hint_bytes)
@@ -320,14 +320,13 @@ def merge_into(
     elif not (cand_paths := table.file_paths(predicates=key_preds)):
         touched_rel: list[str] = []
         metrics.bump("merge.no_candidates")
-    elif (
-        arrow is not None
-        and not table._pending_deletes(cand_rel := sorted(table._relpath(p) for p in cand_paths))
-        and _fits_driver(*table._manifest_volume(cand_rel))
+    elif arrow is not None and _fits_driver(
+        *table._manifest_volume(cand_rel := sorted(table._relpath(p) for p in cand_paths))
     ):
         # the collected source probes the candidates' key columns on
         # the driver: the exact touched set, with no job
         touched_rel = _probe_on_driver(table, arrow, keys, cand_rel)
+        metrics.bump("merge.probe_driver")
     elif (
         key_preds  # real key-range pruning happened (rangeable key)
         # compared with <=, never truthiness-tested, so a ZERO-byte
@@ -394,7 +393,7 @@ def merge_into(
         return table.commit(added, operation="merge", extra_summary=summary)
 
     # ---- 4a. small rewrite on the driver ----------------------------------
-    if arrow is not None and not table._pending_deletes(touched_rel):
+    if arrow is not None:
         version = _rewrite_on_driver(
             table, spark, arrow, keys, data_cols, touched_rel,
             match_condition, gates_delete, src_bytes, summary,
@@ -503,21 +502,15 @@ def _collect_source(
     hold), plus its op column when that is no table column and the
     ``__del`` flag, collected once to Arrow by ``_small_output``'s
     bounded collect. None, and no job, when the MERGE stays in Spark: a
-    row-lineage table, renamed or defaulted columns (the pyarrow read
-    does not apply them), a key outside the table or of a float type
-    (pyarrow does not match -0.0/NaN as Spark's join does), and every
-    case ``_small_output`` refuses (a type or codec off its whitelist,
-    more than ``_INPROCESS_MAX_ROWS`` rows)."""
-    m = table.manifest()
+    row-lineage table (the pyarrow read attaches no ``_row_id``), a key
+    outside the table or of a float type (pyarrow does not match
+    -0.0/NaN as Spark's join does), and every case ``_small_output``
+    refuses (a type or codec off its whitelist, more than
+    ``_INPROCESS_MAX_ROWS`` rows)."""
     types = {f.name: f.dataType for f in schema.fields}
-    if (
-        table.row_lineage
-        or m.get("renames")
-        or m.get("defaults")
-        or not all(
-            k in types and not isinstance(types[k], (T.FloatType, T.DoubleType))
-            for k in keys
-        )
+    if table.row_lineage or not all(
+        k in types and not isinstance(types[k], (T.FloatType, T.DoubleType))
+        for k in keys
     ):
         return None
     frame = src.select(
@@ -527,20 +520,6 @@ def _collect_source(
     )
     small = lake_table._small_output(frame, table.cluster_by, None, None)
     return None if small is None else small[0]
-
-
-def _key_codes(tbl: pa.Table, keys: list[str]) -> np.ndarray:
-    """One int64 code per row of ``tbl``, equal exactly when the rows'
-    ``keys`` tuples are equal, NULL equal to NULL (SQL MERGE's null-safe
-    ``t.k <=> s.k``)."""
-    codes = None
-    for k in keys:
-        enc = pc.dictionary_encode(tbl.column(k).combine_chunks(), null_encoding="encode")
-        idx = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-        codes = idx if codes is None else np.unique(
-            codes * len(enc.dictionary) + idx, return_inverse=True
-        )[1]
-    return codes
 
 
 def _fits_driver(n_bytes: int, n_rows: int) -> bool:

@@ -23,8 +23,14 @@ Keys currently emitted:
                                  outright, probe job skipped
 - ``merge.probe_job``         — semi-join probe scan ran to shrink the
                                  touched-file set
+- ``merge.probe_driver``      — the collected source's keys probed the
+                                 candidates' key columns with pyarrow
+                                 (no job)
 - ``merge.full_candidates``   — NOT MATCHED BY SOURCE mode: every file
                                  is a candidate by construction
+
+Every MERGE past its empty-source exit bumps exactly one of these five
+step-2 counters.
 - ``merge.inprocess``         — MERGE committed from its source's one
                                  Arrow collect (pyarrow probe and
                                  rewrite, no Spark job after the collect)

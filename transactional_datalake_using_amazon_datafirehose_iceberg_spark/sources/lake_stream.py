@@ -8,9 +8,12 @@ through the normal checkpoint mechanism.
 Offsets are snapshot versions (the natural monotone watermark of the
 format). Partition planning walks the manifest chain driver-side
 (metadata scale); each appended data file becomes one InputPartition
-and executors read their file with pyarrow directly, yielding Arrow
-record batches — no Spark jobs inside the reader, no driver
-materialization of row data, no row-at-a-time Python.
+and executors read their file with ``lake_table._file_batches``, the
+pyarrow reader of the driver MERGE, yielding Arrow record batches — no
+Spark jobs inside the reader, no driver materialization of row data,
+no row-at-a-time Python. Each file resolves renames, initial defaults
+(``lake_table._file_defaults``), widened types and INT96 timestamps as
+the batch read does.
 
 Semantics match Iceberg's defaults for streaming reads:
 
@@ -193,6 +196,8 @@ class _LakeStreamReader(DataSourceStreamReader):
         return {"version": _read_pointer(self._root)}
 
     def partitions(self, start: dict, end: dict):
+        from ..plans.lake_table import _file_defaults
+
         chain: list[dict] = []
         bootstrap: dict | None = None
         v: int | None = end["version"]
@@ -227,7 +232,6 @@ class _LakeStreamReader(DataSourceStreamReader):
         # all-NULL columns (review round 10)
         head = chain[-1] if chain else bootstrap
         renames = (head or {}).get("renames", {})
-        defaults = (head or {}).get("defaults", {})
         # The reader's target schema is pinned at QUERY START, but the
         # manifest's rename chain is keyed by the CURRENT name — a
         # rename committed mid-stream left the query-start name without
@@ -246,15 +250,11 @@ class _LakeStreamReader(DataSourceStreamReader):
         renames = eff_renames
 
         def _mk_part(fmeta: dict) -> _FilePartition:
-            sv = fmeta.get("schema_v", 0)
-            fills = {
-                c: d["value"] for c, d in defaults.items() if sv < d["v"]
-            }
             return _FilePartition(
                 os.path.join(self._root, fmeta["path"]),
                 self._arrow_schema,
                 renames=renames,
-                fills=fills,
+                fills=_file_defaults(head or {}, fmeta),
             )
 
         def _emit_full(m: dict) -> None:
@@ -323,47 +323,14 @@ class _LakeStreamReader(DataSourceStreamReader):
         return parts
 
     def read(self, partition: _FilePartition):
-        # executor-side: one parquet file via pyarrow, emitted as Arrow
-        # record batches cast to the head schema (a pre-widening file's
-        # int32 promotes; a pre-add-column file's missing column nulls;
-        # an INT96 timestamp reads as microseconds, which hold years
-        # outside the 1677-2262 range of nanoseconds)
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+        # executor-side: one parquet file, read by the pyarrow reader
+        # the driver MERGE uses, emitted as Arrow record batches
+        from ..plans.lake_table import _file_batches
 
-        target = partition.arrow_schema
-        pf = pq.ParquetFile(partition.abs_path, coerce_int96_timestamp_unit="us")
-        phys = set(pf.schema_arrow.names)
-        # per current logical column: the physical name in THIS file
-        # (itself, or the first former name from the rename chain)
-        src_of = {}
-        for field in target:
-            for cand in (field.name, *partition.renames.get(field.name, ())):
-                if cand in phys:
-                    src_of[field.name] = cand
-                    break
-        cols = sorted(set(src_of.values()))
-        for batch in pf.iter_batches(columns=cols):
-            arrays = []
-            for field in target:
-                src = src_of.get(field.name)
-                if src is not None:
-                    arrays.append(
-                        batch.column(cols.index(src)).cast(field.type)
-                    )
-                elif field.name in partition.fills:
-                    # initial-default column this file predates: the
-                    # declared default, not NULL (batch _scan parity)
-                    arrays.append(
-                        pa.array(
-                            [partition.fills[field.name]] * batch.num_rows
-                        ).cast(field.type)
-                    )
-                else:
-                    arrays.append(pa.nulls(batch.num_rows, type=field.type))
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=[f.name for f in target]
-            )
+        yield from _file_batches(
+            partition.abs_path, partition.arrow_schema,
+            partition.renames, partition.fills,
+        )
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the query checkpoint; nothing to release
