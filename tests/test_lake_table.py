@@ -938,6 +938,23 @@ def test_shallow_clone_diverges_and_expiry_spares_source(spark, tmp_path):
         src.shallow_clone(str(tmp_path / "clone"))
 
 
+def test_shallow_clone_reads_the_sources_initial_defaults(spark, tmp_path):
+    """A shallow clone's borrowed files predate a defaulted column just
+    as they do on the source: the clone reads the default for them,
+    although the clone stores them as ``../src/...`` paths and the root
+    holds a space that the scan percent-encodes."""
+    base = tmp_path / "a root"
+    src = LakeTable.create(str(base / "src"), SCHEMA, keys=["id"])
+    src.append(_mk(spark, [(1, "a", 1.0), (2, "b", 2.0)]))
+    src.add_column("seen", T.StringType(), default="dflt")
+    src.append(spark.createDataFrame([(3, "c", 3.0, None)], src.schema))
+    clone = src.shallow_clone(str(base / "clone"))
+
+    rows = sorted(map(tuple, src.read(spark).collect()))
+    assert rows == [(1, "a", 1.0, "dflt"), (2, "b", 2.0, "dflt"), (3, "c", 3.0, None)]
+    assert sorted(map(tuple, clone.read(spark).collect())) == rows
+
+
 def test_concurrent_appends_all_rows_survive(spark, tmp_path):
     """Two writer threads appending REAL data concurrently: with the
     commit lock, every append lands exactly once — no lost snapshots,

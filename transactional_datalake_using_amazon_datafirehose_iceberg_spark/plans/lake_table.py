@@ -61,6 +61,7 @@ _COMMIT_LOCKS_GUARD = _threading.Lock()
 _COMMIT_TL = _threading.local()
 from dataclasses import dataclass
 from typing import Any, Iterable
+from urllib.parse import unquote as _unquote, urlsplit as _urlsplit
 
 import numpy as np
 import pyarrow as _pa
@@ -1844,34 +1845,42 @@ class LakeTable:
         extra_fields: list[T.StructField] | None = None,
     ) -> DataFrame:
         """Schema-aware parquet scan of data files under manifest ``m``,
-        typed by ``m``'s schema (not the head's: a version read after a
-        DROP COLUMN still reads the dropped column's default).
-        ``extra_fields``: physical columns outside the table schema to
-        surface when present in a file (NULL otherwise) — e.g. the
-        materialized ``_row_id`` of row lineage.
+        typed by ``m``'s schema (a version read after a DROP COLUMN still
+        reads the dropped column's default). ``extra_fields``: physical
+        columns outside the table schema to surface when present in a
+        file (NULL otherwise) — e.g. the materialized ``_row_id`` of row
+        lineage.
 
         A file that predates a defaulted column (``_file_defaults``)
-        reads the column's INITIAL DEFAULT, and every other file its
-        stored values (explicit NULLs stay NULL) — Iceberg v3
-        initial-default semantics without a rewrite. It is one scan
-        with full pushdown: the column reads ``when(file in the older
-        files, default).otherwise(column)``."""
+        reads its INITIAL DEFAULT, every other file its stored values
+        (explicit NULLs stay NULL): Iceberg v3 initial defaults without
+        a rewrite. The column reads ``when(_metadata.file_path in the
+        older files, default).otherwise(column)``, the files spelled as
+        ``inputFiles`` spells them (percent-encoded, with the ``..`` of
+        a shallow clone's borrowed files resolved). A filter on the
+        column stays above the scan: parquet and file pruning miss it."""
         df = self._scan_plain(spark, paths, m, extra_fields)
         if not m.get("defaults"):
             return df
         fmetas = {f["path"]: f for f in m["files"]}
         older: dict[str, list[str]] = {}
         for p in paths:
-            rel = self._relpath(p)
-            for c in _file_defaults(m, fmetas.get(rel, {})):
-                older.setdefault(c, []).append(rel)
+            for c in _file_defaults(m, fmetas.get(self._relpath(p), {})):
+                older.setdefault(c, []).append(os.path.normpath(p))
+        if not older:
+            return df
+        # a local file's two URI spellings: file:/x and file:///x
+        uris: dict[str, list[str]] = {}
+        for u in df.inputFiles():
+            x = _urlsplit(u).path
+            uris[os.path.normpath(_unquote(x))] = ["file:" + x, "file://" + x]
         types = {f.name: f.dataType for f in T.StructType.fromJson(json.loads(m["schema"]))}
         return df.withColumns({
             c: F.when(
-                self._rel_file_col().isin(rels),
+                F.col("_metadata.file_path").isin([u for p in ps for u in uris[p]]),
                 F.lit(m["defaults"][c]["value"]).cast(types[c]),
             ).otherwise(F.col(c))
-            for c, rels in older.items()
+            for c, ps in older.items()
         })
 
     def _scan_plain(
@@ -2762,7 +2771,7 @@ class LakeTable:
         # the new column through both rename-chain resolvers (the Spark
         # scan's shadow-coalesce and the pyarrow ``_file_batches`` of the
         # driver MERGE and the stream source) instead of reading the
-        # declared default/NULL (review round 12).
+        # declared default/NULL.
         for cur_name, formers in cur.get("renames", {}).items():
             if name in formers:
                 raise ValueError(

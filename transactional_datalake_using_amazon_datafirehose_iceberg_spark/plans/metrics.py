@@ -28,9 +28,6 @@ Keys currently emitted:
                                  (no job)
 - ``merge.full_candidates``   — NOT MATCHED BY SOURCE mode: every file
                                  is a candidate by construction
-
-Every MERGE past its empty-source exit bumps exactly one of these five
-step-2 counters.
 - ``merge.inprocess``         — MERGE committed from its source's one
                                  Arrow collect (pyarrow probe and
                                  rewrite, no Spark job after the collect)
@@ -48,6 +45,9 @@ step-2 counters.
 - ``cdc.unrouted_rows``       — routed-apply rows whose destination
                                  table is unknown (counted even when a
                                  dead-letter table absorbs them)
+
+Every MERGE past its empty-source exit bumps exactly one of the five
+step-2 counters, ``merge.no_candidates`` to ``merge.full_candidates``.
 """
 
 from __future__ import annotations
