@@ -65,3 +65,39 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+# table roots in the spellings Hadoop writes differently from the path
+# on disk: it percent-encodes a space, '%' and '#', and resolves the
+# '..' of a shallow clone's borrowed files
+ROOT_SPELLINGS = {
+    "plain": "plain",
+    "space": "a space",
+    "pct": "pct%41",
+    "hash": "hash#x",
+    "clone": None,
+}
+
+
+def table_at(base, spelling, spark, schema, rows, **create_kw):
+    """A table under ``base`` whose first commit appends ``rows``, rooted
+    at ``ROOT_SPELLINGS[spelling]``; for ``clone``, a shallow clone of
+    such a plain-root table, so its data files sit outside its root."""
+    from transactional_datalake_using_amazon_datafirehose_iceberg_spark.plans import LakeTable
+
+    name = ROOT_SPELLINGS[spelling] or "source"
+    t = LakeTable.create(os.path.join(str(base), name), schema, **create_kw)
+    t.append(spark.createDataFrame(rows, schema))
+    if spelling == "clone":
+        t = t.shallow_clone(os.path.join(str(base), "clone"))
+    return t
+
+
+@pytest.fixture(params=list(ROOT_SPELLINGS))
+def lake_root(request, tmp_path):
+    """``(spelling, make)``: ``make(spark, schema, rows, **create_kw)``
+    builds a ``table_at`` of this spelling under ``tmp_path``."""
+    def make(spark, schema, rows, **create_kw):
+        return table_at(tmp_path, request.param, spark, schema, rows, **create_kw)
+
+    return request.param, make

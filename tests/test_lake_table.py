@@ -1610,7 +1610,7 @@ def test_commit_rejects_removing_files_already_rewritten(spark, table):
     )
 
     table.append(_mk(spark, [(1, "a", 1.0), (2, "b", 2.0)]))
-    doomed = [table._relpath(p) for p in table.file_paths()]
+    doomed = [f["path"] for f in table.manifest()["files"]]
     # winner: a compaction-style rewrite replaces the file
     new_meta = table._write_files(table.read(spark))
     table.commit(new_meta, removed_paths=doomed, operation="compact")

@@ -912,13 +912,14 @@ class LakeTable:
         of a re-pointed stream."""
         cur = self.manifest()
         if cur.get("delete_files"):
-            # Borrowed merge-on-read deletes cannot apply on the clone:
-            # a position-delete parquet's 'file' column holds SOURCE-
-            # root-relative paths that never match the clone's borrowed
-            # (outside-root) data-file coordinates, so the deleted rows
+            # The source's pending deletes cannot carry over: a position-
+            # delete parquet's 'file' column holds SOURCE-root-relative
+            # paths, which name no file of the clone, so the deleted rows
             # would silently RESURRECT on the clone while total_rows
-            # still subtracts them. Delta materializes deletion vectors
-            # on CLONE; the equivalent here is one delete-file rewrite.
+            # still subtracts them. (The clone's own deletes name its
+            # borrowed files by clone-relative paths and apply.) Delta
+            # materializes deletion vectors on CLONE; the equivalent
+            # here is one delete-file rewrite.
             raise ValueError(
                 "shallow_clone of a table with pending merge-on-read "
                 "delete files would resurrect deleted rows on the clone "
@@ -935,6 +936,10 @@ class LakeTable:
             out["path"] = os.path.relpath(
                 os.path.join(self.root, fm["path"]), dest.root
             )
+            # the clone's v0 holds every borrowed file, so each is older
+            # than any equality delete the clone commits: the source's
+            # sequence numbers would outrank the clone's first deletes
+            out["seq"] = 0
             return out
 
         carried_summary = {
@@ -1802,16 +1807,23 @@ class LakeTable:
     def file_paths(
         self, version: int | None = None, predicates: list[Predicate] | None = None
     ) -> list[str]:
+        return [
+            os.path.join(self.root, f["path"]) for f in self._pruned_files(version, predicates)
+        ]
+
+    def _pruned_files(
+        self, version: int | None = None, predicates: list[Predicate] | None = None
+    ) -> list[dict]:
+        """The manifest entries of the data files ``predicates`` may
+        match, by their stats under the current column names."""
         m = self.manifest(version)
         renames = m.get("renames", {})
-        out = []
-        for fmeta in m["files"]:
-            if predicates:
-                fm = self._stats_under_current_names(fmeta, renames)
-                if not all(p.may_match(fm) for p in predicates):
-                    continue
-            out.append(os.path.join(self.root, fmeta["path"]))
-        return out
+        return [
+            f for f in m["files"]
+            if not predicates or all(
+                p.may_match(self._stats_under_current_names(f, renames)) for p in predicates
+            )
+        ]
 
     @staticmethod
     def _stats_under_current_names(fmeta: dict, renames: dict) -> dict:
@@ -1842,46 +1854,131 @@ class LakeTable:
         spark: SparkSession,
         paths: list[str],
         m: dict,
-        extra_fields: list[T.StructField] | None = None,
+        with_row_ids: bool = False,
     ) -> DataFrame:
-        """Schema-aware parquet scan of data files under manifest ``m``,
-        typed by ``m``'s schema (a version read after a DROP COLUMN still
-        reads the dropped column's default). ``extra_fields``: physical
-        columns outside the table schema to surface when present in a
-        file (NULL otherwise) — e.g. the materialized ``_row_id`` of row
-        lineage.
+        """The live rows of data files ``paths`` under manifest ``m``,
+        typed by ``m``'s schema: the read every Spark reader of the table
+        shares (``read_files``, a merge-on-read delete, ``changelog``).
 
-        A file that predates a defaulted column (``_file_defaults``)
-        reads its INITIAL DEFAULT, every other file its stored values
-        (explicit NULLs stay NULL): Iceberg v3 initial defaults without
-        a rewrite. The column reads ``when(_metadata.file_path in the
-        older files, default).otherwise(column)``, the files spelled as
-        ``inputFiles`` spells them (percent-encoded, with the ``..`` of
-        a shallow clone's borrowed files resolved). A filter on the
-        column stays above the scan: parquet and file pruning miss it."""
-        df = self._scan_plain(spark, paths, m, extra_fields)
-        if not m.get("defaults"):
+        On top of ``_scan_plain`` it resolves, per file, what the file's
+        manifest entry says: a file that predates a defaulted column
+        (``_file_defaults``) reads its INITIAL DEFAULT, every other file
+        its stored values (explicit NULLs stay NULL); ``with_row_ids``
+        attaches ``_row_id`` (``_ROW_ID_FIELD``); pending position and
+        equality deletes drop their rows. Each of these keys on the raw
+        ``_metadata.file_path`` through ``_file_map``, so no row's path
+        is rewritten. A default is a ``when(file in the older files)``
+        over the map's spellings; the entry's ``seq`` and
+        ``first_row_id`` come from one broadcast relation built from the
+        map; the position deletes are re-keyed to the map's spellings on
+        the driver. A table with none of these is the plain scan."""
+        df = self._scan_plain(
+            spark, paths, m, [self._ROW_ID_FIELD] if with_row_ids else None
+        )
+        dels = m.get("delete_files", [])
+        if not (m.get("defaults") or with_row_ids or dels):
             return df
-        fmetas = {f["path"]: f for f in m["files"]}
+        files = self._file_map(df, m)
+        fp = F.col("_metadata.file_path")
         older: dict[str, list[str]] = {}
-        for p in paths:
-            for c in _file_defaults(m, fmetas.get(self._relpath(p), {})):
-                older.setdefault(c, []).append(os.path.normpath(p))
-        if not older:
-            return df
-        # a local file's two URI spellings: file:/x and file:///x
-        uris: dict[str, list[str]] = {}
+        for u, fm in files.items():
+            for c in _file_defaults(m, fm):
+                older.setdefault(c, []).append(u)
+        if older:
+            types = {f.name: f.dataType for f in T.StructType.fromJson(json.loads(m["schema"]))}
+            df = df.withColumns({
+                c: F.when(fp.isin(us), F.lit(m["defaults"][c]["value"]).cast(types[c]))
+                .otherwise(F.col(c))
+                for c, us in older.items()
+            })
+        # Iceberg assigns equality field ids PER delete file, so files
+        # with different ``eq_cols`` may coexist: each column set gets
+        # its own anti-join (reading one file's keys under another's
+        # columns would delete the wrong rows)
+        eq: dict[tuple[str, ...], list[dict]] = {}
+        for d in dels:
+            if d.get("kind") == "equality" and d.get("eq_cols", self.keys):
+                eq.setdefault(tuple(d.get("eq_cols", self.keys)), []).append(d)
+        if with_row_ids or eq:
+            facts = _pa.table({
+                "__f_file": list(files),
+                "__f_seq": [int(fm.get("seq", 0)) for fm in files.values()],
+                "__f_row_id": [int(fm.get("first_row_id", -1)) for fm in files.values()],
+            })
+            df = df.join(
+                F.broadcast(spark.createDataFrame(facts)), fp == F.col("__f_file"), "left"
+            )
+        if with_row_ids:
+            # a row's id is its physically stored value when present
+            # (rewrites materialize ids to survive compaction), else its
+            # file's first_row_id plus its position: lazy lineage that
+            # keeps plain appends free
+            derived = F.when(
+                F.col("__f_row_id") >= 0, F.col("__f_row_id") + F.col("_metadata.row_index")
+            )
+            df = df.withColumn("_row_id", F.coalesce(F.col("_row_id"), derived).cast("long"))
+        rels = {fm["path"] for fm in files.values()}
+        pos = [
+            d for d in dels
+            if d.get("kind") != "equality" and not rels.isdisjoint(d.get("refs", ()))
+        ]
+        if pos:
+            spellings = _pa.table({
+                "file": [fm["path"] for fm in files.values()], "__del_file": list(files),
+            })
+            gone = _pa.concat_tables(
+                _pq.read_table(os.path.join(self.root, d["path"])) for d in pos
+            ).join(spellings, "file", join_type="inner")
+            gone = gone.select(["__del_file", "pos"]).rename_columns(["__del_file", "__del_pos"])
+            df = df.join(
+                F.broadcast(spark.createDataFrame(gone)),
+                (fp == F.col("__del_file"))
+                & (F.col("_metadata.row_index") == F.col("__del_pos")),
+                "left_anti",
+            )
+        for key_cols, group in eq.items():
+            # an equality delete drops the rows of files with a LOWER
+            # sequence number, so a key re-inserted later survives. The
+            # FILE's footer schema types the keys: delete_eq writes
+            # Python values through pyarrow, and the footer read keeps
+            # plan building free of Spark jobs
+            parts = [
+                read_parquet(spark, os.path.join(self.root, d["path"])).select(
+                    *[F.col(k).alias(f"__eq_{k}") for k in key_cols],
+                    F.lit(int(d.get("seq", 0))).alias("__del_seq"),
+                )
+                for d in group
+            ]
+            eq_df = _functools.reduce(DataFrame.unionByName, parts)
+            cond = F.col("__del_seq") > F.col("__f_seq")
+            for k in key_cols:
+                cond = cond & F.col(k).eqNullSafe(F.col(f"__eq_{k}"))
+            df = df.join(F.broadcast(eq_df), cond, "left_anti")
+        return df.drop("__f_file", "__f_seq", "__f_row_id")
+
+    def _file_map(self, df: DataFrame, m: dict) -> dict[str, dict]:
+        """Each spelling Spark gives a data file ``df`` scans -> the
+        file's entry in manifest ``m``: the one file identity of the
+        Spark side. Spark spells a file as a URI: percent-encoded (a
+        space reads ``%20``), with the ``..`` of a shallow clone's
+        borrowed file resolved, ``file:///x`` in ``inputFiles`` and
+        ``file:/x`` in ``_metadata.file_path``. The map is built on the
+        driver from ``inputFiles`` and holds both, so a per-file join
+        keys on the raw ``_metadata.file_path`` and a collected
+        spelling maps back to its relpath with a lookup. A file ``m``
+        does not list (a racing commit removed it) maps to an entry
+        holding only its relpath, which the commit then finds gone."""
+        entries = {
+            os.path.normpath(os.path.join(self.root, f["path"])): f for f in m["files"]
+        }
+        out: dict[str, dict] = {}
         for u in df.inputFiles():
             x = _urlsplit(u).path
-            uris[os.path.normpath(_unquote(x))] = ["file:" + x, "file://" + x]
-        types = {f.name: f.dataType for f in T.StructType.fromJson(json.loads(m["schema"]))}
-        return df.withColumns({
-            c: F.when(
-                F.col("_metadata.file_path").isin([u for p in ps for u in uris[p]]),
-                F.lit(m["defaults"][c]["value"]).cast(types[c]),
-            ).otherwise(F.col(c))
-            for c, ps in older.items()
-        })
+            p = _unquote(x)
+            out["file:" + x] = out["file://" + x] = entries.get(p) or {
+                "path": os.path.relpath(p, self.root)
+            }
+        return out
 
     def _scan_plain(
         self,
@@ -1890,8 +1987,8 @@ class LakeTable:
         m: dict,
         extra_fields: list[T.StructField] | None = None,
     ) -> DataFrame:
-        """The parquet scan under ``m``'s schema that ``_scan`` adds the
-        initial defaults to.
+        """The parquet scan under ``m``'s schema that ``_scan`` resolves
+        defaults, row lineage and deletes on.
 
         With RENAME COLUMN history, files written before a rename carry
         the FORMER physical column name; parquet resolves columns by
@@ -1902,8 +1999,8 @@ class LakeTable:
         so the coalesce is unambiguous (rename_column enforces that no
         physical name is ever reused). The hidden ``_metadata`` column is
         NOT materialized — Spark propagates the virtual column through
-        projections, so the defaults, the delete anti-joins and
-        ``_file`` read it above this select, and materializing it flips
+        projections, so ``_scan``'s per-file joins and ``_file`` read
+        it above this select, and materializing it flips
         the scan onto a read path where the shadow columns come back
         null. Without renames this is the plain pushdown scan."""
         schema = T.StructType.fromJson(json.loads(m["schema"]))
@@ -1933,14 +2030,6 @@ class LakeTable:
         cols.extend(F.col(e.name) for e in extras)
         return rdf.select(*cols)
 
-    def _rel_file_col(self):
-        """The scanned row's data file as a ROOT-RELATIVE path — the same
-        coordinate system the manifest and position-delete files use.
-        Delete files storing relpaths keep the table relocation-safe: a
-        moved/copied table root still matches its pending deletes."""
-        norm = F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
-        return F.replace(norm, F.lit(self.root + os.sep), F.lit(""))
-
     @property
     def row_lineage(self) -> bool:
         """True when the table tracks Iceberg-v3-style row lineage."""
@@ -1949,127 +2038,6 @@ class LakeTable:
         )
 
     _ROW_ID_FIELD = T.StructField("_row_id", T.LongType(), True)
-
-    def _attach_row_ids(self, spark: SparkSession, df: DataFrame, m: dict) -> DataFrame:
-        """Materialize ``_row_id`` (Iceberg v3 row lineage): a row's id
-        is its file's physically-stored value when present (rewrites
-        materialize ids to survive compaction/COW), else the file's
-        manifest ``first_row_id`` plus the row's position — the lazy
-        derivation that makes lineage free for plain appends. The
-        file→first_row_id relation is manifest-scale and broadcast."""
-        pairs = [
-            (f["path"], int(f.get("first_row_id", -1))) for f in m["files"]
-        ]
-        frd = spark.createDataFrame(pairs, "__frd_path string, __frd long")
-        df = (
-            df.withColumn("__rl_file", self._rel_file_col())
-            .withColumn("__rl_idx", F.col("_metadata.row_index"))
-            .join(
-                F.broadcast(frd),
-                F.col("__rl_file") == F.col("__frd_path"),
-                "left",
-            )
-        )
-        derived = F.when(
-            F.col("__frd") >= 0, F.col("__frd") + F.col("__rl_idx")
-        )
-        return df.withColumn(
-            "_row_id", F.coalesce(F.col("_row_id"), derived).cast("long")
-        ).drop("__rl_file", "__rl_idx", "__frd_path", "__frd")
-
-    def _apply_position_deletes(self, spark: SparkSession, df: DataFrame, m: dict) -> DataFrame:
-        """Merge-on-read: anti-join the position-delete set (broadcast —
-        deletes are metadata-scale next to data). No-op without deletes,
-        so the copy-on-write fast path keeps its plain scan.
-
-        The delete side is renamed to reserved ``__del_*`` columns before
-        the join: a table whose OWN schema has columns named ``file`` or
-        ``pos`` must not trip an ambiguous-reference error (``__``-prefixed
-        names are reserved for engine internals)."""
-        dels = m.get("delete_files", [])
-        if not dels:
-            return df
-        pos = [d for d in dels if d.get("kind", "position") != "equality"]
-        eq = [d for d in dels if d.get("kind") == "equality"]
-        if pos:
-            del_paths = [os.path.join(self.root, d["path"]) for d in pos]
-            del_df = spark.read.schema("file string, pos long").parquet(*del_paths).select(
-                F.col("file").alias("__del_file"), F.col("pos").alias("__del_pos")
-            )
-            df = (
-                df.withColumn("__file", self._rel_file_col())
-                .withColumn("__pos", F.col("_metadata.row_index"))
-                .join(
-                    F.broadcast(del_df),
-                    (F.col("__file") == F.col("__del_file"))
-                    & (F.col("__pos") == F.col("__del_pos")),
-                    "left_anti",
-                )
-                .drop("__file", "__pos")
-            )
-        if eq:
-            df = self._apply_equality_deletes(spark, df, m, eq)
-        return df
-
-    def _apply_equality_deletes(
-        self, spark: SparkSession, df: DataFrame, m: dict, eq: list[dict]
-    ) -> DataFrame:
-        """Merge-on-read equality deletes (Iceberg v2 equality delete
-        files — what Firehose's Iceberg destination writes for CDC
-        deletes): each delete file holds KEY VALUES, applied to rows of
-        data files with a lower sequence number than the delete (so a
-        key re-inserted later survives). One broadcast anti-join: the
-        delete set is key tuples — metadata scale, never row scale.
-
-        Iceberg assigns equality field ids PER delete file, so files with
-        different ``eq_cols`` may coexist; the delete files are grouped
-        by their column set and each group gets its own anti-join
-        (reading one file's keys under another file's column set would
-        silently delete the wrong rows)."""
-        groups: dict[tuple[str, ...], list[dict]] = {}
-        for d in eq:
-            cols = tuple(d.get("eq_cols", self.keys or []))
-            if cols:
-                groups.setdefault(cols, []).append(d)
-        if not groups:
-            return df
-        seq_df = spark.createDataFrame(
-            [(f["path"], int(f.get("seq", 0))) for f in m["files"]],
-            "__seq_path string, __seq long",
-        )
-        df = (
-            df.withColumn("__file", self._rel_file_col())
-            .join(
-                F.broadcast(seq_df),
-                F.col("__file") == F.col("__seq_path"),
-                "left",
-            )
-            .withColumn("__seq", F.coalesce("__seq", F.lit(0)))
-        )
-        for key_cols, files in groups.items():
-            parts = []
-            for d in files:
-                # the FILE's footer schema, not the table's key types:
-                # delete_eq writes Python values through pyarrow (an
-                # int key lands as int64), and reading the footer
-                # in-process keeps plan building free of Spark jobs
-                e = (
-                    read_parquet(spark, os.path.join(self.root, d["path"]))
-                    .select(
-                        *[F.col(k).alias(f"__eq_{k}") for k in key_cols],
-                    )
-                    .withColumn("__del_seq", F.lit(int(d.get("seq", 0))))
-                )
-                parts.append(e)
-            eq_df = parts[0]
-            for p in parts[1:]:
-                eq_df = eq_df.unionByName(p)
-            cond = F.lit(True)
-            for k in key_cols:
-                cond = cond & F.col(k).eqNullSafe(F.col(f"__eq_{k}"))
-            cond = cond & (F.col("__del_seq") > F.col("__seq"))
-            df = df.join(F.broadcast(eq_df), cond, "left_anti")
-        return df.drop("__file", "__seq_path", "__seq")
 
     def delete_eq(self, rows: list[dict], eq_cols: list[str] | None = None) -> int:
         """DELETE by key values as a pure metadata+keys commit: write one
@@ -2146,14 +2114,7 @@ class LakeTable:
         read every copy-on-write rewrite (merge/update/delete/compact)
         must use, or it would resurrect rows deleted by pending
         merge-on-read delete files."""
-        m = self.manifest(version)
-        df = self._scan(
-            spark, paths, m,
-            extra_fields=[self._ROW_ID_FIELD] if with_row_ids else None,
-        )
-        if with_row_ids:
-            df = self._attach_row_ids(spark, df, m)
-        df = self._apply_position_deletes(spark, df, m)
+        df = self._scan(spark, paths, self.manifest(version), with_row_ids)
         if with_file_path:
             df = df.withColumn("_file", F.col("_metadata.file_path"))
         return df
@@ -2273,6 +2234,21 @@ class LakeTable:
             chain.append(m_walk)
             v_walk = m_walk["parent"]
         chain.reverse()
+        # both sides of every diff read as the head reads its rows: its
+        # schema, renames and initial defaults over that version's files
+        # and deletes, so the changelog emits today's names and types
+        # and a file older than a defaulted column reads the default
+        head = self.manifest()
+        projection = {k: head.get(k, {}) for k in ("renames", "defaults")}
+
+        def _visible(paths: list[str], m: dict) -> DataFrame:
+            if not paths:
+                return spark.createDataFrame([], schema)
+            return self._scan(
+                spark, [os.path.join(self.root, p) for p in paths],
+                {**m, "schema": head["schema"], **projection},
+            )
+
         parts: list[DataFrame] = []
         for cur in chain:
             v = cur["version"]
@@ -2312,43 +2288,8 @@ class LakeTable:
             if not before_paths and not after_paths:
                 continue
 
-            # from the CURRENT manifest, matching `schema`/`cols` above: a
-            # changelog over a pre-rename range still emits today's names
-            head_renames = self.manifest().get("renames", {})
-
-            def _visible(paths: list[str], version: int) -> DataFrame:
-                if not paths:
-                    return spark.createDataFrame([], schema).select(*cols)
-                df = self.read_files(
-                    spark, [os.path.join(self.root, p) for p in paths], version=version
-                )
-                # the changelog emits HEAD column names across the whole
-                # range: a version before a RENAME COLUMN exposes the
-                # former name (translate via the head rename chain), and
-                # one before an ADD COLUMN lacks the column entirely
-                # (typed NULL, matching what the column reads as today)
-                avail = set(df.columns)
-                sel = []
-                for f in schema.fields:
-                    # cast to the HEAD type: a diff straddling a
-                    # widen-column commit reads int on one side and
-                    # bigint on the other, and exceptAll/union require
-                    # identical schemas
-                    if f.name in avail:
-                        sel.append(F.col(f.name).cast(f.dataType).alias(f.name))
-                        continue
-                    for former in reversed(head_renames.get(f.name, [])):
-                        if former in avail:
-                            sel.append(
-                                F.col(former).cast(f.dataType).alias(f.name)
-                            )
-                            break
-                    else:
-                        sel.append(F.lit(None).cast(f.dataType).alias(f.name))
-                return df.select(*sel)
-
-            after = _visible(after_paths, v)
-            before = _visible(before_paths, prev["version"])
+            after = _visible(after_paths, cur)
+            before = _visible(before_paths, prev)
             unique_per_key = False
             if self.keys:
                 # The single-join classification below assumes at most one
@@ -2591,15 +2532,15 @@ class LakeTable:
         reads do not have: every read broadcasts the whole position-
         delete set already."""
         m = self.manifest()
-        live = self._apply_position_deletes(spark, self._scan(spark, cand, m), m)
-        meta = self._write_delete_file(
-            hits(live)
-            .select(
-                self._rel_file_col().alias("file"),
-                F.col("_metadata.row_index").alias("pos"),
-            )
-            .toArrow()
-        )
+        live = self._scan(spark, cand, m)
+        got = hits(live).select(
+            F.col("_metadata.file_path").alias("file"),
+            F.col("_metadata.row_index").alias("pos"),
+        ).toArrow()
+        files = self._file_map(live, m)
+        rels = _pa.array([fm["path"] for fm in files.values()], _pa.string())
+        idx = _pc.index_in(got.column("file"), value_set=_pa.array(list(files), _pa.string()))
+        meta = self._write_delete_file(got.set_column(0, "file", rels.take(idx)))
         if meta is None:
             return self.current_version()
         return self.commit(
@@ -2610,7 +2551,9 @@ class LakeTable:
         )
 
     # position-delete file schema; ``file`` is a ROOT-RELATIVE data-file
-    # path, which keeps a relocated table matching its pending deletes
+    # path (the manifest's), which keeps a relocated table matching its
+    # pending deletes: a read re-keys it to the scan's own spellings
+    # through ``_file_map``
     _POSITION_DELETE_SCHEMA = _pa.schema(
         [("file", _pa.string()), ("pos", _pa.int64())]
     )
@@ -2699,8 +2642,9 @@ class LakeTable:
         are rewritten through ``transform`` by ``_rewrite_files``. No
         hit commits nothing."""
         df = self.read_files(spark, cand, with_file_path=True)
+        files = self._file_map(df, self.manifest())
         hit_rel = {
-            self._relpath(r["_file"])
+            files[r["_file"]]["path"]
             for r in df.filter(condition).select("_file").distinct().collect()
         }
         if not hit_rel:
@@ -2735,14 +2679,6 @@ class LakeTable:
             max_rows=None if extra_rows is None else n_rows + extra_rows,
         )
         return self.commit(added, removed_paths=rel_paths, **commit_kw)
-
-    def _relpath(self, spark_file_path: str) -> str:
-        p = spark_file_path
-        if p.startswith("file:"):
-            p = p[len("file:"):]
-            while p.startswith("//"):
-                p = p[1:]
-        return os.path.relpath(os.path.abspath(p), self.root)
 
     # ------------------------------------------------------------------
     # schema evolution (Iceberg-parity: add-column is a metadata-only op)

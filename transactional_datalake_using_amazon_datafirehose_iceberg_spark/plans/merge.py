@@ -20,7 +20,9 @@ Physical strategy (the 100 TB story):
    key range.
 2. A semi-join of target×source-keys — with the source side broadcast,
    since a CDC micro-batch is small — identifies the *files* containing
-   matched keys via the ``_metadata.file_path`` virtual column.
+   matched keys: their distinct ``_metadata.file_path`` values are
+   collected and map back to manifest relpaths through the scan's
+   ``LakeTable._file_map``.
 3. Only those files are rewritten: their rows are full-outer-joined with
    the source (shuffle bounded by touched-file volume, not table volume).
 4. Untouched files carry over into the new snapshot by reference.
@@ -317,12 +319,10 @@ def merge_into(
             f["path"] for f in table.manifest()["files"]
         )
         metrics.bump("merge.full_candidates")
-    elif not (cand_paths := table.file_paths(predicates=key_preds)):
+    elif not (cand_rel := sorted(f["path"] for f in table._pruned_files(predicates=key_preds))):
         touched_rel: list[str] = []
         metrics.bump("merge.no_candidates")
-    elif arrow is not None and _fits_driver(
-        *table._manifest_volume(cand_rel := sorted(table._relpath(p) for p in cand_paths))
-    ):
+    elif arrow is not None and _fits_driver(*table._manifest_volume(cand_rel)):
         # the collected source probes the candidates' key columns on
         # the driver: the exact touched set, with no job
         touched_rel = _probe_on_driver(table, arrow, keys, cand_rel)
@@ -331,9 +331,7 @@ def merge_into(
         key_preds  # real key-range pruning happened (rangeable key)
         # compared with <=, never truthiness-tested, so a ZERO-byte
         # candidate set stays on the skip path
-        and table._manifest_volume(
-            cand_rel := sorted(table._relpath(p) for p in cand_paths)
-        )[0] <= _PROBE_SKIP_BYTES
+        and table._manifest_volume(cand_rel)[0] <= _PROBE_SKIP_BYTES
     ):
         # the probe job exists to shrink the rewrite to files that truly
         # hold matching keys — but it SCANS every candidate to find out.
@@ -363,14 +361,14 @@ def merge_into(
         cond = [
             F.col(k).eqNullSafe(F.col(f"__p_{k}")) for k in keys
         ]
-        touched = [
-            r["_file"]
+        files = table._file_map(tgt, table.manifest())
+        touched_rel = sorted({
+            files[r["_file"]]["path"]
             for r in tgt.join(probe, on=cond, how="left_semi")
             .select("_file")
             .distinct()
             .collect()
-        ]
-        touched_rel = sorted({table._relpath(p) for p in touched if p})
+        })
 
     # rough in-parquet volume of the source rows (adds to the rewrite's
     # file-count hint; order-of-magnitude is all the hint needs)
